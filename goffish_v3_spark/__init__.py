@@ -21,4 +21,8 @@ Layout
 - ``streaming`` : Structured Streaming operators over the events stream.
 """
 
+from goffish_v3_spark import zipcache as _zipcache
+
 __version__ = "0.1.0"
+
+_zipcache.install()

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 from .sampling import MOD, bucket_sql, hash_bucket
 
@@ -27,13 +28,24 @@ def _check_integral_key(df: DataFrame, key_col: str, op: str) -> None:
     """Every sketch here mixes the key arithmetically; a silent
     cast("long") on a string column yields NULL hashes and a quietly
     wrong sketch. Raise loudly instead (map string keys to ids first,
-    e.g. via xxhash64 — or polyhash for an oracle-replayable mapping)."""
-    t = df.schema[key_col].dataType.typeName()
-    if t not in ("long", "integer", "short", "byte"):
+    e.g. via xxhash64 — or polyhash for an oracle-replayable mapping).
+    ``decimal(p, 0)`` with ``p <= 18`` passes: it casts to long exactly."""
+    if key_col not in df.columns:
         raise TypeError(
-            f"{op} needs an integral key column; {key_col!r} is {t} - "
-            "map keys to ids first"
+            f"{op} needs the name of an integral key column; {key_col!r} is "
+            f"not a column of the input (columns: {df.columns}) - select "
+            "expressions into a named column first"
         )
+    dt = df.schema[key_col].dataType
+    if dt.typeName() in ("long", "integer", "short", "byte") or (
+        isinstance(dt, DecimalType) and dt.scale == 0 and dt.precision <= 18
+    ):
+        return
+    raise TypeError(
+        f"{op} needs an integral key column (long/int/short/byte, or "
+        f"decimal(p,0) with p <= 18); {key_col!r} is {dt.simpleString()} - "
+        "map keys to ids first"
+    )
 
 
 def kmv_distinct_estimate(

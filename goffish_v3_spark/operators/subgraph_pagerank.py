@@ -9,7 +9,9 @@ convergence gate, but executed the way GoFFish executes it:
   shuffle* for edges whose dst is co-located (PageRank.java:120-134);
 - only cross-partition contributions become messages, pre-aggregated per
   (dst_part, dst) before the shuffle — exactly the reference's per-target
-  bundling of ``remoteSums`` (PageRank.java:136-146);
+  bundling of ``remoteSums`` (PageRank.java:136-146) — and summed on
+  arrival by the receiving kernel, so they cross the wire in the
+  superstep's one exchange with no JVM aggregation in between;
 - each superstep is ONE cogrouped ``applyInPandas`` over (csr ⋅ state+msgs)
   grouped by partition — the vectorized counterpart of "deliver messages,
   then run compute() per subgraph" (GraphJobRunner.java:269-331);
@@ -97,7 +99,8 @@ def _make_kernel(
         ranks[idx] = state_rows["a"].to_numpy(dtype=np.float64)
         pending[idx] = state_rows["b"].to_numpy(dtype=np.float64)
 
-        # deliver messages: remote contribution sums per local vid
+        # deliver messages: one pre-summed row per (sending part, dst), so a
+        # vid may get several rows — np.add.at sums duplicates
         if len(msg_rows):
             midx = blk.align(msg_rows["vid"].to_numpy(dtype=np.int64))
             np.add.at(pending, midx, msg_rows["a"].to_numpy(dtype=np.float64))
@@ -304,6 +307,15 @@ def _csr_loop(
     fixed_iterations=None, local_init=False, local_eps=0.05, n_total=None,
     blocks_path=None,
 ):
+    """Run the supersteps; return ``(state rows, supersteps run)``.
+
+    A superstep is one Spark job with one exchange: the kernel's kind 0
+    (state) and kind 1 (message) rows of the previous superstep are grouped
+    by ``part`` and handed to the kernel. Messages need no JVM aggregation
+    on the way: the sending kernel already sums them per ``(dst_part, dst)``
+    and the receiving kernel sums what arrives from several partitions with
+    ``np.add.at``. The kind 2 max-delta rides the checkpoint as an
+    Observation, so the ε-gate adds no job either."""
     total = max_iter if fixed_iterations is None else fixed_iterations + 1
     i = 0
     for i in range(total):
@@ -329,12 +341,7 @@ def _csr_loop(
             obs, F.max(F.when(F.col("kind") == 2, F.col("a"))).alias("delta")
         ).localCheckpoint(eager=True)
         state = out.filter(F.col("kind") == 0)
-        msgs = (
-            out.filter(F.col("kind") == 1)
-            .groupBy("part", "kind", "vid")
-            .agg(F.sum("a").alias("a"), F.lit(0.0).alias("b"))
-            .select("part", "kind", "vid", "a", "b")
-        )
+        msgs = out.filter(F.col("kind") == 1)
         if fixed_iterations is None:
             delta = obs.get["delta"]
             if delta is not None and delta <= eps:

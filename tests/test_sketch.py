@@ -1,6 +1,8 @@
 """KMV distinct sketch: estimate accuracy, exhaustive-exact path, cross-
 engine twin, duplicate-insensitivity, and top-k (not global-sort) plan."""
 
+import re
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -326,3 +328,31 @@ def test_sketches_reject_string_keys(spark):
     ):
         with pytest.raises(TypeError, match="integral"):
             fn()
+
+
+def test_sketches_accept_scale_zero_decimal_keys(spark):
+    """decimal(p,0) ids with p <= 18 cast to long exactly, so the sketch is
+    the one of the same ids as longs; a fractional or too-wide decimal is
+    refused."""
+    from goffish_v3_spark.operators.sketch import kmv_distinct_estimate
+
+    longs = spark.range(0, 200).withColumnRenamed("id", "u")
+    decs = longs.select(longs.u.cast("decimal(18,0)").alias("u"))
+    assert kmv_distinct_estimate(decs, "u", k=16).collect() == (
+        kmv_distinct_estimate(longs, "u", k=16).collect()
+    )
+    for t in ("decimal(10,2)", "decimal(19,0)"):
+        bad = longs.select(longs.u.cast(t).alias("u"))
+        with pytest.raises(TypeError, match=r"'u' is decimal"):
+            kmv_distinct_estimate(bad, "u")
+
+
+def test_sketches_name_a_missing_key_column(spark):
+    """A missing column or an expression string is a TypeError naming it,
+    not a bare KeyError from the schema lookup."""
+    from goffish_v3_spark.operators.sketch import hll_distinct_estimate
+
+    df = spark.range(0, 5).withColumnRenamed("id", "u")
+    for key in ("v", "u + 1"):
+        with pytest.raises(TypeError, match=re.escape(f"{key!r} is not a column")):
+            hll_distinct_estimate(df, key)

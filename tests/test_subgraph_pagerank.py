@@ -155,7 +155,12 @@ def test_csr_eps_mode_one_job_per_superstep(spark):
         supersteps = res.pr_supersteps
     finally:
         sc.setJobGroup("", "")
-    njobs = len(sc.statusTracker().getJobIdsForGroup("csr_pr_job_count"))
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup("csr_pr_job_count"))
+    njobs = len(jobs)
+    # stage ids per job, skipped stages included; the final-result
+    # checkpoint is the last job and the supersteps run just before it
+    stages = [len(tracker.getJobInfo(j).stageIds) for j in jobs]
     blocks.unpersist()
     # the 100-vertex BA graph converges to an exact 0.0 delta around step 10,
     # so the loop may legitimately stop one step shy of max_iter — pin only a
@@ -165,6 +170,12 @@ def test_csr_eps_mode_one_job_per_superstep(spark):
     # checkpoint (+1 slack); a collect-per-superstep loop would put njobs at
     # ~2x supersteps + setup
     assert supersteps <= njobs <= supersteps + 4, (supersteps, njobs)
+    # one message exchange per superstep: the kernel's kind=1 rows go
+    # straight into the next superstep's groupby("part"); a JVM
+    # re-aggregation of the messages would add a sixth stage to each job
+    # (superstep 0 has no messages to exchange yet)
+    steady = stages[-supersteps - 1:-1][1:]
+    assert steady and all(n == 5 for n in steady), stages
 
 
 def test_csr_dedups_multi_edges_like_dataframe_pagerank(spark):
