@@ -1897,7 +1897,7 @@ def _q_user_event_zscore(spark: SparkSession, sf: str) -> DataFrame:
 def _q_degree_percentiles_cs(spark: SparkSession, sf: str) -> DataFrame:
     """Exact out-degree order statistics on the cs graph — the quantile
     operator composed onto the graph-side degree view (the skew diagnostic
-    that sizes salting/AQE decisions)."""
+    that sizes AQE skew decisions)."""
     from goffish_v3_spark.operators.quantiles import exact_quantiles
 
     deg = (

@@ -17,10 +17,10 @@ walls 2-3x inflated by a mid-run throttle window with both envelope canaries
 green. This harness therefore brackets EVERY timed query with a warm canary
 (~0.5 s untimed overhead each): a query's ``host_ok`` is true only when both
 its bracketing canaries are within threshold. A flagged query is re-run once
-(the re-run gets its own bracket); derived ratios (``hub_salting_speedup``)
+(the re-run gets its own bracket); derived ratios (``asof_slicing_speedup``)
 are computed from clean runs only and are null when no clean run exists, so a
 burst window can never again silently flip a conclusion like r4's 1.36x
-"salting wins" artifact on a demoted feature.
+"salting wins" artifact on a since-removed feature.
 """
 
 from __future__ import annotations
@@ -335,49 +335,24 @@ def main() -> None:
         lambda: sssp(spark, cs, source=src0, weighted=False, directed=False).count(),
     )
 
-    # ---- CSR-kernel operators, cogroup vs worker-local block cache --------
-    # the load-once-compute-many claim gets a tracked number per operator
-    # (VERDICT r3 #8): cache mode must not regress vs cogroup shipping
+    # ---- CSR-kernel operators (worker-local block store) ------------------
     from goffish_v3_spark.operators.lpa import lpa_csr
     from goffish_v3_spark.operators.sssp import sssp_csr
     from goffish_v3_spark.operators.subgraph_pagerank import csr_pagerank
 
     b.run(
-        "csr_pagerank_10it_cogroup",
+        "csr_pagerank_10it",
         lambda: csr_pagerank(
             spark, cs, num_parts=CPUS, fixed_iterations=PR_BENCH_ITERS
         ).count(),
     )
+    b.run("lpa_csr", lambda: lpa_csr(spark, cs, num_parts=CPUS).count())
     b.run(
-        "csr_pagerank_10it_cached",
-        lambda: csr_pagerank(
-            spark, cs, num_parts=CPUS, fixed_iterations=PR_BENCH_ITERS,
-            cache_blocks=True,
-        ).count(),
-    )
-    b.run("lpa_csr_cogroup", lambda: lpa_csr(spark, cs, num_parts=CPUS).count())
-    b.run(
-        "lpa_csr_cached",
-        lambda: lpa_csr(spark, cs, num_parts=CPUS, cache_blocks=True).count(),
-    )
-    b.run(
-        "sssp_csr_cogroup",
+        "sssp_csr",
         lambda: sssp_csr(
             spark, cs, source=src0, weighted=False, directed=False, num_parts=CPUS
         ).count(),
     )
-    b.run(
-        "sssp_csr_cached",
-        lambda: sssp_csr(
-            spark, cs, source=src0, weighted=False, directed=False,
-            num_parts=CPUS, cache_blocks=True,
-        ).count(),
-    )
-    for op in ("csr_pagerank_10it", "lpa_csr", "sssp_csr"):
-        cg, ca = b.clean_wall(f"{op}_cogroup"), b.clean_wall(f"{op}_cached")
-        extra[f"{op}_cache_speedup"] = (
-            round(cg / ca, 3) if (cg is not None and ca is not None) else None
-        )
 
     from goffish_v3_spark.operators.spanning_forest import spanning_forest
 
@@ -473,7 +448,7 @@ def main() -> None:
     # hub-skew variant: half the points/rights on ONE key — the plain
     # window serializes the hub through one task; slice_width bounds
     # per-task work by rows-per-(key, slice). Ratio from host-clean walls
-    # only (same discipline as hub_salting_speedup).
+    # only (clean_wall), so a throttle window cannot flip it.
     skew_pts = spark.range(0, 10_000_000).select(
         F.col("id").alias("pid"),
         F.when(F.col("id") % 2 == 0, 0).otherwise(F.col("id") % 100_000).alias("k"),
@@ -550,17 +525,6 @@ def main() -> None:
         PR_BENCH_ITERS * n_repo_edges / b.timings["repo_pagerank_10it"], 1
     )
 
-    # explicit hub salting (north_rule): same query through the two-stage
-    # salted contribution aggregation — the repo graph's repo-0 hub is the
-    # "stdlib imported by everyone" skew case
-    def _repo_pr_salted():
-        scores, _ = pagerank_with_info(
-            spark, g_edges, fixed_iterations=PR_BENCH_ITERS, salt_threshold=1000
-        )
-        scores.count()
-
-    b.run("repo_pagerank_10it_salted", _repo_pr_salted)
-
     # north_rule end-to-end: the same flagship run with the checkpoint store
     # + per-partition lineage metrics ON (resumable mid-iteration; metrics
     # parquet persisted per commit) — the overhead vs repo_pagerank_10it is
@@ -584,38 +548,6 @@ def main() -> None:
         "part"
     ).distinct().count()
     g_edges.unpersist()
-
-    # ---- out-degree hub twin: the skew axis src-hash partitioning cannot
-    # absorb (one SMJ task owns the hub's whole adjacency). The repo graph
-    # above shows the in-degree-hub case; this shows the out-degree side.
-    # Each attempt is canary-bracketed, so the derived speedup can only come
-    # from host-clean walls (r4's 1.36x artifact came from a throttle window
-    # inflating the unsalted pair).
-    from goffish_v3_spark.sources.synthetic import generate_hub_out_edges
-
-    hub_edges = generate_hub_out_edges(spark, hub_out_degree=2_000_000).persist()
-    n_hub_edges = hub_edges.count()
-
-    def _hub(name: str, **kw) -> None:
-        def fn():
-            scores, _ = pagerank_with_info(spark, hub_edges, fixed_iterations=5, **kw)
-            scores.count()
-
-        b.run(name, fn, reruns=2)  # single ~10s walls swing most; 2 retries
-
-    _hub("hub_pagerank_5it")
-    _hub("hub_pagerank_5it_salted", salt_threshold=100_000, num_salts=32)
-    extra["hub_edges"] = n_hub_edges
-    un, sa = b.clean_wall("hub_pagerank_5it"), b.clean_wall("hub_pagerank_5it_salted")
-    if un is not None and sa is not None:
-        extra["hub_salting_speedup"] = round(un / sa, 3)
-    else:
-        extra["hub_salting_speedup"] = None
-        extra["hub_salting_note"] = (
-            "no host-clean run for one or both hub variants — speedup withheld "
-            "rather than reported from a contaminated window"
-        )
-    hub_edges.unpersist()
 
     # ---- training-data pipeline suite ------------------------------------
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")

@@ -10,8 +10,9 @@ Layout
 ------
 - ``sources``   : synthetic repos-table generator, repos→edges ingest,
                   reference text-format readers, testdata graph derivations.
-- ``plans``     : partitioning / salting / CSR-block building / the superstep
-                  driver loop with checkpoint+resume+metrics.
+- ``plans``     : vertex ownership / CSR-block building and the worker-local
+                  block store / the superstep driver loop with
+                  checkpoint+resume+metrics.
 - ``operators`` : the algorithm library (PageRank, WCC, LPA, triangles, SSSP,
                   k-core, graph stats) plus large-scale training-data pipeline
                   operators (dedup, similarity search, text analysis,

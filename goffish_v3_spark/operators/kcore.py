@@ -29,8 +29,9 @@ order (Montresor et al., thm 1) — which is why the partition-local chaotic
 iteration, the synchronous Jacobi oracle in SQL, and classic peeling all
 agree on the final numbers.
 
-Scale shape: per superstep ONE cogrouped ``applyInPandas`` over the persisted
-CSR blocks + O(cut) message rows. Job count is O(global rounds) — a few,
+Scale shape: per superstep ONE grouped ``applyInPandas`` over state + O(cut)
+message rows, each task fetching its CSR block from the worker-local block
+store (plans.block_cache). Job count is O(global rounds) — a few,
 bounded by how far core changes must propagate across partitions — instead of
 the O(max_core × peeling depth) driver loop this replaces.
 """
@@ -39,11 +40,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.sql import Observation
-
+from goffish_v3_spark.plans.block_cache import BlockStore, block_store, load_block
 from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks_sym
 from goffish_v3_spark.plans.superstep import no_aqe
 
@@ -163,20 +163,11 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
         import os
         import time as _t
 
-        from goffish_v3_spark.plans.block_cache import load_block
-
         _trace = bool(os.environ.get("GOFFISH_KCORE_TRACE"))
         _t0 = _t.monotonic()
         pdf = pd.concat(list(it), ignore_index=True)
         state = pdf[pdf["kind"] == 0]
-        blks = []
-        for p in parts:
-            blk = load_block(blocks_path, int(p))
-            if blk is None:
-                raise RuntimeError(
-                    f"CSR block for part {int(p)} not found under {blocks_path}"
-                )
-            blks.append(blk)
+        blks = [load_block(blocks_path, p) for p in parts]
         if _trace:
             print(f"[kcore-consol] load {_t.monotonic() - _t0:.2f}s", flush=True)
             _t0 = _t.monotonic()
@@ -309,8 +300,8 @@ def _merge_boundary(sm_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
 
 def _make_kernel(
     superstep: int,
+    blocks_path: str,
     cap: int | None = None,
-    blocks_path: str | None = None,
     changed_only: bool = False,
 ):
     """``cap`` caps estimates at k: the capped iteration converges to
@@ -318,10 +309,9 @@ def _make_kernel(
     as values saturate at the cap, so the k-core query needs only a handful
     of global rounds instead of the full decomposition's propagation depth.
 
-    ``blocks_path`` switches from cogrouped block shipping to the
-    worker-local block cache (plans.block_cache): the kernel becomes a plain
-    grouped map over state+messages and fetches its CSR block locally —
-    the reference's load-once-compute-many shape.
+    The kernel is a plain grouped map over state+messages and fetches its
+    CSR block from the store at ``blocks_path`` (plans.block_cache) — the
+    reference's load-once-compute-many shape.
 
     ``changed_only`` sends O(changed) boundary estimates per superstep
     instead of re-broadcasting the full boundary (the reference sends only
@@ -366,7 +356,12 @@ def _make_kernel(
         # compute once) — so the skip is only valid from superstep 2 on
         return superstep >= 2 and not (sm_pdf["kind"] == 1).any()
 
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        if quiescent(sm_pdf):
+            # the quiescent path needs nothing from the CSR block — skip the
+            # block fetch entirely
+            return passthrough(sm_pdf)
+        blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
         deg = blk.out_degrees.astype(np.int64)
         if cap is not None:
@@ -481,62 +476,28 @@ def _make_kernel(
             )
         return out
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(columns=list(_EMPTY_OUT)).astype(_EMPTY_OUT)
-            if quiescent(sm_pdf):
-                return passthrough(sm_pdf)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        if quiescent(sm_pdf):
-            # the quiescent path needs nothing from the CSR block — skip the
-            # cache fetch entirely
-            return passthrough(sm_pdf)
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            # a state/seed/message row for this part implies its block was
-            # written — a silent empty return here would halt the loop with
-            # an EMPTY result on any cluster whose executors can't see
-            # blocks_path (ADVICE)
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def _hindex_loop(
     spark: SparkSession,
-    blocks: DataFrame,
+    store: BlockStore,
     cap: int | None,
     max_iter: int,
-    blocks_path: str | None = None,
-    parts: list[int] | None = None,
-    changed_only: bool = False,
-    chain_every: int = 1,
-    num_parts: int | None = None,
-    consolidate_after: int | None = None,
-    consolidate_ok: bool = False,
+    changed_only: bool,
+    chain_every: int,
+    num_parts: int,
+    consolidate_after: int,
+    consolidate_budget_bytes: int,
 ) -> DataFrame:
     """Drive the kernel to global fixpoint; returns the final carry — kind-0
     state plus the fixpoint boundary channel (kind-1 messages; under
     ``changed_only`` also the kind-3 shadows, which together hold every
     boundary estimate — see :func:`_merge_boundary`). Callers filter kinds.
 
-    With ``blocks_path`` the loop runs in block-cache mode: supersteps are a
-    grouped map over state+messages only (kind=-1 seed rows bootstrap every
-    partition at superstep 0); blocks never re-enter the shuffle/Arrow
-    channel after the one-time write.
+    Supersteps are a grouped map over state+messages only (kind=-1 seed
+    rows bootstrap every partition at superstep 0); blocks never re-enter
+    the shuffle/Arrow channel after the one-time write to ``store``.
 
     ``chain_every`` runs that many supersteps lazily inside ONE Spark job,
     materializing (and reading the changed-count Observation) only at chain
@@ -552,23 +513,19 @@ def _hindex_loop(
     import time as _time
 
     _trace = bool(os.environ.get("GOFFISH_KCORE_TRACE"))
+    # tail consolidation only when the summed in-memory CSR fits one task
+    consolidate_ok = 40 * store.n_edges + 24 * store.n_vertices <= consolidate_budget_bytes
     carry = spark.createDataFrame([], OUT_SCHEMA)
-    if blocks_path is not None:
-        seed = spark.createDataFrame(
-            [(int(p), -1, -1, 0, None) for p in parts], OUT_SCHEMA
-        )
-    shrink_below = num_parts if num_parts is not None else 32
+    seed = spark.createDataFrame(
+        [(p, -1, -1, 0, None) for p in store.parts], OUT_SCHEMA
+    )
     cur_chain = chain_every
     step = 0
     with no_aqe(spark):
         while step < max_iter:
             _t0 = _time.monotonic()
             chain = max(1, min(cur_chain, max_iter - step))
-            if (
-                consolidate_ok
-                and consolidate_after is not None
-                and step < consolidate_after
-            ):
+            if consolidate_ok and step < consolidate_after:
                 # stop the chain exactly at the consolidation trigger: the
                 # distributed phase only needs to reach the hand-off point
                 # (budget-disabled runs keep full-length chains)
@@ -578,18 +535,11 @@ def _hindex_loop(
             for j in range(chain):
                 i = step + j
                 kernel = _make_kernel(
-                    i, cap=cap, blocks_path=blocks_path, changed_only=changed_only
+                    i, store.path, cap=cap, changed_only=changed_only
                 )
-                if blocks_path is None:
-                    out = (
-                        blocks.groupby("part")
-                        .cogroup(mixed.groupby("part"))
-                        .applyInPandas(kernel, schema=OUT_SCHEMA)
-                    )
-                else:
-                    if i == 0:
-                        mixed = mixed.unionByName(seed)
-                    out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
+                if i == 0:
+                    mixed = mixed.unionByName(seed)
+                out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
                 if j < chain - 1:
                     mixed = out.filter(F.col("kind") != 2)
             # changed-count (of the chain's LAST step) rides the checkpoint
@@ -612,16 +562,12 @@ def _hindex_loop(
                 )
             if step >= 2 and changed == 0:
                 break
-            if (
-                consolidate_ok
-                and consolidate_after is not None
-                and step >= consolidate_after
-            ):
+            if consolidate_ok and step >= consolidate_after:
                 # tail consolidation: the distributed chains above ground the
                 # bulk value creep in parallel; the remaining cross-partition
                 # cascade (tens of ~0.5 s grouped-map waves for a trickle of
                 # changes) collapses into ONE merged-fixpoint task
-                fn = _make_consolidated_kernel(parts, blocks_path, cap)
+                fn = _make_consolidated_kernel(store.parts, store.path, cap)
                 carry = (
                     carry.filter(F.col("kind") == 0)
                     .repartition(1)
@@ -635,7 +581,7 @@ def _hindex_loop(
                         flush=True,
                     )
                 break
-            if changed < shrink_below:
+            if changed < num_parts:
                 cur_chain = max(1, cur_chain // 2)
     return carry
 
@@ -645,7 +591,6 @@ def core_numbers(
     edges: DataFrame,
     num_parts: int | None = None,
     max_iter: int = 1000,
-    cache_blocks: bool = True,
     blocks_dir: str | None = None,
     changed_only: bool = True,
     chain_every: int = 8,
@@ -665,68 +610,40 @@ def core_numbers(
     single-task problem. Set ``consolidate_after=None``-equivalent by
     passing a value ≥ ``max_iter`` to disable.
 
-    ``cache_blocks`` (default) writes the CSR blocks once and serves them
-    from the worker-local cache across the (many) global rounds of the full
-    decomposition, instead of re-shipping every block through Arrow each
-    superstep. ``blocks_dir`` points the block store at executor-visible
-    storage — REQUIRED on a multi-executor cluster (a driver-local tempdir
-    is only valid in local mode and is enforced in
-    plans.block_cache.resolve_blocks_dir); when given, the directory is kept
-    (it doubles as the block checkpoint). ``changed_only`` (default) sends
-    only estimates that moved this superstep (KCore.java:101-109), with
-    receiver-side shadows of the last-received values."""
+    The CSR blocks are written once to the block store and served from the
+    worker-local cache across the (many) global rounds of the full
+    decomposition. ``blocks_dir`` points the store at executor-visible
+    storage — REQUIRED on a multi-executor cluster; when given, the
+    directory is kept (it doubles as the block checkpoint).
+    ``changed_only`` (default) sends only estimates that moved this
+    superstep (KCore.java:101-109), with receiver-side shadows of the
+    last-received values."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts)
-    if cache_blocks:
-        import shutil
-
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        path, owned = resolve_blocks_dir(spark, blocks_dir)
-        try:
-            write_blocks(blocks, path)
-            stats = blocks.select("part", "n_local", "n_edges").collect()
-            parts = [r.part for r in stats]
-            total_bytes = sum(40 * r.n_edges + 24 * r.n_local for r in stats)
-            blocks.unpersist()
-            carry = _hindex_loop(
-                spark, blocks, cap=None, max_iter=max_iter,
-                blocks_path=path, parts=parts, changed_only=changed_only,
-                chain_every=chain_every, num_parts=num_parts,
-                consolidate_after=consolidate_after,
-                consolidate_ok=total_bytes <= consolidate_budget_bytes,
-            )
-            result = (
-                carry.filter(F.col("kind") == 0)
-                .select("vid", F.col("a").alias("core"))
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            if owned:
-                shutil.rmtree(path, ignore_errors=True)
-        return result
-    carry = _hindex_loop(
-        spark, blocks, cap=None, max_iter=max_iter, changed_only=changed_only,
-        chain_every=chain_every, num_parts=num_parts,
-    )
-    result = (
-        carry.filter(F.col("kind") == 0)
-        .select("vid", F.col("a").alias("core"))
-        .localCheckpoint(eager=True)
-    )
-    blocks.unpersist()
-    return result
+    with block_store(spark, blocks, blocks_dir, "goffish_kcore_") as store:
+        carry = _hindex_loop(
+            spark, store, cap=None, max_iter=max_iter, changed_only=changed_only,
+            chain_every=chain_every, num_parts=num_parts,
+            consolidate_after=consolidate_after,
+            consolidate_budget_bytes=consolidate_budget_bytes,
+        )
+        return (
+            carry.filter(F.col("kind") == 0)
+            .select("vid", F.col("a").alias("core"))
+            .localCheckpoint(eager=True)
+        )
 
 
-def _make_finalize_kernel(cap: int, blocks_path: str | None = None):
+def _make_finalize_kernel(cap: int, blocks_path: str):
     """At fixpoint, est = min(core, cap): membership is est == cap. Induced
     degree = #neighbours with est == cap, computable in one pass because the
     boundary channel (fresh kind=1 messages over the kind=3 shadows — the
     first exchange is always full, so shadows cover every boundary vertex)
     carries every remote neighbour's fixpoint estimate."""
 
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
         state_rows = sm_pdf[sm_pdf["kind"] == 0]
         est = np.empty(n, dtype=np.int64)
@@ -765,28 +682,7 @@ def _make_finalize_kernel(cap: int, blocks_path: str | None = None):
             }
         )
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(columns=list(_EMPTY_OUT)).astype(_EMPTY_OUT)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def k_core(
@@ -794,7 +690,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     num_parts: int | None = None,
-    cache_blocks: bool = True,
     blocks_dir: str | None = None,
     changed_only: bool = True,
     chain_every: int = 4,
@@ -813,54 +708,25 @@ def k_core(
 
     Execution shape (shared with :func:`core_numbers` — VERDICT r3 #2: this
     query had kept the round-1 plan while its sibling got the optimizations):
-    ``cache_blocks`` serves CSR blocks from the worker-local cache instead of
-    re-shipping them through Arrow every superstep; ``changed_only`` sends
+    CSR blocks are served from the worker-local block store (``blocks_dir``
+    as in :func:`core_numbers`); ``changed_only`` sends
     only moved estimates (KCore.java:101-109) with receiver-side shadows;
     ``chain_every`` starts at 4 (the capped iteration needs only a handful
     of rounds) and adapts down at the tail."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts)
-
-    def _finalize(carry: DataFrame, blocks_path: str | None) -> DataFrame:
-        fin = _make_finalize_kernel(k, blocks_path=blocks_path)
-        if blocks_path is None:
-            out = (
-                blocks.groupby("part")
-                .cogroup(carry.groupby("part"))
-                .applyInPandas(fin, schema=OUT_SCHEMA)
-            )
-        else:
-            out = carry.groupby("part").applyInPandas(fin, schema=OUT_SCHEMA)
-        return out.select("vid", F.col("a").alias("deg")).localCheckpoint(eager=True)
-
-    if cache_blocks:
-        import shutil
-
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        path, owned = resolve_blocks_dir(spark, blocks_dir)
-        try:
-            write_blocks(blocks, path)
-            stats = blocks.select("part", "n_local", "n_edges").collect()
-            parts = [r.part for r in stats]
-            total_bytes = sum(40 * r.n_edges + 24 * r.n_local for r in stats)
-            blocks.unpersist()
-            carry = _hindex_loop(
-                spark, blocks, cap=k, max_iter=1000, blocks_path=path,
-                parts=parts, changed_only=changed_only, chain_every=chain_every,
-                num_parts=num_parts,
-                consolidate_after=consolidate_after,
-                consolidate_ok=total_bytes <= consolidate_budget_bytes,
-            )
-            return _finalize(carry, path)
-        finally:
-            if owned:
-                shutil.rmtree(path, ignore_errors=True)
-    carry = _hindex_loop(
-        spark, blocks, cap=k, max_iter=1000, changed_only=changed_only,
-        chain_every=chain_every, num_parts=num_parts,
-    )
-    out = _finalize(carry, None)
-    blocks.unpersist()
-    return out
+    with block_store(spark, blocks, blocks_dir, "goffish_kcore_") as store:
+        carry = _hindex_loop(
+            spark, store, cap=k, max_iter=1000, changed_only=changed_only,
+            chain_every=chain_every, num_parts=num_parts,
+            consolidate_after=consolidate_after,
+            consolidate_budget_bytes=consolidate_budget_bytes,
+        )
+        fin = _make_finalize_kernel(k, store.path)
+        return (
+            carry.groupby("part")
+            .applyInPandas(fin, schema=OUT_SCHEMA)
+            .select("vid", F.col("a").alias("deg"))
+            .localCheckpoint(eager=True)
+        )

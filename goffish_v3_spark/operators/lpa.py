@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from goffish_v3_spark.plans.block_cache import block_store, load_block
 from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks_sym
 from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop, no_aqe
 
@@ -194,9 +195,7 @@ def _local_mode_fixpoint(
 _LPA_EMPTY = {"part": "int32", "kind": "int32", "vid": "int64", "a": "int64"}
 
 
-def _make_lpa_kernel(
-    superstep: int, max_local_sweeps: int, blocks_path: str | None = None
-):
+def _make_lpa_kernel(superstep: int, max_local_sweeps: int, blocks_path: str):
     """One superstep: merge shadows+messages, run the block to local mode
     fixpoint, emit state (kind=0), changed-only boundary labels (kind=1),
     refreshed shadows (kind=3, routed to self), the superstep-start labels
@@ -216,10 +215,9 @@ def _make_lpa_kernel(
     take the elementwise min — deterministic, phase-independent, and a
     no-op on monotone trajectories.
 
-    ``blocks_path`` switches to the worker-local block cache
-    (plans.block_cache): plain grouped map over state+messages, block
-    fetched locally — the load-once-compute-many shape shared with
-    kcore/sssp_csr/csr_pagerank."""
+    The kernel is a plain grouped map over state+messages; it fetches its
+    CSR block from the store at ``blocks_path`` (plans.block_cache) — the
+    load-once-compute-many shape shared with kcore/sssp_csr/csr_pagerank."""
 
     def quiescent(sm_pdf: pd.DataFrame) -> bool:
         """Partition-level wake-on-message (the reference's voteToHalt
@@ -255,7 +253,11 @@ def _make_lpa_kernel(
             [out[["part", "kind", "vid", "a"]], marker], ignore_index=True
         )
 
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        if quiescent(sm_pdf):
+            # nothing needed from the CSR block — skip the block fetch
+            return passthrough(sm_pdf)
+        blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
         seg = np.repeat(np.arange(n, dtype=np.int64), blk.out_degrees)
         remote_mask = blk.edge_dst_local < 0
@@ -373,35 +375,7 @@ def _make_lpa_kernel(
             }
         )
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(
-                    {"part": [], "kind": [], "vid": [], "a": []}
-                ).astype(_LPA_EMPTY)
-            if quiescent(sm_pdf):
-                return passthrough(sm_pdf)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        if quiescent(sm_pdf):
-            # nothing needed from the CSR block — skip the cache fetch
-            return passthrough(sm_pdf)
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def lpa_csr(
@@ -411,7 +385,6 @@ def lpa_csr(
     max_iter: int = 30,
     max_local_sweeps: int = 10_000,
     part_expr=None,
-    cache_blocks: bool = False,
     blocks_dir: str | None = None,
 ) -> DataFrame:
     """Subgraph-centric LPA: each superstep runs mode-propagation to local
@@ -441,33 +414,17 @@ def lpa_csr(
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts, part_expr=part_expr)
 
-    blocks_path, owned, seed = None, False, None
-    if cache_blocks:
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        blocks_path, owned = resolve_blocks_dir(spark, blocks_dir, prefix="goffish_lpa_")
-        write_blocks(blocks, blocks_path)
-        parts = [r.part for r in blocks.select("part").collect()]
-        blocks.unpersist()
+    with block_store(spark, blocks, blocks_dir, "goffish_lpa_") as store:
         seed = spark.createDataFrame(
-            [(int(p), -1, -1, 0) for p in parts], LPA_SCHEMA
+            [(p, -1, -1, 0) for p in store.parts], LPA_SCHEMA
         )
-
-    carry = spark.createDataFrame([], LPA_SCHEMA)
-    supersteps = 0
-    try:
+        carry = spark.createDataFrame([], LPA_SCHEMA)
+        supersteps = 0
         with no_aqe(spark):
             for i in range(max_iter):
-                kernel = _make_lpa_kernel(i, max_local_sweeps, blocks_path=blocks_path)
-                if blocks_path is not None:
-                    mixed = carry.unionByName(seed) if i == 0 else carry
-                    out = mixed.groupby("part").applyInPandas(kernel, schema=LPA_SCHEMA)
-                else:
-                    out = (
-                        blocks.groupby("part")
-                        .cogroup(carry.groupby("part"))
-                        .applyInPandas(kernel, schema=LPA_SCHEMA)
-                    )
+                kernel = _make_lpa_kernel(i, max_local_sweeps, store.path)
+                mixed = carry.unionByName(seed) if i == 0 else carry
+                out = mixed.groupby("part").applyInPandas(kernel, schema=LPA_SCHEMA)
                 obs = Observation(f"lpa_csr_step_{i}")
                 out = out.observe(
                     obs, F.sum(F.when(F.col("kind") == 2, F.col("a"))).alias("changed")
@@ -485,12 +442,5 @@ def lpa_csr(
             .select("vid", F.col("a").alias("label"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        if owned:
-            import shutil
-
-            shutil.rmtree(blocks_path, ignore_errors=True)
     result.lpa_supersteps = supersteps
-    if not cache_blocks:
-        blocks.unpersist()
     return result

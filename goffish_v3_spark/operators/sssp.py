@@ -30,7 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks
+from goffish_v3_spark.plans.block_cache import block_store, load_block
+from goffish_v3_spark.plans.csr import build_csr_blocks
 from goffish_v3_spark.plans.superstep import no_aqe
 
 INF = float("inf")
@@ -88,10 +89,7 @@ def sssp(
     return dist
 
 
-_SSSP_EMPTY = {"part": "int32", "kind": "int32", "vid": "int64", "d": "f8", "p": "int64"}
-
-
-def _make_sssp_kernel(superstep: int, source: int, blocks_path: str | None = None):
+def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
     """One superstep of subgraph-centric SSSP: apply inbound boundary
     candidates, relax the partition-local subgraph **to convergence**
     (vectorized frontier Bellman-Ford sweeps over the local CSR — the
@@ -99,12 +97,12 @@ def _make_sssp_kernel(superstep: int, source: int, blocks_path: str | None = Non
     java:407-536 ``aStar``), then emit min-combined boundary candidates from
     changed vertices only (:350-376's changed-roots bundling).
 
-    ``blocks_path`` switches to the worker-local block cache
-    (plans.block_cache): the kernel becomes a plain grouped map over
-    state+messages and fetches its CSR block locally — the reference's
-    load-once-compute-many shape (GraphJobRunner.java:105-126)."""
+    The kernel is a plain grouped map over state+messages and fetches its
+    CSR block from the store at ``blocks_path`` (plans.block_cache) — the
+    reference's load-once-compute-many shape (GraphJobRunner.java:105-126)."""
 
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
 
         if superstep == 0:
@@ -224,33 +222,7 @@ def _make_sssp_kernel(superstep: int, source: int, blocks_path: str | None = Non
             }
         )
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(
-                    {"part": [], "kind": [], "vid": [], "d": [], "p": []}
-                ).astype(_SSSP_EMPTY)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            # state/seed rows imply the block was written; a silent empty
-            # return would end the loop with a WRONG (partial) result on any
-            # cluster whose executors can't see blocks_path
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def sssp_csr(
@@ -262,7 +234,6 @@ def sssp_csr(
     num_parts: int | None = None,
     max_iter: int = 10_000,
     part_expr=None,
-    cache_blocks: bool = False,
     blocks_dir: str | None = None,
 ) -> DataFrame:
     """Subgraph-centric SSSP over partition-local CSR blocks — the P3
@@ -275,11 +246,10 @@ def sssp_csr(
     network needs O(meta-diameter) rounds where the DataFrame Bellman-Ford
     needs 10³ (reference rationale: SingleSourceShortestPath.java:407-536).
 
-    ``cache_blocks`` serves CSR blocks from the worker-local cache
-    (plans.block_cache, the load-once-compute-many shape) instead of
-    re-shipping them through Arrow every superstep; ``blocks_dir`` points the
-    block store at executor-visible storage — REQUIRED on a multi-executor
-    cluster (enforced by resolve_blocks_dir).
+    Supersteps fetch their CSR block from the worker-local block store
+    (plans.block_cache, the load-once-compute-many shape); ``blocks_dir``
+    points the store at executor-visible storage — REQUIRED on a
+    multi-executor cluster.
     """
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -290,38 +260,22 @@ def sssp_csr(
         )
     blocks = build_csr_blocks(spark, e, num_parts, part_expr=part_expr)
 
-    blocks_path, owned, seed = None, False, None
-    if cache_blocks:
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        blocks_path, owned = resolve_blocks_dir(spark, blocks_dir, prefix="goffish_sssp_")
-        write_blocks(blocks, blocks_path)
-        parts = [r.part for r in blocks.select("part").collect()]
-        blocks.unpersist()
+    with block_store(spark, blocks, blocks_dir, "goffish_sssp_") as store:
         # kind=-1 seed rows bootstrap every partition at superstep 0 (no
-        # state exists yet and grouped-map has no block side to enumerate)
+        # state exists yet to group by)
         seed = spark.createDataFrame(
-            [(int(p), -1, -1, 0.0, 0) for p in parts], SSSP_SCHEMA
+            [(p, -1, -1, 0.0, 0) for p in store.parts], SSSP_SCHEMA
         )
-
-    state = spark.createDataFrame([], SSSP_SCHEMA)
-    msgs = spark.createDataFrame([], SSSP_SCHEMA)
-    supersteps = 0
-    try:
+        state = spark.createDataFrame([], SSSP_SCHEMA)
+        msgs = spark.createDataFrame([], SSSP_SCHEMA)
+        supersteps = 0
         with no_aqe(spark):
             for i in range(max_iter):
-                kernel = _make_sssp_kernel(i, source, blocks_path=blocks_path)
+                kernel = _make_sssp_kernel(i, source, store.path)
                 mixed = state.unionByName(msgs)
-                if blocks_path is not None:
-                    if i == 0:
-                        mixed = mixed.unionByName(seed)
-                    out = mixed.groupby("part").applyInPandas(kernel, schema=SSSP_SCHEMA)
-                else:
-                    out = (
-                        blocks.groupby("part")
-                        .cogroup(mixed.groupby("part"))
-                        .applyInPandas(kernel, schema=SSSP_SCHEMA)
-                    )
+                if i == 0:
+                    mixed = mixed.unionByName(seed)
+                out = mixed.groupby("part").applyInPandas(kernel, schema=SSSP_SCHEMA)
                 obs = Observation(f"sssp_csr_step_{i}")
                 out = out.observe(
                     obs, F.sum(F.when(F.col("kind") == 2, F.col("p"))).alias("improved")
@@ -336,14 +290,7 @@ def sssp_csr(
             state.select("vid", F.col("d").alias("dist"), F.col("p").alias("parent"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        if owned:
-            import shutil
-
-            shutil.rmtree(blocks_path, ignore_errors=True)
     result.sssp_supersteps = supersteps  # introspection for tests/bench
-    if not cache_blocks:
-        blocks.unpersist()
     return result
 
 

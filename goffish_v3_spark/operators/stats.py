@@ -33,7 +33,7 @@ def edge_list(edges: DataFrame) -> DataFrame:
 
 def degree_histogram(edges: DataFrame) -> DataFrame:
     """out-degree → #vertices (``(deg long, n_vertices long)``), the skew
-    diagnostic driving the salting plan (SURVEY.md §4 P13)."""
+    diagnostic for hub skew (SURVEY.md §4 P13)."""
     return (
         edges.groupBy("src")
         .agg(F.count("*").alias("deg"))

@@ -12,9 +12,10 @@ convergence gate, but executed the way GoFFish executes it:
   bundling of ``remoteSums`` (PageRank.java:136-146) — and summed on
   arrival by the receiving kernel, so they cross the wire in the
   superstep's one exchange with no JVM aggregation in between;
-- each superstep is ONE cogrouped ``applyInPandas`` over (csr ⋅ state+msgs)
-  grouped by partition — the vectorized counterpart of "deliver messages,
-  then run compute() per subgraph" (GraphJobRunner.java:269-331);
+- each superstep is ONE grouped ``applyInPandas`` over state+msgs by
+  partition, each task fetching its CSR block from the worker-local block
+  store (plans.block_cache) — the vectorized counterpart of "deliver
+  messages, then run compute() per subgraph" (GraphJobRunner.java:269-331);
 - the ε-convergence gate is the reference's all-deltas ≤ ε (PageRank.java:
   108-116), collected driver-side from per-partition delta rows.
 
@@ -37,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from goffish_v3_spark.plans.block_cache import block_store, load_block
 from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks
 from goffish_v3_spark.plans.superstep import no_aqe
 
@@ -74,19 +76,18 @@ def _local_pagerank(blk: CsrBlock, alpha: float, eps: float, max_sweeps: int = 2
     return r
 
 
-_PR_EMPTY = {"part": "int32", "kind": "int32", "vid": "int64", "a": "f8", "b": "f8"}
-
-
 def _make_kernel(
     superstep: int,
     alpha: float,
     base: float,
+    blocks_path: str,
     local_init: bool = False,
     local_eps: float = 0.05,
     n_total: int | None = None,
-    blocks_path: str | None = None,
 ):
-    def body(blk: CsrBlock, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+        # every part has state rows (init_rows seeds them all)
+        blk = load_block(blocks_path, int(key[0]))
         n_local = blk.n_local
 
         state_rows = sm_pdf[sm_pdf["kind"] == 0]
@@ -175,33 +176,7 @@ def _make_kernel(
             }
         )
 
-    if blocks_path is None:
-
-        def kernel(keys, csr_pdf: pd.DataFrame, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(csr_pdf) == 0:
-                return pd.DataFrame(
-                    {"part": [], "kind": [], "vid": [], "a": [], "b": []}
-                ).astype(_PR_EMPTY)
-            return body(CsrBlock(csr_pdf.iloc[0]), sm_pdf)
-
-        return kernel
-
-    def cached_kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        from goffish_v3_spark.plans.block_cache import load_block
-
-        blk = load_block(blocks_path, int(key[0]))
-        if blk is None:
-            # every partition has state rows (init_rows seeds them all), so a
-            # missing block means executors can't see blocks_path — raise
-            # instead of silently dropping the partition's ranks
-            raise RuntimeError(
-                f"CSR block for part {int(key[0])} not found under "
-                f"{blocks_path}; on a multi-executor cluster pass blocks_dir= "
-                "on storage visible to every executor"
-            )
-        return body(blk, sm_pdf)
-
-    return cached_kernel
+    return kernel
 
 
 def csr_pagerank(
@@ -215,7 +190,6 @@ def csr_pagerank(
     fixed_iterations: int | None = None,
     local_init: bool = False,
     local_eps: float = 0.05,
-    cache_blocks: bool = False,
     blocks_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over CSR blocks; returns ``(vid long, rank double)`` equal to
@@ -228,70 +202,51 @@ def csr_pagerank(
     — the superstep-saving inner loop; the global phase still converges to
     the plain PageRank fixpoint.
 
-    ``cache_blocks`` serves CSR blocks from the worker-local cache
-    (plans.block_cache) so supersteps re-ship only state+messages, not the
-    adjacency; ``blocks_dir`` must point at executor-visible storage on a
-    multi-executor cluster (enforced by resolve_blocks_dir)."""
+    Supersteps fetch their CSR block from the worker-local block store
+    (plans.block_cache), so only state and messages cross the shuffle;
+    ``blocks_dir`` must point at executor-visible storage on a
+    multi-executor cluster."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     own_blocks = blocks is None
     if own_blocks:
         blocks = build_csr_blocks(spark, edges, num_parts)
 
-    # N = all vertices (reference SS0 vertex-count broadcast → driver agg)
-    n = int(
-        blocks.select(F.sum("n_local").alias("n")).collect()[0]["n"]
-    )
-    base = (1.0 - alpha) / n
+    with block_store(spark, blocks, blocks_dir, "goffish_pr_", release=False) as store:
+        # N = all vertices (reference SS0 vertex-count broadcast → driver agg)
+        n = store.n_vertices
+        base = (1.0 - alpha) / n
 
-    # init state rows straight out of the blocks (vid, rank=1/N, pending=0)
-    init_rank = 1.0 / n
+        # init state rows straight out of the blocks (vid, rank=1/N, pending=0)
+        init_rank = 1.0 / n
 
-    def init_rows(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                vids = np.frombuffer(r["local_vids"], dtype=np.int64)
-                yield pd.DataFrame(
-                    {
-                        "part": np.full(len(vids), r["part"], dtype=np.int32),
-                        "kind": np.zeros(len(vids), dtype=np.int32),
-                        "vid": vids,
-                        "a": np.full(len(vids), init_rank),
-                        "b": np.zeros(len(vids)),
-                    }
-                )
+        def init_rows(batches):
+            for pdf in batches:
+                for _, r in pdf.iterrows():
+                    vids = np.frombuffer(r["local_vids"], dtype=np.int64)
+                    yield pd.DataFrame(
+                        {
+                            "part": np.full(len(vids), r["part"], dtype=np.int32),
+                            "kind": np.zeros(len(vids), dtype=np.int32),
+                            "vid": vids,
+                            "a": np.full(len(vids), init_rank),
+                            "b": np.zeros(len(vids)),
+                        }
+                    )
 
-    state = blocks.mapInPandas(init_rows, schema=OUT_SCHEMA).localCheckpoint(eager=True)
-    msgs = spark.createDataFrame([], "part int, kind int, vid long, a double, b double")
-
-    blocks_path, owned = None, False
-    if cache_blocks:
-        from goffish_v3_spark.plans.block_cache import resolve_blocks_dir, write_blocks
-
-        blocks_path, owned = resolve_blocks_dir(spark, blocks_dir, prefix="goffish_pr_")
-        write_blocks(blocks, blocks_path)
+        state = blocks.mapInPandas(init_rows, schema=OUT_SCHEMA).localCheckpoint(eager=True)
         if own_blocks:
             blocks.unpersist()
+        msgs = spark.createDataFrame([], OUT_SCHEMA)
 
-    try:
         with no_aqe(spark):
             state, supersteps = _csr_loop(
-                blocks, state, msgs, alpha, base, eps, max_iter,
+                store.path, state, msgs, alpha, base, eps, max_iter,
                 fixed_iterations=fixed_iterations,
                 local_init=local_init, local_eps=local_eps, n_total=n,
-                blocks_path=blocks_path,
             )
-
-        result = state.select("vid", F.col("a").alias("rank"))
-        result = result.localCheckpoint(eager=True)
-    finally:
-        if owned:
-            import shutil
-
-            shutil.rmtree(blocks_path, ignore_errors=True)
+        result = state.select("vid", F.col("a").alias("rank")).localCheckpoint(eager=True)
     result.pr_supersteps = supersteps  # introspection for tests/bench
-    if own_blocks and not cache_blocks:
-        blocks.unpersist()
     return result
 
 
@@ -303,9 +258,8 @@ def subgraph_rank(spark: SparkSession, edges: DataFrame, **kw) -> DataFrame:
 
 
 def _csr_loop(
-    blocks, state, msgs, alpha, base, eps, max_iter,
+    blocks_path, state, msgs, alpha, base, eps, max_iter,
     fixed_iterations=None, local_init=False, local_eps=0.05, n_total=None,
-    blocks_path=None,
 ):
     """Run the supersteps; return ``(state rows, supersteps run)``.
 
@@ -320,19 +274,15 @@ def _csr_loop(
     i = 0
     for i in range(total):
         kernel = _make_kernel(
-            i, alpha, base, local_init=local_init, local_eps=local_eps, n_total=n_total,
-            blocks_path=blocks_path,
+            i, alpha, base, blocks_path,
+            local_init=local_init, local_eps=local_eps, n_total=n_total,
         )
-        mixed = state.unionByName(msgs)
-        if blocks_path is not None:
-            # every part already has state rows (init_rows), no seeds needed
-            out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
-        else:
-            out = (
-                blocks.groupby("part")
-                .cogroup(mixed.groupby("part"))
-                .applyInPandas(kernel, schema=OUT_SCHEMA)
-            )
+        # every part already has state rows (init_rows), no seeds needed
+        out = (
+            state.unionByName(msgs)
+            .groupby("part")
+            .applyInPandas(kernel, schema=OUT_SCHEMA)
+        )
         # the ε-gate's max-delta rides the checkpoint materialization as an
         # Observation — ONE Spark job per superstep (the kcore/sssp pattern),
         # not a second collect() job over the kind=2 rows

@@ -90,7 +90,8 @@ def _hash_min_fixpoint(spark: SparkSession, meta_edges: DataFrame, max_iter: int
     ``meta_edges(a, b)`` links labels known to be in one component. Returns
     mapping ``(label, root)``. Each round every label absorbs the min over
     its neighbourhood, then the mapping is compressed through itself
-    (pointer jumping) — converges in O(log n) rounds.
+    (pointer jumping) — converges in O(log n) rounds; raises
+    ``RuntimeError`` if ``max_iter`` rounds pass without convergence.
     """
     sym = meta_edges.select("a", "b").unionByName(
         meta_edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -105,8 +106,6 @@ def _hash_min_fixpoint(spark: SparkSession, meta_edges: DataFrame, max_iter: int
 
 
 def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
-    prev_sum = None
-
     for i in range(max_iter):
         neigh_min = (
             sym.join(mapping, sym.b == mapping.label)
@@ -118,6 +117,7 @@ def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
             .select(
                 "label",
                 F.least(F.col("root"), F.coalesce(F.col("nmin"), F.col("root"))).alias("root"),
+                F.col("root").alias("_old"),
             )
         )
         # pointer jumping: root := root's root
@@ -130,19 +130,20 @@ def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
         ).select(
             F.col("m1.label").alias("label"),
             F.coalesce(F.col("r_root"), F.col("m1.root")).alias("root"),
+            F.col("m1._old").alias("_old"),
         )
-        # roots only ever decrease (min-propagation), so the root-sum is a
-        # strictly-decreasing convergence witness — observed during the
-        # lineage-truncating materialization: ONE job per round, no separate
-        # agg job (the repo-wide Observation-on-checkpoint pattern)
+        # exact convergence witness: the number of labels whose root moved
+        # (a sum of 64-bit roots overflows under ANSI mode on xxhash64-range
+        # ids; a double sum can round a change away), observed during the
+        # lineage-truncating materialization — ONE job per round
         obs = Observation(f"wcc_min_round_{i}")
-        m2 = m2.observe(obs, F.sum("root").alias("s")).localCheckpoint(eager=True)
-        new_sum = obs.get["s"]
-        mapping = m2
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return mapping
+        m2 = m2.observe(
+            obs, F.count(F.when(F.col("root") != F.col("_old"), 1)).alias("changed")
+        ).localCheckpoint(eager=True)
+        mapping = m2.select("label", "root")
+        if obs.get["changed"] == 0:
+            return mapping
+    raise RuntimeError(f"wcc: hash-min did not converge in {max_iter} rounds")
 
 
 def wcc(

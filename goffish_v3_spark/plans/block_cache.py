@@ -1,17 +1,20 @@
-"""Worker-local CSR block cache — keep partition blocks resident across
-supersteps.
+"""Worker-local CSR block store — the one way a CSR kernel gets its block.
 
 The reference holds each partition's object graph in JVM heap for the whole
 job (hama GraphJobRunner.java:105-126 loads once, computes many supersteps).
-The cogrouped-``applyInPandas`` pattern re-ships every CSR block through the
-Arrow channel every superstep — at 2.4M edges that is ~70 MB per round of
-pure re-transfer. This module restores the reference's load-once shape:
+This module gives the CSR operators (``csr_pagerank``/``subgraph_rank``,
+``lpa_csr``, ``sssp_csr``, ``core_numbers``, ``k_core``) that load-once
+shape:
 
-- blocks are written ONCE to a parquet directory partitioned by ``part``;
-- superstep kernels run as plain ``state.groupby(part).applyInPandas`` (no
-  cogroup, no block shuffle) and fetch their block via :func:`load_block`,
-  which reads the 1-row parquet file on first use and caches the
-  deserialized :class:`CsrBlock` in the (reused) Python worker process;
+- :func:`block_store` writes the blocks ONCE to a parquet directory
+  partitioned by ``part`` and owns the directory's lifecycle (a tempdir it
+  created is removed when the operator returns or raises; a caller-supplied
+  ``blocks_dir`` is kept);
+- superstep kernels run as plain ``state.groupby(part).applyInPandas`` over
+  state + messages only — the adjacency never re-enters the shuffle or the
+  Arrow channel — and fetch their block via :func:`load_block`, which reads
+  the 1-row parquet file on first use and caches the deserialized
+  :class:`CsrBlock` in the (reused) Python worker process;
 - the cache is LRU-capped so a worker that serves many partitions holds at
   most ``MAX_BLOCKS`` blocks (~per-partition CSR size each).
 
@@ -19,12 +22,16 @@ Cluster shape: each executor's python workers cache only the partitions
 scheduled onto them; with stable partitioning the scheduler tends to
 re-offer the same partitions, so steady-state supersteps read no block data
 at all. A task landing on a cold worker pays one local parquet read of its
-own block — O(|E|/P), not O(|E|).
+own block — O(|E|/P), not O(|E|). With a non-local master the store must sit
+on storage every executor sees, so ``blocks_dir`` is required there.
 """
 
 from __future__ import annotations
 
+import shutil
 from collections import OrderedDict
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
@@ -46,9 +53,9 @@ _FIELDS = (
 )
 
 
-def resolve_blocks_dir(spark, blocks_dir: str | None, prefix: str = "goffish_csr_"):
+def _resolve_blocks_dir(spark, blocks_dir: str | None, prefix: str):
     """Pick the block-store path; returns ``(path, owned)`` where ``owned``
-    means the caller created a tempdir and should remove it afterwards.
+    means a tempdir was created here and must be removed afterwards.
 
     On a multi-executor cluster a driver-local tempdir is INVISIBLE to
     executors — ``load_block`` would find nothing and every kernel would
@@ -61,7 +68,7 @@ def resolve_blocks_dir(spark, blocks_dir: str | None, prefix: str = "goffish_csr
     master = spark.sparkContext.master or ""
     if not master.startswith("local"):
         raise ValueError(
-            f"cache_blocks on a multi-executor cluster (master={master!r}) "
+            f"a CSR operator on a multi-executor cluster (master={master!r}) "
             "requires blocks_dir= on storage visible to every executor "
             "(DFS/object store); a driver-local tempdir would make every "
             "block load fail"
@@ -69,6 +76,46 @@ def resolve_blocks_dir(spark, blocks_dir: str | None, prefix: str = "goffish_csr
     import tempfile
 
     return tempfile.mkdtemp(prefix=prefix), True
+
+
+@dataclass(frozen=True)
+class BlockStore:
+    """A written block store: its path plus the per-part sizes collected
+    while writing (the drivers seed one row per part and budget on sizes)."""
+
+    path: str
+    parts: list[int]
+    n_vertices: int
+    n_edges: int
+
+
+@contextmanager
+def block_store(
+    spark, blocks: DataFrame, blocks_dir: str | None, prefix: str,
+    release: bool = True,
+):
+    """Write ``blocks`` to the block store for the duration of a CSR
+    operator; yields a :class:`BlockStore`.
+
+    ``blocks_dir=None`` uses a fresh local-mode tempdir named ``prefix*``,
+    removed on exit whether the operator returns or raises; an explicit
+    ``blocks_dir`` is kept. ``release`` unpersists ``blocks`` once written —
+    kernels read the store, so the cached DataFrame has no further use."""
+    path, owned = _resolve_blocks_dir(spark, blocks_dir, prefix)
+    try:
+        write_blocks(blocks, path)
+        stats = blocks.select("part", "n_local", "n_edges").collect()
+        if release:
+            blocks.unpersist()
+        yield BlockStore(
+            path=path,
+            parts=[int(r.part) for r in stats],
+            n_vertices=sum(int(r.n_local) for r in stats),
+            n_edges=sum(int(r.n_edges) for r in stats),
+        )
+    finally:
+        if owned:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def write_blocks(blocks: DataFrame, path: str) -> None:
@@ -110,11 +157,12 @@ def _block_files(path: str, part: int):
     return None, files, token
 
 
-def load_block(path: str, part: int) -> CsrBlock | None:
+def load_block(path: str, part: int) -> CsrBlock:
     """Fetch the block for ``part`` — worker-process-local LRU cache over
-    the parquet store. Returns None if the partition has no block (callers
-    in superstep kernels should treat that as a hard error: any state or
-    seed row for a partition implies its block was written).
+    the parquet store. A missing block raises: every state, seed or message
+    row for a partition implies its block was written, so absence means the
+    executors cannot see ``path`` — a silent empty result would end the
+    loop with a wrong (partial) answer.
 
     The cache key includes the block file's (name, size, mtime) freshness
     token, so re-running write_blocks into the SAME directory for a
@@ -125,7 +173,11 @@ def load_block(path: str, part: int) -> CsrBlock | None:
 
     filesystem, files, token = _block_files(path, part)
     if not files:
-        return None
+        raise RuntimeError(
+            f"CSR block for part {int(part)} not found under {path}; on a "
+            "multi-executor cluster pass blocks_dir= on storage visible to "
+            "every executor"
+        )
     if len(files) > 1:
         # write_blocks emits exactly one 1-row file per part= dir; more than
         # one means a duplicate part row or a partial overwrite (object

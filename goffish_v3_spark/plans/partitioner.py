@@ -1,4 +1,4 @@
-"""Explicit graph partitioning + skew handling.
+"""Computable vertex ownership.
 
 The reference partitions offline with METIS and packs the partition id into
 the high bits of synthesized ids (SURVEY.md §2.B B10, P1/P11). Here the
@@ -6,133 +6,19 @@ partition of a vertex is *computable* — ``part(v) = pmod(xxhash64(v), P)`` —
 so no routing table, no 3-superstep ownership handshake
 (hama LongTextAdjacencyListReader.java:130-233): ownership is a pure function.
 
-Skew: web-scale link graphs are power-law (a stdlib file is imported by
-millions). Sum-like aggregations are already skew-safe in Spark thanks to
-map-side partial aggregation; the dangerous spot is *joins* keyed by a hot
-vertex. We provide (a) an explicit two-stage salted aggregation and (b) a
-salted join for the hot keys, composing with AQE's runtime skew splitting
-(SURVEY.md §4 P13).
+Skew needs no helper here: sum-like aggregations are skew-safe through
+Spark's map-side partial aggregation, and AQE splits skewed join partitions
+at runtime (SURVEY.md §4 P13). Explicit salting measured slower than the
+plain plan on every fixture (BENCH/BASELINE.md "Hub salting") and was
+removed.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, Column
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def vertex_part(vid: Column, num_parts: int) -> Column:
     """Computable ownership: pmod(xxhash64(vid), P)."""
     return F.pmod(F.xxhash64(vid), F.lit(num_parts)).cast("int")
-
-
-@dataclass
-class PartitionedGraph:
-    """Edge table hash-partitioned by source vertex + vertex dimension.
-
-    ``edges(src, dst, w, part)`` with ``part = part(src)`` so every vertex's
-    out-adjacency is co-located with its state — the analogue of the
-    reference's partition (hama Partition.java:32) without data movement
-    beyond one shuffle at build time.
-    """
-
-    edges: DataFrame  # src long, dst long, w double, part int
-    vertices: DataFrame  # vid long, part int
-    num_parts: int
-
-    def boundary_edges(self) -> DataFrame:
-        """Edges whose dst lives on another partition — the reference's
-        remote vertices (hama RemoteVertex.java:31), derived by a pure
-        filter instead of a handshake."""
-        return self.edges.filter(
-            F.col("part") != vertex_part(F.col("dst"), self.num_parts)
-        )
-
-
-def partition_graph(edges: DataFrame, num_parts: int, persist: bool = True) -> PartitionedGraph:
-    """Assign partitions and physically co-locate edges by partition.
-
-    One shuffle; downstream superstep joins on ``part`` reuse the layout.
-    """
-    e = edges.select(
-        "src", "dst", F.col("w").cast("double").alias("w")
-    ).withColumn("part", vertex_part(F.col("src"), num_parts))
-    e = e.repartition(num_parts, "part")
-
-    v = (
-        e.select(F.col("src").alias("vid"))
-        .unionByName(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .withColumn("part", vertex_part(F.col("vid"), num_parts))
-        .repartition(num_parts, "part")
-    )
-    if persist:
-        e = e.persist()
-        v = v.persist()
-    return PartitionedGraph(edges=e, vertices=v, num_parts=num_parts)
-
-
-def heavy_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Keys whose row count exceeds ``threshold`` — the salting candidates.
-
-    One aggregation scan; at 100 TB run it on a sampled fraction first and
-    confirm with an exact count over the surviving candidates.
-    """
-    return df.groupBy(key).count().filter(F.col("count") > threshold).select(key)
-
-
-def salted_agg_sum(
-    df: DataFrame, key: str, value: str, out: str, num_salts: int = 32,
-    salt_from: str | None = None,
-) -> DataFrame:
-    """Two-stage sum: groupBy(key, salt) partial → groupBy(key) final.
-
-    For pure sums Spark's map-side combine usually suffices; this explicit
-    form guarantees bounded per-reducer fan-in for pathological hubs (one key
-    = billions of rows) independent of mapper count, per north_rule's
-    explicit-salting requirement.
-
-    ``salt_from`` names a column to derive the salt from (deterministic,
-    e.g. the contributing src vertex); default is a per-row synthetic id.
-    """
-    salt_src = (
-        F.col(salt_from) if salt_from is not None else F.monotonically_increasing_id()
-    )
-    salt = F.pmod(F.xxhash64(salt_src), F.lit(num_salts))
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(key, "_salt")
-        .agg(F.sum(value).alias("_psum"))
-    )
-    return partial.groupBy(key).agg(F.sum("_psum").alias(out))
-
-
-def salted_join_on_hot_keys(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    hot: DataFrame,
-    num_salts: int = 32,
-) -> DataFrame:
-    """Join ``big ⋈ small`` on ``key`` where ``hot`` lists skewed keys.
-
-    Hot keys: big side gets a random salt, small side is exploded across all
-    salts (broadcast — the hot-key dimension is small by construction).
-    Cold keys: plain join. Union of the two plans.
-    """
-    hot = F.broadcast(hot.select(key).distinct())
-    big_hot = big.join(hot, key, "left_semi")
-    big_cold = big.join(hot, key, "left_anti")
-    small_hot = small.join(hot, key, "left_semi")
-    small_cold = small.join(hot, key, "left_anti")
-
-    salted_big = big_hot.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(num_salts))
-    )
-    salted_small = small_hot.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)))
-    )
-    joined_hot = salted_big.join(F.broadcast(salted_small), [key, "_salt"]).drop("_salt")
-    joined_cold = big_cold.join(small_cold, key)
-    return joined_hot.unionByName(joined_cold)

@@ -96,7 +96,7 @@ class SuperstepLoop:
 
     ``step(state, i)`` is the analogue of the user ``compute()`` hook
     (api AbstractSubgraphComputation.java:49) lifted to whole-DataFrame
-    granularity; inside it, algorithms use cogrouped ``applyInPandas`` for
+    granularity; inside it, algorithms use grouped ``applyInPandas`` for
     partition-local kernels and plain DataFrame ops for exchanges.
     """
 

@@ -15,7 +15,7 @@ Link structure (drives the graph fixtures):
 - every file imports ``imports_per_file`` other files of its own repo at
   deterministic stride offsets (ring-ish topology, strongly connected per repo);
 - every file imports its repo's ``mod_0`` (per-repo hub — in-degree ≈
-  files_per_repo, the skew/salting test case, cf. FIXTURES.md ``star_hub``);
+  files_per_repo, the skew test case, cf. FIXTURES.md ``star_hub``);
 - every third file declares a cross-repo dep on repo 0's ``mod_0`` (a global
   hub, the "stdlib imported by millions" skew case from SURVEY.md §7.3);
 - every fifth file declares a cross-repo dep on the next repo (bridges, so the
@@ -60,33 +60,6 @@ def _import_line(lang_col, t):
         .when(lang_col == "java", F.format_string("import org.pkg_%d.mod_%d;", pkg, t))
         .otherwise(F.format_string('#include "pkg_%d/mod_%d.h"', pkg, t))
     )
-
-
-def generate_hub_out_edges(
-    spark: SparkSession,
-    n_vertices: int = 250_000,
-    avg_out_degree: int = 6,
-    hub_out_degree: int = 250_000,
-    seed: int = 7,
-) -> DataFrame:
-    """Out-degree-hub skew fixture: a uniform pseudo-random digraph plus ONE
-    source (vid = ``n_vertices``) with ``hub_out_degree`` out-edges.
-
-    This is the skew axis src-hash partitioning cannot absorb: the hub's
-    whole adjacency lands in a single sort-merge-join task every PageRank
-    superstep (the in-degree hub, by contrast, is already tamed by map-side
-    partial aggregation). The bench twin runs PageRank over this graph with
-    and without ``salt_threshold`` — the salted join spreads the hub's edges
-    over ``num_salts`` tasks and must win here. Deterministic in all args.
-    """
-    base = spark.range(0, n_vertices * avg_out_degree).select(
-        (F.col("id") % n_vertices).alias("src"),
-        F.pmod(F.col("id") * 2654435761 + seed, F.lit(n_vertices)).alias("dst"),
-    )
-    hub = spark.range(0, hub_out_degree).select(
-        F.lit(n_vertices).cast("long").alias("src"), F.col("id").alias("dst")
-    )
-    return base.unionByName(hub).filter(F.col("src") != F.col("dst"))
 
 
 def generate_skewed_edges(

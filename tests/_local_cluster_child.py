@@ -62,14 +62,13 @@ def main() -> None:
         F.lit(1.0).alias("w"),
     )
 
-    # CSR cache-mode kernel: blocks written to the explicit shared dir,
-    # fetched by executor-side Python workers through plans.block_cache
+    # CSR kernel: blocks written to the explicit shared dir, fetched by
+    # executor-side Python workers through plans.block_cache
     ranks = csr_pagerank(
         spark,
         edges,
         num_parts=8,
         fixed_iterations=6,
-        cache_blocks=True,
         blocks_dir=blocks_dir,
     ).collect()
 

@@ -32,16 +32,19 @@ def test_ba_vs_oracle(spark):
     assert got == kcore_oracle(edges)
 
 
-def test_core_numbers_block_cache_mode_matches(spark):
-    """Worker-local block-cache execution (load-once-compute-many) returns
-    the same core numbers as cogrouped block shipping."""
-    from goffish_v3_spark.operators.kcore import core_numbers
-    from tests import graphs
-
-    df = graphs.to_df(spark, graphs.barabasi_albert(250, m=4, seed=13))
-    a = {r.vid: r.core for r in core_numbers(spark, df, num_parts=4, cache_blocks=False).collect()}
-    b = {r.vid: r.core for r in core_numbers(spark, df, num_parts=4, cache_blocks=True).collect()}
-    assert a == b
+def test_core_numbers_block_cache_mode_matches(spark, tmp_path):
+    """An explicit blocks_dir and the default local-mode tempdir return the
+    same core numbers, equal to the peeling oracle."""
+    edges = graphs.barabasi_albert(250, m=4, seed=13)
+    df = graphs.to_df(spark, edges)
+    a = {r.vid: r.core for r in core_numbers(spark, df, num_parts=4).collect()}
+    b = {
+        r.vid: r.core
+        for r in core_numbers(
+            spark, df, num_parts=4, blocks_dir=str(tmp_path / "kcore_blocks")
+        ).collect()
+    }
+    assert a == b == kcore_oracle(edges)
 
 
 def test_block_cache_reused_dir_not_stale(spark, tmp_path):
@@ -62,15 +65,16 @@ def test_block_cache_reused_dir_not_stale(spark, tmp_path):
 
 
 def test_k_core_changed_only_vs_full_messaging(spark):
-    """k_core's changed-only + cached execution (r4) matches the full
-    re-broadcast cogroup path on a hub-ish graph."""
+    """k_core's changed-only messaging (r4) matches the full boundary
+    re-broadcast, run distributed to fixpoint (no tail consolidation), on a
+    hub-ish graph."""
     edges = graphs.barabasi_albert(200, m=3, seed=5)
     df = graphs.to_df(spark, edges)
     a = {
         (r.vid, r.deg)
         for r in k_core(
-            spark, df, k=3, num_parts=4, cache_blocks=False, changed_only=False,
-            chain_every=1,
+            spark, df, k=3, num_parts=4, changed_only=False, chain_every=1,
+            consolidate_after=10**9,
         ).collect()
     }
     b = {(r.vid, r.deg) for r in k_core(spark, df, k=3, num_parts=4).collect()}

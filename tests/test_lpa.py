@@ -119,19 +119,20 @@ def test_csr_superstep_collapse_on_anchored_chain(spark):
 
 
 def test_csr_block_cache_mode_matches(spark, tmp_path):
-    """Cache-mode lpa_csr equals the cogrouped path exactly (same kernel,
-    same schedule)."""
-    edges = graphs.two_islands_bridge()
-    df = graphs.to_df(spark, edges)
-    base = sorted((r.vid, r.label) for r in lpa_csr(spark, df, num_parts=4).collect())
-    cached = sorted(
-        (r.vid, r.label)
-        for r in lpa_csr(
-            spark, df, num_parts=4, cache_blocks=True,
-            blocks_dir=str(tmp_path / "lpa_blocks"),
-        ).collect()
-    )
-    assert base == cached
+    """An explicit blocks_dir gives exactly the default tempdir's labels
+    (same kernel, same schedule), and hash-split cliques still match the
+    synchronous oracle."""
+    for edges in (graphs.two_islands_bridge(), graphs.disjoint_cliques(4, 6)):
+        df = graphs.to_df(spark, edges)
+        tmpdirred = sorted((r.vid, r.label) for r in lpa_csr(spark, df, num_parts=4).collect())
+        explicit = sorted(
+            (r.vid, r.label)
+            for r in lpa_csr(
+                spark, df, num_parts=4, blocks_dir=str(tmp_path / "lpa_blocks"),
+            ).collect()
+        )
+        assert tmpdirred == explicit
+    assert dict(explicit) == lpa_oracle(edges, max_iter=10_000)
 
 
 def test_lpa_quiescent_passthrough_requires_proof_of_fixpoint():

@@ -78,43 +78,6 @@ def test_empty_edges(spark):
     assert out.columns == ["vid", "rank"]
 
 
-def test_dense_ids_matches_default(spark):
-    """int32 dense-id remap changes row width, not results."""
-    from pyspark.sql import functions as F
-
-    from goffish_v3_spark.operators.pagerank import pagerank
-    from tests import graphs
-
-    df = graphs.to_df(spark, graphs.barabasi_albert(200, m=3, seed=21))
-    # remap vids into the full 64-bit range first so the test is honest
-    e = df.select(
-        F.xxhash64(F.col("src").cast("string")).alias("src"),
-        F.xxhash64(F.col("dst").cast("string")).alias("dst"),
-        "w",
-    )
-    a = {r.vid: r.rank for r in pagerank(spark, e, fixed_iterations=5).collect()}
-    b = {
-        r.vid: r.rank
-        for r in pagerank(spark, e, fixed_iterations=5, dense_ids=True).collect()
-    }
-    assert set(a) == set(b)
-    for v in a:
-        assert abs(a[v] - b[v]) < 1e-15, v
-
-
-def test_dense_ids_rejects_resume(spark, tmp_path):
-    import pytest
-
-    from goffish_v3_spark.operators.pagerank import pagerank_with_info
-    from tests import graphs
-
-    df = graphs.to_df(spark, graphs.chain(5))
-    with pytest.raises(ValueError):
-        pagerank_with_info(
-            spark, df, dense_ids=True, resume=True, checkpoint_dir=str(tmp_path)
-        )
-
-
 def test_personalized_pagerank_matches_python(spark):
     """PPR with teleport_vid: all (1-alpha) mass on the source; fixed
     iterations match a dense python unroll exactly (same update rule)."""
@@ -149,9 +112,3 @@ def test_personalized_pagerank_matches_python(spark):
         assert abs(got[v] - rank[v]) < 1e-9
     # teleport concentrates mass near the source vs uniform pagerank
     assert got[src] > got[3]
-
-
-def test_ppr_rejects_dense_ids(spark):
-    df = spark.createDataFrame([(0, 1, 1.0)], "src long, dst long, w double")
-    with pytest.raises(ValueError, match="teleport_vid"):
-        pagerank(spark, df, teleport_vid=0, dense_ids=True)

@@ -99,3 +99,11 @@ def test_duplicate_and_reversed_edges_same_forest(spark):
     te2 = [(r.src, r.dst) for r in t2.collect()]
     assert len(te2) == len(set(te2))
     assert t1.count() == len(te2)
+
+
+def test_ids_near_2_pow_62(spark):
+    """The meta-graph contraction goes through the WCC hash-min fixpoint;
+    with labels near 2^62 its old root-sum witness overflowed under ANSI."""
+    base = 2**62
+    edges = [(base + u, base + v) for u, v in chain(40) + disjoint_cliques(3, 5)]
+    _forest_props(spark, edges, num_parts=4)

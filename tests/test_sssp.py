@@ -126,26 +126,21 @@ def test_parent_pointers_valid(spark):
 
 
 def test_csr_block_cache_mode_matches(spark, tmp_path):
-    """Worker-local block-cache execution returns identical distances, both
-    with an explicit blocks_dir and with the local-mode tempdir default."""
-    edges = [(u, v, w) for (u, v), w in zip(graphs.barabasi_albert(120, m=2), 
+    """An explicit blocks_dir and the local-mode tempdir default return
+    identical distances and parents, and the distances match Dijkstra."""
+    edges = [(u, v, w) for (u, v), w in zip(graphs.barabasi_albert(120, m=2),
              [1.0 + (i % 5) for i in range(10_000)])]
-    df = graphs.to_df(spark, edges, weighted=True)
-    base = {
-        (r.vid): (r.dist, r.parent)
-        for r in sssp_csr(spark, df, source=0, weighted=True, num_parts=4).collect()
-    }
-    cached = {
-        (r.vid): (r.dist, r.parent)
-        for r in sssp_csr(
-            spark, df, source=0, weighted=True, num_parts=4,
-            cache_blocks=True, blocks_dir=str(tmp_path / "sssp_blocks"),
-        ).collect()
-    }
     tmpdirred = {
         (r.vid): (r.dist, r.parent)
-        for r in sssp_csr(
-            spark, df, source=0, weighted=True, num_parts=4, cache_blocks=True
+        for r in _check_csr(
+            spark, edges, source=0, weighted=True, directed=True, num_parts=4
         ).collect()
     }
-    assert base == cached == tmpdirred
+    explicit = {
+        (r.vid): (r.dist, r.parent)
+        for r in _check_csr(
+            spark, edges, source=0, weighted=True, directed=True, num_parts=4,
+            blocks_dir=str(tmp_path / "sssp_blocks"),
+        ).collect()
+    }
+    assert tmpdirred == explicit

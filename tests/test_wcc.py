@@ -47,3 +47,20 @@ def test_partition_count_invariance(spark):
             sorted((r.vid, r.label) for r in wcc(spark, df, num_parts=p).collect())
         )
     assert results[0] == results[1] == results[2]
+
+
+def test_ids_near_2_pow_62(spark):
+    """Labels near 2^62 (xxhash64-range ids): summing two of them overflows
+    a long, which raised ARITHMETIC_OVERFLOW under ANSI mode when the
+    hash-min convergence check summed roots."""
+    base = 2**62
+    edges = [(base + u, base + v) for u, v in graphs.chain(40) + graphs.disjoint_cliques(3, 5)]
+    _check(spark, edges)
+
+
+def test_hash_min_raises_without_convergence(spark):
+    import pytest
+
+    df = graphs.to_df(spark, graphs.chain(50))
+    with pytest.raises(RuntimeError, match="did not converge"):
+        wcc(spark, df, num_parts=4, max_iter=1)
