@@ -44,46 +44,19 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import BlockStore, block_store, load_block
-from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks_sym
+from goffish_v3_spark.plans.csr import build_csr_blocks_sym
 from goffish_v3_spark.plans.superstep import no_aqe
 
 OUT_SCHEMA = "part int, kind int, vid long, a long, payload binary"
 
-
-def _local_hindex_fixpoint(
-    blk: CsrBlock, est: np.ndarray, remote_est: np.ndarray, max_sweeps: int = 10_000
-) -> np.ndarray:
-    """Iterate new_est = min(est, h_index(neighbour ests)) to fixpoint inside
-    one partition block. Fully vectorized: one lexsort + segment max per sweep.
-    """
-    indptr = blk.indptr
-    n = blk.n_local
-    n_edges = len(blk.edge_dst_vid)
-    if n == 0 or n_edges == 0:
-        return est
-    deg = np.diff(indptr)
-    seg = np.repeat(np.arange(n, dtype=np.int64), deg)
-    local_idx = blk.edge_dst_local
-    is_local = local_idx >= 0
-    nv = np.empty(n_edges, dtype=np.int64)
-    nv[~is_local] = remote_est[~is_local]
-    rank1 = np.arange(n_edges, dtype=np.int64)
-    for _ in range(max_sweeps):
-        nv[is_local] = est[local_idx[is_local]]
-        # sort neighbour values descending within each CSR segment
-        order = np.lexsort((-nv, seg))
-        nv_sorted = nv[order]
-        # within-segment rank (CSR rows are contiguous, lexsort keeps seg order)
-        rank = rank1 - indptr[seg]
-        h_cand = np.minimum(rank + 1, nv_sorted)
-        h = np.zeros(n, dtype=np.int64)
-        np.maximum.at(h, seg, h_cand)
-        new_est = np.minimum(est, h)
-        if np.array_equal(new_est, est):
-            break
-        est = new_est
-    return est
-
+# supersteps per Spark job at the start (the chain halves at the tail, see
+# _hindex_loop): the capped k-core iteration needs only a handful of rounds
+CHAIN_CORE_NUMBERS = 8
+CHAIN_K_CORE = 4
+# tail consolidation: after this many distributed supersteps, if the summed
+# in-memory CSR fits the byte budget, the rest runs in one merged-block task
+CONSOLIDATE_AFTER = 2
+CONSOLIDATE_BUDGET_BYTES = 512 << 20
 
 _EMPTY_OUT = {
     "part": "int32",
@@ -95,25 +68,26 @@ _EMPTY_OUT = {
 
 
 def _hindex_fixpoint_frontier(
-    indptr: np.ndarray,
-    dst_idx: np.ndarray,
-    est: np.ndarray,
-    max_sweeps: int = 100_000,
+    indptr: np.ndarray, dst_idx: np.ndarray, est: np.ndarray
 ) -> np.ndarray:
-    """H-index iteration to fixpoint over a fully-local CSR (all ``dst_idx``
-    resolved), with FRONTIER-FILTERED sweeps: a vertex's h is recomputed only
+    """H-index iteration to fixpoint over a CSR of ``n = len(indptr) - 1``
+    rows, with FRONTIER-FILTERED sweeps: a vertex's h is recomputed only
     when a neighbour's estimate changed in the previous sweep, so the long
     value-creep tail costs O(frontier) per sweep instead of O(m) — measured
     38 full-m Jacobi sweeps (6.5 s) → sub-second on the sf0.1 copart merge.
-    Exact for any update order (Montresor et al. 2013, thm 1); mutates and
-    returns ``est``."""
+
+    ``est`` may be longer than ``n``: entries past ``n`` are PINNED (a
+    partition block's remote neighbours at their last-received estimates),
+    read through ``dst_idx`` but never updated or woken. Exact for any update
+    order (Montresor et al. 2013, thm 1); mutates and returns ``est``.
+    Terminates because every sweep lowers some non-negative estimate."""
     n = len(indptr) - 1
     if n == 0 or len(dst_idx) == 0:
         return est
     deg = np.diff(indptr)
     seg = np.repeat(np.arange(n, dtype=np.int64), deg)
     active = np.ones(n, dtype=bool)
-    for _ in range(max_sweeps):
+    while True:
         em = active[seg]
         sub_seg = seg[em]
         sub_nv = est[dst_idx[em]]
@@ -136,11 +110,13 @@ def _hindex_fixpoint_frontier(
         if len(moved) == 0:
             break
         est[moved] = new_av[lowered]
-        # wake exactly the neighbours of moved vertices (graph symmetric)
+        # wake exactly the unpinned neighbours of moved vertices (graph
+        # symmetric)
         active = np.zeros(n, dtype=bool)
         mv = np.zeros(n, dtype=bool)
         mv[moved] = True
-        active[dst_idx[mv[seg]]] = True
+        woken = dst_idx[mv[seg]]
+        active[woken[woken < n]] = True
     return est
 
 
@@ -154,23 +130,16 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
     plus a full kind-3 shadow per partition (every remote estimate it
     references) so the k-core finalize pass works unchanged.
 
-    Only legal when the summed block bytes fit one task (the caller's byte
-    budget) — the 100 TB posture is: distributed waves grind the bulk creep
-    in parallel, and the serial cross-partition tail collapses into one task
-    the moment the whole remaining problem provably fits."""
+    Only legal when the summed block bytes fit one task
+    (``CONSOLIDATE_BUDGET_BYTES``) — the 100 TB posture is: distributed
+    waves grind the bulk creep in parallel, and the serial cross-partition
+    tail collapses into one task the moment the whole remaining problem
+    provably fits."""
 
     def fn(it):
-        import os
-        import time as _t
-
-        _trace = bool(os.environ.get("GOFFISH_KCORE_TRACE"))
-        _t0 = _t.monotonic()
         pdf = pd.concat(list(it), ignore_index=True)
         state = pdf[pdf["kind"] == 0]
         blks = [load_block(blocks_path, p) for p in parts]
-        if _trace:
-            print(f"[kcore-consol] load {_t.monotonic() - _t0:.2f}s", flush=True)
-            _t0 = _t.monotonic()
         offs = np.concatenate(
             ([0], np.cumsum([b.n_local for b in blks]))
         ).astype(np.int64)
@@ -211,13 +180,7 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
         )
         if cap is not None:
             est = np.minimum(est, cap)
-        if _trace:
-            print(f"[kcore-consol] merge {_t.monotonic() - _t0:.2f}s", flush=True)
-            _t0 = _t.monotonic()
         est = _hindex_fixpoint_frontier(indptr, dst_idx, est)
-        if _trace:
-            print(f"[kcore-consol] fixpoint {_t.monotonic() - _t0:.2f}s", flush=True)
-            _t0 = _t.monotonic()
 
         frames = []
         for i, b in enumerate(blks):
@@ -298,12 +261,22 @@ def _merge_boundary(sm_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return svid, sval
 
 
-def _make_kernel(
-    superstep: int,
-    blocks_path: str,
-    cap: int | None = None,
-    changed_only: bool = False,
-):
+def _lookup_boundary(
+    part: int, vid: np.ndarray, val: np.ndarray, want: np.ndarray
+) -> np.ndarray:
+    """Estimates of the remote vertices ``want`` from the sorted boundary
+    lookup ``(vid, val)`` (see :func:`_merge_boundary`). Every remote
+    neighbour must be covered — the first exchange is full — so a gap
+    raises instead of reading a wrong estimate."""
+    if len(vid) == 0:
+        raise RuntimeError(f"kcore part {part}: no boundary estimates received")
+    pos = np.minimum(np.searchsorted(vid, want), len(vid) - 1)
+    if not np.array_equal(vid[pos], want):
+        raise RuntimeError(f"kcore part {part}: missing boundary estimate rows")
+    return val[pos]
+
+
+def _make_kernel(superstep: int, blocks_path: str, cap: int | None = None):
     """``cap`` caps estimates at k: the capped iteration converges to
     min(core, k) — distributed peeling for a fixed k. Cascades stop as soon
     as values saturate at the cap, so the k-core query needs only a handful
@@ -313,13 +286,12 @@ def _make_kernel(
     CSR block from the store at ``blocks_path`` (plans.block_cache) — the
     reference's load-once-compute-many shape.
 
-    ``changed_only`` sends O(changed) boundary estimates per superstep
-    instead of re-broadcasting the full boundary (the reference sends only
-    changed cores, KCore.java:101-109): each partition keeps a shadow of the
-    last-received remote estimates as a packed kind=3 row routed to itself.
-    Exact —
-    estimates are monotone non-increasing, so an unsent value is still the
-    sender's current value."""
+    Like the reference, which sends only changed cores (KCore.java:101-109),
+    the kernel sends O(changed) boundary estimates per superstep: each
+    partition keeps a shadow of the last-received remote estimates as a
+    packed kind=3 row routed to itself. Exact — estimates are monotone
+    non-increasing, so an unsent value is still the sender's current
+    value."""
 
     def passthrough(sm_pdf: pd.DataFrame) -> pd.DataFrame:
         """Quiescent-partition fast path (wake-on-message at partition
@@ -380,40 +352,27 @@ def _make_kernel(
             send_edge_mask = remote_mask
         else:
             state_rows = sm_pdf[sm_pdf["kind"] == 0]
-            msg_rows = sm_pdf[sm_pdf["kind"] == 1]
             est = np.empty(n, dtype=np.int64)
             idx = blk.align(state_rows["vid"].to_numpy(dtype=np.int64))
             est[idx] = state_rows["a"].to_numpy(dtype=np.int64)
             prev = est.copy()
 
-            if changed_only:
-                shadow_vid, shadow_val = _merge_boundary(sm_pdf)
-                lookup_vid, lookup_val = shadow_vid, shadow_val
-            else:
-                mvid = msg_rows["vid"].to_numpy(dtype=np.int64)
-                mval = msg_rows["a"].to_numpy(dtype=np.int64)
-                morder = np.argsort(mvid, kind="stable")
-                lookup_vid, lookup_val = mvid[morder], mval[morder]
-
-            remote_est = np.zeros(len(blk.edge_dst_vid), dtype=np.int64)
+            # local fixpoint with each remote edge's neighbour appended as a
+            # pinned entry at its last-received estimate
+            shadow_vid, shadow_val = _merge_boundary(sm_pdf)
+            dst_idx = blk.edge_dst_local.astype(np.int64)
+            pinned = np.empty(0, dtype=np.int64)
             if remote_mask.any():
-                want = blk.edge_dst_vid[remote_mask]
-                if len(lookup_vid) == 0:
-                    raise RuntimeError(
-                        f"kcore part {blk.part}: no boundary estimates received"
-                    )
-                pos = np.minimum(np.searchsorted(lookup_vid, want), len(lookup_vid) - 1)
-                if not np.array_equal(lookup_vid[pos], want):
-                    raise RuntimeError(
-                        f"kcore part {blk.part}: missing boundary estimate rows"
-                    )
-                remote_est[remote_mask] = lookup_val[pos]
-            est = _local_hindex_fixpoint(blk, est, remote_est)
+                pinned = _lookup_boundary(
+                    blk.part, shadow_vid, shadow_val, blk.edge_dst_vid[remote_mask]
+                )
+                dst_idx[remote_mask] = n + np.arange(len(pinned), dtype=np.int64)
+            est = _hindex_fixpoint_frontier(
+                blk.indptr, dst_idx, np.concatenate((est, pinned))
+            )[:n]
             changed_mask = est != prev
             changed = np.int64(np.count_nonzero(changed_mask))
-            send_edge_mask = (
-                remote_mask & changed_mask[seg] if changed_only else remote_mask
-            )
+            send_edge_mask = remote_mask & changed_mask[seg]
 
         # boundary exchange: send each (changed) boundary vertex's estimate
         # to every partition that references it — dedup'd per (dst_part, vid)
@@ -484,16 +443,14 @@ def _hindex_loop(
     store: BlockStore,
     cap: int | None,
     max_iter: int,
-    changed_only: bool,
     chain_every: int,
     num_parts: int,
-    consolidate_after: int,
-    consolidate_budget_bytes: int,
 ) -> DataFrame:
     """Drive the kernel to global fixpoint; returns the final carry — kind-0
-    state plus the fixpoint boundary channel (kind-1 messages; under
-    ``changed_only`` also the kind-3 shadows, which together hold every
-    boundary estimate — see :func:`_merge_boundary`). Callers filter kinds.
+    state plus the fixpoint boundary channel (kind-1 messages and kind-3
+    shadows, which together hold every boundary estimate — see
+    :func:`_merge_boundary`). Callers filter kinds. Raises ``RuntimeError``
+    when ``max_iter`` supersteps end with estimates still changing.
 
     Supersteps are a grouped map over state+messages only (kind=-1 seed
     rows bootstrap every partition at superstep 0); blocks never re-enter
@@ -508,13 +465,18 @@ def _hindex_loop(
     tail: once the observed changed-count drops below the partition count
     the wavefront is narrow and fixpoint is near, so the chain halves per
     round (VERDICT r3 #4) — long chains amortize the serial tax over the
-    bulk phase, short chains cap the no-op overshoot at the tail."""
-    import os
-    import time as _time
+    bulk phase, short chains cap the no-op overshoot at the tail.
 
-    _trace = bool(os.environ.get("GOFFISH_KCORE_TRACE"))
-    # tail consolidation only when the summed in-memory CSR fits one task
-    consolidate_ok = 40 * store.n_edges + 24 * store.n_vertices <= consolidate_budget_bytes
+    Tail consolidation (VERDICT r4 #2): after ``CONSOLIDATE_AFTER``
+    distributed supersteps, if the SUMMED CSR block bytes fit
+    ``CONSOLIDATE_BUDGET_BYTES``, the remaining cross-partition cascade runs
+    to global fixpoint inside one merged-block task instead of tens more
+    ~0.5 s grouped-map waves. The budget keeps this honest at scale: above
+    it the distributed waves continue; below it the tail is provably a
+    single-task problem."""
+    consolidate_ok = (
+        40 * store.n_edges + 24 * store.n_vertices <= CONSOLIDATE_BUDGET_BYTES
+    )
     carry = spark.createDataFrame([], OUT_SCHEMA)
     seed = spark.createDataFrame(
         [(p, -1, -1, 0, None) for p in store.parts], OUT_SCHEMA
@@ -523,20 +485,17 @@ def _hindex_loop(
     step = 0
     with no_aqe(spark):
         while step < max_iter:
-            _t0 = _time.monotonic()
             chain = max(1, min(cur_chain, max_iter - step))
-            if consolidate_ok and step < consolidate_after:
+            if consolidate_ok and step < CONSOLIDATE_AFTER:
                 # stop the chain exactly at the consolidation trigger: the
                 # distributed phase only needs to reach the hand-off point
                 # (budget-disabled runs keep full-length chains)
-                chain = max(1, min(chain, consolidate_after - step))
+                chain = max(1, min(chain, CONSOLIDATE_AFTER - step))
             mixed = carry
             out = None
             for j in range(chain):
                 i = step + j
-                kernel = _make_kernel(
-                    i, store.path, cap=cap, changed_only=changed_only
-                )
+                kernel = _make_kernel(i, store.path, cap=cap)
                 if i == 0:
                     mixed = mixed.unionByName(seed)
                 out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
@@ -553,37 +512,25 @@ def _hindex_loop(
             carry = out.filter(F.col("kind") != 2)
             step += chain
             changed = obs.get["changed"] or 0
-            if _trace:
-                print(
-                    f"[kcore-trace] steps {step - chain}..{step - 1} "
-                    f"chain={chain} changed_last={changed} "
-                    f"wall={_time.monotonic() - _t0:.2f}s",
-                    flush=True,
-                )
             if step >= 2 and changed == 0:
-                break
-            if consolidate_ok and step >= consolidate_after:
+                return carry
+            if consolidate_ok and step >= CONSOLIDATE_AFTER:
                 # tail consolidation: the distributed chains above ground the
                 # bulk value creep in parallel; the remaining cross-partition
-                # cascade (tens of ~0.5 s grouped-map waves for a trickle of
-                # changes) collapses into ONE merged-fixpoint task
+                # cascade collapses into ONE merged-fixpoint task
                 fn = _make_consolidated_kernel(store.parts, store.path, cap)
-                carry = (
+                return (
                     carry.filter(F.col("kind") == 0)
                     .repartition(1)
                     .mapInPandas(fn, schema=OUT_SCHEMA)
                     .localCheckpoint(eager=True)
                 )
-                if _trace:
-                    print(
-                        f"[kcore-trace] consolidated tail after step {step} "
-                        f"(changed={changed})",
-                        flush=True,
-                    )
-                break
             if changed < num_parts:
                 cur_chain = max(1, cur_chain // 2)
-    return carry
+    raise RuntimeError(
+        f"k-core did not converge within max_iter={max_iter} supersteps "
+        f"({changed} estimates still changing)"
+    )
 
 
 def core_numbers(
@@ -592,41 +539,23 @@ def core_numbers(
     num_parts: int | None = None,
     max_iter: int = 1000,
     blocks_dir: str | None = None,
-    changed_only: bool = True,
-    chain_every: int = 8,
-    consolidate_after: int = 2,
-    consolidate_budget_bytes: int = 512 << 20,
 ) -> DataFrame:
     """``(vid long, core long)`` for every vertex of the undirected simple
-    graph induced by ``edges`` (self-loops ignored).
-
-    ``consolidate_after`` / ``consolidate_budget_bytes`` control tail
-    consolidation (VERDICT r4 #2): after that many distributed supersteps,
-    if the SUMMED CSR block bytes fit the budget, the remaining
-    cross-partition cascade runs to global fixpoint inside one merged-block
-    task (frontier-filtered sweeps) instead of tens more ~0.5 s grouped-map
-    waves. The budget is what keeps this honest at scale: above it the
-    distributed waves continue unchanged; below it the tail is provably a
-    single-task problem. Set ``consolidate_after=None``-equivalent by
-    passing a value ≥ ``max_iter`` to disable.
+    graph induced by ``edges`` (self-loops ignored). Raises ``RuntimeError``
+    if ``max_iter`` supersteps do not reach the fixpoint.
 
     The CSR blocks are written once to the block store and served from the
     worker-local cache across the (many) global rounds of the full
     decomposition. ``blocks_dir`` points the store at executor-visible
     storage — REQUIRED on a multi-executor cluster; when given, the
-    directory is kept (it doubles as the block checkpoint).
-    ``changed_only`` (default) sends only estimates that moved this
-    superstep (KCore.java:101-109), with receiver-side shadows of the
-    last-received values."""
+    directory is kept (it doubles as the block checkpoint)."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts)
     with block_store(spark, blocks, blocks_dir, "goffish_kcore_") as store:
         carry = _hindex_loop(
-            spark, store, cap=None, max_iter=max_iter, changed_only=changed_only,
-            chain_every=chain_every, num_parts=num_parts,
-            consolidate_after=consolidate_after,
-            consolidate_budget_bytes=consolidate_budget_bytes,
+            spark, store, cap=None, max_iter=max_iter,
+            chain_every=CHAIN_CORE_NUMBERS, num_parts=num_parts,
         )
         return (
             carry.filter(F.col("kind") == 0)
@@ -657,17 +586,10 @@ def _make_finalize_kernel(cap: int, blocks_path: str):
         nb_in[local_mask] = est[blk.edge_dst_local[local_mask]] >= cap
         if (~local_mask).any():
             mvid, mval = _merge_boundary(sm_pdf)
-            want = blk.edge_dst_vid[~local_mask]
-            if len(mvid) == 0:
-                raise RuntimeError(
-                    f"kcore part {blk.part}: no boundary estimates received"
-                )
-            pos = np.minimum(np.searchsorted(mvid, want), len(mvid) - 1)
-            if not np.array_equal(mvid[pos], want):
-                raise RuntimeError(
-                    f"kcore part {blk.part}: missing boundary estimate rows"
-                )
-            nb_in[~local_mask] = mval[pos] >= cap
+            nb_in[~local_mask] = (
+                _lookup_boundary(blk.part, mvid, mval, blk.edge_dst_vid[~local_mask])
+                >= cap
+            )
 
         seg = np.repeat(np.arange(n, dtype=np.int64), blk.out_degrees)
         deg_in = np.bincount(seg[nb_in], minlength=n).astype(np.int64)
@@ -691,10 +613,6 @@ def k_core(
     k: int,
     num_parts: int | None = None,
     blocks_dir: str | None = None,
-    changed_only: bool = True,
-    chain_every: int = 4,
-    consolidate_after: int = 2,
-    consolidate_budget_bytes: int = 512 << 20,
 ) -> DataFrame:
     """Vertices of the k-core: ``(vid long, deg long)`` with deg = degree
     inside the core subgraph (= #neighbours in the k-core, since the k-core
@@ -706,22 +624,17 @@ def k_core(
     kernel pass computes induced degrees from the fixpoint boundary channel,
     so no edge-table re-join is needed.
 
-    Execution shape (shared with :func:`core_numbers` — VERDICT r3 #2: this
-    query had kept the round-1 plan while its sibling got the optimizations):
-    CSR blocks are served from the worker-local block store (``blocks_dir``
-    as in :func:`core_numbers`); ``changed_only`` sends
-    only moved estimates (KCore.java:101-109) with receiver-side shadows;
-    ``chain_every`` starts at 4 (the capped iteration needs only a handful
-    of rounds) and adapts down at the tail."""
+    Execution shape is shared with :func:`core_numbers` (VERDICT r3 #2: this
+    query had kept the round-1 plan while its sibling got the optimizations),
+    including ``blocks_dir``; the chain starts at ``CHAIN_K_CORE`` supersteps
+    per job."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts)
     with block_store(spark, blocks, blocks_dir, "goffish_kcore_") as store:
         carry = _hindex_loop(
-            spark, store, cap=k, max_iter=1000, changed_only=changed_only,
-            chain_every=chain_every, num_parts=num_parts,
-            consolidate_after=consolidate_after,
-            consolidate_budget_bytes=consolidate_budget_bytes,
+            spark, store, cap=k, max_iter=1000,
+            chain_every=CHAIN_K_CORE, num_parts=num_parts,
         )
         fin = _make_finalize_kernel(k, store.path)
         return (

@@ -128,12 +128,14 @@ def lpa(
 
 LPA_SCHEMA = "part int, kind int, vid long, a long"
 
+# cap on the mode-propagation sweeps of one block in one superstep
+MAX_LOCAL_SWEEPS = 10_000
+
 
 def _local_mode_fixpoint(
     blk: CsrBlock,
     label: np.ndarray,
     remote_label: np.ndarray,
-    max_sweeps: int,
 ) -> np.ndarray:
     """Synchronous mode-propagation sweeps over one block to local fixpoint,
     with remote neighbours pinned at ``remote_label`` (per-edge values, only
@@ -159,7 +161,7 @@ def _local_mode_fixpoint(
     nv = np.empty(n_edges, dtype=np.int64)
     nv[~is_local] = remote_label[~is_local]
     prev = None
-    for _ in range(max_sweeps):
+    for _ in range(MAX_LOCAL_SWEEPS):
         nv[is_local] = label[local_idx[is_local]]
         order = np.lexsort((nv, seg))
         seg_s, nv_s = seg[order], nv[order]
@@ -195,7 +197,7 @@ def _local_mode_fixpoint(
 _LPA_EMPTY = {"part": "int32", "kind": "int32", "vid": "int64", "a": "int64"}
 
 
-def _make_lpa_kernel(superstep: int, max_local_sweeps: int, blocks_path: str):
+def _make_lpa_kernel(superstep: int, blocks_path: str):
     """One superstep: merge shadows+messages, run the block to local mode
     fixpoint, emit state (kind=0), changed-only boundary labels (kind=1),
     refreshed shadows (kind=3, routed to self), the superstep-start labels
@@ -311,7 +313,7 @@ def _make_lpa_kernel(superstep: int, max_local_sweeps: int, blocks_path: str):
                 vals[hit] = shadow_val[pos[hit]]
             remote_label[remote_mask] = vals
 
-        label = _local_mode_fixpoint(blk, label, remote_label, max_local_sweeps)
+        label = _local_mode_fixpoint(blk, label, remote_label)
         if prevprev is not None:
             cyc = (label == prevprev) & (label != prev)
             if cyc.any():
@@ -383,7 +385,6 @@ def lpa_csr(
     edges: DataFrame,
     num_parts: int | None = None,
     max_iter: int = 30,
-    max_local_sweeps: int = 10_000,
     part_expr=None,
     blocks_dir: str | None = None,
 ) -> DataFrame:
@@ -422,7 +423,7 @@ def lpa_csr(
         supersteps = 0
         with no_aqe(spark):
             for i in range(max_iter):
-                kernel = _make_lpa_kernel(i, max_local_sweeps, store.path)
+                kernel = _make_lpa_kernel(i, store.path)
                 mixed = carry.unionByName(seed) if i == 0 else carry
                 out = mixed.groupby("part").applyInPandas(kernel, schema=LPA_SCHEMA)
                 obs = Observation(f"lpa_csr_step_{i}")

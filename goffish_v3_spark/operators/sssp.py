@@ -39,6 +39,22 @@ INF = float("inf")
 SSSP_SCHEMA = "part int, kind int, vid long, d double, p long"
 
 
+def _prep_edges(edges: DataFrame, weighted: bool, directed: bool) -> DataFrame:
+    """``(src, dst, w)`` for both engines: unit weights unless ``weighted``,
+    both directions unless ``directed``. Weighted runs reject a negative
+    weight with ``ValueError`` — the engines' semantics are the reference's
+    local Dijkstra, and a negative cycle inside one block would keep
+    ``sssp_csr``'s local relaxation loop going forever."""
+    if weighted and not edges.filter(F.col("w") < 0).isEmpty():
+        raise ValueError("sssp: negative edge weight (weights must be >= 0)")
+    e = edges.select("src", "dst", (F.col("w") if weighted else F.lit(1.0)).alias("w"))
+    if not directed:
+        e = e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+    return e
+
+
 def sssp(
     spark: SparkSession,
     edges: DataFrame,
@@ -50,11 +66,7 @@ def sssp(
     """Return ``(vid long, dist double, parent long)``; unreachable vertices
     keep dist = +inf and parent = -1 (the reference prints Short.MAX for
     these, SSSP.java:90; +inf is our canonical unreachable marker)."""
-    e = edges.select("src", "dst", (F.col("w") if weighted else F.lit(1.0)).alias("w"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
+    e = _prep_edges(edges, weighted, directed)
     # persist pre-shuffled AND pre-sorted on the per-superstep join key, so
     # frontier ⋈ e reuses the cached outputPartitioning/outputOrdering and
     # only the (small) frontier side exchanges each superstep — same layout
@@ -83,10 +95,11 @@ def sssp(
     ).localCheckpoint(eager=True)
     frontier = dist.filter(F.col("dist") == 0.0).select("vid", "dist")
 
-    with no_aqe(spark):
-        dist = _relax_loop(e, dist, frontier, max_iter)
-    e.unpersist()
-    return dist
+    try:
+        with no_aqe(spark):
+            return _relax_loop(e, dist, frontier, max_iter)
+    finally:
+        e.unpersist()
 
 
 def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
@@ -253,11 +266,7 @@ def sssp_csr(
     """
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = edges.select("src", "dst", (F.col("w") if weighted else F.lit(1.0)).alias("w"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
+    e = _prep_edges(edges, weighted, directed)
     blocks = build_csr_blocks(spark, e, num_parts, part_expr=part_expr)
 
     with block_store(spark, blocks, blocks_dir, "goffish_sssp_") as store:
@@ -285,6 +294,10 @@ def sssp_csr(
                 supersteps = i + 1
                 if int(obs.get["improved"] or 0) == 0:
                     break
+            else:
+                raise RuntimeError(
+                    f"sssp_csr did not converge within max_iter={max_iter} supersteps"
+                )
 
         result = (
             state.select("vid", F.col("d").alias("dist"), F.col("p").alias("parent"))
@@ -326,6 +339,5 @@ def _relax_loop(e, dist, frontier, max_iter):
         frontier = merged.filter(F.col("_improved")).select("vid", "dist")
         dist = merged.select("vid", "dist", "parent")
         if improved == 0:
-            break
-
-    return dist
+            return dist
+    raise RuntimeError(f"sssp did not converge within max_iter={max_iter} supersteps")

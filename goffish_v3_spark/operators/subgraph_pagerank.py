@@ -46,6 +46,8 @@ OUT_SCHEMA = "part int, kind int, vid long, a double, b double"
 
 ALPHA = 0.85
 EPSILON = 1e-3
+# the SubgraphRank warm start's local convergence threshold
+LOCAL_EPS = 0.05
 
 
 def _local_pagerank(blk: CsrBlock, alpha: float, eps: float, max_sweeps: int = 200):
@@ -81,24 +83,26 @@ def _make_kernel(
     alpha: float,
     base: float,
     blocks_path: str,
+    n_total: int,
     local_init: bool = False,
-    local_eps: float = 0.05,
-    n_total: int | None = None,
 ):
     def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        # every part has state rows (init_rows seeds them all)
         blk = load_block(blocks_path, int(key[0]))
         n_local = blk.n_local
 
         state_rows = sm_pdf[sm_pdf["kind"] == 0]
         msg_rows = sm_pdf[sm_pdf["kind"] == 1]
 
-        # align state to the block's sorted vid order
-        idx = blk.align(state_rows["vid"].to_numpy(dtype=np.int64))
-        ranks = np.empty(n_local, dtype=np.float64)
         pending = np.zeros(n_local, dtype=np.float64)
-        ranks[idx] = state_rows["a"].to_numpy(dtype=np.float64)
-        pending[idx] = state_rows["b"].to_numpy(dtype=np.float64)
+        if superstep == 0:
+            # a kind=-1 seed row is all a part gets: ranks start at 1/N
+            ranks = np.full(n_local, 1.0 / n_total)
+        else:
+            # align state to the block's sorted vid order
+            idx = blk.align(state_rows["vid"].to_numpy(dtype=np.int64))
+            ranks = np.empty(n_local, dtype=np.float64)
+            ranks[idx] = state_rows["a"].to_numpy(dtype=np.float64)
+            pending[idx] = state_rows["b"].to_numpy(dtype=np.float64)
 
         # deliver messages: one pre-summed row per (sending part, dst), so a
         # vid may get several rows — np.add.at sums duplicates
@@ -112,7 +116,7 @@ def _make_kernel(
             if local_init:
                 # SubgraphRank: local PR to ε inside the block, scaled by
                 # |block|/|G| (SubgraphRank.java:54-61,117-143)
-                new_ranks = _local_pagerank(blk, alpha, local_eps) * (
+                new_ranks = _local_pagerank(blk, alpha, LOCAL_EPS) * (
                     n_local / n_total
                 )
             else:
@@ -189,7 +193,6 @@ def csr_pagerank(
     blocks: DataFrame | None = None,
     fixed_iterations: int | None = None,
     local_init: bool = False,
-    local_eps: float = 0.05,
     blocks_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over CSR blocks; returns ``(vid long, rank double)`` equal to
@@ -197,7 +200,7 @@ def csr_pagerank(
 
     ``fixed_iterations`` runs exactly that many global rank updates (the
     SQL-oracle comparison mode). ``local_init`` enables the SubgraphRank
-    warm start: PageRank over each partition's local edges to ``local_eps``
+    warm start: PageRank over each partition's local edges to ``LOCAL_EPS``
     convergence before the first global superstep (SubgraphRank.java:117-143)
     — the superstep-saving inner loop; the global phase still converges to
     the plain PageRank fixpoint.
@@ -208,42 +211,23 @@ def csr_pagerank(
     multi-executor cluster."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    own_blocks = blocks is None
-    if own_blocks:
+    given = blocks is not None
+    if not given:
         blocks = build_csr_blocks(spark, edges, num_parts)
 
-    with block_store(spark, blocks, blocks_dir, "goffish_pr_", release=False) as store:
+    # a caller's blocks stay persisted; blocks built here are released
+    with block_store(spark, blocks, blocks_dir, "goffish_pr_", release=not given) as store:
         # N = all vertices (reference SS0 vertex-count broadcast → driver agg)
         n = store.n_vertices
-        base = (1.0 - alpha) / n
-
-        # init state rows straight out of the blocks (vid, rank=1/N, pending=0)
-        init_rank = 1.0 / n
-
-        def init_rows(batches):
-            for pdf in batches:
-                for _, r in pdf.iterrows():
-                    vids = np.frombuffer(r["local_vids"], dtype=np.int64)
-                    yield pd.DataFrame(
-                        {
-                            "part": np.full(len(vids), r["part"], dtype=np.int32),
-                            "kind": np.zeros(len(vids), dtype=np.int32),
-                            "vid": vids,
-                            "a": np.full(len(vids), init_rank),
-                            "b": np.zeros(len(vids)),
-                        }
-                    )
-
-        state = blocks.mapInPandas(init_rows, schema=OUT_SCHEMA).localCheckpoint(eager=True)
-        if own_blocks:
-            blocks.unpersist()
-        msgs = spark.createDataFrame([], OUT_SCHEMA)
-
+        # kind=-1 seed rows bootstrap every partition at superstep 0 (no
+        # state exists yet to group by)
+        seed = spark.createDataFrame(
+            [(p, -1, -1, 0.0, 0.0) for p in store.parts], OUT_SCHEMA
+        )
         with no_aqe(spark):
             state, supersteps = _csr_loop(
-                store.path, state, msgs, alpha, base, eps, max_iter,
-                fixed_iterations=fixed_iterations,
-                local_init=local_init, local_eps=local_eps, n_total=n,
+                store.path, seed, alpha, (1.0 - alpha) / n, eps, max_iter, n,
+                fixed_iterations=fixed_iterations, local_init=local_init,
             )
         result = state.select("vid", F.col("a").alias("rank")).localCheckpoint(eager=True)
     result.pr_supersteps = supersteps  # introspection for tests/bench
@@ -258,10 +242,11 @@ def subgraph_rank(spark: SparkSession, edges: DataFrame, **kw) -> DataFrame:
 
 
 def _csr_loop(
-    blocks_path, state, msgs, alpha, base, eps, max_iter,
-    fixed_iterations=None, local_init=False, local_eps=0.05, n_total=None,
+    blocks_path, seed, alpha, base, eps, max_iter, n_total,
+    fixed_iterations=None, local_init=False,
 ):
-    """Run the supersteps; return ``(state rows, supersteps run)``.
+    """Run the supersteps from the per-part ``seed`` rows; return ``(state
+    rows, supersteps run)``.
 
     A superstep is one Spark job with one exchange: the kernel's kind 0
     (state) and kind 1 (message) rows of the previous superstep are grouped
@@ -271,18 +256,13 @@ def _csr_loop(
     ``np.add.at``. The kind 2 max-delta rides the checkpoint as an
     Observation, so the ε-gate adds no job either."""
     total = max_iter if fixed_iterations is None else fixed_iterations + 1
+    mixed = seed
     i = 0
     for i in range(total):
         kernel = _make_kernel(
-            i, alpha, base, blocks_path,
-            local_init=local_init, local_eps=local_eps, n_total=n_total,
+            i, alpha, base, blocks_path, n_total, local_init=local_init
         )
-        # every part already has state rows (init_rows), no seeds needed
-        out = (
-            state.unionByName(msgs)
-            .groupby("part")
-            .applyInPandas(kernel, schema=OUT_SCHEMA)
-        )
+        out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
         # the ε-gate's max-delta rides the checkpoint materialization as an
         # Observation — ONE Spark job per superstep (the kcore/sssp pattern),
         # not a second collect() job over the kind=2 rows
@@ -291,7 +271,7 @@ def _csr_loop(
             obs, F.max(F.when(F.col("kind") == 2, F.col("a"))).alias("delta")
         ).localCheckpoint(eager=True)
         state = out.filter(F.col("kind") == 0)
-        msgs = out.filter(F.col("kind") == 1)
+        mixed = out.filter(F.col("kind") != 2)
         if fixed_iterations is None:
             delta = obs.get["delta"]
             if delta is not None and delta <= eps:

@@ -83,37 +83,29 @@ class CsrBlock:
         return np.searchsorted(self.local_vids, vids)
 
 
-def _build_block(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Assemble one partition's CSR from its tagged rows.
+def _assemble_block(
+    part: int,
+    local_vids: np.ndarray,
+    src: np.ndarray,
+    dst: np.ndarray,
+    dst_part: np.ndarray,
+    w: np.ndarray,
+) -> pd.DataFrame:
+    """One partition's CSR block row from its sorted ``local_vids`` and the
+    out-edges of those vertices.
 
-    Rows: kind 'v' → (vid) owned vertex; kind 'e' → (src, dst, w, dst_part).
-    """
-    part = int(pdf["part"].iloc[0])
-    vrows = pdf[pdf["kind"] == "v"]
-    erows = pdf[pdf["kind"] == "e"]
-    local_vids = np.sort(vrows["src"].to_numpy(dtype=np.int64))
-
-    if len(erows):
-        src = erows["src"].to_numpy(dtype=np.int64)
-        dst = erows["dst"].to_numpy(dtype=np.int64)
-        dst_part = erows["dst_part"].to_numpy(dtype=np.int32)
-        w = erows["w"].to_numpy(dtype=np.float64)
-        # multi-edge min-w dedup here in numpy (same trick as the sym
-        # builder): all edges of a src land in its owner partition, so
-        # per-partition dedup is complete — this replaces a full edge-table
-        # groupBy(src,dst) exchange that used to run before the partition
-        # shuffle
+    Multi-edges are deduplicated here in numpy, keeping the min weight: all
+    edges of a src land in its owner partition, so per-partition dedup is
+    complete — this replaces a full edge-table groupBy(src,dst) exchange
+    that used to run before the partition shuffle."""
+    if len(src):
+        # sort by (src, dst, w) then keep first of each (src, dst)
         order = np.lexsort((w, dst, src))
         src, dst, dst_part, w = src[order], dst[order], dst_part[order], w[order]
         keep = np.concatenate(
             ([True], (src[1:] != src[:-1]) | (dst[1:] != dst[:-1]))
         )
         src, dst, dst_part, w = src[keep], dst[keep], dst_part[keep], w[keep]
-    else:
-        src = np.empty(0, dtype=np.int64)
-        dst = np.empty(0, dtype=np.int64)
-        dst_part = np.empty(0, dtype=np.int32)
-        w = np.empty(0, dtype=np.float64)
 
     # indptr over sorted local vids
     indptr = np.zeros(len(local_vids) + 1, dtype=np.int64)
@@ -146,47 +138,33 @@ def _build_block(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _edge_arrays(pdf: pd.DataFrame):
+    return (
+        pdf["src"].to_numpy(dtype=np.int64),
+        pdf["dst"].to_numpy(dtype=np.int64),
+        pdf["dst_part"].to_numpy(dtype=np.int32),
+        pdf["w"].to_numpy(dtype=np.float64),
+    )
+
+
+def _build_block(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Assemble one partition's CSR from its tagged rows.
+
+    Rows: kind 'v' → (vid) owned vertex; kind 'e' → (src, dst, w, dst_part).
+    """
+    vrows = pdf[pdf["kind"] == "v"]
+    local_vids = np.sort(vrows["src"].to_numpy(dtype=np.int64))
+    return _assemble_block(
+        int(pdf["part"].iloc[0]), local_vids, *_edge_arrays(pdf[pdf["kind"] == "e"])
+    )
+
+
 def _build_block_sym(pdf: pd.DataFrame) -> pd.DataFrame:
     """Assemble one partition's CSR from symmetric edge rows (no 'v' rows:
-    in a symmetrized graph every vertex appears as a src). Multi-edge dedup
-    happens here in numpy — all edges of a src land in its partition, so
-    per-partition dedup is complete."""
-    part = int(pdf["part"].iloc[0])
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    dst_part = pdf["dst_part"].to_numpy(dtype=np.int32)
-    w = pdf["w"].to_numpy(dtype=np.float64)
-
-    # sort by (src, dst, w) then keep first of each (src, dst) → min-w dedup
-    order = np.lexsort((w, dst, src))
-    src, dst, dst_part, w = src[order], dst[order], dst_part[order], w[order]
-    keep = np.concatenate(([True], (src[1:] != src[:-1]) | (dst[1:] != dst[:-1])))
-    src, dst, dst_part, w = src[keep], dst[keep], dst_part[keep], w[keep]
-
-    local_vids = np.unique(src)
-    indptr = np.zeros(len(local_vids) + 1, dtype=np.int64)
-    counts = np.bincount(np.searchsorted(local_vids, src), minlength=len(local_vids))
-    indptr[1:] = np.cumsum(counts)
-
-    dst_local = np.full(len(dst), -1, dtype=np.int32)
-    if len(dst) and len(local_vids):
-        pos = np.searchsorted(local_vids, dst)
-        pos_clipped = np.minimum(pos, len(local_vids) - 1)
-        is_local = (dst_part == part) & (local_vids[pos_clipped] == dst)
-        dst_local[is_local] = pos_clipped[is_local].astype(np.int32)
-
-    return pd.DataFrame(
-        {
-            "part": [part],
-            "n_local": [len(local_vids)],
-            "n_edges": [len(dst)],
-            "local_vids": [local_vids.tobytes()],
-            "indptr": [indptr.tobytes()],
-            "edge_dst_vid": [dst.tobytes()],
-            "edge_dst_part": [dst_part.tobytes()],
-            "edge_dst_local": [dst_local.tobytes()],
-            "edge_w": [w.tobytes()],
-        }
+    in a symmetrized graph every vertex appears as a src)."""
+    src, dst, dst_part, w = _edge_arrays(pdf)
+    return _assemble_block(
+        int(pdf["part"].iloc[0]), np.unique(src), src, dst, dst_part, w
     )
 
 

@@ -1,5 +1,7 @@
 """k-core vs closed forms and the peeling oracle."""
 
+import numpy as np
+
 from goffish_v3_spark.operators.kcore import core_numbers, k_core
 from tests import graphs
 from tests.oracles import kcore_oracle
@@ -64,21 +66,38 @@ def test_block_cache_reused_dir_not_stale(spark, tmp_path):
     assert b == core_numbers_oracle(g2)
 
 
-def test_k_core_changed_only_vs_full_messaging(spark):
-    """k_core's changed-only messaging (r4) matches the full boundary
-    re-broadcast, run distributed to fixpoint (no tail consolidation), on a
-    hub-ish graph."""
+def _induced_degrees(edges, k):
+    """(vid, degree inside the k-core) from the peeling oracle."""
+    core = kcore_oracle(edges)
+    adj = {}
+    for u, v in edges:
+        if u != v:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+    members = {v for v, c in core.items() if c >= k}
+    return {(v, len(adj[v] & members)) for v in members}
+
+
+def test_k_core_distributed_matches_oracle(spark, monkeypatch):
+    """k_core run distributed to fixpoint (tail consolidation off through a
+    zero byte budget) on a hub-ish graph: changed-only messages and the
+    pinned-remote local fixpoint give the oracle's k-core and induced
+    degrees."""
+    from goffish_v3_spark.operators import kcore
+
+    monkeypatch.setattr(kcore, "CONSOLIDATE_BUDGET_BYTES", 0)
     edges = graphs.barabasi_albert(200, m=3, seed=5)
     df = graphs.to_df(spark, edges)
-    a = {
-        (r.vid, r.deg)
-        for r in k_core(
-            spark, df, k=3, num_parts=4, changed_only=False, chain_every=1,
-            consolidate_after=10**9,
-        ).collect()
-    }
-    b = {(r.vid, r.deg) for r in k_core(spark, df, k=3, num_parts=4).collect()}
-    assert a == b
+    got = {(r.vid, r.deg) for r in k_core(spark, df, k=3, num_parts=4).collect()}
+    assert got == _induced_degrees(edges, 3)
+
+
+def test_core_numbers_raises_without_convergence(spark):
+    import pytest
+
+    df = graphs.to_df(spark, graphs.barabasi_albert(80, m=2))
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        core_numbers(spark, df, max_iter=1)
 
 
 def test_block_cache_rejects_multi_file_part(spark, tmp_path):
@@ -119,7 +138,7 @@ def test_quiescent_partition_passthrough_skips_block():
 
     from goffish_v3_spark.operators.kcore import _pack_shadow, _unpack_shadow
 
-    kernel = _make_kernel(2, blocks_path="/nonexistent/blocks", changed_only=True)
+    kernel = _make_kernel(2, blocks_path="/nonexistent/blocks")
     packed = _pack_shadow(
         np.array([20, 21], dtype=np.int64), np.array([1, 4], dtype=np.int64)
     )
@@ -161,54 +180,56 @@ def test_quiescent_partition_passthrough_skips_block():
 
     # superstep 1 must never take the passthrough even without messages
     # (a no-remote-edge partition still owes its first local pass)
-    kernel1 = _make_kernel(1, blocks_path="/nonexistent/blocks", changed_only=True)
+    kernel1 = _make_kernel(1, blocks_path="/nonexistent/blocks")
     with pytest.raises(Exception):
         kernel1((1,), sm)
 
 
-def test_tail_consolidation_matches_distributed(spark):
+def test_tail_consolidation_matches_distributed(spark, monkeypatch):
     """Tail consolidation (merged-block global fixpoint, VERDICT r4 #2) must
     reproduce the distributed rounds exactly on both the full decomposition
     and the capped k-core, and a zero byte budget must disable it without
     changing answers."""
+    from goffish_v3_spark.operators import kcore
+
     edges = graphs.barabasi_albert(250, m=3, seed=5)
     df = graphs.to_df(spark, edges)
     oracle = kcore_oracle(edges)
 
     consolidated = {r.vid: r.core for r in core_numbers(spark, df).collect()}
-    distributed = {
-        r.vid: r.core
-        for r in core_numbers(spark, df, consolidate_after=10**9).collect()
-    }
-    budget_zero = {
-        r.vid: r.core
-        for r in core_numbers(spark, df, consolidate_budget_bytes=0).collect()
-    }
-    assert consolidated == distributed == budget_zero == oracle
-
     kc = {r.vid: r.deg for r in k_core(spark, df, k=3).collect()}
-    kd = {
-        r.vid: r.deg
-        for r in k_core(spark, df, k=3, consolidate_after=10**9).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(kcore, "CONSOLIDATE_AFTER", 10**9)
+        distributed = {r.vid: r.core for r in core_numbers(spark, df).collect()}
+        kd = {r.vid: r.deg for r in k_core(spark, df, k=3).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(kcore, "CONSOLIDATE_BUDGET_BYTES", 0)
+        budget_zero = {r.vid: r.core for r in core_numbers(spark, df).collect()}
+    assert consolidated == distributed == budget_zero == oracle
     assert kc == kd
 
 
-def test_frontier_fixpoint_matches_plain():
-    """The frontier-filtered h-index fixpoint equals the plain Jacobi
-    fixpoint (both are chaotic iterations of the same monotone operator)."""
-    import numpy as np
-
-    from goffish_v3_spark.operators.kcore import (
-        _hindex_fixpoint_frontier,
-        _local_hindex_fixpoint,
-    )
-    from tests.oracles import kcore_oracle as _oracle
-
-    edges = graphs.barabasi_albert(120, m=3, seed=9)
+def _csr(edges):
     sym = sorted(set(edges) | {(v, u) for u, v in edges})
     src = np.array([u for u, _ in sym], dtype=np.int64)
     dst = np.array([v for _, v in sym], dtype=np.int64)
+    return src, dst
+
+
+def _hindex(values) -> int:
+    vals = sorted(values, reverse=True)
+    return max([0] + [min(i + 1, x) for i, x in enumerate(vals)])
+
+
+def test_frontier_fixpoint_matches_plain():
+    """The frontier-filtered h-index fixpoint equals the peeling oracle on a
+    fully-local CSR and, in a partition block's pinned-remote form, the
+    plain Jacobi fixpoint."""
+    from goffish_v3_spark.operators.kcore import _hindex_fixpoint_frontier
+    from tests.oracles import kcore_oracle as _oracle
+
+    edges = graphs.barabasi_albert(120, m=3, seed=9)
+    src, dst = _csr(edges)
     vids = np.unique(src)
     n = len(vids)
     deg = np.bincount(np.searchsorted(vids, src), minlength=n)
@@ -218,3 +239,40 @@ def test_frontier_fixpoint_matches_plain():
     est = _hindex_fixpoint_frontier(indptr, dst_idx, deg.astype(np.int64).copy())
     want = _oracle(edges)
     assert {int(vids[i]): int(est[i]) for i in range(n)} == want
+
+    # a partition block's local fixpoint: remote neighbours are pinned
+    # entries past n (never updated or woken); the frontier sweeps reach the
+    # same fixpoint as a synchronous Jacobi loop from the same upper bounds
+    rng = np.random.default_rng(3)
+    edges = graphs.barabasi_albert(150, m=3, seed=11)
+    src, dst = _csr(edges)
+    vids = np.unique(src)
+    local = vids[vids % 3 != 0]  # the block owns 2/3 of the vertices
+    keep = np.isin(src, local)
+    src, dst = src[keep], dst[keep]
+    n = len(local)
+    deg = np.bincount(np.searchsorted(local, src), minlength=n)
+    indptr = np.concatenate(([0], np.cumsum(deg)))
+    is_local = np.isin(dst, local)
+    dst_idx = np.searchsorted(local, dst)
+    n_remote = int((~is_local).sum())
+    assert n_remote > 0
+    dst_idx[~is_local] = n + np.arange(n_remote)
+    pinned = rng.integers(0, 8, size=n_remote)
+    start = np.minimum(deg, rng.integers(1, 12, size=n))
+
+    got = _hindex_fixpoint_frontier(
+        indptr, dst_idx, np.concatenate((start, pinned)).astype(np.int64)
+    )
+    assert list(got[n:]) == list(pinned)  # pinned entries never move
+
+    est = np.concatenate((start, pinned)).tolist()
+    while True:
+        new = [
+            min(est[v], _hindex(est[j] for j in dst_idx[indptr[v]:indptr[v + 1]]))
+            for v in range(n)
+        ]
+        if new == est[:n]:
+            break
+        est[:n] = new
+    assert list(got[:n]) == est[:n]

@@ -146,7 +146,7 @@ def test_lpa_quiescent_passthrough_requires_proof_of_fixpoint():
 
     from goffish_v3_spark.operators.lpa import _make_lpa_kernel
 
-    kernel = _make_lpa_kernel(2, 10_000, blocks_path="/nonexistent/blocks")
+    kernel = _make_lpa_kernel(2, blocks_path="/nonexistent/blocks")
     base = pd.DataFrame(
         {
             "part": np.array([1, 1, 1, 1, 1], dtype=np.int32),

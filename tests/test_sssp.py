@@ -144,3 +144,29 @@ def test_csr_block_cache_mode_matches(spark, tmp_path):
         ).collect()
     }
     assert tmpdirred == explicit
+
+
+def test_df_engine_raises_without_convergence(spark):
+    import pytest
+
+    df = graphs.to_df(spark, graphs.chain(10))
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        sssp(spark, df, source=0, max_iter=3)
+
+
+def test_csr_raises_without_convergence(spark):
+    import pytest
+
+    df = graphs.to_df(spark, graphs.chain(10))
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        sssp_csr(spark, df, source=0, num_parts=4, max_iter=1)
+
+
+def test_negative_weight_rejected_by_both_engines(spark):
+    import pytest
+
+    df = graphs.to_df(spark, [(0, 1, 1.0), (1, 2, -2.0), (0, 2, 5.0)], weighted=True)
+    with pytest.raises(ValueError, match="negative"):
+        sssp(spark, df, source=0, weighted=True)
+    with pytest.raises(ValueError, match="negative"):
+        sssp_csr(spark, df, source=0, weighted=True, num_parts=2)
