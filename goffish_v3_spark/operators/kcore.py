@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import BlockStore, block_store, load_block
-from goffish_v3_spark.plans.csr import build_csr_blocks_sym
+from goffish_v3_spark.plans.csr import MergedCsr, build_csr_blocks_sym
 from goffish_v3_spark.plans.superstep import no_aqe
 
 OUT_SCHEMA = "part int, kind int, vid long, a long, payload binary"
@@ -53,10 +53,9 @@ OUT_SCHEMA = "part int, kind int, vid long, a long, payload binary"
 # _hindex_loop): the capped k-core iteration needs only a handful of rounds
 CHAIN_CORE_NUMBERS = 8
 CHAIN_K_CORE = 4
-# tail consolidation: after this many distributed supersteps, if the summed
-# in-memory CSR fits the byte budget, the rest runs in one merged-block task
+# tail consolidation: after this many distributed supersteps, if the merged
+# blocks fit one task (BlockStore.fits_one_task), the rest runs there
 CONSOLIDATE_AFTER = 2
-CONSOLIDATE_BUDGET_BYTES = 512 << 20
 
 _EMPTY_OUT = {
     "part": "int32",
@@ -130,8 +129,8 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
     plus a full kind-3 shadow per partition (every remote estimate it
     references) so the k-core finalize pass works unchanged.
 
-    Only legal when the summed block bytes fit one task
-    (``CONSOLIDATE_BUDGET_BYTES``) — the 100 TB posture is: distributed
+    Only legal when the merged blocks fit one task
+    (``BlockStore.fits_one_task``) — the 100 TB posture is: distributed
     waves grind the bulk creep in parallel, and the serial cross-partition
     tail collapses into one task the moment the whole remaining problem
     provably fits."""
@@ -139,52 +138,18 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
     def fn(it):
         pdf = pd.concat(list(it), ignore_index=True)
         state = pdf[pdf["kind"] == 0]
-        blks = [load_block(blocks_path, p) for p in parts]
-        offs = np.concatenate(
-            ([0], np.cumsum([b.n_local for b in blks]))
-        ).astype(np.int64)
-        n = int(offs[-1])
-        all_vids = np.concatenate([b.local_vids for b in blks])
-        sort_idx = np.argsort(all_vids)
-        sorted_vids = all_vids[sort_idx]
-
-        def to_pos(want: np.ndarray) -> np.ndarray:
-            pos = np.searchsorted(sorted_vids, want)
-            if not np.array_equal(sorted_vids[np.minimum(pos, n - 1)], want):
-                raise RuntimeError("consolidation: unknown vertex id")
-            return sort_idx[pos]
-
-        dst_parts = []
-        for i, b in enumerate(blks):
-            loc = b.edge_dst_local
-            g = np.empty(len(loc), dtype=np.int64)
-            lm = loc >= 0
-            g[lm] = loc[lm] + offs[i]
-            if (~lm).any():
-                g[~lm] = to_pos(b.edge_dst_vid[~lm])
-            dst_parts.append(g)
-        dst_idx = np.concatenate(dst_parts) if dst_parts else np.empty(0, np.int64)
-        indptr = np.concatenate(
-            [[0]] + [np.diff(b.indptr) for b in blks]
-        ).cumsum()
-
-        if len(state) != n:
-            # every vertex must carry a kind-0 row (kernels re-emit full
-            # state each superstep); a gap would leave np.empty garbage
-            raise RuntimeError(
-                f"consolidation: {len(state)} state rows for {n} vertices"
-            )
-        est = np.empty(n, dtype=np.int64)
-        est[to_pos(state["vid"].to_numpy(dtype=np.int64))] = state["a"].to_numpy(
-            dtype=np.int64
-        )
+        m = MergedCsr([load_block(blocks_path, p) for p in parts])
+        est = np.empty(m.n, dtype=np.int64)
+        est[m.state_pos(state["vid"].to_numpy(dtype=np.int64))] = state[
+            "a"
+        ].to_numpy(dtype=np.int64)
         if cap is not None:
             est = np.minimum(est, cap)
-        est = _hindex_fixpoint_frontier(indptr, dst_idx, est)
+        est = _hindex_fixpoint_frontier(m.indptr, m.dst_idx, est)
 
         frames = []
-        for i, b in enumerate(blks):
-            sl = slice(offs[i], offs[i + 1])
+        for i, b in enumerate(m.blocks):
+            sl = slice(m.offs[i], m.offs[i + 1])
             frames.append(
                 pd.DataFrame(
                     {
@@ -205,7 +170,7 @@ def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | Non
                         "kind": np.array([3], dtype=np.int32),
                         "vid": np.array([-1], dtype=np.int64),
                         "a": np.array([len(want)], dtype=np.int64),
-                        "payload": [_pack_shadow(want, est[to_pos(want)])],
+                        "payload": [_pack_shadow(want, est[m.pos(want)])],
                     }
                 )
                 frames.append(sh)
@@ -328,7 +293,7 @@ def _make_kernel(superstep: int, blocks_path: str, cap: int | None = None):
         # compute once) — so the skip is only valid from superstep 2 on
         return superstep >= 2 and not (sm_pdf["kind"] == 1).any()
 
-    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf):
         if quiescent(sm_pdf):
             # the quiescent path needs nothing from the CSR block — skip the
             # block fetch entirely
@@ -468,15 +433,13 @@ def _hindex_loop(
     bulk phase, short chains cap the no-op overshoot at the tail.
 
     Tail consolidation (VERDICT r4 #2): after ``CONSOLIDATE_AFTER``
-    distributed supersteps, if the SUMMED CSR block bytes fit
-    ``CONSOLIDATE_BUDGET_BYTES``, the remaining cross-partition cascade runs
+    distributed supersteps, if the merged blocks fit one task
+    (``BlockStore.fits_one_task``), the remaining cross-partition cascade runs
     to global fixpoint inside one merged-block task instead of tens more
     ~0.5 s grouped-map waves. The budget keeps this honest at scale: above
     it the distributed waves continue; below it the tail is provably a
     single-task problem."""
-    consolidate_ok = (
-        40 * store.n_edges + 24 * store.n_vertices <= CONSOLIDATE_BUDGET_BYTES
-    )
+    consolidate_ok = store.fits_one_task()
     carry = spark.createDataFrame([], OUT_SCHEMA)
     seed = spark.createDataFrame(
         [(p, -1, -1, 0, None) for p in store.parts], OUT_SCHEMA
@@ -571,7 +534,7 @@ def _make_finalize_kernel(cap: int, blocks_path: str):
     first exchange is always full, so shadows cover every boundary vertex)
     carries every remote neighbour's fixpoint estimate."""
 
-    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf):
         blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
         state_rows = sm_pdf[sm_pdf["kind"] == 0]

@@ -255,7 +255,7 @@ def _make_lpa_kernel(superstep: int, blocks_path: str):
             [out[["part", "kind", "vid", "a"]], marker], ignore_index=True
         )
 
-    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf):
         if quiescent(sm_pdf):
             # nothing needed from the CSR block — skip the block fetch
             return passthrough(sm_pdf)

@@ -114,7 +114,7 @@ def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
     CSR block from the store at ``blocks_path`` (plans.block_cache) — the
     reference's load-once-compute-many shape (GraphJobRunner.java:105-126)."""
 
-    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf):
         blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
 

@@ -12,23 +12,30 @@ convergence gate, but executed the way GoFFish executes it:
   bundling of ``remoteSums`` (PageRank.java:136-146) — and summed on
   arrival by the receiving kernel, so they cross the wire in the
   superstep's one exchange with no JVM aggregation in between;
-- each superstep is ONE grouped ``applyInPandas`` over state+msgs by
-  partition, each task fetching its CSR block from the worker-local block
-  store (plans.block_cache) — the vectorized counterpart of "deliver
-  messages, then run compute() per subgraph" (GraphJobRunner.java:269-331);
+- a distributed superstep is ONE grouped ``applyInPandas`` over
+  state+msgs by partition, each task fetching its CSR block from the
+  worker-local block store (plans.block_cache) — the vectorized counterpart
+  of "deliver messages, then run compute() per subgraph"
+  (GraphJobRunner.java:269-331);
 - the ε-convergence gate is the reference's all-deltas ≤ ε (PageRank.java:
-  108-116), collected driver-side from per-partition delta rows.
+  108-116), collected driver-side from per-partition delta rows;
+- tail consolidation: when every block merged fits one task
+  (``BlockStore.fits_one_task``), only superstep 0 runs distributed and
+  one task finishes the remaining supersteps over the merged CSR — the
+  subgraph-centric premise carried to the whole graph once it fits one
+  subgraph (same update, same gate, same superstep count).
 
-At scale this shuffles only boundary contributions (O(cut size)) per
-superstep instead of O(|E|) — the reason the subgraph-centric model beats
-vertex-centric engines (README.md:3), reproduced here with Arrow batches
-instead of Writable messages.
+Above that budget this shuffles only boundary contributions (O(cut size))
+per superstep instead of O(|E|) — the reason the subgraph-centric model
+beats vertex-centric engines (README.md:3), reproduced here with Arrow
+batches instead of Writable messages.
 
 Output row protocol from the kernel (single DataFrame, demuxed by ``kind``
 like the reference's MessageType demux, GraphJobRunner.java:440-493):
 kind 0 = state (vid, a=rank, b=pending_local_sum), routed to own part;
 kind 1 = message (vid=dst, a=contribution), routed to dst part;
-kind 2 = per-partition metric (a=max delta).
+kind 2 = per-partition metric (a=max delta; from the consolidated task,
+a=supersteps it ran).
 """
 
 from __future__ import annotations
@@ -38,8 +45,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.block_cache import block_store, load_block
-from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks
+from goffish_v3_spark.plans.block_cache import BlockStore, block_store, load_block
+from goffish_v3_spark.plans.csr import CsrBlock, MergedCsr, build_csr_blocks
 from goffish_v3_spark.plans.superstep import no_aqe
 
 OUT_SCHEMA = "part int, kind int, vid long, a double, b double"
@@ -86,7 +93,7 @@ def _make_kernel(
     n_total: int,
     local_init: bool = False,
 ):
-    def kernel(key, sm_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, sm_pdf):
         blk = load_block(blocks_path, int(key[0]))
         n_local = blk.n_local
 
@@ -183,6 +190,66 @@ def _make_kernel(
     return kernel
 
 
+def _make_consolidated_kernel(
+    parts: list[int], blocks_path: str, alpha: float, base: float,
+    eps: float, steps: int, gated: bool,
+):
+    """Tail consolidation: merge every partition's block inside one task and
+    run up to ``steps`` more supersteps there — the same synchronous update
+    ``rank' = alpha * pending + base`` and, when ``gated``, the same stop on
+    ``max|delta| <= eps`` as the distributed kernel, over the global CSR
+    instead of per block plus messages.
+
+    Takes the kind 0/1 carry of a distributed superstep; emits the kind-0
+    state per owner part plus one kind-2 row whose ``a`` is the number of
+    supersteps run here."""
+
+    def fn(it):
+        pdf = pd.concat(list(it), ignore_index=True)
+        m = MergedCsr([load_block(blocks_path, p) for p in parts])
+        state = pdf[pdf["kind"] == 0]
+        idx = m.state_pos(state["vid"].to_numpy(dtype=np.int64))
+        ranks = np.empty(m.n, dtype=np.float64)
+        ranks[idx] = state["a"].to_numpy(dtype=np.float64)
+        pending = np.zeros(m.n, dtype=np.float64)
+        pending[idx] = state["b"].to_numpy(dtype=np.float64)
+        msgs = pdf[pdf["kind"] == 1]
+        if len(msgs):
+            np.add.at(
+                pending, m.pos(msgs["vid"].to_numpy(dtype=np.int64)),
+                msgs["a"].to_numpy(dtype=np.float64),
+            )
+
+        outdeg = np.diff(m.indptr)
+        for done in range(1, steps + 1):
+            new_ranks = alpha * pending + base
+            delta = float(np.max(np.abs(new_ranks - ranks)))
+            ranks = new_ranks
+            if (gated and delta <= eps) or done == steps:
+                break
+            with np.errstate(divide="ignore", invalid="ignore"):
+                per_src = np.where(outdeg > 0, ranks / np.maximum(outdeg, 1), 0.0)
+            pending = np.bincount(
+                m.dst_idx, weights=np.repeat(per_src, outdeg), minlength=m.n
+            )
+
+        owner = np.concatenate(
+            [np.full(b.n_local, b.part, dtype=np.int32) for b in m.blocks]
+        )
+        vids = np.concatenate([b.local_vids for b in m.blocks])
+        yield pd.DataFrame(
+            {
+                "part": np.append(owner, np.int32(parts[0])),
+                "kind": np.append(np.zeros(m.n, dtype=np.int32), np.int32(2)),
+                "vid": np.append(vids, np.int64(-1)),
+                "a": np.append(ranks, float(done)),
+                "b": np.zeros(m.n + 1),
+            }
+        )
+
+    return fn
+
+
 def csr_pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -226,10 +293,12 @@ def csr_pagerank(
         )
         with no_aqe(spark):
             state, supersteps = _csr_loop(
-                store.path, seed, alpha, (1.0 - alpha) / n, eps, max_iter, n,
+                store, seed, alpha, (1.0 - alpha) / n, eps, max_iter,
                 fixed_iterations=fixed_iterations, local_init=local_init,
             )
-        result = state.select("vid", F.col("a").alias("rank")).localCheckpoint(eager=True)
+    # the loop's state is a filter over a checkpointed frame: it outlives
+    # the block store without another checkpoint
+    result = state.select("vid", F.col("a").alias("rank"))
     result.pr_supersteps = supersteps  # introspection for tests/bench
     return result
 
@@ -242,25 +311,33 @@ def subgraph_rank(spark: SparkSession, edges: DataFrame, **kw) -> DataFrame:
 
 
 def _csr_loop(
-    blocks_path, seed, alpha, base, eps, max_iter, n_total,
+    store: BlockStore, seed, alpha, base, eps, max_iter,
     fixed_iterations=None, local_init=False,
 ):
     """Run the supersteps from the per-part ``seed`` rows; return ``(state
     rows, supersteps run)``.
 
-    A superstep is one Spark job with one exchange: the kernel's kind 0
-    (state) and kind 1 (message) rows of the previous superstep are grouped
-    by ``part`` and handed to the kernel. Messages need no JVM aggregation
-    on the way: the sending kernel already sums them per ``(dst_part, dst)``
-    and the receiving kernel sums what arrives from several partitions with
-    ``np.add.at``. The kind 2 max-delta rides the checkpoint as an
-    Observation, so the ε-gate adds no job either."""
+    Superstep 0 (the seed pass, or the SubgraphRank warm start) is always
+    distributed. When the merged blocks fit one task
+    (``BlockStore.fits_one_task``) its kind 0/1 carry then goes to one
+    task that finishes the remaining supersteps over the merged CSR
+    (:func:`_make_consolidated_kernel`): two Spark jobs in all, however
+    many supersteps run. Its superstep count rides that task's checkpoint
+    as an Observation.
+
+    Above the budget every superstep is one Spark job with one exchange:
+    the kernel's kind 0 (state) and kind 1 (message) rows of the previous
+    superstep are grouped by ``part`` and handed to the kernel. Messages
+    need no JVM aggregation on the way: the sending kernel already sums
+    them per ``(dst_part, dst)`` and the receiving kernel sums what arrives
+    from several partitions with ``np.add.at``. The kind 2 max-delta rides
+    the checkpoint as an Observation, so the ε-gate adds no job either."""
     total = max_iter if fixed_iterations is None else fixed_iterations + 1
     mixed = seed
     i = 0
     for i in range(total):
         kernel = _make_kernel(
-            i, alpha, base, blocks_path, n_total, local_init=local_init
+            i, alpha, base, store.path, store.n_vertices, local_init=local_init
         )
         out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
         # the ε-gate's max-delta rides the checkpoint materialization as an
@@ -276,7 +353,18 @@ def _csr_loop(
             delta = obs.get["delta"]
             if delta is not None and delta <= eps:
                 break
+        if i == 0 and total > 1 and store.fits_one_task():
+            fn = _make_consolidated_kernel(
+                store.parts, store.path, alpha, base, eps, total - 1,
+                gated=fixed_iterations is None,
+            )
+            obs = Observation("csr_pr_consolidated")
+            out = (
+                mixed.repartition(1)
+                .mapInPandas(fn, schema=OUT_SCHEMA)
+                .observe(obs, F.max(F.when(F.col("kind") == 2, F.col("a"))).alias("steps"))
+                .localCheckpoint(eager=True)
+            )
+            return out.filter(F.col("kind") == 0), 1 + int(obs.get["steps"])
 
     return state, i + 1
-
-

@@ -38,6 +38,9 @@ from pyspark.sql import DataFrame
 from goffish_v3_spark.plans.csr import CsrBlock
 
 MAX_BLOCKS = 64
+# tail consolidation: a fixpoint may finish inside one task that merges every
+# block when the merged in-memory CSR fits this many bytes
+CONSOLIDATE_BUDGET_BYTES = 512 << 20
 
 _CACHE: "OrderedDict[tuple[str, int, tuple], CsrBlock]" = OrderedDict()
 
@@ -87,6 +90,12 @@ class BlockStore:
     parts: list[int]
     n_vertices: int
     n_edges: int
+
+    def fits_one_task(self) -> bool:
+        """Whether every block merged into one task (plans.csr.MergedCsr
+        plus a kernel's per-edge and per-vertex arrays, ~40 B/edge and
+        ~24 B/vertex) fits ``CONSOLIDATE_BUDGET_BYTES``, read at call time."""
+        return 40 * self.n_edges + 24 * self.n_vertices <= CONSOLIDATE_BUDGET_BYTES
 
 
 @contextmanager

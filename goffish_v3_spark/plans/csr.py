@@ -83,6 +83,58 @@ class CsrBlock:
         return np.searchsorted(self.local_vids, vids)
 
 
+class MergedCsr:
+    """Every partition's block merged into one global CSR, for a fixpoint
+    that finishes inside one task (tail consolidation).
+
+    Block ``i``'s vertices occupy global positions ``offs[i]:offs[i+1]`` in
+    block order; ``indptr``/``dst_idx`` index those positions, so a remote
+    edge points at its dst's slot in the owner's range."""
+
+    __slots__ = ("blocks", "offs", "n", "indptr", "dst_idx", "_sort_idx", "_sorted")
+
+    def __init__(self, blocks: list[CsrBlock]):
+        self.blocks = blocks
+        self.offs = np.concatenate(
+            ([0], np.cumsum([b.n_local for b in blocks]))
+        ).astype(np.int64)
+        self.n = int(self.offs[-1])
+        all_vids = np.concatenate([b.local_vids for b in blocks])
+        self._sort_idx = np.argsort(all_vids)
+        self._sorted = all_vids[self._sort_idx]
+        dst_parts = []
+        for i, b in enumerate(blocks):
+            loc = b.edge_dst_local
+            g = np.empty(len(loc), dtype=np.int64)
+            lm = loc >= 0
+            g[lm] = loc[lm] + self.offs[i]
+            if (~lm).any():
+                g[~lm] = self.pos(b.edge_dst_vid[~lm])
+            dst_parts.append(g)
+        self.dst_idx = np.concatenate(dst_parts)
+        self.indptr = np.concatenate(
+            [[0]] + [np.diff(b.indptr) for b in blocks]
+        ).cumsum()
+
+    def pos(self, vids: np.ndarray) -> np.ndarray:
+        """Global positions of ``vids``; raises on a vid no block owns."""
+        p = np.searchsorted(self._sorted, vids)
+        if not np.array_equal(self._sorted[np.minimum(p, self.n - 1)], vids):
+            raise RuntimeError("consolidation: unknown vertex id")
+        return self._sort_idx[p]
+
+    def state_pos(self, vids: np.ndarray) -> np.ndarray:
+        """Global positions of the state rows' ``vids``. Every vertex must
+        carry one state row (kernels re-emit full state each superstep); a
+        gap would leave the caller's np.empty slots as garbage, so a count
+        mismatch raises."""
+        if len(vids) != self.n:
+            raise RuntimeError(
+                f"consolidation: {len(vids)} state rows for {self.n} vertices"
+            )
+        return self.pos(vids)
+
+
 def _assemble_block(
     part: int,
     local_vids: np.ndarray,

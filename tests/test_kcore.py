@@ -83,9 +83,9 @@ def test_k_core_distributed_matches_oracle(spark, monkeypatch):
     zero byte budget) on a hub-ish graph: changed-only messages and the
     pinned-remote local fixpoint give the oracle's k-core and induced
     degrees."""
-    from goffish_v3_spark.operators import kcore
+    from goffish_v3_spark.plans import block_cache
 
-    monkeypatch.setattr(kcore, "CONSOLIDATE_BUDGET_BYTES", 0)
+    monkeypatch.setattr(block_cache, "CONSOLIDATE_BUDGET_BYTES", 0)
     edges = graphs.barabasi_albert(200, m=3, seed=5)
     df = graphs.to_df(spark, edges)
     got = {(r.vid, r.deg) for r in k_core(spark, df, k=3, num_parts=4).collect()}
@@ -191,6 +191,7 @@ def test_tail_consolidation_matches_distributed(spark, monkeypatch):
     and the capped k-core, and a zero byte budget must disable it without
     changing answers."""
     from goffish_v3_spark.operators import kcore
+    from goffish_v3_spark.plans import block_cache
 
     edges = graphs.barabasi_albert(250, m=3, seed=5)
     df = graphs.to_df(spark, edges)
@@ -203,7 +204,7 @@ def test_tail_consolidation_matches_distributed(spark, monkeypatch):
         distributed = {r.vid: r.core for r in core_numbers(spark, df).collect()}
         kd = {r.vid: r.deg for r in k_core(spark, df, k=3).collect()}
     with monkeypatch.context() as m:
-        m.setattr(kcore, "CONSOLIDATE_BUDGET_BYTES", 0)
+        m.setattr(block_cache, "CONSOLIDATE_BUDGET_BYTES", 0)
         budget_zero = {r.vid: r.core for r in core_numbers(spark, df).collect()}
     assert consolidated == distributed == budget_zero == oracle
     assert kc == kd
