@@ -40,17 +40,19 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import BlockStore, block_store, load_block
 from goffish_v3_spark.plans.csr import MergedCsr, build_csr_blocks_sym
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 OUT_SCHEMA = "part int, kind int, vid long, a long, payload binary"
 
 # supersteps per Spark job at the start (the chain halves at the tail, see
-# _hindex_loop): the capped k-core iteration needs only a handful of rounds
+# _hindex_fixpoint): the capped k-core iteration needs only a handful of rounds
 CHAIN_CORE_NUMBERS = 8
 CHAIN_K_CORE = 4
 # tail consolidation: after this many distributed supersteps, if the merged
@@ -403,97 +405,81 @@ def _make_kernel(superstep: int, blocks_path: str, cap: int | None = None):
     return kernel
 
 
-def _hindex_loop(
-    spark: SparkSession,
-    store: BlockStore,
-    cap: int | None,
-    max_iter: int,
-    chain_every: int,
-    num_parts: int,
+def _hindex_fixpoint(
+    spark: SparkSession, store: BlockStore, cap: int | None, max_iter: int,
+    chain_every: int, num_parts: int,
 ) -> DataFrame:
-    """Drive the kernel to global fixpoint; returns the final carry — kind-0
-    state plus the fixpoint boundary channel (kind-1 messages and kind-3
-    shadows, which together hold every boundary estimate — see
-    :func:`_merge_boundary`). Callers filter kinds. Raises ``RuntimeError``
-    when ``max_iter`` supersteps end with estimates still changing.
+    """Drive the kernel to global fixpoint through SuperstepLoop from the
+    store's ``kind=-1`` seed rows; returns the final carry — kind-0 state
+    plus the boundary channel (kind-1 messages and kind-3 shadows, which
+    together hold every boundary estimate — see :func:`_merge_boundary`)
+    and the kind-2 changed counts. Callers filter kinds. Raises
+    ``RuntimeError`` when ``max_iter`` supersteps end with estimates still
+    changing. Blocks never re-enter the shuffle/Arrow channel after the
+    one-time write to ``store``.
 
-    Supersteps are a grouped map over state+messages only (kind=-1 seed
-    rows bootstrap every partition at superstep 0); blocks never re-enter
-    the shuffle/Arrow channel after the one-time write to ``store``.
+    One step call runs ``chain`` supersteps lazily inside ONE Spark job,
+    materializing (and reading the changed-count Observation) only at the
+    chain's end: each inner step references the previous step's output
+    once, so the plan grows linearly. The per-superstep serial tax (driver
+    round trip + checkpoint) is paid once per chain; the fixpoint may
+    overshoot by up to chain−1 no-op steps. The chain starts at
+    ``chain_every`` and ADAPTS to the convergence tail: once the observed
+    changed-count drops below the partition count the wavefront is narrow
+    and fixpoint is near, so the chain halves per call (VERDICT r3 #4) —
+    long chains amortize the serial tax over the bulk phase, short chains
+    cap the no-op overshoot at the tail.
 
-    ``chain_every`` runs that many supersteps lazily inside ONE Spark job,
-    materializing (and reading the changed-count Observation) only at chain
-    boundaries: each inner step references the previous step's output once,
-    so the plan grows linearly. The per-superstep serial tax (driver round
-    trip + checkpoint) is paid once per chain; the fixpoint may overshoot by
-    up to chain−1 no-op steps. The chain length ADAPTS to the convergence
-    tail: once the observed changed-count drops below the partition count
-    the wavefront is narrow and fixpoint is near, so the chain halves per
-    round (VERDICT r3 #4) — long chains amortize the serial tax over the
-    bulk phase, short chains cap the no-op overshoot at the tail.
-
-    Tail consolidation (VERDICT r4 #2): after ``CONSOLIDATE_AFTER``
-    distributed supersteps, if the merged blocks fit one task
-    (``BlockStore.fits_one_task``), the remaining cross-partition cascade runs
-    to global fixpoint inside one merged-block task instead of tens more
-    ~0.5 s grouped-map waves. The budget keeps this honest at scale: above
-    it the distributed waves continue; below it the tail is provably a
-    single-task problem."""
+    Tail consolidation (VERDICT r4 #2): once ``CONSOLIDATE_AFTER``
+    distributed supersteps have run, if the merged blocks fit one task
+    (``BlockStore.fits_one_task``), the next call runs the remaining
+    cross-partition cascade to global fixpoint inside one merged-block task
+    instead of tens more ~0.5 s grouped-map waves. The budget keeps this
+    honest at scale: above it the distributed waves continue; below it the
+    tail is provably a single-task problem."""
     consolidate_ok = store.fits_one_task()
-    carry = spark.createDataFrame([], OUT_SCHEMA)
-    seed = spark.createDataFrame(
-        [(p, -1, -1, 0, None) for p in store.parts], OUT_SCHEMA
-    )
     cur_chain = chain_every
-    step = 0
-    with no_aqe(spark):
-        while step < max_iter:
-            chain = max(1, min(cur_chain, max_iter - step))
-            if consolidate_ok and step < CONSOLIDATE_AFTER:
-                # stop the chain exactly at the consolidation trigger: the
-                # distributed phase only needs to reach the hand-off point
-                # (budget-disabled runs keep full-length chains)
-                chain = max(1, min(chain, CONSOLIDATE_AFTER - step))
-            mixed = carry
-            out = None
-            for j in range(chain):
-                i = step + j
-                kernel = _make_kernel(i, store.path, cap=cap)
-                if i == 0:
-                    mixed = mixed.unionByName(seed)
-                out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
-                if j < chain - 1:
-                    mixed = out.filter(F.col("kind") != 2)
-            # changed-count (of the chain's LAST step) rides the checkpoint
-            # materialization — one job per chain, like the PageRank ε-gate;
-            # changed == 0 in any step implies global fixpoint (monotone)
-            obs = Observation(f"kcore_chain_{step}")
-            out = out.observe(
-                obs, F.sum(F.when(F.col("kind") == 2, F.col("a"))).alias("changed")
-            ).localCheckpoint(eager=True)
-            # state + messages + shadows all feed the next superstep
-            carry = out.filter(F.col("kind") != 2)
-            step += chain
-            changed = obs.get["changed"] or 0
-            if step >= 2 and changed == 0:
-                return carry
-            if consolidate_ok and step >= CONSOLIDATE_AFTER:
-                # tail consolidation: the distributed chains above ground the
-                # bulk value creep in parallel; the remaining cross-partition
-                # cascade collapses into ONE merged-fixpoint task
-                fn = _make_consolidated_kernel(store.parts, store.path, cap)
-                return (
-                    carry.filter(F.col("kind") == 0)
-                    .repartition(1)
-                    .mapInPandas(fn, schema=OUT_SCHEMA)
-                    .localCheckpoint(eager=True)
-                )
-            if changed < num_parts:
-                cur_chain = max(1, cur_chain // 2)
-    raise RuntimeError(
-        f"k-core did not converge within max_iter={max_iter} supersteps "
-        f"({changed} estimates still changing)"
-    )
+
+    def step(carry: DataFrame, i: int) -> StepResult:
+        nonlocal cur_chain
+        if consolidate_ok and i >= CONSOLIDATE_AFTER:
+            # the distributed chains ground the bulk value creep in
+            # parallel; the remaining cascade collapses into ONE task
+            fn = _make_consolidated_kernel(store.parts, store.path, cap)
+            out = (
+                carry.filter(F.col("kind") == 0)
+                .repartition(1)
+                .mapInPandas(fn, schema=OUT_SCHEMA)
+                .localCheckpoint(eager=True)
+            )
+            return StepResult(out, True, truncated=True)
+        chain = min(cur_chain, max_iter - i)
+        if consolidate_ok:
+            # stop the chain exactly at the consolidation trigger
+            # (budget-disabled runs keep full-length chains)
+            chain = min(chain, CONSOLIDATE_AFTER - i)
+        out = carry
+        for j in range(i, i + chain):
+            # state + messages + shadows feed the next superstep
+            out = out.filter(F.col("kind") != 2).groupby("part").applyInPandas(
+                _make_kernel(j, store.path, cap=cap), schema=OUT_SCHEMA
+            )
+        # changed-count of the chain's LAST step rides the checkpoint — one
+        # job per chain; changed == 0 in any step from superstep 1 on implies
+        # global fixpoint (estimates are monotone)
+        out, changed = observed_checkpoint(
+            out, F.sum(F.when(F.col("kind") == 2, F.col("a")))
+        )
+        changed = changed or 0
+        if changed < num_parts:
+            cur_chain = max(1, cur_chain // 2)
+        return StepResult(
+            out, i + chain >= 2 and changed == 0, truncated=True, supersteps=chain
+        )
+
+    return SuperstepLoop(
+        spark, max_iter=max_iter, name="k-core", must_converge=True
+    ).run(store.seed(spark, OUT_SCHEMA), step).state
 
 
 def core_numbers(
@@ -516,15 +502,11 @@ def core_numbers(
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts)
     with block_store(spark, blocks, blocks_dir, "goffish_kcore_") as store:
-        carry = _hindex_loop(
-            spark, store, cap=None, max_iter=max_iter,
-            chain_every=CHAIN_CORE_NUMBERS, num_parts=num_parts,
+        carry = _hindex_fixpoint(
+            spark, store, None, max_iter, CHAIN_CORE_NUMBERS, num_parts
         )
-        return (
-            carry.filter(F.col("kind") == 0)
-            .select("vid", F.col("a").alias("core"))
-            .localCheckpoint(eager=True)
-        )
+    # a filter over the loop's checkpoint: it outlives the block store
+    return carry.filter(F.col("kind") == 0).select("vid", F.col("a").alias("core"))
 
 
 def _make_finalize_kernel(cap: int, blocks_path: str):
@@ -595,10 +577,7 @@ def k_core(
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     blocks = build_csr_blocks_sym(spark, edges, num_parts)
     with block_store(spark, blocks, blocks_dir, "goffish_kcore_") as store:
-        carry = _hindex_loop(
-            spark, store, cap=k, max_iter=1000,
-            chain_every=CHAIN_K_CORE, num_parts=num_parts,
-        )
+        carry = _hindex_fixpoint(spark, store, k, 1000, CHAIN_K_CORE, num_parts)
         fin = _make_finalize_kernel(k, store.path)
         return (
             carry.groupby("part")

@@ -23,12 +23,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import block_store, load_block
 from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks_sym
-from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop, no_aqe
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 
 def _symmetrize(edges: DataFrame, partition_into: int | None = None) -> DataFrame:
@@ -67,7 +69,6 @@ def lpa(
         .persist()
     )
     vertices = und.select(F.col("src").alias("vid")).distinct()
-    isolated_fallback = None  # vertices always appear in both directions after symmetrize
 
     init = vertices.withColumn("label", F.col("vid")).localCheckpoint(eager=True)
 
@@ -100,13 +101,11 @@ def lpa(
             )
         # one job: changed-count observed during the lineage-truncating
         # materialization (same pattern as pagerank)
-        obs = Observation(f"lpa_step_{i}")
-        observed = new_state.observe(
-            obs,
-            F.sum(F.when(F.col("label") != F.col("_old"), 1).otherwise(0)).alias("changed"),
+        out, changed = observed_checkpoint(
+            new_state,
+            F.sum(F.when(F.col("label") != F.col("_old"), 1).otherwise(0)),
         )
-        out = observed.localCheckpoint(eager=True)
-        changed = int(obs.get["changed"] or 0)
+        changed = int(changed or 0)
         return StepResult(
             out.select("vid", "label"), changed == 0, delta=float(changed), truncated=True
         )
@@ -416,32 +415,23 @@ def lpa_csr(
     blocks = build_csr_blocks_sym(spark, edges, num_parts, part_expr=part_expr)
 
     with block_store(spark, blocks, blocks_dir, "goffish_lpa_") as store:
-        seed = spark.createDataFrame(
-            [(p, -1, -1, 0) for p in store.parts], LPA_SCHEMA
-        )
-        carry = spark.createDataFrame([], LPA_SCHEMA)
-        supersteps = 0
-        with no_aqe(spark):
-            for i in range(max_iter):
-                kernel = _make_lpa_kernel(i, store.path)
-                mixed = carry.unionByName(seed) if i == 0 else carry
-                out = mixed.groupby("part").applyInPandas(kernel, schema=LPA_SCHEMA)
-                obs = Observation(f"lpa_csr_step_{i}")
-                out = out.observe(
-                    obs, F.sum(F.when(F.col("kind") == 2, F.col("a"))).alias("changed")
-                ).localCheckpoint(eager=True)
-                # kind-2 rows stay in the carry: each partition's changed
-                # count rides back to itself so the kernel's quiescent check
-                # can prove its state is a re-runnable fixpoint (1 row/part)
-                carry = out
-                supersteps = i + 1
-                if int(obs.get["changed"] or 0) == 0:
-                    break
+        def step(carry: DataFrame, i: int) -> StepResult:
+            kernel = _make_lpa_kernel(i, store.path)
+            out, changed = observed_checkpoint(
+                carry.groupby("part").applyInPandas(kernel, schema=LPA_SCHEMA),
+                F.sum(F.when(F.col("kind") == 2, F.col("a"))),
+            )
+            # kind-2 rows stay in the carry: each partition's changed count
+            # rides back to itself so the kernel's quiescent check can prove
+            # its state is a re-runnable fixpoint (1 row/part)
+            return StepResult(out, not changed, truncated=True)
 
-        result = (
-            carry.filter(F.col("kind") == 0)
-            .select("vid", F.col("a").alias("label"))
-            .localCheckpoint(eager=True)
+        info = SuperstepLoop(spark, max_iter=max_iter, name="lpa_csr").run(
+            store.seed(spark, LPA_SCHEMA), step
         )
-    result.lpa_supersteps = supersteps
+    # a filter over the loop's checkpoint: it outlives the block store
+    result = info.state.filter(F.col("kind") == 0).select(
+        "vid", F.col("a").alias("label")
+    )
+    result.lpa_supersteps = info.supersteps
     return result

@@ -26,10 +26,12 @@ explicit hub salting measured 0.45-1.03x of this plan on every fixture
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.superstep import RunInfo, StepResult, SuperstepLoop
+from goffish_v3_spark.plans.superstep import (
+    RunInfo, StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 ALPHA = 0.85
 EPSILON = 1e-3
@@ -169,12 +171,9 @@ def pagerank_with_info(
         # ONE job per superstep: the ε-gate rides along the localCheckpoint
         # materialization as an observed metric (reference's all-converged
         # gate, PageRank.java:108-116, evaluated driver-side)
-        obs = Observation(f"pr_step_{i}")
-        observed = new_state.observe(
-            obs, F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta")
+        out, delta = observed_checkpoint(
+            new_state, F.max(F.abs(F.col("rank") - F.col("_old")))
         )
-        out = observed.select("vid", "rank", "_old").localCheckpoint(eager=True)
-        delta = obs.get["delta"]
         return StepResult(
             out.select("vid", "rank"), delta <= eps, delta=float(delta), truncated=True
         )

@@ -27,12 +27,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import block_store, load_block
 from goffish_v3_spark.plans.csr import build_csr_blocks
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 INF = float("inf")
 
@@ -88,18 +90,49 @@ def sssp(
         .unionByName(e.select(F.col("dst").alias("vid")))
         .distinct()
     )
-    dist = vertices.select(
+    # the state is the last superstep's merge: (vid, dist, parent) plus the
+    # _improved flag that marks the next frontier
+    init = vertices.select(
         "vid",
         F.when(F.col("vid") == source, 0.0).otherwise(F.lit(INF)).alias("dist"),
         F.lit(-1).cast("long").alias("parent"),
+        (F.col("vid") == source).alias("_improved"),
     ).localCheckpoint(eager=True)
-    frontier = dist.filter(F.col("dist") == 0.0).select("vid", "dist")
+
+    def step(state: DataFrame, i: int) -> StepResult:
+        frontier = state.filter(F.col("_improved")).select("vid", "dist")
+        candidates = (
+            frontier.join(e, frontier.vid == e.src)
+            .select(
+                F.col("dst").alias("vid"),
+                (F.col("dist") + F.col("w")).alias("nd"),
+                F.col("src").alias("np"),
+            )
+            .groupBy("vid")
+            .agg(F.min(F.struct("nd", "np")).alias("m"))
+            .select("vid", F.col("m.nd").alias("nd"), F.col("m.np").alias("np"))
+        )
+        dist = state.select("vid", "dist", "parent")
+        better = F.coalesce(F.col("nd"), F.lit(INF)) < F.col("dist")
+        merged = dist.join(candidates, "vid", "left").select(
+            "vid",
+            F.when(better, F.col("nd")).otherwise(F.col("dist")).alias("dist"),
+            F.when(better, F.col("np")).otherwise(F.col("parent")).alias("parent"),
+            better.alias("_improved"),
+        )
+        # one job/superstep: improvement count observed during truncation
+        out, improved = observed_checkpoint(
+            merged, F.sum(F.col("_improved").cast("long"))
+        )
+        return StepResult(out, not improved, truncated=True)
 
     try:
-        with no_aqe(spark):
-            return _relax_loop(e, dist, frontier, max_iter)
+        info = SuperstepLoop(
+            spark, max_iter=max_iter, name="sssp", must_converge=True
+        ).run(init, step)
     finally:
         e.unpersist()
+    return info.state.select("vid", "dist", "parent")
 
 
 def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
@@ -270,74 +303,23 @@ def sssp_csr(
     blocks = build_csr_blocks(spark, e, num_parts, part_expr=part_expr)
 
     with block_store(spark, blocks, blocks_dir, "goffish_sssp_") as store:
-        # kind=-1 seed rows bootstrap every partition at superstep 0 (no
-        # state exists yet to group by)
-        seed = spark.createDataFrame(
-            [(p, -1, -1, 0.0, 0) for p in store.parts], SSSP_SCHEMA
-        )
-        state = spark.createDataFrame([], SSSP_SCHEMA)
-        msgs = spark.createDataFrame([], SSSP_SCHEMA)
-        supersteps = 0
-        with no_aqe(spark):
-            for i in range(max_iter):
-                kernel = _make_sssp_kernel(i, source, store.path)
-                mixed = state.unionByName(msgs)
-                if i == 0:
-                    mixed = mixed.unionByName(seed)
-                out = mixed.groupby("part").applyInPandas(kernel, schema=SSSP_SCHEMA)
-                obs = Observation(f"sssp_csr_step_{i}")
-                out = out.observe(
-                    obs, F.sum(F.when(F.col("kind") == 2, F.col("p"))).alias("improved")
-                ).localCheckpoint(eager=True)
-                state = out.filter(F.col("kind") == 0)
-                msgs = out.filter(F.col("kind") == 1)
-                supersteps = i + 1
-                if int(obs.get["improved"] or 0) == 0:
-                    break
-            else:
-                raise RuntimeError(
-                    f"sssp_csr did not converge within max_iter={max_iter} supersteps"
-                )
+        def step(carry: DataFrame, i: int) -> StepResult:
+            kernel = _make_sssp_kernel(i, source, store.path)
+            out, improved = observed_checkpoint(
+                carry.groupby("part").applyInPandas(kernel, schema=SSSP_SCHEMA),
+                F.sum(F.when(F.col("kind") == 2, F.col("p"))),
+            )
+            return StepResult(
+                out.filter(F.col("kind") != 2), not improved, truncated=True
+            )
 
-        result = (
-            state.select("vid", F.col("d").alias("dist"), F.col("p").alias("parent"))
-            .localCheckpoint(eager=True)
-        )
-    result.sssp_supersteps = supersteps  # introspection for tests/bench
+        info = SuperstepLoop(
+            spark, max_iter=max_iter, name="sssp_csr", must_converge=True
+        ).run(store.seed(spark, SSSP_SCHEMA), step)
+    # a filter over the loop's checkpoint: it outlives the block store
+    result = info.state.filter(F.col("kind") == 0).select(
+        "vid", F.col("d").alias("dist"), F.col("p").alias("parent")
+    )
+    result.sssp_supersteps = info.supersteps  # introspection for tests/bench
     return result
 
-
-def _relax_loop(e, dist, frontier, max_iter):
-    for i in range(max_iter):
-        candidates = (
-            frontier.join(e, frontier.vid == e.src)
-            .select(
-                F.col("dst").alias("vid"),
-                (F.col("dist") + F.col("w")).alias("nd"),
-                F.col("src").alias("np"),
-            )
-            .groupBy("vid")
-            .agg(F.min(F.struct("nd", "np")).alias("m"))
-            .select("vid", F.col("m.nd").alias("nd"), F.col("m.np").alias("np"))
-        )
-        merged = dist.join(candidates, "vid", "left").select(
-            "vid",
-            F.when(
-                F.coalesce(F.col("nd"), F.lit(INF)) < F.col("dist"), F.col("nd")
-            ).otherwise(F.col("dist")).alias("dist"),
-            F.when(
-                F.coalesce(F.col("nd"), F.lit(INF)) < F.col("dist"), F.col("np")
-            ).otherwise(F.col("parent")).alias("parent"),
-            (F.coalesce(F.col("nd"), F.lit(INF)) < F.col("dist")).alias("_improved"),
-        )
-        # one job/superstep: improvement count observed during truncation
-        obs = Observation(f"sssp_step_{i}")
-        merged = merged.observe(
-            obs, F.sum(F.col("_improved").cast("long")).alias("improved")
-        ).localCheckpoint(eager=True)
-        improved = int(obs.get["improved"] or 0)
-        frontier = merged.filter(F.col("_improved")).select("vid", "dist")
-        dist = merged.select("vid", "dist", "parent")
-        if improved == 0:
-            return dist
-    raise RuntimeError(f"sssp did not converge within max_iter={max_iter} supersteps")

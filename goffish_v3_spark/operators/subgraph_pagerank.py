@@ -42,12 +42,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import BlockStore, block_store, load_block
 from goffish_v3_spark.plans.csr import CsrBlock, MergedCsr, build_csr_blocks
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 OUT_SCHEMA = "part int, kind int, vid long, a double, b double"
 
@@ -284,22 +286,17 @@ def csr_pagerank(
 
     # a caller's blocks stay persisted; blocks built here are released
     with block_store(spark, blocks, blocks_dir, "goffish_pr_", release=not given) as store:
-        # N = all vertices (reference SS0 vertex-count broadcast → driver agg)
-        n = store.n_vertices
-        # kind=-1 seed rows bootstrap every partition at superstep 0 (no
-        # state exists yet to group by)
-        seed = spark.createDataFrame(
-            [(p, -1, -1, 0.0, 0.0) for p in store.parts], OUT_SCHEMA
+        total = max_iter if fixed_iterations is None else fixed_iterations + 1
+        info = SuperstepLoop(spark, max_iter=total, name="csr_pagerank").run(
+            store.seed(spark, OUT_SCHEMA),
+            _csr_step(store, alpha, eps, total, fixed_iterations is None, local_init),
         )
-        with no_aqe(spark):
-            state, supersteps = _csr_loop(
-                store, seed, alpha, (1.0 - alpha) / n, eps, max_iter,
-                fixed_iterations=fixed_iterations, local_init=local_init,
-            )
     # the loop's state is a filter over a checkpointed frame: it outlives
     # the block store without another checkpoint
-    result = state.select("vid", F.col("a").alias("rank"))
-    result.pr_supersteps = supersteps  # introspection for tests/bench
+    result = info.state.filter(F.col("kind") == 0).select(
+        "vid", F.col("a").alias("rank")
+    )
+    result.pr_supersteps = info.supersteps  # introspection for tests/bench
     return result
 
 
@@ -310,20 +307,17 @@ def subgraph_rank(spark: SparkSession, edges: DataFrame, **kw) -> DataFrame:
     return csr_pagerank(spark, edges, local_init=True, **kw)
 
 
-def _csr_loop(
-    store: BlockStore, seed, alpha, base, eps, max_iter,
-    fixed_iterations=None, local_init=False,
-):
-    """Run the supersteps from the per-part ``seed`` rows; return ``(state
-    rows, supersteps run)``.
+def _csr_step(store: BlockStore, alpha, eps, total, gated, local_init):
+    """The SuperstepLoop step over the kernel's kind 0/1 carry, started from
+    the per-part seed rows; ``total`` supersteps at most, stopping on the
+    ε-gate when ``gated``.
 
     Superstep 0 (the seed pass, or the SubgraphRank warm start) is always
     distributed. When the merged blocks fit one task
-    (``BlockStore.fits_one_task``) its kind 0/1 carry then goes to one
-    task that finishes the remaining supersteps over the merged CSR
-    (:func:`_make_consolidated_kernel`): two Spark jobs in all, however
-    many supersteps run. Its superstep count rides that task's checkpoint
-    as an Observation.
+    (``BlockStore.fits_one_task``) the step at superstep 1 hands the carry
+    to one task that finishes the remaining supersteps over the merged CSR
+    (:func:`_make_consolidated_kernel`) and reports how many it ran: two
+    Spark jobs in all, however many supersteps run.
 
     Above the budget every superstep is one Spark job with one exchange:
     the kernel's kind 0 (state) and kind 1 (message) rows of the previous
@@ -332,39 +326,29 @@ def _csr_loop(
     them per ``(dst_part, dst)`` and the receiving kernel sums what arrives
     from several partitions with ``np.add.at``. The kind 2 max-delta rides
     the checkpoint as an Observation, so the ε-gate adds no job either."""
-    total = max_iter if fixed_iterations is None else fixed_iterations + 1
-    mixed = seed
-    i = 0
-    for i in range(total):
+    base = (1.0 - alpha) / store.n_vertices
+    consolidate = total > 1 and store.fits_one_task()
+    kind2_a = F.max(F.when(F.col("kind") == 2, F.col("a")))
+
+    def step(carry: DataFrame, i: int) -> StepResult:
+        if i == 1 and consolidate:
+            fn = _make_consolidated_kernel(
+                store.parts, store.path, alpha, base, eps, total - 1, gated
+            )
+            out, steps = observed_checkpoint(
+                carry.repartition(1).mapInPandas(fn, schema=OUT_SCHEMA), kind2_a
+            )
+            return StepResult(out, True, truncated=True, supersteps=int(steps))
         kernel = _make_kernel(
             i, alpha, base, store.path, store.n_vertices, local_init=local_init
         )
-        out = mixed.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA)
-        # the ε-gate's max-delta rides the checkpoint materialization as an
-        # Observation — ONE Spark job per superstep (the kcore/sssp pattern),
-        # not a second collect() job over the kind=2 rows
-        obs = Observation(f"csr_pr_step_{i}")
-        out = out.observe(
-            obs, F.max(F.when(F.col("kind") == 2, F.col("a"))).alias("delta")
-        ).localCheckpoint(eager=True)
-        state = out.filter(F.col("kind") == 0)
-        mixed = out.filter(F.col("kind") != 2)
-        if fixed_iterations is None:
-            delta = obs.get["delta"]
-            if delta is not None and delta <= eps:
-                break
-        if i == 0 and total > 1 and store.fits_one_task():
-            fn = _make_consolidated_kernel(
-                store.parts, store.path, alpha, base, eps, total - 1,
-                gated=fixed_iterations is None,
-            )
-            obs = Observation("csr_pr_consolidated")
-            out = (
-                mixed.repartition(1)
-                .mapInPandas(fn, schema=OUT_SCHEMA)
-                .observe(obs, F.max(F.when(F.col("kind") == 2, F.col("a"))).alias("steps"))
-                .localCheckpoint(eager=True)
-            )
-            return out.filter(F.col("kind") == 0), 1 + int(obs.get["steps"])
+        out, delta = observed_checkpoint(
+            carry.groupby("part").applyInPandas(kernel, schema=OUT_SCHEMA), kind2_a
+        )
+        return StepResult(
+            out.filter(F.col("kind") != 2),
+            gated and delta is not None and delta <= eps,
+            truncated=True,
+        )
 
-    return state, i + 1
+    return step

@@ -29,11 +29,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.partitioner import vertex_part
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 
 def _local_components(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -99,14 +101,8 @@ def _hash_min_fixpoint(spark: SparkSession, meta_edges: DataFrame, max_iter: int
     sym = sym.distinct().persist()
     nodes = sym.select(F.col("a").alias("label")).distinct()
     mapping = nodes.withColumn("root", F.col("label")).localCheckpoint(eager=True)
-    with no_aqe(spark):
-        mapping = _min_rounds(sym, mapping, max_iter)
-    sym.unpersist()
-    return mapping
 
-
-def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
-    for i in range(max_iter):
+    def step(mapping: DataFrame, i: int) -> StepResult:
         neigh_min = (
             sym.join(mapping, sym.b == mapping.label)
             .groupBy("a")
@@ -136,14 +132,17 @@ def _min_rounds(sym: DataFrame, mapping: DataFrame, max_iter: int) -> DataFrame:
         # (a sum of 64-bit roots overflows under ANSI mode on xxhash64-range
         # ids; a double sum can round a change away), observed during the
         # lineage-truncating materialization — ONE job per round
-        obs = Observation(f"wcc_min_round_{i}")
-        m2 = m2.observe(
-            obs, F.count(F.when(F.col("root") != F.col("_old"), 1)).alias("changed")
-        ).localCheckpoint(eager=True)
-        mapping = m2.select("label", "root")
-        if obs.get["changed"] == 0:
-            return mapping
-    raise RuntimeError(f"wcc: hash-min did not converge in {max_iter} rounds")
+        m2, changed = observed_checkpoint(
+            m2, F.count(F.when(F.col("root") != F.col("_old"), 1))
+        )
+        return StepResult(m2.select("label", "root"), changed == 0, truncated=True)
+
+    try:
+        return SuperstepLoop(
+            spark, max_iter=max_iter, name="wcc hash-min", must_converge=True
+        ).run(mapping, step).state
+    finally:
+        sym.unpersist()
 
 
 def wcc(

@@ -97,6 +97,14 @@ class BlockStore:
         ~24 B/vertex) fits ``CONSOLIDATE_BUDGET_BYTES``, read at call time."""
         return 40 * self.n_edges + 24 * self.n_vertices <= CONSOLIDATE_BUDGET_BYTES
 
+    def seed(self, spark, schema: str) -> DataFrame:
+        """Superstep 0's input in a kernel's ``schema`` (``part, kind, vid,
+        ...``): one ``kind=-1`` row per part, later columns null."""
+        width = len(spark.createDataFrame([], schema).columns)
+        return spark.createDataFrame(
+            [(p, -1, -1) + (None,) * (width - 3) for p in self.parts], schema
+        )
+
 
 @contextmanager
 def block_store(

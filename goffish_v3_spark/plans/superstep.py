@@ -1,5 +1,11 @@
 """The superstep driver loop — BSP without Hama.
 
+:class:`SuperstepLoop` is the one fixpoint driver: ``pagerank``, ``lpa``,
+``sssp``, WCC's hash-min and the CSR engines (``csr_pagerank``, ``lpa_csr``,
+``sssp_csr``, ``core_numbers``/``k_core``) supply a step function; the loop
+owns the superstep count, the ``max_iter`` cap, raise-on-non-convergence and
+the AQE pin. :func:`observed_checkpoint` is their one-job step.
+
 The reference's superstep machinery (hama GraphJobRunner.java:250-353: message
 delivery → per-subgraph compute on a thread pool → barrier → heartbeat-based
 global-halt consensus, :428-515,606-614) collapses in Spark to a Python driver
@@ -30,7 +36,7 @@ from typing import Callable
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -69,6 +75,9 @@ class StepResult:
     algorithms whose step plan references the previous state more than once:
     without per-step truncation the logical plan doubles every superstep and
     Catalyst analysis time grows exponentially.
+
+    ``supersteps``: how many supersteps the call ran (a k-core chain, a
+    tail finished in one task); the loop advances its index by it.
     """
 
     state: DataFrame
@@ -77,9 +86,18 @@ class StepResult:
     messages: int = -1
     truncated: bool = False
     extra: dict = field(default_factory=dict)
+    supersteps: int = 1
 
 
 StepFn = Callable[[DataFrame, int], StepResult]
+
+
+def observed_checkpoint(df: DataFrame, agg: Column):
+    """Return ``df`` eagerly local-checkpointed and the value of ``agg``
+    over its rows, read in the same Spark job (an Observation)."""
+    obs = Observation()
+    out = df.observe(obs, agg.alias("value")).localCheckpoint(eager=True)
+    return out, obs.get["value"]
 
 
 @dataclass
@@ -97,7 +115,9 @@ class SuperstepLoop:
     ``step(state, i)`` is the analogue of the user ``compute()`` hook
     (api AbstractSubgraphComputation.java:49) lifted to whole-DataFrame
     granularity; inside it, algorithms use grouped ``applyInPandas`` for
-    partition-local kernels and plain DataFrame ops for exchanges.
+    partition-local kernels and plain DataFrame ops for exchanges; ``i`` is
+    the call's first superstep. It stops on ``converged`` or after
+    ``max_iter >= 1`` supersteps, where ``must_converge`` raises.
     """
 
     def __init__(
@@ -110,7 +130,11 @@ class SuperstepLoop:
         truncate_every: int = 1,
         partition_metrics: bool = False,
         partition_expr=None,
+        name: str = "superstep loop",
+        must_converge: bool = False,
     ):
+        if max_iter < 1:
+            raise ValueError(f"{name}: max_iter must be >= 1, got max_iter={max_iter}")
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.run_id = run_id or uuid.uuid4().hex[:12]
@@ -122,6 +146,8 @@ class SuperstepLoop:
         # materialized part column: a Column expression deriving the
         # partition from the state row (e.g. vertex_part(vid, P))
         self.partition_expr = partition_expr
+        self.name = name
+        self.must_converge = must_converge
 
     # -- checkpoint layout -------------------------------------------------
     def _state_path(self, superstep: int) -> str:
@@ -199,7 +225,7 @@ class SuperstepLoop:
 
         converged = False
         i = start
-        for i in range(start, self.max_iter):
+        while i < self.max_iter:
             ts = time.monotonic()
             res = step(state, i)
             state = res.state
@@ -211,21 +237,26 @@ class SuperstepLoop:
                 "delta": res.delta,
                 "extra": res.extra,
             }
+            # the last superstep this call ran; a step never counts past
+            # max_iter
+            last = min(i + res.supersteps, self.max_iter) - 1
             if self.checkpoint_dir and (
-                (i % self.checkpoint_every == 0) or res.converged or i == self.max_iter - 1
+                (i % self.checkpoint_every == 0) or res.converged or last == self.max_iter - 1
             ):
-                state = self._commit(state, i, metrics)
+                state = self._commit(state, last, metrics)
             elif not res.truncated and i % self.truncate_every == self.truncate_every - 1:
                 # truncate lineage (SURVEY §7.3); steps that already did this
                 # via observe+localCheckpoint set res.truncated
                 state = state.localCheckpoint(eager=True)
+            i = last + 1
             if res.converged:
                 converged = True
-                i += 1
                 break
-        else:
-            i = self.max_iter
 
+        if self.must_converge and not converged:
+            raise RuntimeError(
+                f"{self.name} did not converge within max_iter={self.max_iter} supersteps"
+            )
         return RunInfo(
             run_id=self.run_id,
             supersteps=i - start,

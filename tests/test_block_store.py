@@ -1,5 +1,6 @@
 """Block-store lifecycle: every CSR operator removes the tempdir it created,
-whether it returns or raises, and keeps a caller-supplied ``blocks_dir``."""
+whether it returns or raises, and keeps a caller-supplied ``blocks_dir``.
+Also pins the Spark jobs one call of each superstep-driven operator runs."""
 
 import contextlib
 import glob
@@ -8,16 +9,18 @@ import tempfile
 
 import pytest
 
-from goffish_v3_spark.operators import kcore, lpa, sssp, subgraph_pagerank
+from goffish_v3_spark.operators import kcore, lpa, sssp, subgraph_pagerank, wcc
+from goffish_v3_spark.plans import block_cache, superstep
 from tests import graphs
+from tests.test_subgraph_pagerank import _job_ids
 
 OPERATORS = {
-    "subgraph_rank": (subgraph_pagerank, lambda s, df, **kw: subgraph_pagerank.subgraph_rank(
-        s, df, num_parts=4, **kw)),
-    "lpa_csr": (lpa, lambda s, df, **kw: lpa.lpa_csr(s, df, num_parts=4, **kw)),
-    "sssp_csr": (sssp, lambda s, df, **kw: sssp.sssp_csr(s, df, source=0, num_parts=4, **kw)),
-    "core_numbers": (kcore, lambda s, df, **kw: kcore.core_numbers(s, df, num_parts=4, **kw)),
-    "k_core": (kcore, lambda s, df, **kw: kcore.k_core(s, df, k=2, num_parts=4, **kw)),
+    "subgraph_rank": lambda s, df, **kw: subgraph_pagerank.subgraph_rank(
+        s, df, num_parts=4, **kw),
+    "lpa_csr": lambda s, df, **kw: lpa.lpa_csr(s, df, num_parts=4, **kw),
+    "sssp_csr": lambda s, df, **kw: sssp.sssp_csr(s, df, source=0, num_parts=4, **kw),
+    "core_numbers": lambda s, df, **kw: kcore.core_numbers(s, df, num_parts=4, **kw),
+    "k_core": lambda s, df, **kw: kcore.k_core(s, df, k=2, num_parts=4, **kw),
 }
 
 
@@ -50,7 +53,7 @@ def _graph(spark):
 @pytest.mark.parametrize("name", sorted(OPERATORS))
 def test_owned_tempdir_removed_after_return(spark, made_tempdirs, name):
     root, made = made_tempdirs
-    _, run = OPERATORS[name]
+    run = OPERATORS[name]
     assert run(spark, _graph(spark)).count() > 0
     assert _stores(made)
     assert not glob.glob(str(root / "goffish_*"))
@@ -59,15 +62,16 @@ def test_owned_tempdir_removed_after_return(spark, made_tempdirs, name):
 @pytest.mark.parametrize("name", sorted(OPERATORS))
 def test_owned_tempdir_removed_after_raise(spark, made_tempdirs, monkeypatch, name):
     root, made = made_tempdirs
-    module, run = OPERATORS[name]
+    run = OPERATORS[name]
 
     @contextlib.contextmanager
     def failing_no_aqe(spark):
         raise RuntimeError("injected superstep failure")
         yield
 
-    # every CSR driver enters no_aqe inside its block store
-    monkeypatch.setattr(module, "no_aqe", failing_no_aqe)
+    # every CSR operator enters the superstep driver, which enters no_aqe,
+    # inside its block store
+    monkeypatch.setattr(superstep, "no_aqe", failing_no_aqe)
     with pytest.raises(RuntimeError, match="injected"):
         run(spark, _graph(spark))
     assert _stores(made)
@@ -77,11 +81,41 @@ def test_owned_tempdir_removed_after_raise(spark, made_tempdirs, monkeypatch, na
 @pytest.mark.parametrize("name", sorted(OPERATORS))
 def test_explicit_blocks_dir_kept(spark, made_tempdirs, tmp_path, name):
     _, made = made_tempdirs
-    _, run = OPERATORS[name]
+    run = OPERATORS[name]
     d = tmp_path / "blocks"
     assert run(spark, _graph(spark), blocks_dir=str(d)).count() > 0
     assert not _stores(made)
     assert glob.glob(str(d / "part=*" / "*.parquet"))
+
+
+# Spark jobs per call on BA(60, 2, seed 3) at 4 parts, with the tail-
+# consolidation budget at its default and forced to 0. The superstep loop
+# adds no job of its own; lpa_csr, sssp_csr and core_numbers read their
+# result from the loop's last checkpoint instead of checkpointing it again.
+JOB_COUNTS = {
+    "subgraph_rank": (9, 13),
+    "lpa_csr": (11, 11),
+    "sssp_csr": (9, 9),
+    "core_numbers": (8, 7),
+    "k_core": (9, 9),
+    "sssp": (8, 8),
+    "wcc": (25, 25),
+}
+RUNS = {
+    **OPERATORS,
+    "sssp": lambda s, df: sssp.sssp(s, df, source=0),
+    "wcc": lambda s, df: wcc.wcc(s, df, num_parts=4),
+}
+
+
+@pytest.mark.parametrize("budget", ["default", "zero"])
+@pytest.mark.parametrize("name", sorted(RUNS))
+def test_jobs_per_call(spark, monkeypatch, name, budget):
+    if budget == "zero":
+        monkeypatch.setattr(block_cache, "CONSOLIDATE_BUDGET_BYTES", 0)
+    _, jobs = _job_ids(spark, f"jobs_{name}_{budget}", lambda: RUNS[name](spark, _graph(spark)))
+    want = JOB_COUNTS[name][budget == "zero"]
+    assert len(jobs) <= want, (name, budget, len(jobs))
 
 
 def test_load_block_raises_for_missing_block(tmp_path):

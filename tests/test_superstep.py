@@ -1,6 +1,7 @@
 """Superstep loop: checkpoint/resume + metrics table (north_rule gates)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop
 
@@ -58,6 +59,87 @@ def test_convergence_stops_early(spark):
     info = SuperstepLoop(spark, max_iter=10).run(init, step)
     assert info.converged
     assert info.supersteps == 3
+
+
+def _chain_step(seen, n):
+    """A step that runs ``n`` supersteps per call and records its ``i``."""
+
+    def step(state, i):
+        seen.append(i)
+        return StepResult(state, converged=False, supersteps=n)
+
+    return step
+
+
+def test_multi_superstep_step_advances_index(spark):
+    seen = []
+    init = spark.range(2).select(F.col("id").alias("vid"))
+    info = SuperstepLoop(spark, max_iter=9).run(init, _chain_step(seen, 3))
+    assert seen == [0, 3, 6]
+    assert info.supersteps == 9
+    assert not info.converged
+
+
+def test_max_iter_caps_summed_supersteps(spark):
+    seen = []
+    init = spark.range(2).select(F.col("id").alias("vid"))
+    info = SuperstepLoop(spark, max_iter=7).run(init, _chain_step(seen, 3))
+    assert seen == [0, 3, 6]
+    assert info.supersteps == 7
+
+
+def test_must_converge_raises_with_name_and_max_iter(spark):
+    init = spark.range(2).select(F.col("id").alias("vid"))
+    loop = SuperstepLoop(spark, max_iter=4, name="demo", must_converge=True)
+    with pytest.raises(
+        RuntimeError, match="demo did not converge within max_iter=4 supersteps"
+    ):
+        loop.run(init, _chain_step([], 1))
+
+
+def test_max_iter_below_one_rejected(spark):
+    with pytest.raises(ValueError, match="max_iter=0"):
+        SuperstepLoop(spark, max_iter=0)
+
+
+def test_observed_checkpoint_reads_aggregate_in_one_job(spark):
+    from goffish_v3_spark.plans.superstep import observed_checkpoint
+    from tests.test_subgraph_pagerank import _job_ids
+
+    df = spark.range(10).select(F.col("id").alias("vid"))
+    (out, total), jobs = _job_ids(
+        spark, "observed_checkpoint", lambda: observed_checkpoint(df, F.sum("vid"))
+    )
+    assert total == 45
+    assert len(jobs) == 1
+    assert sorted(r.vid for r in out.collect()) == list(range(10))
+
+
+@pytest.mark.parametrize("op", ["csr_pagerank", "core_numbers", "lpa_csr"])
+def test_csr_operators_reject_max_iter_zero(spark, op):
+    from goffish_v3_spark.operators import kcore, lpa, subgraph_pagerank
+    from tests import graphs
+
+    run = {
+        "csr_pagerank": subgraph_pagerank.csr_pagerank,
+        "core_numbers": kcore.core_numbers,
+        "lpa_csr": lpa.lpa_csr,
+    }[op]
+    df = graphs.to_df(spark, graphs.barabasi_albert(60, m=2, seed=3))
+    with pytest.raises(ValueError, match="max_iter"):
+        run(spark, df, num_parts=4, max_iter=0)
+
+
+def test_csr_pagerank_fixed_iterations_zero_runs_superstep_0(spark):
+    from goffish_v3_spark.operators.subgraph_pagerank import csr_pagerank
+    from tests import graphs
+
+    df = graphs.to_df(spark, graphs.barabasi_albert(60, m=2, seed=3))
+    res = csr_pagerank(spark, df, num_parts=4, fixed_iterations=0)
+    assert res.pr_supersteps == 1
+    ranks = [r.rank for r in res.collect()]
+    assert len(ranks) == 60
+    assert all(r == pytest.approx(1 / 60) for r in ranks)
 
 
 def test_pagerank_partition_metrics_persisted(spark, tmp_path):
