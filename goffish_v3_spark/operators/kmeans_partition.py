@@ -12,16 +12,19 @@ edge-crossing counts; we reproduce the same three phases declaratively:
    pick, but reproducible).
 2. **Growth**: synchronous BFS rounds; each unassigned vertex adopts the
    cluster of an assigned neighbour, tie-breaking toward the *currently
-   smallest* cluster (driver-broadcast sizes) then the smallest cluster id —
+   smallest* cluster (driver-observed sizes) then the smallest cluster id —
    the balance heuristic standing in for the reference's swap phase.
 3. **Metrics**: `edge_crossings` — the reference's objective
    (KMeans.java:79,195-202) as one join+filter aggregation.
 
-Unreached vertices (disconnected from every seed) fall back to
+Unreached vertices (disconnected from every seed, or still unassigned
+after ``max_rounds`` — growth does not raise) fall back to
 ``pmod(xxhash64(vid), k)``. Deterministic end-to-end.
 
-At scale each growth round is one frontier⋈edges shuffle (frontier shrinks
-as assignment saturates), and the size broadcast is k integers.
+Growth and refinement run on ``plans.superstep.SuperstepLoop``: each round
+is one frontier⋈edges shuffle (frontier shrinks as assignment saturates)
+and one checkpoint job that also observes the k cluster sizes the next
+round's tie-break broadcasts.
 """
 
 from __future__ import annotations
@@ -29,7 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.superstep import no_aqe
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -53,12 +58,19 @@ def kmeans_partition(
     — same algorithm, but with a DuckDB-expressible seed so the oracle gate
     can replay every growth and refine round as unrolled SQL CTEs (xxhash64
     has no DuckDB twin; the mod-k variant is the same trick meta_graph uses).
+    ``max_rounds=0`` / ``refine_rounds=0`` skip growth / refinement.
     """
     stratum_of = (
         (lambda c: F.pmod(c, F.lit(k)))
         if id_strata
         else (lambda c: F.pmod(F.xxhash64(c), F.lit(k)))
     )
+    # cluster sizes for the next round's tie-break, observed per checkpoint
+    size_agg = F.array(*[F.count_if(F.col("cluster") == c) for c in range(k)])
+
+    def size_of(c):
+        return F.element_at(F.array(*[F.lit(n) for n in sizes]), c + 1)
+
     und = _undirected(edges).persist()
     deg = und.groupBy("src").agg(F.count("*").alias("deg"))
 
@@ -68,38 +80,35 @@ def kmeans_partition(
         deg.withColumn("stratum", stratum_of(F.col("src")).cast("int"))
         .groupBy("stratum")
         .agg(F.max(F.struct("deg", F.col("src").alias("vid"))).alias("m"))
-        .select(F.col("m.vid").alias("vid"), F.col("stratum").alias("cluster"))
+        .select(F.col("m.vid").alias("vid"), F.col("stratum").alias("cluster"),
+                F.lit(True).alias("fresh"))
     )
-    labels = seeds.localCheckpoint(eager=True)
-    frontier = labels
+    labels, sizes = observed_checkpoint(seeds, size_agg)
 
-    with no_aqe(spark):
-        for _ in range(max_rounds):
-            # candidates: unassigned neighbours of the frontier
-            # balance heuristic: adopt the smallest candidate cluster
-            sizes = {
-                r["cluster"]: r["n"]
-                for r in labels.groupBy("cluster").agg(F.count("*").alias("n")).collect()
-            }
-            size_expr = F.element_at(
-                F.array(*[F.lit(sizes.get(c, 0)) for c in range(k)]),
-                F.col("cluster") + 1,
-            )
-            newly = (
-                frontier.join(und, frontier.vid == und.src)
-                .select(F.col("dst").alias("vid"), "cluster")
-                .join(labels.select(F.col("vid").alias("a_vid")),
-                      F.col("vid") == F.col("a_vid"), "left_anti")
-                .withColumn("sz", size_expr)
-                .groupBy("vid")
-                .agg(F.min(F.struct("sz", "cluster")).alias("m"))
-                .select("vid", F.col("m.cluster").alias("cluster"))
-                .localCheckpoint(eager=True)
-            )
-            if newly.isEmpty():
-                break
-            labels = labels.unionByName(newly).localCheckpoint(eager=True)
-            frontier = newly
+    def grow(labels: DataFrame, _i: int) -> StepResult:
+        # unassigned neighbours of the frontier (last round's fresh rows)
+        # adopt the smallest candidate cluster (balance heuristic)
+        nonlocal sizes
+        newly = (
+            labels.filter("fresh").join(und, F.col("vid") == und.src)
+            .select(F.col("dst").alias("vid"), "cluster")
+            .join(labels.select(F.col("vid").alias("a_vid")),
+                  F.col("vid") == F.col("a_vid"), "left_anti")
+            .withColumn("sz", size_of(F.col("cluster")))
+            .groupBy("vid")
+            .agg(F.min(F.struct("sz", "cluster")).alias("m"))
+            .select("vid", F.col("m.cluster").alias("cluster"), F.lit(True).alias("fresh"))
+        )
+        labels, grown = observed_checkpoint(
+            labels.withColumn("fresh", F.lit(False)).unionByName(newly), size_agg
+        )
+        converged, sizes = sum(grown) == sum(sizes), grown
+        return StepResult(labels, converged, truncated=True)
+
+    if max_rounds > 0:
+        labels = SuperstepLoop(
+            spark, max_iter=max_rounds, name="kmeans_partition growth"
+        ).run(labels, grow).state
 
     # fall back for vertices unreachable from every seed; build the universe
     # from the RAW edges so self-loop-only vertices stay covered
@@ -111,46 +120,45 @@ def kmeans_partition(
     rest = allv.join(labels, "vid", "left_anti").select(
         "vid", stratum_of(F.col("vid")).cast("int").alias("cluster")
     )
-    out = labels.unionByName(rest).localCheckpoint(eager=True)
+    out, sizes = observed_checkpoint(
+        labels.select("vid", "cluster").unionByName(rest), size_agg
+    )
 
     # refinement — the analogue of the reference's swap phase
     # (KMeans.java iterated improvement): each vertex synchronously adopts
     # its neighbourhood's majority cluster, ties broken toward the smaller
     # then lower-id cluster; repairs regions the seed growth never reached
-    with no_aqe(spark):
-        for _ in range(refine_rounds):
-            sizes = {
-                r["cluster"]: r["n"]
-                for r in out.groupBy("cluster").agg(F.count("*").alias("n")).collect()
-            }
-            size_expr = F.element_at(
-                F.array(*[F.lit(sizes.get(c, 0)) for c in range(k)]),
-                F.col("cluster") + 1,
+    def refine(out: DataFrame, _i: int) -> StepResult:
+        nonlocal sizes
+        neigh = (
+            out.withColumnRenamed("vid", "nv")
+            .join(und, F.col("nv") == und.src)
+            .groupBy(F.col("dst").alias("vid"), "cluster")
+            .agg(F.count("*").alias("votes"))
+            .withColumn("sz", size_of(F.col("cluster")))
+            .groupBy("vid")
+            .agg(
+                F.max(
+                    F.struct(
+                        "votes",
+                        (-F.col("sz")).alias("neg_sz"),
+                        (-F.col("cluster")).alias("neg_c"),
+                    )
+                ).alias("m")
             )
-            neigh = (
-                out.withColumnRenamed("vid", "nv")
-                .join(und, F.col("nv") == und.src)
-                .groupBy(F.col("dst").alias("vid"), "cluster")
-                .agg(F.count("*").alias("votes"))
-                .withColumn("sz", size_expr)
-                .groupBy("vid")
-                .agg(
-                    F.max(
-                        F.struct(
-                            "votes",
-                            (-F.col("sz")).alias("neg_sz"),
-                            (-F.col("cluster")).alias("neg_c"),
-                        )
-                    ).alias("m")
-                )
-                .select("vid", (-F.col("m.neg_c")).cast("int").alias("cluster"))
-            )
-            out = (
-                allv.join(neigh, "vid", "left")
-                .join(out.withColumnRenamed("cluster", "old"), "vid", "left")
-                .select("vid", F.coalesce("cluster", "old").alias("cluster"))
-                .localCheckpoint(eager=True)
-            )
+            .select("vid", (-F.col("m.neg_c")).cast("int").alias("cluster"))
+        )
+        out, sizes = observed_checkpoint(
+            out.withColumnRenamed("cluster", "old").join(neigh, "vid", "left")
+            .select("vid", F.coalesce("cluster", "old").alias("cluster")),
+            size_agg,
+        )
+        return StepResult(out, False, truncated=True)
+
+    if refine_rounds > 0:
+        out = SuperstepLoop(
+            spark, max_iter=refine_rounds, name="kmeans_partition refine"
+        ).run(out, refine).state
 
     und.unpersist()
     return out

@@ -25,8 +25,13 @@ Labels are therefore canonical (max member id) and the operator works
 for any orderable id type — the repo graph's string keys included.
 
 Scale shape: every step is equi-joins + groupBy-max + semi/anti-joins on
-the active subgraph, with ``localCheckpoint`` lineage barriers per round
-(the house iterative pattern) and driver-observed convergence counts.
+the active subgraph. The outer round and the trim, color and mark
+fixpoints are :class:`~goffish_v3_spark.plans.superstep.SuperstepLoop`
+steps: each round is one ``localCheckpoint`` job whose convergence count
+(edges dropped, colors changed, vertices newly marked, vertices left)
+rides it as an observed aggregate, so no separate ``count()`` job runs.
+The label output is a union of at most two frames per outer round (the
+trimmed singletons and the marked SCC), left lazy over those checkpoints.
 Worst case is an anti-ordered path (O(V) outer rounds) — trimming
 resolves exactly that shape in O(path/2) cheap passes instead, which is
 why the trim loop runs first and to fixpoint. Honest round-count note:
@@ -42,12 +47,86 @@ rather than silently truncate.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+
+def _trim(spark: SparkSession, e: DataFrame, max_inner: int):
+    """Drop edges until every endpoint has an in- and an out-edge; return
+    ``(edges, n_edges)``. A pass's dropped and kept counts ride its
+    checkpoint."""
+    n_kept = 0
+
+    def step(e: DataFrame, _i: int) -> StepResult:
+        nonlocal n_kept
+        core = e.select(F.col("src").alias("v")).distinct().join(
+            e.select(F.col("dst").alias("v")).distinct(), "v", "left_semi"
+        )
+        keep = F.col("ks").isNotNull() & F.col("kd").isNotNull()
+        flagged, (dropped, n_kept) = observed_checkpoint(
+            e.join(core.select(F.col("v").alias("src"), F.lit(1).alias("ks")), "src", "left")
+            .join(core.select(F.col("v").alias("dst"), F.lit(1).alias("kd")), "dst", "left")
+            .select("src", "dst", keep.alias("keep")),
+            F.struct(F.count_if(~F.col("keep")), F.count_if(F.col("keep"))),
+        )
+        return StepResult(flagged.filter("keep").drop("keep"), dropped == 0, truncated=True)
+
+    loop = SuperstepLoop(spark, max_iter=max_inner, name="scc trim", must_converge=True)
+    return loop.run(e, step).state, n_kept
+
+
+def _forward_color(spark: SparkSession, e: DataFrame, vids: DataFrame, max_inner: int):
+    """``(vid, color)``: the max id reaching each vertex along ``e``. The old
+    color rides the ``groupBy``, so the changed count rides the checkpoint."""
+
+    def step(color: DataFrame, _i: int) -> StepResult:
+        msgs = e.join(color.withColumnRenamed("vid", "src"), "src").select(
+            F.col("dst").alias("vid"), "color", F.lit(False).alias("own")
+        )
+        new, changed = observed_checkpoint(
+            color.withColumn("own", F.lit(True)).unionByName(msgs).groupBy("vid").agg(
+                F.max("color").alias("color"),
+                F.max(F.when(F.col("own"), F.col("color"))).alias("old"),
+            ),
+            F.count_if(F.col("color") != F.col("old")),
+        )
+        return StepResult(new.drop("old"), changed == 0, truncated=True)
+
+    loop = SuperstepLoop(spark, max_iter=max_inner, name="scc forward coloring", must_converge=True)
+    return loop.run(vids.select("vid", F.col("vid").alias("color")), step).state
+
+
+def _backward_mark(spark: SparkSession, e: DataFrame, color: DataFrame, max_inner: int):
+    """``(vid)``: the vertices that reach their color's root along same-color
+    edges — the root's SCC."""
+    ce = (
+        e.join(color.select(F.col("vid").alias("src"), F.col("color").alias("cs")), "src")
+        .join(color.select(F.col("vid").alias("dst"), F.col("color").alias("cd")), "dst")
+        .filter(F.col("cs") == F.col("cd"))
+        .select("src", "dst")
+        .localCheckpoint(eager=True)
+    )
+
+    def step(mark: DataFrame, _i: int) -> StepResult:
+        new = (
+            ce.join(mark.withColumnRenamed("vid", "dst"), "dst")
+            .select(F.col("src").alias("vid"), F.lit(True).alias("new"))
+            .distinct()
+            .join(mark, "vid", "left_anti")
+        )
+        out, n_new = observed_checkpoint(
+            mark.withColumn("new", F.lit(False)).unionByName(new), F.count_if(F.col("new"))
+        )
+        return StepResult(out.drop("new"), n_new == 0, truncated=True)
+
+    loop = SuperstepLoop(spark, max_iter=max_inner, name="scc backward marking", must_converge=True)
+    return loop.run(color.filter(F.col("vid") == F.col("color")).select("vid"), step).state
 
 
 def scc(
@@ -60,131 +139,35 @@ def scc(
     ``scc_id`` = the MAX member id of the vertex's strongly connected
     component (canonical, partition-invariant). Ids may be any orderable
     type (long vids, the repo graph's string keys, ...)."""
-    e_all = _ckpt(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    pairs = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     # vertex universe from the UNFILTERED edges: a vertex whose only edge
     # is a self-loop is still a (singleton) SCC and must get a row
-    rem_v = _ckpt(
-        edges.select(F.col("src").alias("vid"))
-        .unionByName(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-    rem_e = e_all
-    done: list[DataFrame] = []
+    rem_v = pairs.select(F.col("src").alias("vid")).unionByName(
+        pairs.select(F.col("dst").alias("vid"))
+    ).distinct()
+    rem_e = pairs.filter(F.col("src") != F.col("dst"))
+    done: list[DataFrame] = []  # at most two label frames per outer round
 
-    for _outer in range(max_outer):
-        if rem_v.count() == 0:
-            break
-
-        # ---- 1. trim to fixpoint ------------------------------------
-        for _t in range(max_inner):
-            has_out = rem_e.select(F.col("src").alias("vid")).distinct()
-            has_in = rem_e.select(F.col("dst").alias("vid")).distinct()
-            core = _ckpt(
-                rem_v.join(has_out, "vid", "left_semi").join(
-                    has_in, "vid", "left_semi"
-                )
-            )
-            trimmed = rem_v.join(core, "vid", "left_anti")
-            if trimmed.count() == 0:
-                break
-            done.append(
-                _ckpt(trimmed.select("vid", F.col("vid").alias("scc_id")))
-            )
-            rem_v = core
-            rem_e = _ckpt(
-                rem_e.join(
-                    rem_v.select(F.col("vid").alias("src")), "src", "left_semi"
-                ).join(
-                    rem_v.select(F.col("vid").alias("dst")), "dst", "left_semi"
-                ).select("src", "dst")
-            )
-        else:
-            raise RuntimeError(f"scc: trim did not converge in {max_inner} passes")
-        if rem_v.count() == 0:
-            break
-
-        # ---- 2. forward max-color fixpoint ---------------------------
-        color = _ckpt(rem_v.select("vid", F.col("vid").alias("color")))
-        for _i in range(max_inner):
-            msgs = rem_e.join(
-                color.withColumnRenamed("vid", "src"), "src"
-            ).select(F.col("dst").alias("vid"), "color")
-            new_color = _ckpt(
-                color.unionByName(msgs)
-                .groupBy("vid")
-                .agg(F.max("color").alias("color"))
-            )
-            changed = (
-                new_color.alias("n")
-                .join(color.alias("o"), "vid")
-                .filter(F.col("n.color") != F.col("o.color"))
-                .count()
-            )
-            color = new_color
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"scc: forward coloring did not converge in {max_inner} rounds"
-            )
-
-        # ---- 3. backward mark within the color class -----------------
-        ce = _ckpt(
-            rem_e.join(
-                color.select(F.col("vid").alias("src"), F.col("color").alias("cs")),
-                "src",
-            )
-            .join(
-                color.select(F.col("vid").alias("dst"), F.col("color").alias("cd")),
-                "dst",
-            )
-            .filter(F.col("cs") == F.col("cd"))
-            .select("src", "dst")
+    def outer(rem_v: DataFrame, _i: int) -> StepResult:
+        nonlocal rem_e
+        e, n_e = _trim(spark, rem_e, max_inner)
+        core = e.select(F.col("src").alias("vid")).distinct()
+        done.append(rem_v.join(core, "vid", "left_anti").withColumn("scc_id", F.col("vid")))
+        if n_e == 0:
+            return StepResult(core, True, truncated=True)
+        color = _forward_color(spark, e, core, max_inner)
+        mark = _backward_mark(spark, e, color, max_inner)
+        done.append(mark.join(color, "vid").withColumnRenamed("color", "scc_id"))
+        rem_v, n_v = observed_checkpoint(core.join(mark, "vid", "left_anti"), F.count(F.lit(1)))
+        rem_e = e.join(rem_v.withColumnRenamed("vid", "src"), "src", "left_semi").join(
+            rem_v.withColumnRenamed("vid", "dst"), "dst", "left_semi"
         )
-        mark = _ckpt(
-            color.filter(F.col("vid") == F.col("color")).select("vid")
-        )
-        for _i in range(max_inner):
-            new_marks = (
-                ce.join(mark.withColumnRenamed("vid", "dst"), "dst")
-                .select(F.col("src").alias("vid"))
-                .distinct()
-                .join(mark, "vid", "left_anti")
-            )
-            if new_marks.count() == 0:
-                break
-            mark = _ckpt(mark.unionByName(new_marks))
-        else:
-            raise RuntimeError(
-                f"scc: backward marking did not converge in {max_inner} rounds"
-            )
+        return StepResult(rem_v, n_v == 0, truncated=True)
 
-        done.append(
-            _ckpt(mark.join(color, "vid").select("vid", F.col("color").alias("scc_id")))
-        )
-        rem_v = _ckpt(rem_v.join(mark, "vid", "left_anti"))
-        rem_e = _ckpt(
-            rem_e.join(
-                rem_v.select(F.col("vid").alias("src")), "src", "left_semi"
-            ).join(
-                rem_v.select(F.col("vid").alias("dst")), "dst", "left_semi"
-            ).select("src", "dst")
-        )
-    if rem_v.count() != 0:
-        raise RuntimeError(f"scc: did not finish in {max_outer} outer rounds")
-
-    if not done:  # no (non-self-loop) edges at all
-        return e_all.select(
-            F.col("src").alias("vid"), F.col("src").alias("scc_id")
-        ).limit(0)
-    out = done[0]
-    for part in done[1:]:
-        out = out.unionByName(part)
-    return out
+    SuperstepLoop(
+        spark, max_iter=max_outer, name="scc outer rounds", must_converge=True
+    ).run(rem_v, outer)
+    return reduce(DataFrame.unionByName, done)
 
 
 def scc_sql(edges_sql: str) -> str:

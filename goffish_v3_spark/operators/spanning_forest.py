@@ -35,12 +35,17 @@ cluster for step 2.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.partitioner import vertex_part
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 
 def _boruvka_numpy(src: np.ndarray, dst: np.ndarray):
@@ -147,23 +152,20 @@ def _distributed_meta_boruvka(
     pick pairs are collapsed with the distributed hash-min fixpoint from
     operators.wcc and the meta table is relabeled through the mapping.
     Components at least halve per round → O(log V) rounds; nothing larger
-    than the pick set (≤ one row per live component) leaves its stage.
+    than the pick set (≤ one row per live component) leaves its stage. Each
+    round is one superstep-loop step, which raises ``RuntimeError`` if
+    ``max_rounds`` pass with meta edges left.
 
     Returns ``(bridges(src, dst), mapping(label, root))``.
     """
-    from pyspark.sql import Observation
-
     from goffish_v3_spark.operators.wcc import _hash_min_fixpoint
 
     bridge_parts: list[DataFrame] = []  # checkpointed pick sets, one per round
-    total_map = None  # (label, root) accumulated over rounds
-    obs0 = Observation("meta_boruvka_init")
-    cur = meta.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    n_cur = int(obs0.get["n"] or 0)
+    total_map = spark.createDataFrame([], "label long, root long")
+    cur, n_cur = observed_checkpoint(meta, F.count(F.lit(1)))
 
-    for rnd in range(max_rounds):
-        if n_cur == 0:
-            break
+    def step(cur: DataFrame, _i: int) -> StepResult:
+        nonlocal total_map
         both = cur.select(
             F.col("a").alias("comp"), F.struct("a", "b", "src", "dst").alias("e")
         ).unionByName(
@@ -179,27 +181,20 @@ def _distributed_meta_boruvka(
         # end instead of paying a bridges re-checkpoint job every round
         bridge_parts.append(picks.select("src", "dst"))
         round_map = _hash_min_fixpoint(spark, picks.select("a", "b"))
-        # fold into the running label→root mapping
-        if total_map is None:
-            total_map = round_map.localCheckpoint(eager=True)
-        else:
-            total_map = (
-                total_map.join(
-                    round_map.select(
-                        F.col("label").alias("r_label"), F.col("root").alias("r_root")
-                    ),
-                    total_map.root == F.col("r_label"),
-                    "left",
-                )
-                .select("label", F.coalesce("r_root", "root").alias("root"))
-                .localCheckpoint(eager=True)
-            )
+        # fold into the running label→root mapping (full: the first round's
+        # map starts it; later rounds only re-root labels already in it)
+        r = round_map.select(F.col("label").alias("r_label"), F.col("root").alias("r_root"))
+        total_map = (
+            total_map.join(r, total_map.root == r.r_label, "full")
+            .select(F.coalesce("label", "r_label").alias("label"),
+                    F.coalesce("r_root", "root").alias("root"))
+            .localCheckpoint(eager=True)
+        )
         # relabel the meta table and drop now-internal pairs; the surviving
         # row count rides the same checkpoint (no separate isEmpty job)
         ra = round_map.select(F.col("label").alias("a"), F.col("root").alias("ra"))
         rb = round_map.select(F.col("label").alias("b"), F.col("root").alias("rb"))
-        obs = Observation(f"meta_boruvka_round_{rnd}")
-        cur = (
+        cur, n_left = observed_checkpoint(
             cur.join(ra, "a", "left")
             .join(rb, "b", "left")
             .select(
@@ -213,18 +208,18 @@ def _distributed_meta_boruvka(
                 F.least("na", "nb").alias("a"), F.greatest("na", "nb").alias("b")
             )
             .agg(F.min(F.struct("src", "dst")).alias("rep"))
-            .select("a", "b", F.col("rep.src").alias("src"), F.col("rep.dst").alias("dst"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("a", "b", F.col("rep.src").alias("src"), F.col("rep.dst").alias("dst")),
+            F.count(F.lit(1)),
         )
-        n_cur = int(obs.get["n"] or 0)
+        return StepResult(cur, n_left == 0, truncated=True)
 
-    bridges = spark.createDataFrame([], "src long, dst long")
-    for p in bridge_parts:
-        bridges = bridges.unionByName(p)
-    if total_map is None:
-        total_map = spark.createDataFrame([], "label long, root long")
-    return bridges, total_map
+    if n_cur:
+        SuperstepLoop(
+            spark, max_iter=max_rounds, name="spanning_forest meta-Boruvka",
+            must_converge=True,
+        ).run(cur, step)
+    empty = spark.createDataFrame([], "src long, dst long")
+    return reduce(DataFrame.unionByName, bridge_parts, empty), total_map
 
 
 def spanning_forest(

@@ -14,6 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.partitioner import vertex_part
+from goffish_v3_spark.plans.superstep import (
+    StepResult, SuperstepLoop, observed_checkpoint,
+)
 
 
 def vertex_count(edges: DataFrame) -> int:
@@ -143,47 +146,47 @@ def meta_diameter(
     edges: DataFrame,
     num_parts: int,
     part_expr=None,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """GraphStats.java:118-210 — the meta-graph diameter probe/reply flood,
     as iterated all-pairs min-plus over the (tiny: ≤ num_parts nodes) meta
     edge table. Returns one row
     ``(n_meta_nodes long, n_meta_edges long, diameter long)``; unreachable
-    pairs are excluded, matching the reference's reply-only flood."""
-    me = meta_graph(edges, num_parts, part_expr=part_expr).persist()
-    n_meta_edges = me.count()
+    pairs are excluded, matching the reference's reply-only flood.
+
+    Flood round ``i`` adds exactly the pairs at distance ``i + 1``, so the
+    first round that adds none is round ``diameter``; with ``n`` meta nodes
+    that is at most round ``n - 1``, and the loop is capped there."""
+    me, n_meta_edges = observed_checkpoint(
+        meta_graph(edges, num_parts, part_expr=part_expr), F.count(F.lit(1))
+    )
     und = (
         me.select(F.col("src_part").alias("a"), F.col("dst_part").alias("b"))
         .unionByName(me.select(F.col("dst_part").alias("a"), F.col("src_part").alias("b")))
         .distinct()
         .persist()
     )
-    nodes = und.select(F.col("a").alias("v")).distinct()
-    n_nodes = nodes.count()
-
-    dist = (
-        nodes.select(F.col("v").alias("s"), F.col("v").alias("v"), F.lit(0).alias("d"))
-        .localCheckpoint(eager=True)
+    dist, n_nodes = observed_checkpoint(
+        und.select(F.col("a").alias("v")).distinct()
+        .select(F.col("v").alias("s"), "v", F.lit(0).alias("d")),
+        F.count(F.lit(1)),
     )
-    n_pairs = dist.count()
-    for _ in range(max_rounds):
+
+    def step(dist: DataFrame, i: int) -> StepResult:
         grown = (
             dist.join(und, dist.v == und.a)
             .select("s", F.col("b").alias("v"), (F.col("d") + 1).alias("d"))
             .unionByName(dist)
             .groupBy("s", "v")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
         )
-        n_new = grown.count()
-        dist = grown
-        if n_new == n_pairs:
-            break
-        n_pairs = n_new
+        grown, n_new = observed_checkpoint(grown, F.count(F.when(F.col("d") == i + 1, 1)))
+        return StepResult(grown, n_new == 0, truncated=True)
 
-    diam = dist.agg(F.max("d")).collect()[0][0] or 0
-    me.unpersist()
+    info = SuperstepLoop(
+        spark, max_iter=max(n_nodes, 1), name="meta_diameter flood", must_converge=True
+    ).run(dist, step)
     und.unpersist()
+    diam = info.supersteps - 1
     return spark.createDataFrame(
         [(n_nodes, n_meta_edges, diam)],
         "n_meta_nodes long, n_meta_edges long, diameter long",

@@ -1,10 +1,13 @@
 """The superstep driver loop — BSP without Hama.
 
-:class:`SuperstepLoop` is the one fixpoint driver: ``pagerank``, ``lpa``,
-``sssp``, WCC's hash-min and the CSR engines (``csr_pagerank``, ``lpa_csr``,
-``sssp_csr``, ``core_numbers``/``k_core``) supply a step function; the loop
-owns the superstep count, the ``max_iter`` cap, raise-on-non-convergence and
-the AQE pin. :func:`observed_checkpoint` is their one-job step.
+:class:`SuperstepLoop` is the package's one fixpoint driver. Its users supply
+a step function: ``pagerank``, ``lpa``, ``sssp``, the CSR engines
+(``csr_pagerank``/``subgraph_rank``, ``lpa_csr``, ``sssp_csr``,
+``core_numbers``/``k_core``), WCC's hash-min, the spanning forest's
+meta-Boruvka, ``scc``, ``kmeans_partition`` and ``stats.meta_diameter``. The
+loop owns the superstep count, the ``max_iter`` cap, raise-on-non-convergence
+and the AQE pin. :func:`observed_checkpoint` is their one-job step: the
+state and its stop count in one Spark job.
 
 The reference's superstep machinery (hama GraphJobRunner.java:250-353: message
 delivery → per-subgraph compute on a thread pool → barrier → heartbeat-based

@@ -110,3 +110,16 @@ def test_degree_assortativity_regular_graph_degenerate(spark):
     )
     v = degree_assortativity(df).collect()[0].assortativity
     assert v is None or math.isnan(v)
+
+
+def test_meta_diameter_ring_is_not_truncated(spark):
+    """A 140-partition ring has diameter 70: the flood runs until a round
+    adds no pair (at most n_meta_nodes rounds) instead of stopping at a
+    fixed round cap."""
+    from goffish_v3_spark.operators.stats import meta_diameter
+
+    df = graphs.to_df(spark, graphs.chain(141))
+    row = meta_diameter(
+        spark, df, num_parts=140, part_expr=lambda c: F.pmod(c, F.lit(140))
+    ).collect()[0]
+    assert (row.n_meta_nodes, row.n_meta_edges, row.diameter) == (140, 140, 70)

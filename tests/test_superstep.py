@@ -208,3 +208,45 @@ def test_partition_first_dedup_is_single_exchange(spark):
         )
     finally:
         deduped.unpersist()
+
+
+def _scc_cyclic17(spark):
+    # the 17-vertex graph of test_scc.test_matches_duckdb_definition_oracle
+    pairs = sorted(
+        {(i % 17, (i * 5 + 3) % 17) for i in range(40)}
+        | {((i * 7) % 17, i % 17) for i in range(15)}
+    )
+    return spark.createDataFrame([p for p in pairs if p[0] != p[1]], "src long, dst long")
+
+
+# Spark jobs per call on BA(60, 2, seed 3) at 4 parts (no trailing action).
+# Each round is one observed localCheckpoint job; the rest are the AQE
+# stages and broadcasts around the loops. The hand-rolled loops these
+# replaced ran 94, 214, 34, 42 and 25.
+FIXPOINT_JOB_COUNTS = {
+    "scc": 7,
+    "scc_cyclic17": 19,
+    "kmeans_partition": 23,
+    "spanning_forest": 33,
+    "meta_diameter": 10,
+}
+
+
+@pytest.mark.parametrize("name", sorted(FIXPOINT_JOB_COUNTS))
+def test_fixpoint_operator_jobs_per_call(spark, name):
+    from goffish_v3_spark.operators import kmeans_partition, scc, spanning_forest, stats
+    from tests import graphs
+    from tests.test_subgraph_pagerank import _job_ids
+
+    def ba():
+        return graphs.to_df(spark, graphs.barabasi_albert(60, m=2, seed=3))
+
+    run = {
+        "scc": lambda: scc.scc(spark, ba()),
+        "scc_cyclic17": lambda: scc.scc(spark, _scc_cyclic17(spark)),
+        "kmeans_partition": lambda: kmeans_partition.kmeans_partition(spark, ba(), k=4),
+        "spanning_forest": lambda: spanning_forest.spanning_forest(spark, ba(), num_parts=4),
+        "meta_diameter": lambda: stats.meta_diameter(spark, ba(), 4),
+    }[name]
+    _, jobs = _job_ids(spark, f"fixpoint_jobs_{name}", run)
+    assert len(jobs) <= FIXPOINT_JOB_COUNTS[name], (name, len(jobs))
