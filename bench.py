@@ -4,10 +4,13 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 on local[$SPARK_GRAFT_CPUS] and prints::
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": ..., "extra": {...}}
+     "queries": {...per-query sec...}, "sf": ..., "cpus": ...,
+     "all_queries_host_ok": ...}
 
-The authoritative north metric (BASELINE.json) — edges-traversed/sec for
-PageRank supersteps — is reported in ``extra`` alongside iteration counts.
+and writes the detail — per-query canary brackets and re-runs, and
+``extra`` with the authoritative north metric (BASELINE.json),
+edges-traversed/sec for PageRank supersteps, alongside iteration counts —
+to ``BENCH/last_run.json``.
 Scaling-efficiency runs (N vs 4N cores) live in BENCH/run_scaling.py which
 writes BENCH/BASELINE.md.
 
@@ -36,6 +39,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PR_BENCH_ITERS = 10
+# the run's detail file: per-query brackets and re-runs, canaries, extras
+LAST_RUN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "last_run.json")
 
 # Host-speed canary: a FIXED pure-Spark workload (range → hash mod keys →
 # groupBy sum/count → orderBy limit collect), deliberately independent of this
@@ -143,6 +148,24 @@ class HostGuard:
             self.last_py_wall = round(py_wall, 3)
         self.last_wall, self.last_ok = round(wall, 3), bool(jvm_ok and py_ok)
         return self.last_wall, self.last_ok
+
+
+def headline(b: "Bench") -> str:
+    """The one JSON line the driver reads: total and per-query walls plus
+    the run's host verdict. Everything else (brackets, re-runs, canaries,
+    derived numbers) goes to :data:`LAST_RUN`, so the line stays short
+    enough for a tail capture however many queries are flagged."""
+    return json.dumps(
+        {
+            "metric": "goffish_v3_spark headline suite (graph + pipeline) wall time",
+            "value": round(sum(b.timings.values()), 3),
+            "unit": "sec",
+            "queries": b.timings,
+            "sf": SF_DIR,
+            "cpus": CPUS,
+            "all_queries_host_ok": all(m["host_ok"] for m in b.meta.values()),
+        }
+    )
 
 
 class Bench:
@@ -588,24 +611,14 @@ def main() -> None:
     }
     if flagged:
         extra["flagged_query_runs"] = flagged
-    extra["all_queries_host_ok"] = all(m["host_ok"] for m in b.meta.values())
     extra["canary_overhead_sec"] = round(guard.canary_overhead, 3)
     extra["n_interleaved_canaries"] = guard.n_canaries
 
-    total = round(sum(b.timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "goffish_v3_spark headline suite (graph + pipeline) wall time",
-                "value": total,
-                "unit": "sec",
-                "queries": b.timings,
-                "sf": SF_DIR,
-                "cpus": CPUS,
-                "extra": extra,
-            }
-        )
-    )
+    line = headline(b)
+    os.makedirs(os.path.dirname(LAST_RUN), exist_ok=True)
+    with open(LAST_RUN, "w") as f:
+        json.dump({"headline": json.loads(line), "meta": b.meta, "extra": extra}, f, indent=1)
+    print(line)
 
 
 if __name__ == "__main__":

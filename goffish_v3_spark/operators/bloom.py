@@ -67,18 +67,44 @@ def bloom_bits(
 ) -> DataFrame:
     """``(pos long)`` — the distinct set-bit positions of the Bloom filter
     over ``df[key_col]``. At most ``m`` rows no matter how many keys
-    stream in; merge two filters by ``union().distinct()``. Positions are
-    Kirsch–Mitzenmacher double hashing: ``(h1 + i·h2) mod m`` for
-    ``i in [0, k)`` — k positions from two mixer evaluations."""
+    stream in; merge two filters built with the same parameters by
+    ``union().distinct()``. Positions are Kirsch–Mitzenmacher double
+    hashing: ``(h1 + i·h2) mod m`` for ``i in [0, k)`` — k positions from
+    two mixer evaluations. The ``pos`` column's metadata carries ``{m, k,
+    seed}`` so :func:`bloom_prefilter` can refuse a mismatch; the rows are
+    unchanged by it."""
     _check_params(m, k)
     _check_integral_key(df, key_col, "bloom_bits")
     keys = df.select(F.col(key_col).alias("key")).distinct()
     d = _with_h1_h2(keys, "key", seed, ["key"])
+    pos = (F.col("h1") + F.col("i") * F.col("h2")) % m
     return (
         d.withColumn("i", F.explode(F.array(*[F.lit(j) for j in range(k)])))
-        .select(((F.col("h1") + F.col("i") * F.col("h2")) % m).alias("pos"))
+        .select(pos.alias("pos", metadata={"bloom": _tag(m, k, seed)}))
         .distinct()
     )
+
+
+def _tag(m: int, k: int, seed: int) -> dict:
+    return {"m": m, "k": k, "seed": seed}
+
+
+def _check_bits_tag(bits: DataFrame, m: int, k: int, seed: int) -> None:
+    """Positions only mean something under the (m, k, seed) that hashed
+    them: probing with other parameters drops true rows (false negatives)
+    with no error, so a bits table without :func:`bloom_bits`' tag, or with
+    a different one, raises."""
+    tag = bits.schema["pos"].metadata.get("bloom") if "pos" in bits.columns else None
+    if tag is None:
+        raise ValueError(
+            "bits table carries no (m, k, seed) tag on its pos column; "
+            "build it with bloom_bits"
+        )
+    if tag != _tag(m, k, seed):
+        raise ValueError(
+            f"bloom_prefilter(m={m}, k={k}, seed={seed}) does not match the "
+            f"bits table, built with m={tag['m']}, k={tag['k']}, seed={tag['seed']}"
+        )
 
 
 def bloom_prefilter(
@@ -94,12 +120,15 @@ def bloom_prefilter(
     SEMI joins** against the (≤ m row) bit table: no shuffle, no groupBy,
     row multiplicity and schema preserved exactly. Supersets the true
     semi-join (false positives possible, false negatives impossible), so
-    following it with the real join yields the plain-join result."""
+    following it with the real join yields the plain-join result.
+    ``m``, ``k`` and ``seed`` must be the ones ``bits`` was built with
+    (:func:`bloom_bits`' tag), else this raises ``ValueError``."""
     _check_params(m, k)
     _check_integral_key(fact, fact_key, "bloom_prefilter")
     out_cols = list(fact.columns)
     if "h1" in out_cols or "h2" in out_cols:
         raise ValueError("fact must not already carry h1/h2 columns")
+    _check_bits_tag(bits, m, k, seed)
     d = _with_h1_h2(fact, fact_key, seed, out_cols)
     for i in range(k):
         col = f"_pos{i}"

@@ -18,7 +18,7 @@ differing only in local scheduling; we ship one distributed implementation
   full decomposition sends O(changed) messages per superstep: each partition
   keeps a shadow of the last-received remote estimates (ONE packed binary
   kind=3 row riding its own state channel, never crossing partitions —
-  see _pack_shadow) and senders emit a
+  see plans.csr.pack_shadow) and senders emit a
   boundary vertex only when its estimate moved this superstep;
 - global halt when no estimate changed anywhere (driver-side gate).
 
@@ -39,12 +39,16 @@ the O(max_core × peeling depth) driver loop this replaces.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.block_cache import BlockStore, block_store, load_block
-from goffish_v3_spark.plans.csr import MergedCsr, build_csr_blocks_sym
+from goffish_v3_spark.plans.block_cache import (
+    BlockStore, block_store, load_block, one_task_tail,
+)
+from goffish_v3_spark.plans.csr import (
+    build_csr_blocks_sym, carry_frame, changed_sends, merge_boundary, passthrough,
+    shadow_rows,
+)
 from goffish_v3_spark.plans.superstep import (
     StepResult, SuperstepLoop, observed_checkpoint,
 )
@@ -58,15 +62,6 @@ CHAIN_K_CORE = 4
 # tail consolidation: after this many distributed supersteps, if the merged
 # blocks fit one task (BlockStore.fits_one_task), the rest runs there
 CONSOLIDATE_AFTER = 2
-
-_EMPTY_OUT = {
-    "part": "int32",
-    "kind": "int32",
-    "vid": "int64",
-    "a": "int64",
-    "payload": "object",
-}
-
 
 def _hindex_fixpoint_frontier(
     indptr: np.ndarray, dst_idx: np.ndarray, est: np.ndarray
@@ -121,118 +116,39 @@ def _hindex_fixpoint_frontier(
     return est
 
 
-def _make_consolidated_kernel(parts: list[int], blocks_path: str, cap: int | None):
-    """Tail-consolidation superstep (VERDICT r4 #2): merge EVERY partition's
-    CSR block inside one task and run the global h-index fixpoint to
+def _tail_solve(cap: int | None):
+    """The one-task tail (``plans.block_cache.one_task_tail``, VERDICT r4
+    #2): the global h-index fixpoint over every block merged, run to
     completion. Correct from any reachable state — estimates are upper
     bounds and the chaotic iteration converges to exact coreness from any
     upper-bound seed, so the merged pass IS the global fixpoint and the loop
-    can stop afterwards. Emits the usual kind-0 state per owner partition
-    plus a full kind-3 shadow per partition (every remote estimate it
-    references) so the k-core finalize pass works unchanged.
+    can stop afterwards. Besides the kind-0 state it emits a full kind-3
+    shadow per partition (every remote estimate it references) so the k-core
+    finalize pass works unchanged.
 
-    Only legal when the merged blocks fit one task
-    (``BlockStore.fits_one_task``) — the 100 TB posture is: distributed
-    waves grind the bulk creep in parallel, and the serial cross-partition
-    tail collapses into one task the moment the whole remaining problem
-    provably fits."""
+    The 100 TB posture: distributed waves grind the bulk creep in parallel,
+    and the serial cross-partition tail collapses into one task the moment
+    the whole remaining problem provably fits."""
 
-    def fn(it):
-        pdf = pd.concat(list(it), ignore_index=True)
-        state = pdf[pdf["kind"] == 0]
-        m = MergedCsr([load_block(blocks_path, p) for p in parts])
-        est = np.empty(m.n, dtype=np.int64)
-        est[m.state_pos(state["vid"].to_numpy(dtype=np.int64))] = state[
-            "a"
-        ].to_numpy(dtype=np.int64)
+    def solve(m, state, pdf):
+        est = state["a"]
         if cap is not None:
             est = np.minimum(est, cap)
         est = _hindex_fixpoint_frontier(m.indptr, m.dst_idx, est)
+        shadows = []
+        for b in m.blocks:
+            want = np.unique(b.edge_dst_vid[b.edge_dst_local < 0])
+            shadows += shadow_rows(b.part, want, est[m.pos(want)])
+        return 1, {"a": est}, shadows
 
-        frames = []
-        for i, b in enumerate(m.blocks):
-            sl = slice(m.offs[i], m.offs[i + 1])
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "part": np.full(b.n_local, b.part, dtype=np.int32),
-                        "kind": np.zeros(b.n_local, dtype=np.int32),
-                        "vid": b.local_vids,
-                        "a": est[sl],
-                        "payload": None,
-                    }
-                )
-            )
-            rm = b.edge_dst_local < 0
-            if rm.any():
-                want = np.unique(b.edge_dst_vid[rm])
-                sh = pd.DataFrame(
-                    {
-                        "part": np.array([b.part], dtype=np.int32),
-                        "kind": np.array([3], dtype=np.int32),
-                        "vid": np.array([-1], dtype=np.int64),
-                        "a": np.array([len(want)], dtype=np.int64),
-                        "payload": [_pack_shadow(want, est[m.pos(want)])],
-                    }
-                )
-                frames.append(sh)
-        yield pd.concat(frames, ignore_index=True)
-
-    return fn
-
-
-def _pack_shadow(vid: np.ndarray, val: np.ndarray) -> bytes:
-    """Shadow channel wire format: int64[vid] ++ int64[val], one binary cell.
-
-    A partition's shadow (last-received remote estimates) covers its whole
-    boundary — on a dense graph that is nearly every vertex, and re-emitting
-    it as one (vid, est) ROW per entry every superstep made the shadow ~97%
-    of the carry (measured 608k of 620k rows/superstep on the 1.2M-edge
-    copart graph — chain walls 4-7 s). Packing it into one binary row per
-    partition keeps the same information at ~30x fewer rows through Arrow,
-    the chain checkpoint and the changed-count scan."""
-    return vid.tobytes() + val.tobytes()
-
-
-def _unpack_shadow(payload: bytes, n: int) -> tuple[np.ndarray, np.ndarray]:
-    return (
-        np.frombuffer(payload, dtype=np.int64, count=n),
-        np.frombuffer(payload, dtype=np.int64, count=n, offset=8 * n),
-    )
-
-
-def _merge_boundary(sm_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Sorted (vid, estimate) lookup from the boundary channel: kind=3
-    packed shadows (last-received values; vid=-1, a=entry count, payload =
-    int64 vids ++ int64 ests) overridden by kind=1 fresh message rows.
-    A vid appears at most once per source (one owner per vid); the stable
-    sort keeps the fresh message LAST so it wins the dedup."""
-    sh_rows = sm_pdf[sm_pdf["kind"] == 3]
-    msg_rows = sm_pdf[sm_pdf["kind"] == 1]
-    sh_vids, sh_vals = [], []
-    for _, r in sh_rows.iterrows():
-        v, e = _unpack_shadow(r["payload"], int(r["a"]))
-        sh_vids.append(v)
-        sh_vals.append(e)
-    svid = np.concatenate(
-        sh_vids + [msg_rows["vid"].to_numpy(dtype=np.int64)]
-    )
-    sval = np.concatenate(
-        sh_vals + [msg_rows["a"].to_numpy(dtype=np.int64)]
-    )
-    order = np.argsort(svid, kind="stable")
-    svid, sval = svid[order], sval[order]
-    if len(svid):
-        keep = np.concatenate((svid[1:] != svid[:-1], [True]))
-        svid, sval = svid[keep], sval[keep]
-    return svid, sval
+    return solve
 
 
 def _lookup_boundary(
     part: int, vid: np.ndarray, val: np.ndarray, want: np.ndarray
 ) -> np.ndarray:
     """Estimates of the remote vertices ``want`` from the sorted boundary
-    lookup ``(vid, val)`` (see :func:`_merge_boundary`). Every remote
+    lookup ``(vid, val)`` (see :func:`plans.csr.merge_boundary`). Every remote
     neighbour must be covered — the first exchange is full — so a gap
     raises instead of reading a wrong estimate."""
     if len(vid) == 0:
@@ -260,46 +176,22 @@ def _make_kernel(superstep: int, blocks_path: str, cap: int | None = None):
     non-increasing, so an unsent value is still the sender's current
     value."""
 
-    def passthrough(sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        """Quiescent-partition fast path (wake-on-message at partition
-        granularity, the reference's voteToHalt shape): at superstep ≥ 2 a
-        partition with no incoming kind-1 messages is already at local
-        h-index fixpoint — its previous superstep ran the local pass to
-        fixpoint against remote estimates that have not changed since
-        (estimates are monotone; only a message can lower a remote input).
-        Re-emit state (kind 0) and shadows (kind 3) verbatim with a
-        changed=0 marker: no CSR block load, no numpy pass, no sends. This
-        is what makes chain-overshoot steps and the narrow convergence
+    def quiescent(sm_pdf) -> bool:
+        """At superstep ≥ 2 a partition with no incoming kind-1 messages is
+        already at local h-index fixpoint — its previous superstep ran the
+        local pass to fixpoint against remote estimates that have not
+        changed since (estimates are monotone; only a message can lower a
+        remote input). Superstep 0 seeds, superstep 1 runs the first local
+        pass (a partition with no remote edges receives nothing but still
+        must compute once) — so the skip is only valid from superstep 2 on.
+        This is what makes chain-overshoot steps and the narrow convergence
         wavefront cheap."""
-        out = sm_pdf[sm_pdf["kind"].isin((0, 3))]
-        if len(out) == 0:  # defensive: a group always carries kind-0 state
-            return pd.DataFrame(columns=list(_EMPTY_OUT)).astype(_EMPTY_OUT)
-        part = np.int32(out["part"].iloc[0])
-        marker = pd.DataFrame(
-            {
-                "part": np.array([part], dtype=np.int32),
-                "kind": np.array([2], dtype=np.int32),
-                "vid": np.array([-1], dtype=np.int64),
-                "a": np.array([0], dtype=np.int64),
-                "payload": [None],
-            }
-        )
-        return pd.concat(
-            [out[["part", "kind", "vid", "a", "payload"]], marker],
-            ignore_index=True,
-        )
-
-    def quiescent(sm_pdf: pd.DataFrame) -> bool:
-        # superstep 0 seeds, superstep 1 runs the first local pass (a
-        # partition with no remote edges receives nothing but still must
-        # compute once) — so the skip is only valid from superstep 2 on
         return superstep >= 2 and not (sm_pdf["kind"] == 1).any()
 
     def kernel(key, sm_pdf):
         if quiescent(sm_pdf):
-            # the quiescent path needs nothing from the CSR block — skip the
-            # block fetch entirely
-            return passthrough(sm_pdf)
+            # state and shadows verbatim; nothing needed from the CSR block
+            return passthrough(OUT_SCHEMA, sm_pdf, (0, 3))
         blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
         deg = blk.out_degrees.astype(np.int64)
@@ -318,15 +210,12 @@ def _make_kernel(superstep: int, blocks_path: str, cap: int | None = None):
             changed = np.int64(n)  # force ≥1 more round
             send_edge_mask = remote_mask
         else:
-            state_rows = sm_pdf[sm_pdf["kind"] == 0]
-            est = np.empty(n, dtype=np.int64)
-            idx = blk.align(state_rows["vid"].to_numpy(dtype=np.int64))
-            est[idx] = state_rows["a"].to_numpy(dtype=np.int64)
+            (est,) = blk.per_vertex(sm_pdf, 0, a=np.int64)
             prev = est.copy()
 
             # local fixpoint with each remote edge's neighbour appended as a
             # pinned entry at its last-received estimate
-            shadow_vid, shadow_val = _merge_boundary(sm_pdf)
+            shadow_vid, shadow_val = merge_boundary(sm_pdf)
             dst_idx = blk.edge_dst_local.astype(np.int64)
             pinned = np.empty(0, dtype=np.int64)
             if remote_mask.any():
@@ -342,65 +231,15 @@ def _make_kernel(superstep: int, blocks_path: str, cap: int | None = None):
             send_edge_mask = remote_mask & changed_mask[seg]
 
         # boundary exchange: send each (changed) boundary vertex's estimate
-        # to every partition that references it — dedup'd per (dst_part, vid)
-        # before the shuffle
-        if send_edge_mask.any():
-            pairs = np.stack(
-                [blk.edge_dst_part[send_edge_mask].astype(np.int64), seg[send_edge_mask]],
-                axis=1,
-            )
-            uniq = np.unique(pairs, axis=0)
-            msg_part = uniq[:, 0].astype(np.int32)
-            msg_vidx = uniq[:, 1]
-        else:
-            msg_part = np.empty(0, dtype=np.int32)
-            msg_vidx = np.empty(0, dtype=np.int64)
-
-        n_msg = len(msg_part)
-        n_sh = 1 if len(shadow_vid) else 0
-        out = pd.DataFrame(
-            {
-                "part": np.concatenate(
-                    [
-                        np.full(n, blk.part, dtype=np.int32),
-                        msg_part,
-                        np.full(n_sh, blk.part, dtype=np.int32),
-                        np.array([blk.part], dtype=np.int32),
-                    ]
-                ),
-                "kind": np.concatenate(
-                    [
-                        np.zeros(n, dtype=np.int32),
-                        np.ones(n_msg, dtype=np.int32),
-                        np.full(n_sh, 3, dtype=np.int32),
-                        np.array([2], dtype=np.int32),
-                    ]
-                ),
-                "vid": np.concatenate(
-                    [
-                        blk.local_vids,
-                        blk.local_vids[msg_vidx],
-                        np.full(n_sh, -1, dtype=np.int64),
-                        np.array([-1], dtype=np.int64),
-                    ]
-                ),
-                "a": np.concatenate(
-                    [
-                        est,
-                        est[msg_vidx],
-                        np.full(n_sh, len(shadow_vid), dtype=np.int64),
-                        np.array([changed], dtype=np.int64),
-                    ]
-                ),
-            }
+        # to every partition that references it
+        msg_part, msg_vidx = changed_sends(blk, seg, send_edge_mask)
+        return carry_frame(
+            OUT_SCHEMA,
+            (blk.part, 0, blk.local_vids, {"a": est}),
+            (msg_part, 1, blk.local_vids[msg_vidx], {"a": est[msg_vidx]}),
+            *shadow_rows(blk.part, shadow_vid, shadow_val),
+            (blk.part, 2, -1, {"a": changed}),
         )
-        out["payload"] = None
-        if n_sh:
-            # ONE packed shadow row per partition (see _pack_shadow)
-            out.iat[n + n_msg, out.columns.get_loc("payload")] = _pack_shadow(
-                shadow_vid, shadow_val
-            )
-        return out
 
     return kernel
 
@@ -412,8 +251,9 @@ def _hindex_fixpoint(
     """Drive the kernel to global fixpoint through SuperstepLoop from the
     store's ``kind=-1`` seed rows; returns the final carry — kind-0 state
     plus the boundary channel (kind-1 messages and kind-3 shadows, which
-    together hold every boundary estimate — see :func:`_merge_boundary`)
-    and the kind-2 changed counts. Callers filter kinds. Raises
+    together hold every boundary estimate — see
+    :func:`plans.csr.merge_boundary`) and the kind-2 changed counts (after
+    the one-task tail, its superstep count). Callers filter kinds. Raises
     ``RuntimeError`` when ``max_iter`` supersteps end with estimates still
     changing. Blocks never re-enter the shuffle/Arrow channel after the
     one-time write to ``store``.
@@ -434,25 +274,14 @@ def _hindex_fixpoint(
     distributed supersteps have run, if the merged blocks fit one task
     (``BlockStore.fits_one_task``), the next call runs the remaining
     cross-partition cascade to global fixpoint inside one merged-block task
-    instead of tens more ~0.5 s grouped-map waves. The budget keeps this
-    honest at scale: above it the distributed waves continue; below it the
-    tail is provably a single-task problem."""
+    instead of tens more ~0.5 s grouped-map waves (:func:`_tail_solve`).
+    The budget keeps this honest at scale: above it the distributed waves
+    continue; below it the tail is provably a single-task problem."""
     consolidate_ok = store.fits_one_task()
     cur_chain = chain_every
 
     def step(carry: DataFrame, i: int) -> StepResult:
         nonlocal cur_chain
-        if consolidate_ok and i >= CONSOLIDATE_AFTER:
-            # the distributed chains ground the bulk value creep in
-            # parallel; the remaining cascade collapses into ONE task
-            fn = _make_consolidated_kernel(store.parts, store.path, cap)
-            out = (
-                carry.filter(F.col("kind") == 0)
-                .repartition(1)
-                .mapInPandas(fn, schema=OUT_SCHEMA)
-                .localCheckpoint(eager=True)
-            )
-            return StepResult(out, True, truncated=True)
         chain = min(cur_chain, max_iter - i)
         if consolidate_ok:
             # stop the chain exactly at the consolidation trigger
@@ -477,9 +306,15 @@ def _hindex_fixpoint(
             out, i + chain >= 2 and changed == 0, truncated=True, supersteps=chain
         )
 
+    # from CONSOLIDATE_AFTER on, the distributed chains have ground the bulk
+    # value creep in parallel; the remaining cascade collapses into ONE task
+    # (its input is the kind-0 state: estimates are all it needs)
+    tail = one_task_tail(
+        store, OUT_SCHEMA, CONSOLIDATE_AFTER, (0,), _tail_solve(cap), step
+    )
     return SuperstepLoop(
         spark, max_iter=max_iter, name="k-core", must_converge=True
-    ).run(store.seed(spark, OUT_SCHEMA), step).state
+    ).run(store.seed(spark, OUT_SCHEMA), tail).state
 
 
 def core_numbers(
@@ -519,18 +354,14 @@ def _make_finalize_kernel(cap: int, blocks_path: str):
     def kernel(key, sm_pdf):
         blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
-        state_rows = sm_pdf[sm_pdf["kind"] == 0]
-        est = np.empty(n, dtype=np.int64)
-        est[blk.align(state_rows["vid"].to_numpy(dtype=np.int64))] = state_rows[
-            "a"
-        ].to_numpy(dtype=np.int64)
+        (est,) = blk.per_vertex(sm_pdf, 0, a=np.int64)
 
         n_edges = len(blk.edge_dst_vid)
         nb_in = np.zeros(n_edges, dtype=bool)
         local_mask = blk.edge_dst_local >= 0
         nb_in[local_mask] = est[blk.edge_dst_local[local_mask]] >= cap
         if (~local_mask).any():
-            mvid, mval = _merge_boundary(sm_pdf)
+            mvid, mval = merge_boundary(sm_pdf)
             nb_in[~local_mask] = (
                 _lookup_boundary(blk.part, mvid, mval, blk.edge_dst_vid[~local_mask])
                 >= cap
@@ -539,14 +370,8 @@ def _make_finalize_kernel(cap: int, blocks_path: str):
         seg = np.repeat(np.arange(n, dtype=np.int64), blk.out_degrees)
         deg_in = np.bincount(seg[nb_in], minlength=n).astype(np.int64)
         member = est >= cap
-        return pd.DataFrame(
-            {
-                "part": np.full(int(member.sum()), blk.part, dtype=np.int32),
-                "kind": np.zeros(int(member.sum()), dtype=np.int32),
-                "vid": blk.local_vids[member],
-                "a": deg_in[member],
-                "payload": None,
-            }
+        return carry_frame(
+            OUT_SCHEMA, (blk.part, 0, blk.local_vids[member], {"a": deg_in[member]})
         )
 
     return kernel

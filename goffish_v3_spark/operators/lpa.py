@@ -22,12 +22,14 @@ argmax via ``max(struct(cnt, -label))`` — all JVM-side, partial-agg friendly.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import block_store, load_block
-from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks_sym
+from goffish_v3_spark.plans.csr import (
+    CsrBlock, build_csr_blocks_sym, carry_frame, changed_sends, merge_boundary,
+    passthrough, shadow_rows,
+)
 from goffish_v3_spark.plans.superstep import (
     StepResult, SuperstepLoop, observed_checkpoint,
 )
@@ -125,7 +127,7 @@ def lpa(
 # Subgraph-centric LPA over CSR blocks (engine-shape parity, SURVEY §4 P3)
 # ---------------------------------------------------------------------------
 
-LPA_SCHEMA = "part int, kind int, vid long, a long"
+LPA_SCHEMA = "part int, kind int, vid long, a long, payload binary"
 
 # cap on the mode-propagation sweeps of one block in one superstep
 MAX_LOCAL_SWEEPS = 10_000
@@ -193,13 +195,11 @@ def _local_mode_fixpoint(
     return label
 
 
-_LPA_EMPTY = {"part": "int32", "kind": "int32", "vid": "int64", "a": "int64"}
-
-
 def _make_lpa_kernel(superstep: int, blocks_path: str):
     """One superstep: merge shadows+messages, run the block to local mode
     fixpoint, emit state (kind=0), changed-only boundary labels (kind=1),
-    refreshed shadows (kind=3, routed to self), the superstep-start labels
+    the refreshed shadow (one packed kind=3 row routed to self, see
+    plans.csr.pack_shadow), the superstep-start labels
     (kind=4, routed to self — next superstep's prev-prev state for the
     cross-block cycle damper), and a changed count (kind=2).
 
@@ -220,7 +220,7 @@ def _make_lpa_kernel(superstep: int, blocks_path: str):
     CSR block from the store at ``blocks_path`` (plans.block_cache) — the
     load-once-compute-many shape shared with kcore/sssp_csr/csr_pagerank."""
 
-    def quiescent(sm_pdf: pd.DataFrame) -> bool:
+    def quiescent(sm_pdf) -> bool:
         """Partition-level wake-on-message (the reference's voteToHalt
         shape, mirroring kcore's passthrough): skip the block fetch and the
         mode-fixpoint when (a) no fresh boundary labels arrived AND (b) the
@@ -237,27 +237,11 @@ def _make_lpa_kernel(superstep: int, blocks_path: str):
         pc = sm_pdf[sm_pdf["kind"] == 2]
         return len(pc) > 0 and int(pc["a"].iloc[0]) == 0
 
-    def passthrough(sm_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = sm_pdf[sm_pdf["kind"].isin((0, 3, 4))]
-        if len(out) == 0:  # defensive: a group always carries kind-0 state
-            return pd.DataFrame(columns=list(_LPA_EMPTY)).astype(_LPA_EMPTY)
-        part = np.int32(out["part"].iloc[0])
-        marker = pd.DataFrame(
-            {
-                "part": np.array([part], dtype=np.int32),
-                "kind": np.array([2], dtype=np.int32),
-                "vid": np.array([-1], dtype=np.int64),
-                "a": np.array([0], dtype=np.int64),
-            }
-        )
-        return pd.concat(
-            [out[["part", "kind", "vid", "a"]], marker], ignore_index=True
-        )
-
     def kernel(key, sm_pdf):
         if quiescent(sm_pdf):
-            # nothing needed from the CSR block — skip the block fetch
-            return passthrough(sm_pdf)
+            # state, shadow and prev-prev labels verbatim; nothing needed
+            # from the CSR block — skip the block fetch
+            return passthrough(LPA_SCHEMA, sm_pdf, (0, 3, 4))
         blk = load_block(blocks_path, int(key[0]))
         n = blk.n_local
         seg = np.repeat(np.arange(n, dtype=np.int64), blk.out_degrees)
@@ -269,35 +253,10 @@ def _make_lpa_kernel(superstep: int, blocks_path: str):
         if superstep == 0:
             label = blk.local_vids.copy()
         else:
-            state_rows = sm_pdf[sm_pdf["kind"] == 0]
-            label = np.empty(n, dtype=np.int64)
-            idx = blk.align(state_rows["vid"].to_numpy(dtype=np.int64))
-            label[idx] = state_rows["a"].to_numpy(dtype=np.int64)
-            pp_rows = sm_pdf[sm_pdf["kind"] == 4]
-            if len(pp_rows):
-                prevprev = np.empty(n, dtype=np.int64)
-                pidx = blk.align(pp_rows["vid"].to_numpy(dtype=np.int64))
-                prevprev[pidx] = pp_rows["a"].to_numpy(dtype=np.int64)
-            msg_rows = sm_pdf[sm_pdf["kind"] == 1]
-            sh_rows = sm_pdf[sm_pdf["kind"] == 3]
-            # fresh messages override shadows (stable sort keeps them last)
-            svid = np.concatenate(
-                [
-                    sh_rows["vid"].to_numpy(dtype=np.int64),
-                    msg_rows["vid"].to_numpy(dtype=np.int64),
-                ]
-            )
-            sval = np.concatenate(
-                [
-                    sh_rows["a"].to_numpy(dtype=np.int64),
-                    msg_rows["a"].to_numpy(dtype=np.int64),
-                ]
-            )
-            order = np.argsort(svid, kind="stable")
-            svid, sval = svid[order], sval[order]
-            if len(svid):
-                keep = np.concatenate((svid[1:] != svid[:-1], [True]))
-                shadow_vid, shadow_val = svid[keep], sval[keep]
+            (label,) = blk.per_vertex(sm_pdf, 0, a=np.int64)
+            if (sm_pdf["kind"] == 4).any():
+                (prevprev,) = blk.per_vertex(sm_pdf, 4, a=np.int64)
+            shadow_vid, shadow_val = merge_boundary(sm_pdf)
         prev = label.copy()
 
         # per-edge remote labels: shadow value, else the neighbour's own vid
@@ -320,60 +279,14 @@ def _make_lpa_kernel(superstep: int, blocks_path: str):
         changed_mask = label != prev
         changed = np.int64(np.count_nonzero(changed_mask))
 
-        send_edge_mask = remote_mask & changed_mask[seg]
-        if send_edge_mask.any():
-            pairs = np.stack(
-                [blk.edge_dst_part[send_edge_mask].astype(np.int64), seg[send_edge_mask]],
-                axis=1,
-            )
-            uniq = np.unique(pairs, axis=0)
-            msg_part = uniq[:, 0].astype(np.int32)
-            msg_vidx = uniq[:, 1]
-        else:
-            msg_part = np.empty(0, dtype=np.int32)
-            msg_vidx = np.empty(0, dtype=np.int64)
-
-        n_msg = len(msg_part)
-        n_sh = len(shadow_vid)
-        return pd.DataFrame(
-            {
-                "part": np.concatenate(
-                    [
-                        np.full(n, blk.part, dtype=np.int32),
-                        msg_part,
-                        np.full(n_sh, blk.part, dtype=np.int32),
-                        np.full(n, blk.part, dtype=np.int32),
-                        np.array([blk.part], dtype=np.int32),
-                    ]
-                ),
-                "kind": np.concatenate(
-                    [
-                        np.zeros(n, dtype=np.int32),
-                        np.ones(n_msg, dtype=np.int32),
-                        np.full(n_sh, 3, dtype=np.int32),
-                        np.full(n, 4, dtype=np.int32),
-                        np.array([2], dtype=np.int32),
-                    ]
-                ),
-                "vid": np.concatenate(
-                    [
-                        blk.local_vids,
-                        blk.local_vids[msg_vidx],
-                        shadow_vid,
-                        blk.local_vids,
-                        np.array([-1], dtype=np.int64),
-                    ]
-                ),
-                "a": np.concatenate(
-                    [
-                        label,
-                        label[msg_vidx],
-                        shadow_val,
-                        prev,
-                        np.array([changed], dtype=np.int64),
-                    ]
-                ),
-            }
+        msg_part, msg_vidx = changed_sends(blk, seg, remote_mask & changed_mask[seg])
+        return carry_frame(
+            LPA_SCHEMA,
+            (blk.part, 0, blk.local_vids, {"a": label}),
+            (msg_part, 1, blk.local_vids[msg_vidx], {"a": label[msg_vidx]}),
+            *shadow_rows(blk.part, shadow_vid, shadow_val),
+            (blk.part, 4, blk.local_vids, {"a": prev}),
+            (blk.part, 2, -1, {"a": changed}),
         )
 
     return kernel

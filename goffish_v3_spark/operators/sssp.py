@@ -26,12 +26,11 @@ are partition-count invariant.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import block_store, load_block
-from goffish_v3_spark.plans.csr import build_csr_blocks
+from goffish_v3_spark.plans.csr import build_csr_blocks, carry_frame
 from goffish_v3_spark.plans.superstep import (
     StepResult, SuperstepLoop, observed_checkpoint,
 )
@@ -155,12 +154,7 @@ def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
             dist = np.full(n, np.inf)
             parent = np.full(n, -1, dtype=np.int64)
         else:
-            state_rows = sm_pdf[sm_pdf["kind"] == 0]
-            idx = blk.align(state_rows["vid"].to_numpy(dtype=np.int64))
-            dist = np.empty(n)
-            parent = np.empty(n, dtype=np.int64)
-            dist[idx] = state_rows["d"].to_numpy(dtype=np.float64)
-            parent[idx] = state_rows["p"].to_numpy(dtype=np.int64)
+            dist, parent = blk.per_vertex(sm_pdf, 0, d=np.float64, p=np.int64)
 
         changed = np.zeros(n, dtype=bool)
         if superstep == 0 and n:
@@ -179,7 +173,7 @@ def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
             mvid, md, mp = mvid[order], md[order], mp[order]
             first = np.concatenate(([True], mvid[1:] != mvid[:-1]))
             mvid, md, mp = mvid[first], md[first], mp[first]
-            idx = blk.align(mvid)
+            idx = blk.pos(mvid)
             imp = md < dist[idx]
             dist[idx[imp]] = md[imp]
             parent[idx[imp]] = mp[imp]
@@ -240,32 +234,11 @@ def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
                     r_part[first], r_vid[first], r_d[first], r_p[first]
                 )
 
-        n_msg = len(out_vid)
-        n_changed = int(changed.sum())
-        return pd.DataFrame(
-            {
-                "part": np.concatenate(
-                    [
-                        np.full(n, blk.part, dtype=np.int32),
-                        out_part,
-                        np.array([blk.part], dtype=np.int32),
-                    ]
-                ),
-                "kind": np.concatenate(
-                    [
-                        np.zeros(n, dtype=np.int32),
-                        np.ones(n_msg, dtype=np.int32),
-                        np.array([2], dtype=np.int32),
-                    ]
-                ),
-                "vid": np.concatenate(
-                    [blk.local_vids, out_vid, np.array([-1], dtype=np.int64)]
-                ),
-                "d": np.concatenate([dist, out_d, np.array([0.0])]),
-                "p": np.concatenate(
-                    [parent, out_p, np.array([n_changed], dtype=np.int64)]
-                ),
-            }
+        return carry_frame(
+            SSSP_SCHEMA,
+            (blk.part, 0, blk.local_vids, {"d": dist, "p": parent}),
+            (out_part, 1, out_vid, {"d": out_d, "p": out_p}),
+            (blk.part, 2, -1, {"p": int(changed.sum())}),
         )
 
     return kernel

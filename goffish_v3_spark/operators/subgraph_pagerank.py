@@ -30,23 +30,22 @@ per superstep instead of O(|E|) — the reason the subgraph-centric model
 beats vertex-centric engines (README.md:3), reproduced here with Arrow
 batches instead of Writable messages.
 
-Output row protocol from the kernel (single DataFrame, demuxed by ``kind``
-like the reference's MessageType demux, GraphJobRunner.java:440-493):
-kind 0 = state (vid, a=rank, b=pending_local_sum), routed to own part;
-kind 1 = message (vid=dst, a=contribution), routed to dst part;
-kind 2 = per-partition metric (a=max delta; from the consolidated task,
+Carry columns in the shared protocol (plans.csr): kind 0 = state (vid,
+a=rank, b=pending_local_sum); kind 1 = message (vid=dst, a=contribution);
+kind 2 = per-partition metric (a=max delta; from the one-task tail,
 a=supersteps it ran).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.block_cache import BlockStore, block_store, load_block
-from goffish_v3_spark.plans.csr import CsrBlock, MergedCsr, build_csr_blocks
+from goffish_v3_spark.plans.block_cache import (
+    BlockStore, block_store, load_block, one_task_tail,
+)
+from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks, carry_frame
 from goffish_v3_spark.plans.superstep import (
     StepResult, SuperstepLoop, observed_checkpoint,
 )
@@ -99,24 +98,18 @@ def _make_kernel(
         blk = load_block(blocks_path, int(key[0]))
         n_local = blk.n_local
 
-        state_rows = sm_pdf[sm_pdf["kind"] == 0]
-        msg_rows = sm_pdf[sm_pdf["kind"] == 1]
-
-        pending = np.zeros(n_local, dtype=np.float64)
         if superstep == 0:
             # a kind=-1 seed row is all a part gets: ranks start at 1/N
             ranks = np.full(n_local, 1.0 / n_total)
+            pending = np.zeros(n_local, dtype=np.float64)
         else:
-            # align state to the block's sorted vid order
-            idx = blk.align(state_rows["vid"].to_numpy(dtype=np.int64))
-            ranks = np.empty(n_local, dtype=np.float64)
-            ranks[idx] = state_rows["a"].to_numpy(dtype=np.float64)
-            pending[idx] = state_rows["b"].to_numpy(dtype=np.float64)
+            ranks, pending = blk.per_vertex(sm_pdf, 0, a=np.float64, b=np.float64)
 
         # deliver messages: one pre-summed row per (sending part, dst), so a
         # vid may get several rows — np.add.at sums duplicates
+        msg_rows = sm_pdf[sm_pdf["kind"] == 1]
         if len(msg_rows):
-            midx = blk.align(msg_rows["vid"].to_numpy(dtype=np.int64))
+            midx = blk.pos(msg_rows["vid"].to_numpy(dtype=np.int64))
             np.add.at(pending, midx, msg_rows["a"].to_numpy(dtype=np.float64))
 
         # rank update (skipped on superstep 0: ranks are the 1/N init and the
@@ -166,55 +159,26 @@ def _make_kernel(
                 out_msgs_part = part_s[first]
                 out_msgs_val = sums
 
-        n_msg = len(out_msgs_vid)
-        return pd.DataFrame(
-            {
-                "part": np.concatenate(
-                    [np.full(n_local, blk.part, dtype=np.int32), out_msgs_part,
-                     np.array([blk.part], dtype=np.int32)]
-                ),
-                "kind": np.concatenate(
-                    [np.zeros(n_local, dtype=np.int32), np.ones(n_msg, dtype=np.int32),
-                     np.array([2], dtype=np.int32)]
-                ),
-                "vid": np.concatenate(
-                    [blk.local_vids, out_msgs_vid, np.array([-1], dtype=np.int64)]
-                ),
-                "a": np.concatenate(
-                    [new_ranks, out_msgs_val, np.array([delta], dtype=np.float64)]
-                ),
-                "b": np.concatenate(
-                    [new_pending, np.zeros(n_msg), np.array([0.0])]
-                ),
-            }
+        return carry_frame(
+            OUT_SCHEMA,
+            (blk.part, 0, blk.local_vids, {"a": new_ranks, "b": new_pending}),
+            (out_msgs_part, 1, out_msgs_vid, {"a": out_msgs_val}),
+            (blk.part, 2, -1, {"a": delta}),
         )
 
     return kernel
 
 
-def _make_consolidated_kernel(
-    parts: list[int], blocks_path: str, alpha: float, base: float,
-    eps: float, steps: int, gated: bool,
-):
-    """Tail consolidation: merge every partition's block inside one task and
-    run up to ``steps`` more supersteps there — the same synchronous update
-    ``rank' = alpha * pending + base`` and, when ``gated``, the same stop on
-    ``max|delta| <= eps`` as the distributed kernel, over the global CSR
-    instead of per block plus messages.
+def _tail_solve(alpha: float, base: float, eps: float, steps: int, gated: bool):
+    """The one-task tail (``plans.block_cache.one_task_tail``): up to
+    ``steps`` more supersteps over the merged CSR — the same synchronous
+    update ``rank' = alpha * pending + base`` and, when ``gated``, the same
+    stop on ``max|delta| <= eps`` as the distributed kernel, over the global
+    CSR instead of per block plus messages. Takes the kind 0/1 carry of a
+    distributed superstep."""
 
-    Takes the kind 0/1 carry of a distributed superstep; emits the kind-0
-    state per owner part plus one kind-2 row whose ``a`` is the number of
-    supersteps run here."""
-
-    def fn(it):
-        pdf = pd.concat(list(it), ignore_index=True)
-        m = MergedCsr([load_block(blocks_path, p) for p in parts])
-        state = pdf[pdf["kind"] == 0]
-        idx = m.state_pos(state["vid"].to_numpy(dtype=np.int64))
-        ranks = np.empty(m.n, dtype=np.float64)
-        ranks[idx] = state["a"].to_numpy(dtype=np.float64)
-        pending = np.zeros(m.n, dtype=np.float64)
-        pending[idx] = state["b"].to_numpy(dtype=np.float64)
+    def solve(m, state, pdf):
+        ranks, pending = state["a"], state["b"]
         msgs = pdf[pdf["kind"] == 1]
         if len(msgs):
             np.add.at(
@@ -234,22 +198,9 @@ def _make_consolidated_kernel(
             pending = np.bincount(
                 m.dst_idx, weights=np.repeat(per_src, outdeg), minlength=m.n
             )
+        return done, {"a": ranks}, []
 
-        owner = np.concatenate(
-            [np.full(b.n_local, b.part, dtype=np.int32) for b in m.blocks]
-        )
-        vids = np.concatenate([b.local_vids for b in m.blocks])
-        yield pd.DataFrame(
-            {
-                "part": np.append(owner, np.int32(parts[0])),
-                "kind": np.append(np.zeros(m.n, dtype=np.int32), np.int32(2)),
-                "vid": np.append(vids, np.int64(-1)),
-                "a": np.append(ranks, float(done)),
-                "b": np.zeros(m.n + 1),
-            }
-        )
-
-    return fn
+    return solve
 
 
 def csr_pagerank(
@@ -316,8 +267,8 @@ def _csr_step(store: BlockStore, alpha, eps, total, gated, local_init):
     distributed. When the merged blocks fit one task
     (``BlockStore.fits_one_task``) the step at superstep 1 hands the carry
     to one task that finishes the remaining supersteps over the merged CSR
-    (:func:`_make_consolidated_kernel`) and reports how many it ran: two
-    Spark jobs in all, however many supersteps run.
+    (:func:`_tail_solve`) and reports how many it ran: two Spark jobs in
+    all, however many supersteps run.
 
     Above the budget every superstep is one Spark job with one exchange:
     the kernel's kind 0 (state) and kind 1 (message) rows of the previous
@@ -327,18 +278,9 @@ def _csr_step(store: BlockStore, alpha, eps, total, gated, local_init):
     from several partitions with ``np.add.at``. The kind 2 max-delta rides
     the checkpoint as an Observation, so the ε-gate adds no job either."""
     base = (1.0 - alpha) / store.n_vertices
-    consolidate = total > 1 and store.fits_one_task()
     kind2_a = F.max(F.when(F.col("kind") == 2, F.col("a")))
 
     def step(carry: DataFrame, i: int) -> StepResult:
-        if i == 1 and consolidate:
-            fn = _make_consolidated_kernel(
-                store.parts, store.path, alpha, base, eps, total - 1, gated
-            )
-            out, steps = observed_checkpoint(
-                carry.repartition(1).mapInPandas(fn, schema=OUT_SCHEMA), kind2_a
-            )
-            return StepResult(out, True, truncated=True, supersteps=int(steps))
         kernel = _make_kernel(
             i, alpha, base, store.path, store.n_vertices, local_init=local_init
         )
@@ -351,4 +293,7 @@ def _csr_step(store: BlockStore, alpha, eps, total, gated, local_init):
             truncated=True,
         )
 
-    return step
+    return one_task_tail(
+        store, OUT_SCHEMA, 1, (0, 1),
+        _tail_solve(alpha, base, eps, total - 1, gated), step,
+    )

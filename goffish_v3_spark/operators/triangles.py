@@ -94,17 +94,20 @@ def _degree_oriented(o: DataFrame) -> DataFrame:
     )
 
 
-def _id_wedge_stats(o: DataFrame) -> tuple[int, int]:
-    """``(total, max_per_key)`` id-oriented wedge-join output size WITHOUT
-    materializing it: per key x the join emits (#edges with v=x) ×
-    (#edges with u=x) rows — one O(m) aggregate."""
+def _id_wedge_stats(o: DataFrame) -> tuple[int, int, int]:
+    """``(total, max_per_key, m)`` id-oriented wedge-join output size
+    WITHOUT materializing it, plus the edge count: per key x the join emits
+    (#edges with v=x) × (#edges with u=x) rows, and every edge has one v,
+    so m = Σ #edges with v=x over the left join's keys — one O(m)
+    aggregate."""
     as_v = o.groupBy(F.col("v").alias("x")).agg(F.count("*").alias("n1"))
     as_u = o.groupBy(F.col("u").alias("x")).agg(F.count("*").alias("n2"))
-    row = as_v.join(as_u, "x").agg(
+    row = as_v.join(as_u, "x", "left").agg(
         F.sum(F.col("n1") * F.col("n2")).alias("w"),
         F.max(F.col("n1") * F.col("n2")).alias("mx"),
+        F.sum("n1").alias("m"),
     ).collect()[0]
-    return int(row.w or 0), int(row.mx or 0)
+    return int(row.w or 0), int(row.mx or 0), int(row.m or 0)
 
 
 def _id_wedge_count(o: DataFrame) -> int:
@@ -200,8 +203,7 @@ def triangles(edges: DataFrame, orientation: str = "auto") -> DataFrame:
     )
     e = oriented_edges(edges, partition_into=n_shuffle)
     if orientation == "auto":
-        m = e.count()
-        _, maxw = _id_wedge_stats(e)
+        _, maxw, m = _id_wedge_stats(e)
         orientation = (
             "id" if maxw <= AUTO_HUB_WEDGE_LIMIT_FACTOR * max(m, 1) else "degree"
         )

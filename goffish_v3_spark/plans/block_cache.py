@@ -16,7 +16,10 @@ shape:
   the 1-row parquet file on first use and caches the deserialized
   :class:`CsrBlock` in the (reused) Python worker process;
 - the cache is LRU-capped so a worker that serves many partitions holds at
-  most ``MAX_BLOCKS`` blocks (~per-partition CSR size each).
+  most ``MAX_BLOCKS`` blocks (~per-partition CSR size each);
+- :func:`one_task_tail` finishes a fixpoint inside one task over every
+  block merged once the merge fits ``CONSOLIDATE_BUDGET_BYTES`` (PageRank
+  after superstep 1, k-core after ``kcore.CONSOLIDATE_AFTER``).
 
 Cluster shape: each executor's python workers cache only the partitions
 scheduled onto them; with stable partitioning the scheduler tends to
@@ -33,9 +36,12 @@ from collections import OrderedDict
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.csr import CsrBlock
+from goffish_v3_spark.plans.csr import CsrBlock, MergedCsr, carry_frame, schema_dtypes
+from goffish_v3_spark.plans.superstep import StepFn, StepResult, observed_checkpoint
 
 MAX_BLOCKS = 64
 # tail consolidation: a fixpoint may finish inside one task that merges every
@@ -223,3 +229,56 @@ def load_block(path: str, part: int) -> CsrBlock:
 
 def clear_cache() -> None:
     _CACHE.clear()
+
+
+def one_task_tail(
+    store: BlockStore, schema: str, after: int, kinds: tuple, solve, step: StepFn
+) -> StepFn:
+    """``step`` as a superstep driver's step function that, once superstep
+    ``after`` is reached and the merged blocks fit one task
+    (:meth:`BlockStore.fits_one_task`), instead finishes the fixpoint inside
+    ONE task over every block merged (:class:`plans.csr.MergedCsr`) — the
+    subgraph-centric premise carried to the whole graph once it fits one
+    subgraph. The tail is the loop's last call.
+
+    The tail task gets the carry's rows of ``kinds``, aligns their kind-0
+    state (every numeric value column of ``schema``) to the merged vertex
+    order and calls ``solve(m, state, pdf)`` with the merged CSR, that
+    ``{column: array}`` state and the rows as one pandas frame. ``solve``
+    returns ``(supersteps, cols, sections)``: how many supersteps it ran,
+    the per-vertex output columns in merged order (emitted as kind-0 rows
+    to each vertex's owner part) and any further :func:`plans.csr.
+    carry_frame` sections. One kind-2 row carries ``a = supersteps`` to the
+    checkpoint's Observation, so the whole tail is one Spark job and the
+    ``StepResult`` counts the supersteps it ran."""
+    consolidate = store.fits_one_task()
+    value_cols = {
+        name: dtype
+        for name, dtype in schema_dtypes(schema).items()
+        if name not in ("part", "kind", "vid") and dtype is not object
+    }
+
+    def fn(it):
+        pdf = pd.concat(list(it), ignore_index=True)
+        m = MergedCsr([load_block(store.path, p) for p in store.parts])
+        state = dict(zip(value_cols, m.per_vertex(pdf, 0, **value_cols)))
+        steps, cols, sections = solve(m, state, pdf)
+        yield carry_frame(
+            schema,
+            (m.owner, 0, m.vids, cols),
+            *sections,
+            (store.parts[0], 2, -1, {"a": steps}),
+        )
+
+    def run(carry: DataFrame, i: int) -> StepResult:
+        if not (consolidate and i >= after):
+            return step(carry, i)
+        out, steps = observed_checkpoint(
+            carry.filter(F.col("kind").isin(*kinds))
+            .repartition(1)
+            .mapInPandas(fn, schema=schema),
+            F.max(F.when(F.col("kind") == 2, F.col("a"))),
+        )
+        return StepResult(out, True, truncated=True, supersteps=int(steps))
+
+    return run

@@ -23,9 +23,12 @@ What this module adds over a bare ``for`` loop (north_rule requirements):
   partition spec) so any run is resumable mid-iteration;
 - **lineage truncation**: iterative plans grow without bound; reading the
   checkpoint back each superstep resets lineage (SURVEY.md §7.3);
-- **metrics**: per-superstep, per-partition rows (rows, messages, delta,
-  wall ms) — the analogue of the reference's GOFFISH3.PERF.* logs
-  (hama GraphJobRunner.java:123-178,296-351).
+- **metrics**: with ``checkpoint_dir``, each commit appends one global
+  row (``part=-1``: the step's messages, delta, wall ms and ``extra``;
+  ``rows`` is -1) and, with ``partition_metrics``, one row per partition
+  holding only its state row count (``rows``; the other fields -1 or NaN)
+  — the analogue of the reference's GOFFISH3.PERF.* logs (hama
+  GraphJobRunner.java:123-178,296-351).
 """
 
 from __future__ import annotations

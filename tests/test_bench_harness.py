@@ -119,3 +119,27 @@ def test_both_axes_must_be_green(monkeypatch):
     g = B.HostGuard(spark=None, warm_ref=1.0, py_ref=0.6)
     _, ok = g.checkpoint()
     assert ok is False
+
+
+def test_headline_stays_short_with_every_query_flagged():
+    """The headline is the one line a 2000-char tail capture must parse: a
+    40-query run where every query was flagged and re-run keeps it under
+    1500 chars, because brackets and re-runs go to the detail file."""
+    import json
+
+    # the suite's query names average 16 chars; walls are two-digit seconds
+    names = [f"graph_query_{i:02d}_sf" for i in range(40)]
+    # every bracket red twice (min-of-2 stays red), on both attempts
+    g = _ScriptedGuard([9.0] * (len(names) * 8 + 2))
+    b = B.Bench(spark=None, guard=g)
+    for name in names:
+        b.run(name, lambda: None)
+        b.timings[name] = 99.999
+    assert all(m["runs"] is not None for m in b.meta.values())
+    line = B.headline(b)
+    assert len(line) < 1500, len(line)
+    parsed = json.loads(line)
+    assert set(parsed) == {
+        "metric", "value", "unit", "queries", "sf", "cpus", "all_queries_host_ok"
+    }
+    assert len(parsed["queries"]) == 40 and parsed["all_queries_host_ok"] is False

@@ -79,3 +79,40 @@ def test_param_validation(spark, frames):
         bloom_prefilter(
             fact.withColumn("h1", F.lit(0)), "fk", dim.toDF("pos"), m=64, k=2
         )
+
+
+@pytest.mark.parametrize(
+    "params", [{"m": 512}, {"k": 2}, {"seed": 4}], ids=["m", "k", "seed"]
+)
+def test_prefilter_rejects_parameter_mismatch(spark, frames, params):
+    """Probing with other (m, k, seed) than the bits were built with would
+    drop true rows silently; the tag on ``pos`` makes it raise."""
+    dim, fact = frames
+    built = {"m": 1024, "k": 3, "seed": 0}
+    bits = bloom_bits(dim, "key", **built)
+    with pytest.raises(ValueError, match="does not match"):
+        bloom_prefilter(fact, "fk", bits, **{**built, **params})
+    assert bloom_prefilter(fact, "fk", bits, **built).columns == fact.columns
+
+
+def test_prefilter_rejects_untagged_bits(spark, frames):
+    dim, fact = frames
+    untagged = bloom_bits(dim, "key", m=64, k=2).select(F.col("pos") + 0)
+    with pytest.raises(ValueError, match="tag"):
+        bloom_prefilter(fact, "fk", untagged.toDF("pos"), m=64, k=2)
+
+
+def test_merged_filters_keep_the_tag(spark, frames):
+    """The documented merge, ``bits1.union(bits2).distinct()``, of two
+    filters built with the same parameters passes and has no false
+    negatives against either side."""
+    dim, fact = frames
+    other = spark.range(0, 100).select((F.col("id") * 11 + 3).alias("key"))
+    merged = (
+        bloom_bits(dim, "key", m=1024, k=3, seed=1)
+        .union(bloom_bits(other, "key", m=1024, k=3, seed=1))
+        .distinct()
+    )
+    cand = bloom_prefilter(fact, "fk", merged, m=1024, k=3, seed=1)
+    keys = dim.union(other).withColumnRenamed("key", "fk")
+    assert fact.join(keys, "fk", "left_semi").exceptAll(cand).count() == 0

@@ -135,11 +135,10 @@ def test_quiescent_partition_passthrough_skips_block():
     import pandas as pd
 
     from goffish_v3_spark.operators.kcore import _make_kernel
-
-    from goffish_v3_spark.operators.kcore import _pack_shadow, _unpack_shadow
+    from goffish_v3_spark.plans.csr import pack_shadow, unpack_shadow
 
     kernel = _make_kernel(2, blocks_path="/nonexistent/blocks")
-    packed = _pack_shadow(
+    packed = pack_shadow(
         np.array([20, 21], dtype=np.int64), np.array([1, 4], dtype=np.int64)
     )
     sm = pd.DataFrame(
@@ -156,7 +155,7 @@ def test_quiescent_partition_passthrough_skips_block():
     assert list(state["vid"]) == [10, 11] and list(state["a"]) == [2, 3]
     shadows = out[out["kind"] == 3]
     assert len(shadows) == 1
-    svid, sval = _unpack_shadow(
+    svid, sval = unpack_shadow(
         shadows["payload"].iloc[0], int(shadows["a"].iloc[0])
     )
     assert list(svid) == [20, 21] and list(sval) == [1, 4]

@@ -145,14 +145,18 @@ def test_lpa_quiescent_passthrough_requires_proof_of_fixpoint():
     import pytest
 
     from goffish_v3_spark.operators.lpa import _make_lpa_kernel
+    from goffish_v3_spark.plans.csr import pack_shadow, unpack_shadow
 
     kernel = _make_lpa_kernel(2, blocks_path="/nonexistent/blocks")
+    # the shadow {20: 7} rides as one packed kind-3 row (vid=-1, a=entries)
+    packed = pack_shadow(np.array([20], dtype=np.int64), np.array([7], dtype=np.int64))
     base = pd.DataFrame(
         {
             "part": np.array([1, 1, 1, 1, 1], dtype=np.int32),
             "kind": np.array([0, 0, 4, 4, 3], dtype=np.int32),
-            "vid": np.array([10, 11, 10, 11, 20], dtype=np.int64),
-            "a": np.array([7, 7, 7, 7, 7], dtype=np.int64),
+            "vid": np.array([10, 11, 10, 11, -1], dtype=np.int64),
+            "a": np.array([7, 7, 7, 7, 1], dtype=np.int64),
+            "payload": [None, None, None, None, packed],
         }
     )
     changed0 = pd.DataFrame(
@@ -164,7 +168,10 @@ def test_lpa_quiescent_passthrough_requires_proof_of_fixpoint():
     state = out[out["kind"] == 0].sort_values("vid")
     assert list(state["vid"]) == [10, 11] and list(state["a"]) == [7, 7]
     assert (out[out["kind"] == 4]["a"] == 7).all()          # prevprev preserved
-    assert list(out[out["kind"] == 3]["vid"]) == [20]        # shadow preserved
+    shadow = out[out["kind"] == 3]                           # shadow preserved
+    assert len(shadow) == 1
+    svid, sval = unpack_shadow(shadow["payload"].iloc[0], int(shadow["a"].iloc[0]))
+    assert list(svid) == [20] and list(sval) == [7]
     marker = out[out["kind"] == 2]
     assert len(marker) == 1 and int(marker["a"].iloc[0]) == 0
     assert not (out["kind"] == 1).any()

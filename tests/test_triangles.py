@@ -87,7 +87,8 @@ def test_auto_guard_picks_degree_on_mid_id_hub(spark):
     df = graphs.to_df(spark, ring + star)
     o = oriented_edges(df)
     m = o.count()
-    idw, maxw = _id_wedge_stats(o)
+    idw, maxw, m_probe = _id_wedge_stats(o)
+    assert m_probe == m  # the probe's edge count is the table's
     dw = _degree_wedge_count(_degree_oriented(o))
     assert maxw > AUTO_HUB_WEDGE_LIMIT_FACTOR * m  # guard trips (hub key)
     assert dw <= 4 * m  # degree path stays linear-ish
@@ -168,3 +169,20 @@ def test_edge_jaccard_closed_forms(spark):
         (2, 3): (1, 0.25),
         (3, 4): (0, 0.0),
     }
+
+
+def test_auto_orientation_probes_in_one_job(spark):
+    """``orientation="auto"`` reads the edge count and the wedge maximum
+    from ONE aggregate. Jobs per ``triangle_count(df, "auto")`` on BA(60, 2,
+    seed 3), local[4], 4 shuffle partitions, AQE on (its shuffle stages run
+    as jobs of their own): 11, measured twice — 5 for the id-oriented count
+    itself plus 6 for the probe. A separate ``count()`` of the oriented
+    edges before the probe made it 14."""
+    from tests.test_subgraph_pagerank import _job_ids
+
+    edges = graphs.barabasi_albert(60, m=2, seed=3)
+    got, jobs = _job_ids(
+        spark, "triangles_auto", lambda: triangle_count(graphs.to_df(spark, edges), "auto")
+    )
+    assert got == triangle_oracle(edges)
+    assert len(jobs) <= 11, len(jobs)
