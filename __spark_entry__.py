@@ -182,14 +182,15 @@ def _sssp_weighted_sql(iters: int = SSSP_WEIGHTED_ITERS) -> str:
     )
 
 
-KCORE_ROUNDS = 30
+KCORE_ROUNDS = 80
 
 
 def _kcore_hindex_ctes(rounds: int) -> list[str]:
     """Unrolled synchronous h-index iteration from degrees — converges to
     the exact core numbers (Montresor et al. 2013); the Spark kernel's
     partition-local chaotic iteration reaches the same unique fixpoint.
-    19 rounds suffice at sf0.01; ``rounds`` adds margin and the callers
+    19 rounds suffice at sf0.01 and 30 do not at sf0.1, where 80 do;
+    ``rounds`` adds margin and the callers
     append a fixpoint guard so truncation fails loudly, never silently."""
     ctes = [
         f"e AS MATERIALIZED ({COPART_EDGES_SQL})",

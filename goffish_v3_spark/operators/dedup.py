@@ -572,7 +572,7 @@ def near_dup_clusters(
     kept doc even when a~c was never emitted as a pair).
 
     Connected components over the near-dup pair graph via the engine's own
-    :func:`operators.wcc.wcc` (partition-local union-find + meta hash-min —
+    :func:`operators.wcc.wcc` (partition-local union-find + meta Boruvka —
     the 100 TB path: edge payloads never reshuffle, only contracted labels
     do). ``canonical_id`` = min doc id in the cluster; documents in no pair
     map to themselves with cluster_size 1.

@@ -18,19 +18,24 @@ acyclic:
    keys only mutual 2-cycles occur (both sides pick the *same* edge — the
    classic Boruvka lemma), so hook + pointer-jump contraction is pure numpy
    with no per-edge Python loop.
-2. **Meta forest**: cross-partition edges are tagged with their endpoints'
+2. **Meta forest** (:func:`meta_forest`, also :func:`operators.wcc.wcc`'s
+   meta phase): cross-partition edges are tagged with their endpoints'
    local component labels and contracted to one representative edge per
-   label pair (``groupBy().agg(min(struct))``), then the same Boruvka kernel
-   runs once over the contracted meta table — the analogue of the
-   reference's subgraph meta-graph; its picked edges are the output
-   ``bridge`` rows (SpanningForest.java:109-113).
+   label pair (``groupBy().agg(min(struct))``). When that meta table fits
+   the one-task budget (``plans.block_cache.fits_one_task``), the same
+   Boruvka kernel runs once over it in one task; above the budget it runs
+   as distributed Boruvka rounds. This is the analogue of the reference's
+   subgraph meta-graph; its picked edges are the output ``bridge`` rows
+   (SpanningForest.java:109-113).
 3. Tree = local tree edges ∪ bridges (every output row is an input edge);
    labels = min member vid per component, identical groupings to
    :func:`operators.wcc.wcc`.
 
 At 100 TB step 1 never shuffles edge payloads (one hash shuffle to
 co-locate intra edges), and only label-pair representatives cross the
-cluster for step 2.
+cluster for step 2 — to one task while they fit it, whose choice between
+one task and staying partitioned is the trade-off of *To Partition, or Not
+to Partition* (SIGMOD 2021).
 """
 
 from __future__ import annotations
@@ -39,9 +44,10 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from goffish_v3_spark.plans.block_cache import fits_one_task
 from goffish_v3_spark.plans.partitioner import vertex_part
 from goffish_v3_spark.plans.superstep import (
     StepResult, SuperstepLoop, observed_checkpoint,
@@ -139,87 +145,121 @@ def _local_forest(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _distributed_meta_boruvka(
-    spark: SparkSession, meta: DataFrame, max_rounds: int = 64
+def _one_task_forest(it):
+    """``_boruvka_numpy`` over the whole meta table in one task: kind-0
+    rows map each label to its root (``x = label``, ``y = root``), kind-1
+    rows are the picked representative edges (``x = src``, ``y = dst``)."""
+    pdf = pd.concat(list(it), ignore_index=True)
+    tree, vids, roots = _boruvka_numpy(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+    picked = pdf[tree]
+    yield pd.DataFrame({
+        "kind": np.repeat(np.array([0, 1], dtype=np.int32), [len(vids), len(picked)]),
+        "x": np.concatenate([vids, picked["src"].to_numpy()]),
+        "y": np.concatenate([roots, picked["dst"].to_numpy()]),
+    })
+
+
+def _jump(ptr: DataFrame, _i: int) -> StepResult:
+    """One pointer-jumping pass over ``ptr(label, root)``: root := root's
+    root, with the count of moved roots observed on the checkpoint."""
+    up = ptr.select(F.col("label").alias("root"), F.col("root").alias("up"))
+    nxt, moved = observed_checkpoint(
+        ptr.join(up, "root", "left").select(
+            "label", F.coalesce("up", "root").alias("root"), F.col("root").alias("_old")
+        ),
+        F.count(F.when(F.col("root") != F.col("_old"), 1)),
+    )
+    return StepResult(nxt.select("label", "root"), moved == 0, truncated=True)
+
+
+def meta_forest(
+    spark: SparkSession, meta: DataFrame, max_iter: int = 64
 ) -> tuple[DataFrame, DataFrame]:
-    """Spanning forest of the contracted component graph, fully distributed.
+    """Spanning forest of the contracted component graph — the one meta
+    phase of :func:`spanning_forest` and :func:`operators.wcc.wcc`.
 
-    ``meta(a, b, src, dst)``: one representative original edge per component
-    pair (a < b). Per round every component picks its minimum-key incident
-    edge (one ``groupBy().agg(min(struct))`` — with a total order on edges
-    only mutual same-edge 2-cycles occur, the Boruvka lemma, so each merge
-    group of k components contributes exactly k−1 distinct edges), then the
-    pick pairs are collapsed with the distributed hash-min fixpoint from
-    operators.wcc and the meta table is relabeled through the mapping.
-    Components at least halve per round → O(log V) rounds; nothing larger
-    than the pick set (≤ one row per live component) leaves its stage. Each
-    round is one superstep-loop step, which raises ``RuntimeError`` if
-    ``max_rounds`` pass with meta edges left.
+    ``meta(a, b, src, dst)``: one representative original edge per label
+    pair (a < b). Returns ``(bridges(src, dst), mapping(label, root))``,
+    root = min label of the label's component.
 
-    Returns ``(bridges(src, dst), mapping(label, root))``.
+    When the meta table fits one task (``plans.block_cache.fits_one_task``),
+    ``_boruvka_numpy`` runs once over all of it in one job. Above that the
+    same Boruvka runs in DataFrame rounds: every component picks its
+    minimum incident edge (``groupBy().agg(min(struct))``; with a total
+    order on edges only mutual same-edge 2-cycles occur, the Boruvka lemma),
+    points at the pick's other endpoint — a mutually picked edge makes its
+    smaller endpoint a root — and the pointers jump to a fixpoint, one
+    checkpoint per jump; the meta table is then relabeled. Components at
+    least halve per round, and a round is one superstep-loop step, which
+    raises ``RuntimeError`` if ``max_iter`` rounds pass with meta edges
+    left. A final ``groupBy(root).min(label)`` restores min-label roots.
     """
-    from goffish_v3_spark.operators.wcc import _hash_min_fixpoint
+    loop = SuperstepLoop(
+        spark, max_iter=max_iter, name="meta-Boruvka", must_converge=True
+    )
+    cur, n_cur = observed_checkpoint(meta.select("a", "b", "src", "dst"), F.count(F.lit(1)))
+    if not n_cur:
+        return (spark.createDataFrame([], "src long, dst long"),
+                spark.createDataFrame([], "label long, root long"))
+    if fits_one_task(n_cur, 2 * n_cur):
+        out = cur.coalesce(1).mapInPandas(
+            _one_task_forest, schema="kind int, x long, y long"
+        ).localCheckpoint(eager=True)
+        return (
+            out.filter("kind = 1").select(F.col("x").alias("src"), F.col("y").alias("dst")),
+            out.filter("kind = 0").select(F.col("x").alias("label"), F.col("y").alias("root")),
+        )
 
     bridge_parts: list[DataFrame] = []  # checkpointed pick sets, one per round
+    # label -> current component, over every label seen so far
     total_map = spark.createDataFrame([], "label long, root long")
-    cur, n_cur = observed_checkpoint(meta, F.count(F.lit(1)))
 
     def step(cur: DataFrame, _i: int) -> StepResult:
         nonlocal total_map
-        both = cur.select(
-            F.col("a").alias("comp"), F.struct("a", "b", "src", "dst").alias("e")
-        ).unionByName(
-            cur.select(F.col("b").alias("comp"), F.struct("a", "b", "src", "dst").alias("e"))
-        )
+        edge = F.struct("a", "b", "src", "dst")
         picks = (
-            both.groupBy("comp").agg(F.min("e").alias("e"))
-            .select("e.a", "e.b", "e.src", "e.dst")
-            .distinct()
-            .localCheckpoint(eager=True)
+            cur.select(F.col("a").alias("comp"), edge.alias("e"))
+            .unionByName(cur.select(F.col("b").alias("comp"), edge.alias("e")))
+            .groupBy("comp").agg(F.min("e").alias("e"))
+            .select("comp", "e.*")
         )
-        # picks are already materialized — accumulate and union ONCE at the
-        # end instead of paying a bridges re-checkpoint job every round
-        bridge_parts.append(picks.select("src", "dst"))
-        round_map = _hash_min_fixpoint(spark, picks.select("a", "b"))
-        # fold into the running label→root mapping (full: the first round's
-        # map starts it; later rounds only re-root labels already in it)
-        r = round_map.select(F.col("label").alias("r_label"), F.col("root").alias("r_root"))
-        total_map = (
-            total_map.join(r, total_map.root == r.r_label, "full")
-            .select(F.coalesce("label", "r_label").alias("label"),
-                    F.coalesce("r_root", "root").alias("root"))
-            .localCheckpoint(eager=True)
+        # hook to the other endpoint; an edge picked from both ends (the
+        # only cycles) roots its smaller endpoint a
+        both_ends = F.count(F.lit(1)).over(Window.partitionBy("a", "b")) == 2
+        picks = picks.select(
+            F.col("comp").alias("pick"),
+            F.when((F.col("comp") == F.col("b")) | both_ends, F.col("a"))
+            .otherwise(F.col("b")).alias("to"),
+            "src", "dst",
+        ).localCheckpoint(eager=True)
+        bridge_parts.append(picks.select("src", "dst").distinct())
+        # live components re-point; older labels still point at them, so
+        # jumping re-roots every label seen so far
+        ptr = total_map.join(picks, total_map.label == picks.pick, "full").select(
+            F.coalesce("label", "pick").alias("label"),
+            F.coalesce("to", "root").alias("root"),
         )
+        total_map = SuperstepLoop(
+            spark, max_iter=64, name="meta-Boruvka pointer jumping", must_converge=True
+        ).run(ptr, _jump).state
         # relabel the meta table and drop now-internal pairs; the surviving
-        # row count rides the same checkpoint (no separate isEmpty job)
-        ra = round_map.select(F.col("label").alias("a"), F.col("root").alias("ra"))
-        rb = round_map.select(F.col("label").alias("b"), F.col("root").alias("rb"))
+        # row count rides the same checkpoint
+        ra = total_map.select(F.col("label").alias("a"), F.col("root").alias("ra"))
+        rb = total_map.select(F.col("label").alias("b"), F.col("root").alias("rb"))
         cur, n_left = observed_checkpoint(
-            cur.join(ra, "a", "left")
-            .join(rb, "b", "left")
-            .select(
-                F.coalesce("ra", F.col("a")).alias("na"),
-                F.coalesce("rb", F.col("b")).alias("nb"),
-                "src",
-                "dst",
-            )
-            .filter(F.col("na") != F.col("nb"))
-            .groupBy(
-                F.least("na", "nb").alias("a"), F.greatest("na", "nb").alias("b")
-            )
+            cur.join(ra, "a").join(rb, "b")
+            .filter(F.col("ra") != F.col("rb"))
+            .groupBy(F.least("ra", "rb").alias("a"), F.greatest("ra", "rb").alias("b"))
             .agg(F.min(F.struct("src", "dst")).alias("rep"))
-            .select("a", "b", F.col("rep.src").alias("src"), F.col("rep.dst").alias("dst")),
+            .select("a", "b", "rep.src", "rep.dst"),
             F.count(F.lit(1)),
         )
         return StepResult(cur, n_left == 0, truncated=True)
 
-    if n_cur:
-        SuperstepLoop(
-            spark, max_iter=max_rounds, name="spanning_forest meta-Boruvka",
-            must_converge=True,
-        ).run(cur, step)
-    empty = spark.createDataFrame([], "src long, dst long")
-    return reduce(DataFrame.unionByName, bridge_parts, empty), total_map
+    loop.run(cur, step)
+    canon = total_map.groupBy("root").agg(F.min("label").alias("canon"))
+    mapping = total_map.join(canon, "root").select("label", F.col("canon").alias("root"))
+    return reduce(DataFrame.unionByName, bridge_parts), mapping
 
 
 def spanning_forest(
@@ -282,8 +322,7 @@ def spanning_forest(
         )
     )
     # contract to one representative original edge per component pair —
-    # stays a DataFrame: the meta spanning tree is computed distributed
-    # (O(log V) Boruvka rounds), never collected to the driver
+    # stays a DataFrame, never collected to the driver (meta_forest)
     meta = (
         crossl.groupBy(
             F.least("la", "lb").alias("a"), F.greatest("la", "lb").alias("b")
@@ -292,7 +331,7 @@ def spanning_forest(
         .select("a", "b", F.col("rep.src").alias("src"), F.col("rep.dst").alias("dst"))
     )
 
-    bridges, mapping = _distributed_meta_boruvka(spark, meta)
+    bridges, mapping = meta_forest(spark, meta)
 
     base_labels = all_vertices.join(vlab, "vid", "left").select(
         "vid", F.coalesce("label", F.col("vid")).alias("label")

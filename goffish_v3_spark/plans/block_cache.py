@@ -19,7 +19,9 @@ shape:
   most ``MAX_BLOCKS`` blocks (~per-partition CSR size each);
 - :func:`one_task_tail` finishes a fixpoint inside one task over every
   block merged once the merge fits ``CONSOLIDATE_BUDGET_BYTES`` (PageRank
-  after superstep 1, k-core after ``kcore.CONSOLIDATE_AFTER``).
+  after superstep 1, k-core after ``kcore.CONSOLIDATE_AFTER``);
+  :func:`fits_one_task` is that byte rule, which the components meta phase
+  (``operators.spanning_forest.meta_forest``) applies to its meta table.
 
 Cluster shape: each executor's python workers cache only the partitions
 scheduled onto them; with stable partitioning the scheduler tends to
@@ -87,6 +89,14 @@ def _resolve_blocks_dir(spark, blocks_dir: str | None, prefix: str):
     return tempfile.mkdtemp(prefix=prefix), True
 
 
+def fits_one_task(n_edges: int, n_vertices: int) -> bool:
+    """Whether a graph of ``n_edges`` and ``n_vertices`` fits one task: a
+    merged CSR (plans.csr.MergedCsr) plus a kernel's per-edge and
+    per-vertex arrays, ~40 B/edge and ~24 B/vertex, against
+    ``CONSOLIDATE_BUDGET_BYTES``, read at call time."""
+    return 40 * n_edges + 24 * n_vertices <= CONSOLIDATE_BUDGET_BYTES
+
+
 @dataclass(frozen=True)
 class BlockStore:
     """A written block store: its path plus the per-part sizes collected
@@ -98,10 +108,8 @@ class BlockStore:
     n_edges: int
 
     def fits_one_task(self) -> bool:
-        """Whether every block merged into one task (plans.csr.MergedCsr
-        plus a kernel's per-edge and per-vertex arrays, ~40 B/edge and
-        ~24 B/vertex) fits ``CONSOLIDATE_BUDGET_BYTES``, read at call time."""
-        return 40 * self.n_edges + 24 * self.n_vertices <= CONSOLIDATE_BUDGET_BYTES
+        """Whether every block merged into one task fits (:func:`fits_one_task`)."""
+        return fits_one_task(self.n_edges, self.n_vertices)
 
     def seed(self, spark, schema: str) -> DataFrame:
         """Superstep 0's input in a kernel's ``schema`` (``part, kind, vid,

@@ -3,8 +3,8 @@
 :class:`SuperstepLoop` is the package's one fixpoint driver. Its users supply
 a step function: ``pagerank``, ``lpa``, ``sssp``, the CSR engines
 (``csr_pagerank``/``subgraph_rank``, ``lpa_csr``, ``sssp_csr``,
-``core_numbers``/``k_core``), WCC's hash-min, the spanning forest's
-meta-Boruvka, ``scc``, ``kmeans_partition`` and ``stats.meta_diameter``. The
+``core_numbers``/``k_core``), the components meta-Boruvka rounds and their
+pointer jumping, ``scc``, ``kmeans_partition`` and ``stats.meta_diameter``. The
 loop owns the superstep count, the ``max_iter`` cap, raise-on-non-convergence
 and the AQE pin. :func:`observed_checkpoint` is their one-job step: the
 state and its stop count in one Spark job.

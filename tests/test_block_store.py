@@ -99,7 +99,7 @@ JOB_COUNTS = {
     "core_numbers": (8, 7),
     "k_core": (9, 9),
     "sssp": (8, 8),
-    "wcc": (25, 25),
+    "wcc": (13, 17),
 }
 RUNS = {
     **OPERATORS,

@@ -227,7 +227,7 @@ FIXPOINT_JOB_COUNTS = {
     "scc": 7,
     "scc_cyclic17": 19,
     "kmeans_partition": 23,
-    "spanning_forest": 33,
+    "spanning_forest": 22,
     "meta_diameter": 10,
 }
 
