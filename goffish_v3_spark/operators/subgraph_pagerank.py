@@ -19,35 +19,43 @@ convergence gate, but executed the way GoFFish executes it:
   (GraphJobRunner.java:269-331);
 - the ε-convergence gate is the reference's all-deltas ≤ ε (PageRank.java:
   108-116), collected driver-side from per-partition delta rows;
-- tail consolidation: when every block merged fits one task
-  (``BlockStore.fits_one_task``), only superstep 0 runs distributed and
-  one task finishes the remaining supersteps over the merged CSR — the
-  subgraph-centric premise carried to the whole graph once it fits one
-  subgraph (same update, same gate, same superstep count).
+- one task: when the graph fits one task (``plans.block_cache.
+  fits_one_task`` on the edge table's row and distinct-vertex counts),
+  the whole fixpoint runs as ONE Spark job from the edge table — one task
+  assembles every part's block (``plans.csr.assemble_blocks``), merges
+  them and runs superstep 0 (seed or warm start) and every later superstep
+  over the merged CSR, with no block store and no distributed superstep:
+  the subgraph-centric premise carried to the whole graph once it fits one
+  subgraph (same blocks, same update, same gate, same superstep count).
 
-Above that budget this shuffles only boundary contributions (O(cut size))
-per superstep instead of O(|E|) — the reason the subgraph-centric model
+Above that budget the blocks are built distributed, written to the block
+store once, and each superstep shuffles only boundary contributions
+(O(cut size)) instead of O(|E|) — the reason the subgraph-centric model
 beats vertex-centric engines (README.md:3), reproduced here with Arrow
 batches instead of Writable messages.
 
 Carry columns in the shared protocol (plans.csr): kind 0 = state (vid,
 a=rank, b=pending_local_sum); kind 1 = message (vid=dst, a=contribution);
-kind 2 = per-partition metric (a=max delta; from the one-task tail,
+kind 2 = per-partition metric (a=max delta; from the one task,
 a=supersteps it ran).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.block_cache import (
-    BlockStore, block_store, load_block, one_task_tail,
+    BlockStore, block_store, fits_one_task, load_block,
 )
-from goffish_v3_spark.plans.csr import CsrBlock, build_csr_blocks, carry_frame
+from goffish_v3_spark.plans.csr import (
+    CsrBlock, MergedCsr, assemble_blocks, build_csr_blocks, carry_frame, owned_edges,
+)
+from goffish_v3_spark.plans.partitioner import vertex_part
 from goffish_v3_spark.plans.superstep import (
-    StepResult, SuperstepLoop, observed_checkpoint,
+    StepResult, SuperstepLoop, no_aqe, observed_checkpoint,
 )
 
 OUT_SCHEMA = "part int, kind int, vid long, a double, b double"
@@ -169,38 +177,74 @@ def _make_kernel(
     return kernel
 
 
-def _tail_solve(alpha: float, base: float, eps: float, steps: int, gated: bool):
-    """The one-task tail (``plans.block_cache.one_task_tail``): up to
-    ``steps`` more supersteps over the merged CSR — the same synchronous
-    update ``rank' = alpha * pending + base`` and, when ``gated``, the same
-    stop on ``max|delta| <= eps`` as the distributed kernel, over the global
-    CSR instead of per block plus messages. Takes the kind 0/1 carry of a
-    distributed superstep."""
+def _tail_solve(
+    m: MergedCsr, alpha: float, eps: float, total: int, gated: bool, local_init: bool
+):
+    """The one-task fixpoint: up to ``total`` supersteps over the merged
+    CSR, superstep 0 included — ranks seeded at 1/N or, with
+    ``local_init``, by the SubgraphRank warm start per block scaled by
+    |block|/N, then the distributed kernel's synchronous update ``rank' =
+    alpha * pending + base`` and, when ``gated``, its stop on ``max|delta|
+    <= eps``, over the global CSR instead of per block plus messages.
+    Returns ``(supersteps, ranks)`` in merged order."""
+    n = m.n
+    base = (1.0 - alpha) / n
+    if local_init:
+        ranks = np.concatenate(
+            [_local_pagerank(b, alpha, LOCAL_EPS) * (b.n_local / n) for b in m.blocks]
+        )
+    else:
+        ranks = np.full(n, 1.0 / n)
+    outdeg = np.diff(m.indptr)
+    done = 1
+    while done < total:
+        with np.errstate(divide="ignore", invalid="ignore"):
+            per_src = np.where(outdeg > 0, ranks / np.maximum(outdeg, 1), 0.0)
+        pending = np.bincount(
+            m.dst_idx, weights=np.repeat(per_src, outdeg), minlength=n
+        )
+        new_ranks = alpha * pending + base
+        delta = float(np.max(np.abs(new_ranks - ranks)))
+        ranks = new_ranks
+        done += 1
+        if gated and delta <= eps:
+            break
+    return done, ranks
 
-    def solve(m, state, pdf):
-        ranks, pending = state["a"], state["b"]
-        msgs = pdf[pdf["kind"] == 1]
-        if len(msgs):
-            np.add.at(
-                pending, m.pos(msgs["vid"].to_numpy(dtype=np.int64)),
-                msgs["a"].to_numpy(dtype=np.float64),
-            )
 
-        outdeg = np.diff(m.indptr)
-        for done in range(1, steps + 1):
-            new_ranks = alpha * pending + base
-            delta = float(np.max(np.abs(new_ranks - ranks)))
-            ranks = new_ranks
-            if (gated and delta <= eps) or done == steps:
-                break
-            with np.errstate(divide="ignore", invalid="ignore"):
-                per_src = np.where(outdeg > 0, ranks / np.maximum(outdeg, 1), 0.0)
-            pending = np.bincount(
-                m.dst_idx, weights=np.repeat(per_src, outdeg), minlength=m.n
-            )
-        return done, {"a": ranks}, []
+def _one_task_step(alpha, eps, total, gated, local_init, given):
+    """The SuperstepLoop step that runs the whole fixpoint in ONE task: its
+    state is the :func:`plans.csr.owned_edges` rows or, when ``given``, the
+    caller's block rows. One ``repartition(1).mapInPandas`` job assembles
+    (or deserializes) every part's block, merges them and runs
+    :func:`_tail_solve`; a kind-2 row carries the superstep count to the
+    checkpoint's Observation."""
 
-    return solve
+    def fn(it):
+        pdf = pd.concat(list(it) or [pd.DataFrame()], ignore_index=True)
+        if len(pdf) == 0:  # the empty graph: superstep 0 only
+            yield carry_frame(OUT_SCHEMA, (0, 2, -1, {"a": 1}))
+            return
+        if given:
+            blocks = [CsrBlock(r) for r in pdf.sort_values("part").to_dict("records")]
+        else:
+            blocks = assemble_blocks(pdf)
+        m = MergedCsr(blocks)
+        steps, ranks = _tail_solve(m, alpha, eps, total, gated, local_init)
+        yield carry_frame(
+            OUT_SCHEMA,
+            (m.owner, 0, m.vids, {"a": ranks}),
+            (blocks[0].part, 2, -1, {"a": steps}),
+        )
+
+    def step(source: DataFrame, i: int) -> StepResult:
+        out, steps = observed_checkpoint(
+            source.repartition(1).mapInPandas(fn, schema=OUT_SCHEMA),
+            F.max(F.when(F.col("kind") == 2, F.col("a"))),
+        )
+        return StepResult(out, True, truncated=True, supersteps=int(steps))
+
+    return step
 
 
 def csr_pagerank(
@@ -225,23 +269,43 @@ def csr_pagerank(
     — the superstep-saving inner loop; the global phase still converges to
     the plain PageRank fixpoint.
 
-    Supersteps fetch their CSR block from the worker-local block store
-    (plans.block_cache), so only state and messages cross the shuffle;
-    ``blocks_dir`` must point at executor-visible storage on a
-    multi-executor cluster."""
+    One aggregate job sizes the graph (edge rows and distinct vids, or the
+    given blocks' ``n_edges``/``n_local``). When it fits one task
+    (``plans.block_cache.fits_one_task``) one more job runs everything
+    (:func:`_one_task_step`). Above the budget the supersteps fetch their
+    CSR block from the worker-local block store (plans.block_cache), so
+    only state and messages cross the shuffle; ``blocks_dir``, the store's
+    directory, must point at executor-visible storage on a multi-executor
+    cluster."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     given = blocks is not None
-    if not given:
-        blocks = build_csr_blocks(spark, edges, num_parts)
+    gated = fixed_iterations is None
+    total = max_iter if gated else fixed_iterations + 1
+    loop = SuperstepLoop(spark, max_iter=total, name="csr_pagerank")
+    with no_aqe(spark):  # one job: AQE would run each shuffle stage as its own
+        if given:
+            n_edges, n_vertices = blocks.agg(F.sum("n_edges"), F.sum("n_local")).first()
+        else:
+            n_ends, n_vertices = (
+                edges.select(F.explode(F.array("src", "dst")).alias("vid"))
+                .agg(F.count("*"), F.count_distinct("vid"))
+                .first()
+            )
+            # raw rows, not deduplicated: never below the blocks' n_edges
+            n_edges = n_ends // 2
 
-    # a caller's blocks stay persisted; blocks built here are released
-    with block_store(spark, blocks, blocks_dir, "goffish_pr_", release=not given) as store:
-        total = max_iter if fixed_iterations is None else fixed_iterations + 1
-        info = SuperstepLoop(spark, max_iter=total, name="csr_pagerank").run(
-            store.seed(spark, OUT_SCHEMA),
-            _csr_step(store, alpha, eps, total, fixed_iterations is None, local_init),
-        )
+    if fits_one_task(n_edges or 0, n_vertices or 0):
+        source = blocks if given else owned_edges(edges, lambda c: vertex_part(c, num_parts))
+        info = loop.run(source, _one_task_step(alpha, eps, total, gated, local_init, given))
+    else:
+        if not given:
+            blocks = build_csr_blocks(spark, edges, num_parts)
+        # a caller's blocks stay persisted; blocks built here are released
+        with block_store(spark, blocks, blocks_dir, "goffish_pr_", release=not given) as store:
+            info = loop.run(
+                store.seed(spark, OUT_SCHEMA), _csr_step(store, alpha, eps, gated, local_init)
+            )
     # the loop's state is a filter over a checkpointed frame: it outlives
     # the block store without another checkpoint
     result = info.state.filter(F.col("kind") == 0).select(
@@ -258,25 +322,19 @@ def subgraph_rank(spark: SparkSession, edges: DataFrame, **kw) -> DataFrame:
     return csr_pagerank(spark, edges, local_init=True, **kw)
 
 
-def _csr_step(store: BlockStore, alpha, eps, total, gated, local_init):
-    """The SuperstepLoop step over the kernel's kind 0/1 carry, started from
-    the per-part seed rows; ``total`` supersteps at most, stopping on the
-    ε-gate when ``gated``.
+def _csr_step(store: BlockStore, alpha, eps, gated, local_init):
+    """The distributed SuperstepLoop step over the kernel's kind 0/1 carry,
+    started from the per-part seed rows and stopping on the ε-gate when
+    ``gated``; the graph is above the one-task budget.
 
-    Superstep 0 (the seed pass, or the SubgraphRank warm start) is always
-    distributed. When the merged blocks fit one task
-    (``BlockStore.fits_one_task``) the step at superstep 1 hands the carry
-    to one task that finishes the remaining supersteps over the merged CSR
-    (:func:`_tail_solve`) and reports how many it ran: two Spark jobs in
-    all, however many supersteps run.
-
-    Above the budget every superstep is one Spark job with one exchange:
-    the kernel's kind 0 (state) and kind 1 (message) rows of the previous
-    superstep are grouped by ``part`` and handed to the kernel. Messages
-    need no JVM aggregation on the way: the sending kernel already sums
-    them per ``(dst_part, dst)`` and the receiving kernel sums what arrives
-    from several partitions with ``np.add.at``. The kind 2 max-delta rides
-    the checkpoint as an Observation, so the ε-gate adds no job either."""
+    Every superstep, superstep 0 (the seed pass, or the SubgraphRank warm
+    start) included, is one Spark job with one exchange: the kernel's kind
+    0 (state) and kind 1 (message) rows of the previous superstep are
+    grouped by ``part`` and handed to the kernel. Messages need no JVM
+    aggregation on the way: the sending kernel already sums them per
+    ``(dst_part, dst)`` and the receiving kernel sums what arrives from
+    several partitions with ``np.add.at``. The kind 2 max-delta rides the
+    checkpoint as an Observation, so the ε-gate adds no job either."""
     base = (1.0 - alpha) / store.n_vertices
     kind2_a = F.max(F.when(F.col("kind") == 2, F.col("a")))
 
@@ -293,7 +351,4 @@ def _csr_step(store: BlockStore, alpha, eps, total, gated, local_init):
             truncated=True,
         )
 
-    return one_task_tail(
-        store, OUT_SCHEMA, 1, (0, 1),
-        _tail_solve(alpha, base, eps, total - 1, gated), step,
-    )
+    return step

@@ -2,14 +2,14 @@
 
 The reference holds each partition's object graph in JVM heap for the whole
 job (hama GraphJobRunner.java:105-126 loads once, computes many supersteps).
-This module gives the CSR operators (``csr_pagerank``/``subgraph_rank``,
-``lpa_csr``, ``sssp_csr``, ``core_numbers``, ``k_core``) that load-once
-shape:
+This module gives the CSR operators (``lpa_csr``, ``sssp_csr``,
+``core_numbers``, ``k_core``, and ``csr_pagerank``/``subgraph_rank`` above
+the one-task budget) that load-once shape:
 
 - :func:`block_store` writes the blocks ONCE to a parquet directory
-  partitioned by ``part`` and owns the directory's lifecycle (a tempdir it
-  created is removed when the operator returns or raises; a caller-supplied
-  ``blocks_dir`` is kept);
+  partitioned by ``part``, reading their sizes in the same job, and owns
+  the directory's lifecycle (a tempdir it created is removed when the
+  operator returns or raises; a caller-supplied ``blocks_dir`` is kept);
 - superstep kernels run as plain ``state.groupby(part).applyInPandas`` over
   state + messages only — the adjacency never re-enters the shuffle or the
   Arrow channel — and fetch their block via :func:`load_block`, which reads
@@ -18,10 +18,12 @@ shape:
 - the cache is LRU-capped so a worker that serves many partitions holds at
   most ``MAX_BLOCKS`` blocks (~per-partition CSR size each);
 - :func:`one_task_tail` finishes a fixpoint inside one task over every
-  block merged once the merge fits ``CONSOLIDATE_BUDGET_BYTES`` (PageRank
-  after superstep 1, k-core after ``kcore.CONSOLIDATE_AFTER``);
-  :func:`fits_one_task` is that byte rule, which the components meta phase
-  (``operators.spanning_forest.meta_forest``) applies to its meta table.
+  block merged once the merge fits ``CONSOLIDATE_BUDGET_BYTES``; k-core,
+  after ``kcore.CONSOLIDATE_AFTER``, is its user. :func:`fits_one_task` is
+  that byte rule. PageRank applies it to the edge table before any block
+  exists and, below it, runs whole in one task with no store
+  (``operators.subgraph_pagerank``); the components meta phase
+  (``operators.spanning_forest.meta_forest``) applies it to its meta table.
 
 Cluster shape: each executor's python workers cache only the partitions
 scheduled onto them; with stable partitioning the scheduler tends to
@@ -39,7 +41,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.plans.csr import CsrBlock, MergedCsr, carry_frame, schema_dtypes
@@ -114,7 +116,7 @@ class BlockStore:
     def seed(self, spark, schema: str) -> DataFrame:
         """Superstep 0's input in a kernel's ``schema`` (``part, kind, vid,
         ...``): one ``kind=-1`` row per part, later columns null."""
-        width = len(spark.createDataFrame([], schema).columns)
+        width = len(schema_dtypes(schema))
         return spark.createDataFrame(
             [(p, -1, -1) + (None,) * (width - 3) for p in self.parts], schema
         )
@@ -134,15 +136,25 @@ def block_store(
     kernels read the store, so the cached DataFrame has no further use."""
     path, owned = _resolve_blocks_dir(spark, blocks_dir, prefix)
     try:
-        write_blocks(blocks, path)
-        stats = blocks.select("part", "n_local", "n_edges").collect()
+        # the block sizes ride the write job as an Observation
+        obs = Observation()
+        write_blocks(
+            blocks.observe(
+                obs,
+                F.collect_list("part").alias("parts"),
+                F.sum("n_local").alias("n_vertices"),
+                F.sum("n_edges").alias("n_edges"),
+            ),
+            path,
+        )
+        stats = obs.get
         if release:
             blocks.unpersist()
         yield BlockStore(
             path=path,
-            parts=[int(r.part) for r in stats],
-            n_vertices=sum(int(r.n_local) for r in stats),
-            n_edges=sum(int(r.n_edges) for r in stats),
+            parts=sorted(int(p) for p in stats["parts"]),
+            n_vertices=int(stats["n_vertices"] or 0),
+            n_edges=int(stats["n_edges"] or 0),
         )
     finally:
         if owned:
@@ -247,7 +259,8 @@ def one_task_tail(
     (:meth:`BlockStore.fits_one_task`), instead finishes the fixpoint inside
     ONE task over every block merged (:class:`plans.csr.MergedCsr`) — the
     subgraph-centric premise carried to the whole graph once it fits one
-    subgraph. The tail is the loop's last call.
+    subgraph. The tail is the loop's last call. k-core's tail uses it;
+    PageRank needs no store below the budget and no tail above it.
 
     The tail task gets the carry's rows of ``kinds``, aligns their kind-0
     state (every numeric value column of ``schema``) to the merged vertex

@@ -340,6 +340,34 @@ def _assemble_block(
     )
 
 
+def assemble_blocks(pdf: pd.DataFrame) -> list[CsrBlock]:
+    """Every partition's :class:`CsrBlock`, in part order, from
+    :func:`owned_edges` rows — :func:`build_csr_blocks` inside one task,
+    block for block array-equal to it: a part owns every vid tagged with it
+    as a src or a dst (sinks included) and the out-edges of those vids."""
+    src, dst, dst_part, w = _edge_arrays(pdf)
+    part = pdf["part"].to_numpy(dtype=np.int32)
+    vids = np.concatenate((src, dst))
+    owner = np.concatenate((part, dst_part))
+    order = np.lexsort((vids, owner))
+    vids, owner = vids[order], owner[order]
+    if len(vids):
+        keep = np.concatenate(
+            ([True], (vids[1:] != vids[:-1]) | (owner[1:] != owner[:-1]))
+        )
+        vids, owner = vids[keep], owner[keep]
+    by_part = np.argsort(part, kind="stable")
+    e_part = part[by_part]
+    blocks = []
+    for p in np.unique(owner):
+        v_lo, v_hi = np.searchsorted(owner, [p, p + 1])
+        e_lo, e_hi = np.searchsorted(e_part, [p, p + 1])
+        e = by_part[e_lo:e_hi]
+        row = _assemble_block(int(p), vids[v_lo:v_hi], src[e], dst[e], dst_part[e], w[e])
+        blocks.append(CsrBlock(row.iloc[0]))
+    return blocks
+
+
 def _edge_arrays(pdf: pd.DataFrame):
     return (
         pdf["src"].to_numpy(dtype=np.int64),
@@ -407,6 +435,21 @@ def build_csr_blocks_sym(
     return blocks
 
 
+def owned_edges(edges: DataFrame, part_of) -> DataFrame:
+    """``edges(src, dst, w)`` tagged with the owner partition of each end,
+    ``part_of(vid_col) -> Column``: ``(src, dst, w double, part, dst_part)``,
+    the rows :func:`build_csr_blocks` and :func:`assemble_blocks` build
+    blocks from — ownership is computed Spark-side, never re-hashed in
+    numpy."""
+    return edges.select(
+        "src",
+        "dst",
+        F.col("w").cast("double").alias("w"),
+        part_of(F.col("src")).alias("part"),
+        part_of(F.col("dst")).alias("dst_part"),
+    )
+
+
 def build_csr_blocks(
     spark: SparkSession,
     edges: DataFrame,
@@ -433,14 +476,7 @@ def build_csr_blocks(
     # a SINGLE exchange (the groupBy(part) below) instead of paying a
     # groupBy(src,dst) exchange first. Trade-off: duplicate edge rows travel
     # through the shuffle — on a mostly-duplicate input, dedup first.
-    e = edges.select(
-        "src",
-        "dst",
-        F.col("w").cast("double").alias("w"),
-        part_of(F.col("src")).alias("part"),
-        part_of(F.col("dst")).alias("dst_part"),
-        F.lit("e").alias("kind"),
-    )
+    e = owned_edges(edges, part_of).withColumn("kind", F.lit("e"))
     # v rows carry NO nulls: a null in an int64 column turns the whole
     # pandas-side column float64 inside applyInPandas, silently corrupting
     # full-range xxhash64 vids (> 2^53) — dst/dst_part mirror the vertex

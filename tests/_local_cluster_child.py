@@ -63,7 +63,11 @@ def main() -> None:
     )
 
     # CSR kernel: blocks written to the explicit shared dir, fetched by
-    # executor-side Python workers through plans.block_cache
+    # executor-side Python workers through plans.block_cache; a graph this
+    # size fits one task and would skip the store, so the budget is 0
+    from goffish_v3_spark.plans import block_cache
+
+    block_cache.CONSOLIDATE_BUDGET_BYTES = 0
     ranks = csr_pagerank(
         spark,
         edges,

@@ -253,9 +253,9 @@ def test_consolidated_matches_distributed_and_df(spark, monkeypatch, mode, warm,
 
 
 def test_consolidated_job_count_independent_of_supersteps(spark):
-    """Below the byte budget only superstep 0 is a distributed job; one
-    task runs the rest, so 3 and 30 fixed rank updates cost the same
-    number of Spark jobs."""
+    """Below the byte budget no superstep is a distributed job: one task
+    runs them all, so 3 and 30 fixed rank updates cost the same number of
+    Spark jobs."""
     from goffish_v3_spark.plans.csr import build_csr_blocks
 
     df = graphs.to_df(spark, graphs.barabasi_albert(100, m=2, seed=7))
@@ -290,8 +290,9 @@ def test_result_outlives_block_store(spark, monkeypatch):
     (cons, _), (dist, _) = _paths(
         spark, monkeypatch, lambda: csr_pagerank(spark, df, num_parts=4, fixed_iterations=4)
     )
+    # only the distributed path writes a block store
     stores = [p for p in made if os.path.basename(p).startswith("goffish_pr_")]
-    assert len(stores) == 2 and not any(os.path.exists(p) for p in stores)
+    assert len(stores) == 1 and not any(os.path.exists(p) for p in stores)
     assert len(cons) == len(dist) == 80
 
 
@@ -351,3 +352,82 @@ def test_block_cache_mode_matches(spark, tmp_path):
     )
     assert j.count() == want.count()
     assert j.select(F.max(F.abs(F.col("r1") - F.col("r2")))).collect()[0][0] < 1e-12
+
+
+def _multi_edge_sink(spark):
+    """A (1, 2) multi-edge with two weights, and vertex 4 only ever a dst."""
+    rows = [(1, 2, 1.0), (1, 2, 0.5), (2, 3, 1.0), (3, 1, 2.0), (1, 4, 1.0), (3, 4, 1.0)]
+    return spark.createDataFrame(rows, "src long, dst long, w double")
+
+
+@pytest.mark.parametrize("graph", ["ba", "hash_range", "multi_edge_sink"])
+def test_assemble_blocks_equals_build_csr_blocks(spark, graph):
+    """The one-task path's in-task block assembly gives every part the
+    block build_csr_blocks writes, array for array."""
+    import numpy as np
+
+    from goffish_v3_spark.plans.csr import (
+        CsrBlock, assemble_blocks, build_csr_blocks, owned_edges,
+    )
+    from goffish_v3_spark.plans.partitioner import vertex_part
+
+    if graph == "multi_edge_sink":
+        df = _multi_edge_sink(spark)
+    else:
+        df = graphs.to_df(spark, graphs.barabasi_albert(150, m=3, seed=5))
+        if graph == "hash_range":
+            df = _hash_range(df)
+    built = build_csr_blocks(spark, df, 4)
+    want = {b.part: b for b in (CsrBlock(r) for r in built.collect())}
+    built.unpersist()
+    got = assemble_blocks(owned_edges(df, lambda c: vertex_part(c, 4)).toPandas())
+    assert [b.part for b in got] == sorted(want)
+    fields = (
+        "local_vids", "indptr", "edge_dst_vid", "edge_dst_part", "edge_dst_local", "edge_w",
+    )
+    for b in got:
+        for f in fields:
+            a, w = getattr(b, f), getattr(want[b.part], f)
+            assert a.dtype == w.dtype and np.array_equal(a, w), (graph, b.part, f)
+    if graph == "multi_edge_sink":
+        merged = {int(v) for b in got for v in b.local_vids}
+        assert merged == {1, 2, 3, 4}
+        assert sum(len(b.edge_w) for b in got) == 5
+        assert 0.5 in {float(x) for b in got for x in b.edge_w}
+
+
+def test_one_task_path_writes_no_block_store(spark, monkeypatch):
+    """Below the budget csr_pagerank/subgraph_rank build no block store:
+    no goffish_pr_ tempdir is made, and the ranks equal the distributed
+    path's."""
+    import os
+    import tempfile
+
+    made = []
+    real = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(real(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    from goffish_v3_spark.operators.subgraph_pagerank import subgraph_rank
+
+    df = _multi_edge_sink(spark)
+    res = subgraph_rank(spark, df, num_parts=2, eps=1e-9)
+    ranks = {r.vid: r.rank for r in res.collect()}
+    assert not [p for p in made if os.path.basename(p).startswith("goffish_pr_")]
+    assert set(ranks) == {1, 2, 3, 4}
+    _, (dist, n_dist) = _paths(
+        spark, monkeypatch, lambda: subgraph_rank(spark, df, num_parts=2, eps=1e-9)
+    )
+    assert res.pr_supersteps == n_dist
+    assert max(abs(ranks[v] - dist[v]) for v in ranks) < 1e-12
+
+
+def test_empty_graph_returns_no_rows(spark):
+    """An empty edge table fits one task: no rows, superstep 0 only."""
+    e = spark.createDataFrame([], "src long, dst long, w double")
+    res = csr_pagerank(spark, e, num_parts=4, local_init=True)
+    assert res.count() == 0
+    assert res.pr_supersteps == 1
