@@ -29,11 +29,15 @@ order (Montresor et al., thm 1) — which is why the partition-local chaotic
 iteration, the synchronous Jacobi oracle in SQL, and classic peeling all
 agree on the final numbers.
 
-Scale shape: per superstep ONE grouped ``applyInPandas`` over state + O(cut)
-message rows, each task fetching its CSR block from the worker-local block
-store (plans.block_cache). Job count is O(global rounds) — a few,
-bounded by how far core changes must propagate across partitions — instead of
-the O(max_core × peeling depth) driver loop this replaces.
+Scale shape: below the one-task budget the shared CSR fixpoint driver
+(``plans.block_cache.csr_fixpoint``) runs the whole h-index fixpoint in ONE
+task over every block merged, as one Spark job from the edge table — the
+graph fits one subgraph, so one local fixpoint is the global one. Above it,
+per superstep ONE grouped ``applyInPandas`` over state + O(cut) message
+rows, each task fetching its CSR block from the worker-local block store
+(plans.block_cache). Job count is O(global rounds) — a few, bounded by how
+far core changes must propagate across partitions — instead of the
+O(max_core × peeling depth) driver loop this replaces.
 """
 
 from __future__ import annotations
@@ -42,26 +46,23 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.block_cache import (
-    BlockStore, block_store, load_block, one_task_tail,
-)
+from goffish_v3_spark.plans.block_cache import BlockStore, csr_fixpoint, load_block
 from goffish_v3_spark.plans.csr import (
-    build_csr_blocks_sym, carry_frame, changed_sends, merge_boundary, passthrough,
-    shadow_rows,
+    MergedCsr, carry_frame, changed_sends, merge_boundary, owned_edges, passthrough,
+    shadow_rows, symmetrized,
 )
+from goffish_v3_spark.plans.partitioner import vertex_part
 from goffish_v3_spark.plans.superstep import (
-    StepResult, SuperstepLoop, observed_checkpoint,
+    StepFn, StepResult, SuperstepLoop, observed_checkpoint,
 )
 
 OUT_SCHEMA = "part int, kind int, vid long, a long, payload binary"
 
 # supersteps per Spark job at the start (the chain halves at the tail, see
-# _hindex_fixpoint): the capped k-core iteration needs only a handful of rounds
+# _hindex_step): the capped k-core iteration needs only a handful of rounds
 CHAIN_CORE_NUMBERS = 8
 CHAIN_K_CORE = 4
-# tail consolidation: after this many distributed supersteps, if the merged
-# blocks fit one task (BlockStore.fits_one_task), the rest runs there
-CONSOLIDATE_AFTER = 2
+
 
 def _hindex_fixpoint_frontier(
     indptr: np.ndarray, dst_idx: np.ndarray, est: np.ndarray
@@ -116,30 +117,24 @@ def _hindex_fixpoint_frontier(
     return est
 
 
-def _tail_solve(cap: int | None):
-    """The one-task tail (``plans.block_cache.one_task_tail``, VERDICT r4
-    #2): the global h-index fixpoint over every block merged, run to
-    completion. Correct from any reachable state — estimates are upper
-    bounds and the chaotic iteration converges to exact coreness from any
-    upper-bound seed, so the merged pass IS the global fixpoint and the loop
-    can stop afterwards. Besides the kind-0 state it emits a full kind-3
-    shadow per partition (every remote estimate it references) so the k-core
-    finalize pass works unchanged.
+def _one_task_solve(cap: int | None):
+    """The one-task solve (``plans.block_cache.csr_fixpoint``): the h-index
+    iteration from the degree, capped at ``cap``, over every block merged —
+    the global fixpoint in one pass, exact for any update order (Montresor
+    et al., thm 1). Without a cap it emits every estimate; with one, the
+    k-core members (est ≥ cap) with their count of member neighbours."""
 
-    The 100 TB posture: distributed waves grind the bulk creep in parallel,
-    and the serial cross-partition tail collapses into one task the moment
-    the whole remaining problem provably fits."""
-
-    def solve(m, state, pdf):
-        est = state["a"]
-        if cap is not None:
-            est = np.minimum(est, cap)
-        est = _hindex_fixpoint_frontier(m.indptr, m.dst_idx, est)
-        shadows = []
-        for b in m.blocks:
-            want = np.unique(b.edge_dst_vid[b.edge_dst_local < 0])
-            shadows += shadow_rows(b.part, want, est[m.pos(want)])
-        return 1, {"a": est}, shadows
+    def solve(m: MergedCsr):
+        deg = np.diff(m.indptr)
+        est = _hindex_fixpoint_frontier(
+            m.indptr, m.dst_idx, deg if cap is None else np.minimum(deg, cap)
+        )
+        if cap is None:
+            return 1, [(m.owner, 0, m.vids, {"a": est})]
+        member = est >= cap
+        seg = np.repeat(np.arange(m.n, dtype=np.int64), deg)
+        deg_in = np.bincount(seg[member[m.dst_idx]], minlength=m.n)
+        return 1, [(m.owner[member], 0, m.vids[member], {"a": deg_in[member]})]
 
     return solve
 
@@ -244,19 +239,15 @@ def _make_kernel(superstep: int, blocks_path: str, cap: int | None = None):
     return kernel
 
 
-def _hindex_fixpoint(
-    spark: SparkSession, store: BlockStore, cap: int | None, max_iter: int,
-    chain_every: int, num_parts: int,
-) -> DataFrame:
-    """Drive the kernel to global fixpoint through SuperstepLoop from the
-    store's ``kind=-1`` seed rows; returns the final carry — kind-0 state
-    plus the boundary channel (kind-1 messages and kind-3 shadows, which
-    together hold every boundary estimate — see
-    :func:`plans.csr.merge_boundary`) and the kind-2 changed counts (after
-    the one-task tail, its superstep count). Callers filter kinds. Raises
-    ``RuntimeError`` when ``max_iter`` supersteps end with estimates still
-    changing. Blocks never re-enter the shuffle/Arrow channel after the
-    one-time write to ``store``.
+def _hindex_step(
+    store: BlockStore, cap: int | None, max_iter: int, chain_every: int, num_parts: int
+) -> StepFn:
+    """The distributed SuperstepLoop step from the store's ``kind=-1`` seed
+    rows: its carry is the kind-0 state plus the boundary channel (kind-1
+    messages and kind-3 shadows, which together hold every boundary
+    estimate — see :func:`plans.csr.merge_boundary`) and the kind-2
+    changed counts. Blocks never re-enter the shuffle/Arrow channel after
+    the one-time write to ``store``.
 
     One step call runs ``chain`` supersteps lazily inside ONE Spark job,
     materializing (and reading the changed-count Observation) only at the
@@ -268,25 +259,12 @@ def _hindex_fixpoint(
     changed-count drops below the partition count the wavefront is narrow
     and fixpoint is near, so the chain halves per call (VERDICT r3 #4) —
     long chains amortize the serial tax over the bulk phase, short chains
-    cap the no-op overshoot at the tail.
-
-    Tail consolidation (VERDICT r4 #2): once ``CONSOLIDATE_AFTER``
-    distributed supersteps have run, if the merged blocks fit one task
-    (``BlockStore.fits_one_task``), the next call runs the remaining
-    cross-partition cascade to global fixpoint inside one merged-block task
-    instead of tens more ~0.5 s grouped-map waves (:func:`_tail_solve`).
-    The budget keeps this honest at scale: above it the distributed waves
-    continue; below it the tail is provably a single-task problem."""
-    consolidate_ok = store.fits_one_task()
+    cap the no-op overshoot at the tail."""
     cur_chain = chain_every
 
     def step(carry: DataFrame, i: int) -> StepResult:
         nonlocal cur_chain
         chain = min(cur_chain, max_iter - i)
-        if consolidate_ok:
-            # stop the chain exactly at the consolidation trigger
-            # (budget-disabled runs keep full-length chains)
-            chain = min(chain, CONSOLIDATE_AFTER - i)
         out = carry
         for j in range(i, i + chain):
             # state + messages + shadows feed the next superstep
@@ -306,15 +284,43 @@ def _hindex_fixpoint(
             out, i + chain >= 2 and changed == 0, truncated=True, supersteps=chain
         )
 
-    # from CONSOLIDATE_AFTER on, the distributed chains have ground the bulk
-    # value creep in parallel; the remaining cascade collapses into ONE task
-    # (its input is the kind-0 state: estimates are all it needs)
-    tail = one_task_tail(
-        store, OUT_SCHEMA, CONSOLIDATE_AFTER, (0,), _tail_solve(cap), step
+    return step
+
+
+def _hindex_fixpoint(
+    spark: SparkSession, edges: DataFrame, num_parts: int | None, cap: int | None,
+    max_iter: int, chain_every: int, blocks_dir: str | None,
+) -> DataFrame:
+    """The h-index fixpoint, capped at ``cap``, on the symmetrized,
+    self-loop-free graph through :func:`plans.block_cache.csr_fixpoint`:
+    :func:`_one_task_solve` below the one-task budget, the distributed
+    chains of :func:`_hindex_step` above it — with a cap, then the finalize
+    pass. Returns the kind-0 result rows: ``a`` is the estimate or, with a
+    cap, the induced degree of a k-core member. Raises ``RuntimeError``
+    when ``max_iter`` supersteps end with estimates still changing."""
+    if num_parts is None:
+        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+    def finalize(carry: DataFrame, store: BlockStore) -> DataFrame:
+        fin = _make_finalize_kernel(cap, store.path)
+        return carry.groupby("part").applyInPandas(fin, schema=OUT_SCHEMA).localCheckpoint(
+            eager=True
+        )
+
+    info = csr_fixpoint(
+        SuperstepLoop(spark, max_iter=max_iter, name="k-core", must_converge=True),
+        OUT_SCHEMA,
+        owned_edges(symmetrized(edges), lambda c: vertex_part(c, num_parts)),
+        _one_task_solve(cap),
+        lambda store: _hindex_step(store, cap, max_iter, chain_every, num_parts),
+        sym=True,
+        blocks_dir=blocks_dir,
+        prefix="goffish_kcore_",
+        finalize=None if cap is None else finalize,
     )
-    return SuperstepLoop(
-        spark, max_iter=max_iter, name="k-core", must_converge=True
-    ).run(store.seed(spark, OUT_SCHEMA), tail).state
+    # a filter over the loop's (or the finalize pass's) checkpoint: it
+    # outlives the block store
+    return info.state.filter(F.col("kind") == 0)
 
 
 def core_numbers(
@@ -328,20 +334,17 @@ def core_numbers(
     graph induced by ``edges`` (self-loops ignored). Raises ``RuntimeError``
     if ``max_iter`` supersteps do not reach the fixpoint.
 
-    The CSR blocks are written once to the block store and served from the
-    worker-local cache across the (many) global rounds of the full
-    decomposition. ``blocks_dir`` points the store at executor-visible
-    storage — REQUIRED on a multi-executor cluster; when given, the
-    directory is kept (it doubles as the block checkpoint)."""
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = build_csr_blocks_sym(spark, edges, num_parts)
-    with block_store(spark, blocks, blocks_dir, "goffish_kcore_") as store:
-        carry = _hindex_fixpoint(
-            spark, store, None, max_iter, CHAIN_CORE_NUMBERS, num_parts
-        )
-    # a filter over the loop's checkpoint: it outlives the block store
-    return carry.filter(F.col("kind") == 0).select("vid", F.col("a").alias("core"))
+    Below the one-task budget one task runs the whole fixpoint and one
+    superstep is counted. Above it the CSR blocks are written once to the
+    block store and served from the worker-local cache across the (many)
+    global rounds of the full decomposition. ``blocks_dir`` points the
+    store at executor-visible storage — REQUIRED on a multi-executor
+    cluster; when given, the directory is kept (it doubles as the block
+    checkpoint)."""
+    carry = _hindex_fixpoint(
+        spark, edges, num_parts, None, max_iter, CHAIN_CORE_NUMBERS, blocks_dir
+    )
+    return carry.select("vid", F.col("a").alias("core"))
 
 
 def _make_finalize_kernel(cap: int, blocks_path: str):
@@ -390,23 +393,14 @@ def k_core(
 
     Runs the kernel with estimates capped at k, which converges to
     min(core, k) — distributed peeling. The cap kills cascade depth: a
-    handful of global rounds vs the full decomposition's tens. A finalize
-    kernel pass computes induced degrees from the fixpoint boundary channel,
-    so no edge-table re-join is needed.
+    handful of global rounds vs the full decomposition's tens. Above the
+    one-task budget a finalize kernel pass computes induced degrees from
+    the fixpoint boundary channel, so no edge-table re-join is needed;
+    below it the one task computes them from its merged CSR.
 
     Execution shape is shared with :func:`core_numbers` (VERDICT r3 #2: this
     query had kept the round-1 plan while its sibling got the optimizations),
     including ``blocks_dir``; the chain starts at ``CHAIN_K_CORE`` supersteps
     per job."""
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = build_csr_blocks_sym(spark, edges, num_parts)
-    with block_store(spark, blocks, blocks_dir, "goffish_kcore_") as store:
-        carry = _hindex_fixpoint(spark, store, k, 1000, CHAIN_K_CORE, num_parts)
-        fin = _make_finalize_kernel(k, store.path)
-        return (
-            carry.groupby("part")
-            .applyInPandas(fin, schema=OUT_SCHEMA)
-            .select("vid", F.col("a").alias("deg"))
-            .localCheckpoint(eager=True)
-        )
+    carry = _hindex_fixpoint(spark, edges, num_parts, k, 1000, CHAIN_K_CORE, blocks_dir)
+    return carry.select("vid", F.col("a").alias("deg"))

@@ -325,7 +325,9 @@ def lpa_csr(
     ``lpa_supersteps`` for introspection."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = build_csr_blocks_sym(spark, edges, num_parts, part_expr=part_expr)
+    blocks = build_csr_blocks_sym(
+        spark, edges, num_parts, persist=False, part_expr=part_expr
+    )
 
     with block_store(spark, blocks, blocks_dir, "goffish_lpa_") as store:
         def step(carry: DataFrame, i: int) -> StepResult:

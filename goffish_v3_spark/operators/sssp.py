@@ -21,6 +21,9 @@ O(Σ relaxations), not O(supersteps × |E|). Halts when no distance improves
 
 Parent tie-break: smallest (dist, parent) pair — deterministic, so results
 are partition-count invariant.
+
+``sssp_csr`` is the subgraph-centric engine over CSR blocks; below the
+one-task budget it runs these same sweeps in one task over the merged graph.
 """
 
 from __future__ import annotations
@@ -29,10 +32,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.block_cache import block_store, load_block
-from goffish_v3_spark.plans.csr import build_csr_blocks, carry_frame
+from goffish_v3_spark.plans.block_cache import BlockStore, csr_fixpoint, load_block
+from goffish_v3_spark.plans.csr import MergedCsr, carry_frame, owned_edges
+from goffish_v3_spark.plans.partitioner import vertex_part
 from goffish_v3_spark.plans.superstep import (
-    StepResult, SuperstepLoop, observed_checkpoint,
+    StepFn, StepResult, SuperstepLoop, observed_checkpoint,
 )
 
 INF = float("inf")
@@ -134,6 +138,53 @@ def sssp(
     return info.state.select("vid", "dist", "parent")
 
 
+def _seed(vids: np.ndarray, source: int):
+    """Superstep 0's ``(dist, parent, frontier)`` over ``vids``: every
+    distance inf but the source's 0 — a source absent from ``vids`` leaves
+    them all inf — every parent -1, and the source alone on the frontier."""
+    frontier = vids == source
+    return np.where(frontier, 0.0, np.inf), np.full(len(vids), -1, dtype=np.int64), frontier
+
+
+def _improve(
+    dist: np.ndarray, parent: np.ndarray, idx: np.ndarray, nd: np.ndarray, np_: np.ndarray
+) -> np.ndarray:
+    """Apply candidates ``(nd, np_)`` for positions ``idx``: the min ``(dist,
+    parent)`` pair per position, taken on strict improvement — :func:`sssp`'s
+    merge. Returns the improved positions."""
+    ok = nd < dist[idx]
+    idx, nd, np_ = idx[ok], nd[ok], np_[ok]
+    order = np.lexsort((np_, nd, idx))
+    idx, nd, np_ = idx[order], nd[order], np_[order]
+    first = np.concatenate(([True], idx[1:] != idx[:-1]))[: len(idx)]
+    dist[idx[first]] = nd[first]
+    parent[idx[first]] = np_[first]
+    return idx[first]
+
+
+def _relax(
+    seg: np.ndarray, dst: np.ndarray, w: np.ndarray, vids: np.ndarray,
+    dist: np.ndarray, parent: np.ndarray, frontier: np.ndarray,
+) -> np.ndarray:
+    """Frontier Bellman-Ford sweeps to fixpoint over the edges ``seg[e] →
+    dst[e]`` (positions into ``dist``) of weight ``w[e]``, each sweep one
+    superstep of :func:`sssp`: the previous sweep's improved vertices
+    relax their out-edges, with their ``vids`` entry as parent. Starts from
+    the mask ``frontier`` and returns the mask of vertices improved,
+    ``frontier`` included."""
+    changed = frontier.copy()
+    while len(seg):
+        act = frontier[seg]
+        s = seg[act]
+        improved = _improve(dist, parent, dst[act], dist[s] + w[act], vids[s])
+        if not len(improved):
+            break
+        frontier = np.zeros(len(dist), dtype=bool)
+        frontier[improved] = True
+        changed |= frontier
+    return changed
+
+
 def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
     """One superstep of subgraph-centric SSSP: apply inbound boundary
     candidates, relax the partition-local subgraph **to convergence**
@@ -151,63 +202,25 @@ def _make_sssp_kernel(superstep: int, source: int, blocks_path: str):
         n = blk.n_local
 
         if superstep == 0:
-            dist = np.full(n, np.inf)
-            parent = np.full(n, -1, dtype=np.int64)
+            dist, parent, changed = _seed(blk.local_vids, source)
         else:
             dist, parent = blk.per_vertex(sm_pdf, 0, d=np.float64, p=np.int64)
-
-        changed = np.zeros(n, dtype=bool)
-        if superstep == 0 and n:
-            pos = np.searchsorted(blk.local_vids, source)
-            if pos < n and blk.local_vids[pos] == source:
-                dist[pos] = 0.0
-                changed[pos] = True
+            changed = np.zeros(n, dtype=bool)
 
         # deliver inbound candidates: min (d, p) per vid, strict improvement
         msg_rows = sm_pdf[sm_pdf["kind"] == 1]
-        if len(msg_rows):
-            mvid = msg_rows["vid"].to_numpy(dtype=np.int64)
-            md = msg_rows["d"].to_numpy(dtype=np.float64)
-            mp = msg_rows["p"].to_numpy(dtype=np.int64)
-            order = np.lexsort((mp, md, mvid))
-            mvid, md, mp = mvid[order], md[order], mp[order]
-            first = np.concatenate(([True], mvid[1:] != mvid[:-1]))
-            mvid, md, mp = mvid[first], md[first], mp[first]
-            idx = blk.pos(mvid)
-            imp = md < dist[idx]
-            dist[idx[imp]] = md[imp]
-            parent[idx[imp]] = mp[imp]
-            changed[idx[imp]] = True
+        changed[_improve(
+            dist, parent, blk.pos(msg_rows["vid"].to_numpy(dtype=np.int64)),
+            msg_rows["d"].to_numpy(dtype=np.float64), msg_rows["p"].to_numpy(dtype=np.int64),
+        )] = True
 
         # local relaxation to fixpoint (P3): frontier sweeps over local edges
         seg = np.repeat(np.arange(n, dtype=np.int64), blk.out_degrees)
         local_e = blk.edge_dst_local >= 0
-        l_seg = seg[local_e]
-        l_dst = blk.edge_dst_local[local_e]
-        l_w = blk.edge_w[local_e]
-        l_pvid = blk.local_vids[l_seg]
-        frontier = changed.copy()
-        while frontier.any() and len(l_seg):
-            act = frontier[l_seg]
-            if not act.any():
-                break
-            s, dsts = l_seg[act], l_dst[act]
-            nd = dist[s] + l_w[act]
-            np_ = l_pvid[act]
-            ok = nd < dist[dsts]
-            dsts, nd, np_ = dsts[ok], nd[ok], np_[ok]
-            frontier = np.zeros(n, dtype=bool)
-            if len(dsts) == 0:
-                break
-            order = np.lexsort((np_, nd, dsts))
-            dsts, nd, np_ = dsts[order], nd[order], np_[order]
-            first = np.concatenate(([True], dsts[1:] != dsts[:-1]))
-            dsts, nd, np_ = dsts[first], nd[first], np_[first]
-            imp = nd < dist[dsts]
-            dist[dsts[imp]] = nd[imp]
-            parent[dsts[imp]] = np_[imp]
-            frontier[dsts[imp]] = True
-            changed |= frontier
+        changed = _relax(
+            seg[local_e], blk.edge_dst_local[local_e], blk.edge_w[local_e],
+            blk.local_vids, dist, parent, changed,
+        )
 
         # boundary candidates from changed vertices, min-combined per target
         out_part = np.empty(0, dtype=np.int32)
@@ -265,34 +278,51 @@ def sssp_csr(
     network needs O(meta-diameter) rounds where the DataFrame Bellman-Ford
     needs 10³ (reference rationale: SingleSourceShortestPath.java:407-536).
 
-    Supersteps fetch their CSR block from the worker-local block store
-    (plans.block_cache, the load-once-compute-many shape); ``blocks_dir``
-    points the store at executor-visible storage — REQUIRED on a
-    multi-executor cluster.
+    :func:`plans.block_cache.csr_fixpoint` picks the path. Below the
+    one-task budget one task runs :func:`_relax` over every block merged —
+    :func:`sssp`'s own synchronous sweeps, so distances and parents equal
+    :func:`sssp`'s — as one superstep, in one job after the sizing job.
+    Above it the supersteps fetch their CSR block from the worker-local
+    block store (plans.block_cache, the load-once-compute-many shape);
+    ``blocks_dir`` points the store at executor-visible storage — REQUIRED
+    on a multi-executor cluster.
     """
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = _prep_edges(edges, weighted, directed)
-    blocks = build_csr_blocks(spark, e, num_parts, part_expr=part_expr)
 
-    with block_store(spark, blocks, blocks_dir, "goffish_sssp_") as store:
+    def solve(m: MergedCsr):
+        dist, parent, frontier = _seed(m.vids, source)
+        seg = np.repeat(np.arange(m.n, dtype=np.int64), np.diff(m.indptr))
+        _relax(seg, m.dst_idx, m.w, m.vids, dist, parent, frontier)
+        return 1, [(m.owner, 0, m.vids, {"d": dist, "p": parent})]
+
+    def make_step(store: BlockStore) -> StepFn:
         def step(carry: DataFrame, i: int) -> StepResult:
-            kernel = _make_sssp_kernel(i, source, store.path)
             out, improved = observed_checkpoint(
-                carry.groupby("part").applyInPandas(kernel, schema=SSSP_SCHEMA),
+                carry.groupby("part").applyInPandas(
+                    _make_sssp_kernel(i, source, store.path), schema=SSSP_SCHEMA
+                ),
                 F.sum(F.when(F.col("kind") == 2, F.col("p"))),
             )
-            return StepResult(
-                out.filter(F.col("kind") != 2), not improved, truncated=True
-            )
+            return StepResult(out.filter(F.col("kind") != 2), not improved, truncated=True)
 
-        info = SuperstepLoop(
-            spark, max_iter=max_iter, name="sssp_csr", must_converge=True
-        ).run(store.seed(spark, SSSP_SCHEMA), step)
+        return step
+
+    info = csr_fixpoint(
+        SuperstepLoop(spark, max_iter=max_iter, name="sssp_csr", must_converge=True),
+        SSSP_SCHEMA,
+        owned_edges(
+            _prep_edges(edges, weighted, directed),
+            part_expr or (lambda c: vertex_part(c, num_parts)),
+        ),
+        solve,
+        make_step,
+        blocks_dir=blocks_dir,
+        prefix="goffish_sssp_",
+    )
     # a filter over the loop's checkpoint: it outlives the block store
     result = info.state.filter(F.col("kind") == 0).select(
         "vid", F.col("d").alias("dist"), F.col("p").alias("parent")
     )
     result.sssp_supersteps = info.supersteps  # introspection for tests/bench
     return result
-

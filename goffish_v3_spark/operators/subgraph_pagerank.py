@@ -19,14 +19,14 @@ convergence gate, but executed the way GoFFish executes it:
   (GraphJobRunner.java:269-331);
 - the ε-convergence gate is the reference's all-deltas ≤ ε (PageRank.java:
   108-116), collected driver-side from per-partition delta rows;
-- one task: when the graph fits one task (``plans.block_cache.
-  fits_one_task`` on the edge table's row and distinct-vertex counts),
-  the whole fixpoint runs as ONE Spark job from the edge table — one task
-  assembles every part's block (``plans.csr.assemble_blocks``), merges
-  them and runs superstep 0 (seed or warm start) and every later superstep
-  over the merged CSR, with no block store and no distributed superstep:
-  the subgraph-centric premise carried to the whole graph once it fits one
-  subgraph (same blocks, same update, same gate, same superstep count).
+- one task: when the graph fits one task, the shared CSR fixpoint driver
+  (``plans.block_cache.csr_fixpoint``) runs the whole fixpoint as ONE
+  Spark job from the edge table — one task assembles and merges every
+  part's block and :func:`_tail_solve` runs superstep 0 (seed or warm
+  start) and every later superstep over the merged CSR, with no block
+  store and no distributed superstep: the subgraph-centric premise carried
+  to the whole graph once it fits one subgraph (same blocks, same update,
+  same gate, same superstep count).
 
 Above that budget the blocks are built distributed, written to the block
 store once, and each superstep shuffles only boundary contributions
@@ -43,20 +43,13 @@ a=supersteps it ran).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.block_cache import (
-    BlockStore, block_store, fits_one_task, load_block,
-)
-from goffish_v3_spark.plans.csr import (
-    CsrBlock, MergedCsr, assemble_blocks, build_csr_blocks, carry_frame, owned_edges,
-)
+from goffish_v3_spark.plans.block_cache import BlockStore, csr_fixpoint, load_block
+from goffish_v3_spark.plans.csr import CsrBlock, MergedCsr, carry_frame, owned_edges
 from goffish_v3_spark.plans.partitioner import vertex_part
-from goffish_v3_spark.plans.superstep import (
-    StepResult, SuperstepLoop, no_aqe, observed_checkpoint,
-)
+from goffish_v3_spark.plans.superstep import StepResult, SuperstepLoop, observed_checkpoint
 
 OUT_SCHEMA = "part int, kind int, vid long, a double, b double"
 
@@ -212,41 +205,6 @@ def _tail_solve(
     return done, ranks
 
 
-def _one_task_step(alpha, eps, total, gated, local_init, given):
-    """The SuperstepLoop step that runs the whole fixpoint in ONE task: its
-    state is the :func:`plans.csr.owned_edges` rows or, when ``given``, the
-    caller's block rows. One ``repartition(1).mapInPandas`` job assembles
-    (or deserializes) every part's block, merges them and runs
-    :func:`_tail_solve`; a kind-2 row carries the superstep count to the
-    checkpoint's Observation."""
-
-    def fn(it):
-        pdf = pd.concat(list(it) or [pd.DataFrame()], ignore_index=True)
-        if len(pdf) == 0:  # the empty graph: superstep 0 only
-            yield carry_frame(OUT_SCHEMA, (0, 2, -1, {"a": 1}))
-            return
-        if given:
-            blocks = [CsrBlock(r) for r in pdf.sort_values("part").to_dict("records")]
-        else:
-            blocks = assemble_blocks(pdf)
-        m = MergedCsr(blocks)
-        steps, ranks = _tail_solve(m, alpha, eps, total, gated, local_init)
-        yield carry_frame(
-            OUT_SCHEMA,
-            (m.owner, 0, m.vids, {"a": ranks}),
-            (blocks[0].part, 2, -1, {"a": steps}),
-        )
-
-    def step(source: DataFrame, i: int) -> StepResult:
-        out, steps = observed_checkpoint(
-            source.repartition(1).mapInPandas(fn, schema=OUT_SCHEMA),
-            F.max(F.when(F.col("kind") == 2, F.col("a"))),
-        )
-        return StepResult(out, True, truncated=True, supersteps=int(steps))
-
-    return step
-
-
 def csr_pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -269,43 +227,31 @@ def csr_pagerank(
     — the superstep-saving inner loop; the global phase still converges to
     the plain PageRank fixpoint.
 
-    One aggregate job sizes the graph (edge rows and distinct vids, or the
-    given blocks' ``n_edges``/``n_local``). When it fits one task
-    (``plans.block_cache.fits_one_task``) one more job runs everything
-    (:func:`_one_task_step`). Above the budget the supersteps fetch their
-    CSR block from the worker-local block store (plans.block_cache), so
-    only state and messages cross the shuffle; ``blocks_dir``, the store's
-    directory, must point at executor-visible storage on a multi-executor
-    cluster."""
+    :func:`plans.block_cache.csr_fixpoint` picks the path: below the
+    one-task budget one more job runs everything (:func:`_tail_solve`);
+    above it the supersteps fetch their CSR block from the worker-local
+    block store (plans.block_cache), so only state and messages cross the
+    shuffle; ``blocks_dir``, the store's directory, must point at
+    executor-visible storage on a multi-executor cluster."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    given = blocks is not None
     gated = fixed_iterations is None
     total = max_iter if gated else fixed_iterations + 1
-    loop = SuperstepLoop(spark, max_iter=total, name="csr_pagerank")
-    with no_aqe(spark):  # one job: AQE would run each shuffle stage as its own
-        if given:
-            n_edges, n_vertices = blocks.agg(F.sum("n_edges"), F.sum("n_local")).first()
-        else:
-            n_ends, n_vertices = (
-                edges.select(F.explode(F.array("src", "dst")).alias("vid"))
-                .agg(F.count("*"), F.count_distinct("vid"))
-                .first()
-            )
-            # raw rows, not deduplicated: never below the blocks' n_edges
-            n_edges = n_ends // 2
 
-    if fits_one_task(n_edges or 0, n_vertices or 0):
-        source = blocks if given else owned_edges(edges, lambda c: vertex_part(c, num_parts))
-        info = loop.run(source, _one_task_step(alpha, eps, total, gated, local_init, given))
-    else:
-        if not given:
-            blocks = build_csr_blocks(spark, edges, num_parts)
-        # a caller's blocks stay persisted; blocks built here are released
-        with block_store(spark, blocks, blocks_dir, "goffish_pr_", release=not given) as store:
-            info = loop.run(
-                store.seed(spark, OUT_SCHEMA), _csr_step(store, alpha, eps, gated, local_init)
-            )
+    def solve(m: MergedCsr):
+        steps, ranks = _tail_solve(m, alpha, eps, total, gated, local_init)
+        return steps, [(m.owner, 0, m.vids, {"a": ranks})]
+
+    info = csr_fixpoint(
+        SuperstepLoop(spark, max_iter=total, name="csr_pagerank"),
+        OUT_SCHEMA,
+        owned_edges(edges, lambda c: vertex_part(c, num_parts)),
+        solve,
+        lambda store: _csr_step(store, alpha, eps, gated, local_init),
+        blocks=blocks,
+        blocks_dir=blocks_dir,
+        prefix="goffish_pr_",
+    )
     # the loop's state is a filter over a checkpointed frame: it outlives
     # the block store without another checkpoint
     result = info.state.filter(F.col("kind") == 0).select(

@@ -2,9 +2,9 @@
 
 The reference holds each partition's object graph in JVM heap for the whole
 job (hama GraphJobRunner.java:105-126 loads once, computes many supersteps).
-This module gives the CSR operators (``lpa_csr``, ``sssp_csr``,
-``core_numbers``, ``k_core``, and ``csr_pagerank``/``subgraph_rank`` above
-the one-task budget) that load-once shape:
+This module gives the CSR operators (``lpa_csr``, and ``csr_pagerank``/
+``subgraph_rank``, ``sssp_csr``, ``core_numbers`` and ``k_core`` above the
+one-task budget) that load-once shape:
 
 - :func:`block_store` writes the blocks ONCE to a parquet directory
   partitioned by ``part``, reading their sizes in the same job, and owns
@@ -17,13 +17,17 @@ the one-task budget) that load-once shape:
   :class:`CsrBlock` in the (reused) Python worker process;
 - the cache is LRU-capped so a worker that serves many partitions holds at
   most ``MAX_BLOCKS`` blocks (~per-partition CSR size each);
-- :func:`one_task_tail` finishes a fixpoint inside one task over every
-  block merged once the merge fits ``CONSOLIDATE_BUDGET_BYTES``; k-core,
-  after ``kcore.CONSOLIDATE_AFTER``, is its user. :func:`fits_one_task` is
-  that byte rule. PageRank applies it to the edge table before any block
-  exists and, below it, runs whole in one task with no store
-  (``operators.subgraph_pagerank``); the components meta phase
-  (``operators.spanning_forest.meta_forest``) applies it to its meta table.
+- :func:`csr_fixpoint` is the one driver of the fixpoint CSR engines
+  (``csr_pagerank``/``subgraph_rank``, ``sssp_csr``, ``core_numbers``/
+  ``k_core``). It sizes the owner-tagged edge rows in one job. When the
+  graph fits one task (:func:`fits_one_task`, the byte rule against
+  ``CONSOLIDATE_BUDGET_BYTES``), the engine's solve runs over every block
+  merged in ONE task and one job, with no store; otherwise the blocks are
+  built from the same rows, the store is written and the engine's
+  distributed supersteps run. The components meta phase
+  (``operators.spanning_forest.meta_forest``) applies the same rule to its
+  meta table; ``lpa_csr``, whose labels depend on superstep synchrony,
+  always runs distributed.
 
 Cluster shape: each executor's python workers cache only the partitions
 scheduled onto them; with stable partitioning the scheduler tends to
@@ -44,12 +48,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from goffish_v3_spark.plans.csr import CsrBlock, MergedCsr, carry_frame, schema_dtypes
-from goffish_v3_spark.plans.superstep import StepFn, StepResult, observed_checkpoint
+from goffish_v3_spark.plans.csr import (
+    CsrBlock, MergedCsr, assemble_blocks, blocks_from_owned, carry_frame, schema_dtypes,
+)
+from goffish_v3_spark.plans.superstep import (
+    RunInfo, StepFn, StepResult, SuperstepLoop, no_aqe, observed_checkpoint,
+)
 
 MAX_BLOCKS = 64
-# tail consolidation: a fixpoint may finish inside one task that merges every
-# block when the merged in-memory CSR fits this many bytes
+# a fixpoint runs inside one task that merges every block when the merged
+# in-memory CSR fits this many bytes (fits_one_task)
 CONSOLIDATE_BUDGET_BYTES = 512 << 20
 
 _CACHE: "OrderedDict[tuple[str, int, tuple], CsrBlock]" = OrderedDict()
@@ -101,17 +109,13 @@ def fits_one_task(n_edges: int, n_vertices: int) -> bool:
 
 @dataclass(frozen=True)
 class BlockStore:
-    """A written block store: its path plus the per-part sizes collected
-    while writing (the drivers seed one row per part and budget on sizes)."""
+    """A written block store: its path, its parts (the drivers seed one row
+    per part) and the vertex count (PageRank's base rank), read while
+    writing."""
 
     path: str
     parts: list[int]
     n_vertices: int
-    n_edges: int
-
-    def fits_one_task(self) -> bool:
-        """Whether every block merged into one task fits (:func:`fits_one_task`)."""
-        return fits_one_task(self.n_edges, self.n_vertices)
 
     def seed(self, spark, schema: str) -> DataFrame:
         """Superstep 0's input in a kernel's ``schema`` (``part, kind, vid,
@@ -123,17 +127,14 @@ class BlockStore:
 
 
 @contextmanager
-def block_store(
-    spark, blocks: DataFrame, blocks_dir: str | None, prefix: str,
-    release: bool = True,
-):
+def block_store(spark, blocks: DataFrame, blocks_dir: str | None, prefix: str):
     """Write ``blocks`` to the block store for the duration of a CSR
-    operator; yields a :class:`BlockStore`.
+    operator; yields a :class:`BlockStore`. Kernels read the store, so the
+    write is the blocks' one use and they need not be persisted.
 
     ``blocks_dir=None`` uses a fresh local-mode tempdir named ``prefix*``,
     removed on exit whether the operator returns or raises; an explicit
-    ``blocks_dir`` is kept. ``release`` unpersists ``blocks`` once written —
-    kernels read the store, so the cached DataFrame has no further use."""
+    ``blocks_dir`` is kept."""
     path, owned = _resolve_blocks_dir(spark, blocks_dir, prefix)
     try:
         # the block sizes ride the write job as an Observation
@@ -143,18 +144,14 @@ def block_store(
                 obs,
                 F.collect_list("part").alias("parts"),
                 F.sum("n_local").alias("n_vertices"),
-                F.sum("n_edges").alias("n_edges"),
             ),
             path,
         )
         stats = obs.get
-        if release:
-            blocks.unpersist()
         yield BlockStore(
             path=path,
             parts=sorted(int(p) for p in stats["parts"]),
             n_vertices=int(stats["n_vertices"] or 0),
-            n_edges=int(stats["n_edges"] or 0),
         )
     finally:
         if owned:
@@ -251,55 +248,84 @@ def clear_cache() -> None:
     _CACHE.clear()
 
 
-def one_task_tail(
-    store: BlockStore, schema: str, after: int, kinds: tuple, solve, step: StepFn
-) -> StepFn:
-    """``step`` as a superstep driver's step function that, once superstep
-    ``after`` is reached and the merged blocks fit one task
-    (:meth:`BlockStore.fits_one_task`), instead finishes the fixpoint inside
-    ONE task over every block merged (:class:`plans.csr.MergedCsr`) — the
-    subgraph-centric premise carried to the whole graph once it fits one
-    subgraph. The tail is the loop's last call. k-core's tail uses it;
-    PageRank needs no store below the budget and no tail above it.
+def csr_fixpoint(
+    loop: SuperstepLoop,
+    schema: str,
+    rows: DataFrame,
+    solve,
+    make_step,
+    blocks: DataFrame | None = None,
+    sym: bool = False,
+    blocks_dir: str | None = None,
+    prefix: str = "goffish_",
+    finalize=None,
+) -> RunInfo:
+    """Run a fixpoint CSR engine on the path its graph's size picks; returns
+    ``loop``'s :class:`RunInfo`. Callers read the kind-0 rows of its state.
 
-    The tail task gets the carry's rows of ``kinds``, aligns their kind-0
-    state (every numeric value column of ``schema``) to the merged vertex
-    order and calls ``solve(m, state, pdf)`` with the merged CSR, that
-    ``{column: array}`` state and the rows as one pandas frame. ``solve``
-    returns ``(supersteps, cols, sections)``: how many supersteps it ran,
-    the per-vertex output columns in merged order (emitted as kind-0 rows
-    to each vertex's owner part) and any further :func:`plans.csr.
-    carry_frame` sections. One kind-2 row carries ``a = supersteps`` to the
-    checkpoint's Observation, so the whole tail is one Spark job and the
-    ``StepResult`` counts the supersteps it ran."""
-    consolidate = store.fits_one_task()
-    value_cols = {
-        name: dtype
-        for name, dtype in schema_dtypes(schema).items()
-        if name not in ("part", "kind", "vid") and dtype is not object
-    }
+    The input is owner-tagged edge ``rows`` (``plans.csr.owned_edges``, of
+    ``plans.csr.symmetrized`` edges when ``sym``) or, when given, a
+    caller's ``blocks``. One aggregate job sizes it: rows and distinct vids
+    over src ∪ dst (raw rows are never fewer than the blocks' deduplicated
+    edges), or the blocks' ``n_edges``/``n_local`` sums. The rows are not
+    persisted for the next job: on an already cached edge table the cache
+    build cost more than re-reading it.
+
+    - When it fits one task (:func:`fits_one_task`), one ``repartition(1)
+      .mapInPandas`` job assembles every part's block, merges them
+      (:class:`plans.csr.MergedCsr`) and calls ``solve(m) -> (supersteps,
+      sections)``, the ``plans.csr.carry_frame`` sections of its result. A
+      kind-2 row carries the superstep count, in the schema's first value
+      column, to the checkpoint's Observation. No block store is written.
+    - Otherwise the blocks built from the same rows go to the
+      :func:`block_store` and ``loop`` runs ``make_step(store)`` from its
+      seed rows; ``finalize(state, store)``, when given, turns the final
+      carry into the result while the store exists."""
+    spark = loop.spark
+    given = blocks is not None
+    with no_aqe(spark):  # one job: AQE would run each shuffle stage as its own
+        if given:
+            n_edges, n_vertices = blocks.agg(F.sum("n_edges"), F.sum("n_local")).first()
+        else:
+            n_ends, n_vertices = (
+                rows.select(F.explode(F.array("src", "dst")).alias("vid"))
+                .agg(F.count("*"), F.count_distinct("vid"))
+                .first()
+            )
+            n_edges = n_ends // 2
+    if fits_one_task(n_edges or 0, n_vertices or 0):
+        return loop.run(blocks if given else rows, _one_task_step(schema, solve, given))
+    if not given:
+        blocks = blocks_from_owned(rows, sym=sym, persist=False)
+    with block_store(spark, blocks, blocks_dir, prefix) as store:
+        info = loop.run(store.seed(spark, schema), make_step(store))
+        if finalize is not None:
+            info.state = finalize(info.state, store)
+        return info
+
+
+def _one_task_step(schema: str, solve, given: bool) -> StepFn:
+    """:func:`csr_fixpoint`'s one step below the budget. The empty graph
+    yields no rows and counts one superstep."""
+    metric = list(schema_dtypes(schema))[3]
 
     def fn(it):
-        pdf = pd.concat(list(it), ignore_index=True)
-        m = MergedCsr([load_block(store.path, p) for p in store.parts])
-        state = dict(zip(value_cols, m.per_vertex(pdf, 0, **value_cols)))
-        steps, cols, sections = solve(m, state, pdf)
-        yield carry_frame(
-            schema,
-            (m.owner, 0, m.vids, cols),
-            *sections,
-            (store.parts[0], 2, -1, {"a": steps}),
-        )
+        pdf = pd.concat(list(it) or [pd.DataFrame()], ignore_index=True)
+        if len(pdf) == 0:
+            yield carry_frame(schema, (0, 2, -1, {metric: 1}))
+            return
+        if given:
+            blocks = [CsrBlock(r) for r in pdf.sort_values("part").to_dict("records")]
+        else:
+            blocks = assemble_blocks(pdf)
+        steps, sections = solve(MergedCsr(blocks))
+        yield carry_frame(schema, *sections, (blocks[0].part, 2, -1, {metric: steps}))
 
-    def run(carry: DataFrame, i: int) -> StepResult:
-        if not (consolidate and i >= after):
-            return step(carry, i)
+    def step(source: DataFrame, i: int) -> StepResult:
         out, steps = observed_checkpoint(
-            carry.filter(F.col("kind").isin(*kinds))
-            .repartition(1)
-            .mapInPandas(fn, schema=schema),
-            F.max(F.when(F.col("kind") == 2, F.col("a"))),
+            source.repartition(1).mapInPandas(fn, schema=schema),
+            F.max(F.when(F.col("kind") == 2, F.col(metric))),
         )
         return StepResult(out, True, truncated=True, supersteps=int(steps))
 
-    return run
+    return step

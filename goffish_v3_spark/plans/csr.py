@@ -125,12 +125,13 @@ class CsrBlock(_VertexIndex):
 
 class MergedCsr(_VertexIndex):
     """Every partition's block merged into one global CSR, for a fixpoint
-    that finishes inside one task (tail consolidation).
+    that runs inside one task (``plans.block_cache.csr_fixpoint``).
 
     Each block's vertices occupy one contiguous range of global positions,
     in block order (``vids``, owned by partition ``owner``); ``indptr``/
     ``dst_idx`` index those positions, so a remote edge points at its dst's
-    slot in the owner's range."""
+    slot in the owner's range, and ``w`` holds the edge weights in the same
+    order."""
 
     __slots__ = ("blocks", "n", "vids", "owner", "indptr", "dst_idx", "_sort_idx", "_sorted")
 
@@ -156,6 +157,10 @@ class MergedCsr(_VertexIndex):
         self.indptr = np.concatenate(
             [[0]] + [np.diff(b.indptr) for b in blocks]
         ).cumsum()
+
+    @property
+    def w(self) -> np.ndarray:
+        return np.concatenate([b.edge_w for b in self.blocks])
 
     def _vid_sort(self):
         return self._sorted, self._sort_idx
@@ -342,9 +347,11 @@ def _assemble_block(
 
 def assemble_blocks(pdf: pd.DataFrame) -> list[CsrBlock]:
     """Every partition's :class:`CsrBlock`, in part order, from
-    :func:`owned_edges` rows — :func:`build_csr_blocks` inside one task,
+    :func:`owned_edges` rows — :func:`blocks_from_owned` inside one task,
     block for block array-equal to it: a part owns every vid tagged with it
-    as a src or a dst (sinks included) and the out-edges of those vids."""
+    as a src or a dst (sinks included) and the out-edges of those vids. On
+    :func:`symmetrized` rows every dst is also a src of its owner, so the
+    vertex sets equal the ``sym`` builder's."""
     src, dst, dst_part, w = _edge_arrays(pdf)
     part = pdf["part"].to_numpy(dtype=np.int32)
     vids = np.concatenate((src, dst))
@@ -398,47 +405,18 @@ def _build_block_sym(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def build_csr_blocks_sym(
-    spark: SparkSession,
-    edges: DataFrame,
-    num_parts: int,
-    persist: bool = True,
-    part_expr=None,
-) -> DataFrame:
-    """Symmetrized-graph CSR in ONE shuffle: edges(src, dst, w) → both
-    directions tagged with the owner partition → groupBy(part) builder kernel
-    (self-loops dropped, multi-edges min-w-deduped numpy-side).
-
-    The general :func:`build_csr_blocks` pays a groupBy(src,dst) dedup
-    exchange plus a distinct vertex scan before the partition shuffle; for
-    undirected algorithms (k-core, WCC-style) this builder collapses all of
-    that into the single partition exchange. ``part_expr`` overrides vertex
-    ownership as in :func:`build_csr_blocks` (locality-aware layouts)."""
-    part_of = part_expr or (lambda c: vertex_part(c, num_parts))
-    e = edges.select("src", "dst", F.col("w").cast("double").alias("w")).filter(
-        F.col("src") != F.col("dst")
-    )
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
-    tagged = sym.select(
-        "src",
-        "dst",
-        "w",
-        part_of(F.col("src")).alias("part"),
-        part_of(F.col("dst")).alias("dst_part"),
-    )
-    blocks = tagged.groupBy("part").applyInPandas(_build_block_sym, schema=CSR_SCHEMA)
-    if persist:
-        blocks = blocks.persist()
-        blocks.count()
-    return blocks
+def symmetrized(edges: DataFrame) -> DataFrame:
+    """``edges(src, dst, w)`` in both directions with self-loops dropped:
+    the undirected graph the symmetric engines (k-core, ``lpa_csr``) run
+    on; every vertex is a src of it."""
+    e = edges.select("src", "dst", "w").filter(F.col("src") != F.col("dst"))
+    return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
 
 
 def owned_edges(edges: DataFrame, part_of) -> DataFrame:
     """``edges(src, dst, w)`` tagged with the owner partition of each end,
     ``part_of(vid_col) -> Column``: ``(src, dst, w double, part, dst_part)``,
-    the rows :func:`build_csr_blocks` and :func:`assemble_blocks` build
+    the rows :func:`blocks_from_owned` and :func:`assemble_blocks` build
     blocks from — ownership is computed Spark-side, never re-hashed in
     numpy."""
     return edges.select(
@@ -450,6 +428,57 @@ def owned_edges(edges: DataFrame, part_of) -> DataFrame:
     )
 
 
+def blocks_from_owned(tagged: DataFrame, sym: bool = False, persist: bool = True) -> DataFrame:
+    """:func:`owned_edges` rows → one CSR block row per partition, in ONE
+    shuffle (groupBy(part) into the builder kernel, whose numpy-side min-w
+    multi-edge dedup is complete because every (src,dst) copy lands in
+    src's owner partition — the CSR and DataFrame engines agree on
+    out-degrees). With ``sym`` (:func:`symmetrized` rows) every vertex is a
+    src; otherwise one ``v`` row per distinct ``(vid, part)`` end puts
+    sinks in their block (the reference's sink-less Vertex objects)."""
+    if sym:
+        blocks = tagged.groupBy("part").applyInPandas(_build_block_sym, schema=CSR_SCHEMA)
+    else:
+        # v rows carry NO nulls: a null in an int64 column turns the whole
+        # pandas-side column float64 inside applyInPandas, silently
+        # corrupting full-range xxhash64 vids (> 2^53) — dst/dst_part mirror
+        # the vertex itself and are ignored by the builder for kind='v'
+        ends = tagged.select(F.col("src").alias("vid"), "part").unionByName(
+            tagged.select(F.col("dst").alias("vid"), F.col("dst_part").alias("part"))
+        )
+        v = ends.distinct().select(
+            F.col("vid").alias("src"),
+            F.col("vid").alias("dst"),
+            F.lit(0.0).alias("w"),
+            "part",
+            F.col("part").alias("dst_part"),
+            F.lit("v").alias("kind"),
+        )
+        blocks = (
+            tagged.withColumn("kind", F.lit("e"))
+            .unionByName(v)
+            .groupBy("part")
+            .applyInPandas(_build_block, schema=CSR_SCHEMA)
+        )
+    if persist:
+        blocks = blocks.persist()
+        blocks.count()
+    return blocks
+
+
+def build_csr_blocks_sym(
+    spark: SparkSession,
+    edges: DataFrame,
+    num_parts: int,
+    persist: bool = True,
+    part_expr=None,
+) -> DataFrame:
+    """:func:`build_csr_blocks` of the :func:`symmetrized` graph, with no
+    sink-vertex scan: a symmetric graph has no sinks."""
+    part_of = part_expr or (lambda c: vertex_part(c, num_parts))
+    return blocks_from_owned(owned_edges(symmetrized(edges), part_of), sym=True, persist=persist)
+
+
 def build_csr_blocks(
     spark: SparkSession,
     edges: DataFrame,
@@ -457,46 +486,14 @@ def build_csr_blocks(
     persist: bool = True,
     part_expr=None,
 ) -> DataFrame:
-    """edges(src, dst, w) → one CSR block row per partition (persisted).
+    """edges(src, dst, w) → one CSR block row per partition (persisted),
+    through :func:`owned_edges` and :func:`blocks_from_owned`.
 
-    Vertices are owned by ``part(vid) = pmod(xxhash64(vid), P)``; a vertex
-    with no out-edges still appears in its partition's block (rank sinks,
-    matching the reference's sink-less Vertex objects).
-
+    Vertices are owned by ``part(vid) = pmod(xxhash64(vid), P)``.
     ``part_expr(vid_col) -> Column`` overrides the ownership function —
     e.g. range partitioning for locality-aware layouts (the analogue of the
     reference's METIS pre-partitioning, SURVEY §4 P1), which is what makes
     partition-local computation collapse supersteps on high-diameter graphs.
     """
     part_of = part_expr or (lambda c: vertex_part(c, num_parts))
-    # multi-edge dedup (min weight, matching operators.pagerank's edge dedup
-    # so the CSR and DataFrame paths agree on out-degrees) happens numpy-side
-    # in the builder kernel: every (src,dst) copy lands in src's owner
-    # partition, so per-partition dedup is complete and the edge table rides
-    # a SINGLE exchange (the groupBy(part) below) instead of paying a
-    # groupBy(src,dst) exchange first. Trade-off: duplicate edge rows travel
-    # through the shuffle — on a mostly-duplicate input, dedup first.
-    e = owned_edges(edges, part_of).withColumn("kind", F.lit("e"))
-    # v rows carry NO nulls: a null in an int64 column turns the whole
-    # pandas-side column float64 inside applyInPandas, silently corrupting
-    # full-range xxhash64 vids (> 2^53) — dst/dst_part mirror the vertex
-    # itself and are ignored by the builder for kind='v'
-    v = (
-        edges.select(F.col("src").alias("vid"))
-        .unionByName(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .select(
-            F.col("vid").alias("src"),
-            F.col("vid").alias("dst"),
-            F.lit(0.0).alias("w"),
-            part_of(F.col("vid")).alias("part"),
-            part_of(F.col("vid")).alias("dst_part"),
-            F.lit("v").alias("kind"),
-        )
-    )
-    tagged = e.unionByName(v)
-    blocks = tagged.groupBy("part").applyInPandas(_build_block, schema=CSR_SCHEMA)
-    if persist:
-        blocks = blocks.persist()
-        blocks.count()
-    return blocks
+    return blocks_from_owned(owned_edges(edges, part_of), persist=persist)

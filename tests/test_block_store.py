@@ -50,10 +50,15 @@ def _graph(spark):
     return graphs.to_df(spark, graphs.barabasi_albert(60, m=2, seed=3))
 
 
+# the engines of plans.block_cache.csr_fixpoint: below the one-task budget
+# they write no block store
+ONE_TASK = ("subgraph_rank", "sssp_csr", "core_numbers", "k_core")
+
+
 def _store_path(monkeypatch, name):
-    """subgraph_rank writes a block store only above the one-task budget,
-    so its lifecycle is checked with the budget forced to 0."""
-    if name == "subgraph_rank":
+    """The csr_fixpoint engines write a block store only above the one-task
+    budget, so their lifecycle is checked with the budget forced to 0."""
+    if name in ONE_TASK:
         monkeypatch.setattr(block_cache, "CONSOLIDATE_BUDGET_BYTES", 0)
 
 
@@ -98,18 +103,29 @@ def test_explicit_blocks_dir_kept(spark, made_tempdirs, monkeypatch, tmp_path, n
     assert glob.glob(str(d / "part=*" / "*.parquet"))
 
 
-# Spark jobs per call on BA(60, 2, seed 3) at 4 parts, with the tail-
-# consolidation budget at its default and forced to 0. The superstep loop
-# adds no job of its own; lpa_csr, sssp_csr and core_numbers read their
-# result from the loop's last checkpoint instead of checkpointing it again,
-# and the block sizes ride the block-store write. Below the budget
-# subgraph_rank is one sizing job and one job from the edge table.
+@pytest.mark.parametrize("name", ONE_TASK)
+def test_one_task_path_makes_no_store(spark, made_tempdirs, name):
+    """Below the one-task budget the csr_fixpoint engines make no block
+    store tempdir."""
+    _, made = made_tempdirs
+    assert OPERATORS[name](spark, _graph(spark)).count() > 0
+    assert not _stores(made)
+
+
+# Spark jobs per call on BA(60, 2, seed 3) at 4 parts, with the one-task
+# budget at its default and forced to 0. The superstep loop adds no job of
+# its own; the CSR engines read their result from the loop's last
+# checkpoint instead of checkpointing it again, and the block sizes ride
+# the block-store write. Below the budget the csr_fixpoint engines are one
+# sizing job and one job from the edge table; above it the blocks built
+# from the sized rows are not persisted first, the store's write is their
+# one use.
 JOB_COUNTS = {
-    "subgraph_rank": (2, 13),
-    "lpa_csr": (10, 10),
-    "sssp_csr": (8, 8),
-    "core_numbers": (7, 6),
-    "k_core": (8, 8),
+    "subgraph_rank": (2, 10),
+    "lpa_csr": (7, 7),
+    "sssp_csr": (2, 6),
+    "core_numbers": (2, 4),
+    "k_core": (2, 6),
     "sssp": (8, 8),
     "wcc": (13, 17),
 }

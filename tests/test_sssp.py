@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from goffish_v3_spark.operators.sssp import sssp, sssp_csr
@@ -92,11 +93,19 @@ def test_csr_matches_df_engine(spark):
     assert a == b
 
 
-def test_csr_superstep_collapse_on_chain(spark):
+def _distributed(monkeypatch):
+    """Force sssp_csr onto its distributed path (one-task budget 0)."""
+    from goffish_v3_spark.plans import block_cache
+
+    monkeypatch.setattr(block_cache, "CONSOLIDATE_BUDGET_BYTES", 0)
+
+
+def test_csr_superstep_collapse_on_chain(spark, monkeypatch):
     """The P3 payoff: on a 400-hop chain range-partitioned into 8 blocks,
-    the kernel converges in O(#partitions) supersteps — the DataFrame
-    Bellman-Ford needs O(diameter) = 400 (reference rationale:
+    the distributed kernel converges in O(#partitions) supersteps — the
+    DataFrame Bellman-Ford needs O(diameter) = 400 (reference rationale:
     SingleSourceShortestPath.java:407-536 local-Dijkstra-per-superstep)."""
+    _distributed(monkeypatch)
     n = 400
     edges = [(u, v, 1.0) for u, v in graphs.chain(n)]
     df = graphs.to_df(spark, edges, weighted=True)
@@ -154,9 +163,11 @@ def test_df_engine_raises_without_convergence(spark):
         sssp(spark, df, source=0, max_iter=3)
 
 
-def test_csr_raises_without_convergence(spark):
+def test_csr_raises_without_convergence(spark, monkeypatch):
+    """Distributed path: the one task converges in its one superstep."""
     import pytest
 
+    _distributed(monkeypatch)
     df = graphs.to_df(spark, graphs.chain(10))
     with pytest.raises(RuntimeError, match="max_iter=1"):
         sssp_csr(spark, df, source=0, num_parts=4, max_iter=1)
@@ -170,3 +181,45 @@ def test_negative_weight_rejected_by_both_engines(spark):
         sssp(spark, df, source=0, weighted=True)
     with pytest.raises(ValueError, match="negative"):
         sssp_csr(spark, df, source=0, weighted=True, num_parts=2)
+
+
+def _dist_parent(res):
+    return {r.vid: (r.dist, r.parent) for r in res.collect()}
+
+
+def _ba_weighted():
+    return [(u, v, 1.0 + ((u * 7 + v) % 5)) for u, v in graphs.barabasi_albert(150, m=3)]
+
+
+WEIGHTED_DIRECTED = [(0, 1, 5.0), (0, 2, 1.0), (2, 1, 1.0), (1, 3, 1.0), (2, 3, 10.0)]
+
+
+@pytest.mark.parametrize(
+    "edges, directed", [(_ba_weighted(), False), (WEIGHTED_DIRECTED, True)],
+    ids=["ba_undirected", "weighted_directed"],
+)
+def test_csr_one_task_equals_df_engine(spark, monkeypatch, edges, directed):
+    """Below the budget sssp_csr runs sssp's synchronous sweeps in one task:
+    distances AND parents equal sssp's; the distributed path (budget 0)
+    gives the same distances."""
+    df = graphs.to_df(spark, edges, weighted=True)
+    kw = {"source": 0, "weighted": True, "directed": directed}
+    want = _dist_parent(sssp(spark, df, **kw))
+    one = sssp_csr(spark, df, num_parts=4, **kw)
+    assert one.sssp_supersteps == 1
+    assert _dist_parent(one) == want
+    _distributed(monkeypatch)
+    dist = _dist_parent(sssp_csr(spark, df, num_parts=4, **kw))
+    assert {v: d for v, (d, _) in dist.items()} == {v: d for v, (d, _) in want.items()}
+
+
+@pytest.mark.parametrize("budget", ["default", "zero"])
+def test_csr_absent_source_leaves_all_unreachable(spark, monkeypatch, budget):
+    """A source that is no vertex of the graph reaches nothing, on both
+    paths: every distance inf, every parent -1."""
+    if budget == "zero":
+        _distributed(monkeypatch)
+    df = graphs.to_df(spark, graphs.barabasi_albert(60, m=2))
+    got = _dist_parent(sssp_csr(spark, df, source=10**9, num_parts=4))
+    assert len(got) == 60
+    assert all(math.isinf(d) and p == -1 for d, p in got.values())

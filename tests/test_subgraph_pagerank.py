@@ -360,14 +360,16 @@ def _multi_edge_sink(spark):
     return spark.createDataFrame(rows, "src long, dst long, w double")
 
 
-@pytest.mark.parametrize("graph", ["ba", "hash_range", "multi_edge_sink"])
+@pytest.mark.parametrize("graph", ["ba", "hash_range", "multi_edge_sink", "symmetric"])
 def test_assemble_blocks_equals_build_csr_blocks(spark, graph):
     """The one-task path's in-task block assembly gives every part the
-    block build_csr_blocks writes, array for array."""
+    block build_csr_blocks writes (build_csr_blocks_sym for the symmetrized
+    rows k-core runs on), array for array."""
     import numpy as np
 
     from goffish_v3_spark.plans.csr import (
-        CsrBlock, assemble_blocks, build_csr_blocks, owned_edges,
+        CsrBlock, assemble_blocks, build_csr_blocks, build_csr_blocks_sym, owned_edges,
+        symmetrized,
     )
     from goffish_v3_spark.plans.partitioner import vertex_part
 
@@ -377,10 +379,12 @@ def test_assemble_blocks_equals_build_csr_blocks(spark, graph):
         df = graphs.to_df(spark, graphs.barabasi_albert(150, m=3, seed=5))
         if graph == "hash_range":
             df = _hash_range(df)
-    built = build_csr_blocks(spark, df, 4)
+    build = build_csr_blocks_sym if graph == "symmetric" else build_csr_blocks
+    built = build(spark, df, 4)
     want = {b.part: b for b in (CsrBlock(r) for r in built.collect())}
     built.unpersist()
-    got = assemble_blocks(owned_edges(df, lambda c: vertex_part(c, 4)).toPandas())
+    rows = symmetrized(df) if graph == "symmetric" else df
+    got = assemble_blocks(owned_edges(rows, lambda c: vertex_part(c, 4)).toPandas())
     assert [b.part for b in got] == sorted(want)
     fields = (
         "local_vids", "indptr", "edge_dst_vid", "edge_dst_part", "edge_dst_local", "edge_w",
