@@ -240,7 +240,7 @@ def _make_kernel(superstep: int, blocks_path: str, cap: int | None = None):
 
 
 def _hindex_step(
-    store: BlockStore, cap: int | None, max_iter: int, chain_every: int, num_parts: int
+    store: BlockStore, cap: int | None, max_iter: int, first_chain: int, num_parts: int
 ) -> StepFn:
     """The distributed SuperstepLoop step from the store's ``kind=-1`` seed
     rows: its carry is the kind-0 state plus the boundary channel (kind-1
@@ -255,12 +255,12 @@ def _hindex_step(
     once, so the plan grows linearly. The per-superstep serial tax (driver
     round trip + checkpoint) is paid once per chain; the fixpoint may
     overshoot by up to chain−1 no-op steps. The chain starts at
-    ``chain_every`` and ADAPTS to the convergence tail: once the observed
+    ``first_chain`` and ADAPTS to the convergence tail: once the observed
     changed-count drops below the partition count the wavefront is narrow
     and fixpoint is near, so the chain halves per call (VERDICT r3 #4) —
     long chains amortize the serial tax over the bulk phase, short chains
     cap the no-op overshoot at the tail."""
-    cur_chain = chain_every
+    cur_chain = first_chain
 
     def step(carry: DataFrame, i: int) -> StepResult:
         nonlocal cur_chain
@@ -281,7 +281,7 @@ def _hindex_step(
         if changed < num_parts:
             cur_chain = max(1, cur_chain // 2)
         return StepResult(
-            out, i + chain >= 2 and changed == 0, truncated=True, supersteps=chain
+            out, i + chain >= 2 and changed == 0, supersteps=chain
         )
 
     return step
@@ -289,7 +289,7 @@ def _hindex_step(
 
 def _hindex_fixpoint(
     spark: SparkSession, edges: DataFrame, num_parts: int | None, cap: int | None,
-    max_iter: int, chain_every: int, blocks_dir: str | None,
+    max_iter: int, first_chain: int, blocks_dir: str | None,
 ) -> DataFrame:
     """The h-index fixpoint, capped at ``cap``, on the symmetrized,
     self-loop-free graph through :func:`plans.block_cache.csr_fixpoint`:
@@ -312,7 +312,7 @@ def _hindex_fixpoint(
         OUT_SCHEMA,
         owned_edges(symmetrized(edges), lambda c: vertex_part(c, num_parts)),
         _one_task_solve(cap),
-        lambda store: _hindex_step(store, cap, max_iter, chain_every, num_parts),
+        lambda store: _hindex_step(store, cap, max_iter, first_chain, num_parts),
         sym=True,
         blocks_dir=blocks_dir,
         prefix="goffish_kcore_",

@@ -103,7 +103,7 @@ def kmeans_partition(
             labels.withColumn("fresh", F.lit(False)).unionByName(newly), size_agg
         )
         converged, sizes = sum(grown) == sum(sizes), grown
-        return StepResult(labels, converged, truncated=True)
+        return StepResult(labels, converged)
 
     if max_rounds > 0:
         labels = SuperstepLoop(
@@ -153,7 +153,7 @@ def kmeans_partition(
             .select("vid", F.coalesce("cluster", "old").alias("cluster")),
             size_agg,
         )
-        return StepResult(out, False, truncated=True)
+        return StepResult(out, False)
 
     if refine_rounds > 0:
         out = SuperstepLoop(

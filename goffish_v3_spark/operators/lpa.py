@@ -35,19 +35,18 @@ from goffish_v3_spark.plans.superstep import (
 )
 
 
-def _symmetrize(edges: DataFrame, partition_into: int | None = None) -> DataFrame:
+def _symmetrize(edges: DataFrame, partition_into: int) -> DataFrame:
     """Both edge directions, self-loops dropped, (src,dst)-deduped.
 
-    With ``partition_into`` the dedup rides a single repartition-by-src
-    exchange (HashPartitioning(src) satisfies the dedup's clustering — the
-    same one-exchange layout as operators.pagerank's setup) and the output
-    is left hash-partitioned on src for the caller to cache."""
+    The dedup rides a single repartition-by-src exchange into
+    ``partition_into`` partitions (HashPartitioning(src) satisfies the
+    dedup's clustering — the same one-exchange layout as
+    operators.pagerank's setup), and the output is left hash-partitioned on
+    src for the caller to cache."""
     e = edges.select("src", "dst")
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).filter(F.col("src") != F.col("dst"))
-    if partition_into is None:
-        return sym.distinct()
     return sym.repartition(partition_into, "src").dropDuplicates(["src", "dst"])
 
 
@@ -65,11 +64,7 @@ def lpa(
     # key — every round's state⋈und sort-merge join then skips exchange+sort
     # on the (large) edge side (same pattern as operators.pagerank)
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    und = (
-        _symmetrize(edges, partition_into=n_shuffle)
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    und = _symmetrize(edges, n_shuffle).sortWithinPartitions("src").persist()
     vertices = und.select(F.col("src").alias("vid")).distinct()
 
     init = vertices.withColumn("label", F.col("vid")).localCheckpoint(eager=True)
@@ -94,23 +89,15 @@ def lpa(
                 F.col("label").alias("_old"),
             )
         )
-        if fixed_iterations is not None:
-            done = i + 1 >= fixed_iterations
-            return StepResult(
-                new_state.select("vid", "label").localCheckpoint(eager=True),
-                done,
-                truncated=True,
-            )
         # one job: changed-count observed during the lineage-truncating
-        # materialization (same pattern as pagerank)
+        # materialization (same pattern as pagerank); a round that changes
+        # no label is a fixpoint, so fixed mode stops there too
         out, changed = observed_checkpoint(
             new_state,
             F.sum(F.when(F.col("label") != F.col("_old"), 1).otherwise(0)),
         )
         changed = int(changed or 0)
-        return StepResult(
-            out.select("vid", "label"), changed == 0, delta=float(changed), truncated=True
-        )
+        return StepResult(out.select("vid", "label"), changed == 0, delta=float(changed))
 
     loop = SuperstepLoop(
         spark,
@@ -325,9 +312,7 @@ def lpa_csr(
     ``lpa_supersteps`` for introspection."""
     if num_parts is None:
         num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = build_csr_blocks_sym(
-        spark, edges, num_parts, persist=False, part_expr=part_expr
-    )
+    blocks = build_csr_blocks_sym(spark, edges, num_parts, part_expr=part_expr)
 
     with block_store(spark, blocks, blocks_dir, "goffish_lpa_") as store:
         def step(carry: DataFrame, i: int) -> StepResult:
@@ -339,7 +324,7 @@ def lpa_csr(
             # kind-2 rows stay in the carry: each partition's changed count
             # rides back to itself so the kernel's quiescent check can prove
             # its state is a re-runnable fixpoint (1 row/part)
-            return StepResult(out, not changed, truncated=True)
+            return StepResult(out, not changed)
 
         info = SuperstepLoop(spark, max_iter=max_iter, name="lpa_csr").run(
             store.seed(spark, LPA_SCHEMA), step

@@ -48,7 +48,6 @@ def pagerank_with_info(
     run_id: str | None = None,
     resume: bool = False,
     checkpoint_every: int = 5,
-    chain_every: int = 5,
     partition_metrics: bool = False,
     teleport_vid: int | None = None,
 ) -> tuple[DataFrame, RunInfo]:
@@ -58,8 +57,8 @@ def pagerank_with_info(
     (the ``1−α`` term) lands on that single vertex instead of spreading
     uniformly, and the walk starts there (init = indicator). Same superstep
     plan — the only change is the teleport term becoming a per-vertex
-    expression — so every scale property (one-exchange setup, chaining)
-    carries over.
+    expression — so every scale property (the one-exchange setup, the
+    cached adjacency) carries over.
 
     ``fixed_iterations`` disables the ε-gate and runs exactly that many rank
     updates (used by SQL-oracle comparisons, which unroll a fixed count).
@@ -149,20 +148,9 @@ def pagerank_with_info(
                 "vid",
                 (alpha * F.coalesce(F.col("s"), F.lit(0.0)) + base).alias("rank"),
             )
-            done = i + 1 >= fixed_iterations
-            # chain supersteps into one job, materializing only at chain
-            # boundaries: each superstep references the previous state once,
-            # so the lazy plan grows linearly, and the per-superstep serial cost
-            # (driver round-trip + checkpoint pass — measured ~7 s/step at
-            # 55M edges regardless of cores) is paid once per chain instead
-            # of once per superstep.
-            materialized = done or (i + 1) % chain_every == 0
-            if materialized:
-                new_state = new_state.localCheckpoint(eager=True)
-            # truncated reflects what actually happened (ADVICE): the loop's
-            # truncate_every fallback (set to chain_every below) remains live
-            # for non-boundary steps instead of being silently bypassed
-            return StepResult(new_state, done, truncated=materialized)
+            return StepResult(
+                new_state.localCheckpoint(eager=True), i + 1 >= fixed_iterations
+            )
         new_state = state.join(contrib, state.vid == contrib.dst, "left").select(
             "vid",
             (alpha * F.coalesce(F.col("s"), F.lit(0.0)) + base).alias("rank"),
@@ -174,9 +162,7 @@ def pagerank_with_info(
         out, delta = observed_checkpoint(
             new_state, F.max(F.abs(F.col("rank") - F.col("_old")))
         )
-        return StepResult(
-            out.select("vid", "rank"), delta <= eps, delta=float(delta), truncated=True
-        )
+        return StepResult(out.select("vid", "rank"), delta <= eps, delta=float(delta))
 
     from goffish_v3_spark.plans.partitioner import vertex_part
 
@@ -186,7 +172,6 @@ def pagerank_with_info(
         run_id=run_id,
         max_iter=(fixed_iterations if fixed_iterations is not None else max_iter),
         checkpoint_every=checkpoint_every,
-        truncate_every=(chain_every if fixed_iterations is not None else 1),
         partition_metrics=partition_metrics,
         # rank state carries no part column; ownership is computable
         # (plans.partitioner), so per-partition lineage metrics derive it

@@ -75,7 +75,7 @@ def _trim(spark: SparkSession, e: DataFrame, max_inner: int):
             .select("src", "dst", keep.alias("keep")),
             F.struct(F.count_if(~F.col("keep")), F.count_if(F.col("keep"))),
         )
-        return StepResult(flagged.filter("keep").drop("keep"), dropped == 0, truncated=True)
+        return StepResult(flagged.filter("keep").drop("keep"), dropped == 0)
 
     loop = SuperstepLoop(spark, max_iter=max_inner, name="scc trim", must_converge=True)
     return loop.run(e, step).state, n_kept
@@ -96,7 +96,7 @@ def _forward_color(spark: SparkSession, e: DataFrame, vids: DataFrame, max_inner
             ),
             F.count_if(F.col("color") != F.col("old")),
         )
-        return StepResult(new.drop("old"), changed == 0, truncated=True)
+        return StepResult(new.drop("old"), changed == 0)
 
     loop = SuperstepLoop(spark, max_iter=max_inner, name="scc forward coloring", must_converge=True)
     return loop.run(vids.select("vid", F.col("vid").alias("color")), step).state
@@ -123,7 +123,7 @@ def _backward_mark(spark: SparkSession, e: DataFrame, color: DataFrame, max_inne
         out, n_new = observed_checkpoint(
             mark.withColumn("new", F.lit(False)).unionByName(new), F.count_if(F.col("new"))
         )
-        return StepResult(out.drop("new"), n_new == 0, truncated=True)
+        return StepResult(out.drop("new"), n_new == 0)
 
     loop = SuperstepLoop(spark, max_iter=max_inner, name="scc backward marking", must_converge=True)
     return loop.run(color.filter(F.col("vid") == F.col("color")).select("vid"), step).state
@@ -154,7 +154,7 @@ def scc(
         core = e.select(F.col("src").alias("vid")).distinct()
         done.append(rem_v.join(core, "vid", "left_anti").withColumn("scc_id", F.col("vid")))
         if n_e == 0:
-            return StepResult(core, True, truncated=True)
+            return StepResult(core, True)
         color = _forward_color(spark, e, core, max_inner)
         mark = _backward_mark(spark, e, color, max_inner)
         done.append(mark.join(color, "vid").withColumnRenamed("color", "scc_id"))
@@ -162,7 +162,7 @@ def scc(
         rem_e = e.join(rem_v.withColumnRenamed("vid", "src"), "src", "left_semi").join(
             rem_v.withColumnRenamed("vid", "dst"), "dst", "left_semi"
         )
-        return StepResult(rem_v, n_v == 0, truncated=True)
+        return StepResult(rem_v, n_v == 0)
 
     SuperstepLoop(
         spark, max_iter=max_outer, name="scc outer rounds", must_converge=True

@@ -169,7 +169,7 @@ def _jump(ptr: DataFrame, _i: int) -> StepResult:
         ),
         F.count(F.when(F.col("root") != F.col("_old"), 1)),
     )
-    return StepResult(nxt.select("label", "root"), moved == 0, truncated=True)
+    return StepResult(nxt.select("label", "root"), moved == 0)
 
 
 def meta_forest(
@@ -254,7 +254,7 @@ def meta_forest(
             .select("a", "b", "rep.src", "rep.dst"),
             F.count(F.lit(1)),
         )
-        return StepResult(cur, n_left == 0, truncated=True)
+        return StepResult(cur, n_left == 0)
 
     loop.run(cur, step)
     canon = total_map.groupBy("root").agg(F.min("label").alias("canon"))

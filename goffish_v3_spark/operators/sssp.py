@@ -127,7 +127,7 @@ def sssp(
         out, improved = observed_checkpoint(
             merged, F.sum(F.col("_improved").cast("long"))
         )
-        return StepResult(out, not improved, truncated=True)
+        return StepResult(out, not improved)
 
     try:
         info = SuperstepLoop(
@@ -304,7 +304,7 @@ def sssp_csr(
                 ),
                 F.sum(F.when(F.col("kind") == 2, F.col("p"))),
             )
-            return StepResult(out.filter(F.col("kind") != 2), not improved, truncated=True)
+            return StepResult(out.filter(F.col("kind") != 2), not improved)
 
         return step
 

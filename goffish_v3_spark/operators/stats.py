@@ -180,7 +180,7 @@ def meta_diameter(
             .agg(F.min("d").alias("d"))
         )
         grown, n_new = observed_checkpoint(grown, F.count(F.when(F.col("d") == i + 1, 1)))
-        return StepResult(grown, n_new == 0, truncated=True)
+        return StepResult(grown, n_new == 0)
 
     info = SuperstepLoop(
         spark, max_iter=max(n_nodes, 1), name="meta_diameter flood", must_converge=True

@@ -294,7 +294,6 @@ def _csr_step(store: BlockStore, alpha, eps, gated, local_init):
         return StepResult(
             out.filter(F.col("kind") != 2),
             gated and delta is not None and delta <= eps,
-            truncated=True,
         )
 
     return step

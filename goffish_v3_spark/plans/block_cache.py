@@ -296,7 +296,7 @@ def csr_fixpoint(
     if fits_one_task(n_edges or 0, n_vertices or 0):
         return loop.run(blocks if given else rows, _one_task_step(schema, solve, given))
     if not given:
-        blocks = blocks_from_owned(rows, sym=sym, persist=False)
+        blocks = blocks_from_owned(rows, sym=sym)
     with block_store(spark, blocks, blocks_dir, prefix) as store:
         info = loop.run(store.seed(spark, schema), make_step(store))
         if finalize is not None:
@@ -326,6 +326,6 @@ def _one_task_step(schema: str, solve, given: bool) -> StepFn:
             source.repartition(1).mapInPandas(fn, schema=schema),
             F.max(F.when(F.col("kind") == 2, F.col(metric))),
         )
-        return StepResult(out, True, truncated=True, supersteps=int(steps))
+        return StepResult(out, True, supersteps=int(steps))
 
     return step

@@ -428,62 +428,56 @@ def owned_edges(edges: DataFrame, part_of) -> DataFrame:
     )
 
 
-def blocks_from_owned(tagged: DataFrame, sym: bool = False, persist: bool = True) -> DataFrame:
+def blocks_from_owned(tagged: DataFrame, sym: bool = False) -> DataFrame:
     """:func:`owned_edges` rows → one CSR block row per partition, in ONE
     shuffle (groupBy(part) into the builder kernel, whose numpy-side min-w
     multi-edge dedup is complete because every (src,dst) copy lands in
     src's owner partition — the CSR and DataFrame engines agree on
     out-degrees). With ``sym`` (:func:`symmetrized` rows) every vertex is a
     src; otherwise one ``v`` row per distinct ``(vid, part)`` end puts
-    sinks in their block (the reference's sink-less Vertex objects)."""
+    sinks in their block (the reference's sink-less Vertex objects).
+    Not persisted: a block store's write is the blocks' one use."""
     if sym:
-        blocks = tagged.groupBy("part").applyInPandas(_build_block_sym, schema=CSR_SCHEMA)
-    else:
-        # v rows carry NO nulls: a null in an int64 column turns the whole
-        # pandas-side column float64 inside applyInPandas, silently
-        # corrupting full-range xxhash64 vids (> 2^53) — dst/dst_part mirror
-        # the vertex itself and are ignored by the builder for kind='v'
-        ends = tagged.select(F.col("src").alias("vid"), "part").unionByName(
-            tagged.select(F.col("dst").alias("vid"), F.col("dst_part").alias("part"))
-        )
-        v = ends.distinct().select(
-            F.col("vid").alias("src"),
-            F.col("vid").alias("dst"),
-            F.lit(0.0).alias("w"),
-            "part",
-            F.col("part").alias("dst_part"),
-            F.lit("v").alias("kind"),
-        )
-        blocks = (
-            tagged.withColumn("kind", F.lit("e"))
-            .unionByName(v)
-            .groupBy("part")
-            .applyInPandas(_build_block, schema=CSR_SCHEMA)
-        )
-    if persist:
-        blocks = blocks.persist()
-        blocks.count()
-    return blocks
+        return tagged.groupBy("part").applyInPandas(_build_block_sym, schema=CSR_SCHEMA)
+    # v rows carry NO nulls: a null in an int64 column turns the whole
+    # pandas-side column float64 inside applyInPandas, silently
+    # corrupting full-range xxhash64 vids (> 2^53) — dst/dst_part mirror
+    # the vertex itself and are ignored by the builder for kind='v'
+    ends = tagged.select(F.col("src").alias("vid"), "part").unionByName(
+        tagged.select(F.col("dst").alias("vid"), F.col("dst_part").alias("part"))
+    )
+    v = ends.distinct().select(
+        F.col("vid").alias("src"),
+        F.col("vid").alias("dst"),
+        F.lit(0.0).alias("w"),
+        "part",
+        F.col("part").alias("dst_part"),
+        F.lit("v").alias("kind"),
+    )
+    return (
+        tagged.withColumn("kind", F.lit("e"))
+        .unionByName(v)
+        .groupBy("part")
+        .applyInPandas(_build_block, schema=CSR_SCHEMA)
+    )
 
 
 def build_csr_blocks_sym(
     spark: SparkSession,
     edges: DataFrame,
     num_parts: int,
-    persist: bool = True,
     part_expr=None,
 ) -> DataFrame:
     """:func:`build_csr_blocks` of the :func:`symmetrized` graph, with no
-    sink-vertex scan: a symmetric graph has no sinks."""
+    sink-vertex scan (a symmetric graph has no sinks), and not persisted."""
     part_of = part_expr or (lambda c: vertex_part(c, num_parts))
-    return blocks_from_owned(owned_edges(symmetrized(edges), part_of), sym=True, persist=persist)
+    return blocks_from_owned(owned_edges(symmetrized(edges), part_of), sym=True)
 
 
 def build_csr_blocks(
     spark: SparkSession,
     edges: DataFrame,
     num_parts: int,
-    persist: bool = True,
     part_expr=None,
 ) -> DataFrame:
     """edges(src, dst, w) → one CSR block row per partition (persisted),
@@ -496,4 +490,6 @@ def build_csr_blocks(
     partition-local computation collapse supersteps on high-diameter graphs.
     """
     part_of = part_expr or (lambda c: vertex_part(c, num_parts))
-    return blocks_from_owned(owned_edges(edges, part_of), persist=persist)
+    blocks = blocks_from_owned(owned_edges(edges, part_of)).persist()
+    blocks.count()
+    return blocks

@@ -21,8 +21,10 @@ What this module adds over a bare ``for`` loop (north_rule requirements):
   (parquet dirs here; Iceberg tables on a cluster with the runtime jar — the
   layout ``{root}/{run_id}/state/superstep=k`` maps 1:1 onto an Iceberg
   partition spec) so any run is resumable mid-iteration;
-- **lineage truncation**: iterative plans grow without bound; reading the
-  checkpoint back each superstep resets lineage (SURVEY.md §7.3);
+- **lineage truncation**: iterative plans grow without bound, so every
+  step returns its state materialized (:func:`observed_checkpoint`, or an
+  eager ``localCheckpoint``), and a commit's parquet re-read resets
+  lineage too (SURVEY.md §7.3);
 - **metrics**: with ``checkpoint_dir``, each commit appends one global
   row (``part=-1``: the step's messages, delta, wall ms and ``extra``;
   ``rows`` is -1) and, with ``partition_metrics``, one row per partition
@@ -76,11 +78,13 @@ def no_aqe(spark: SparkSession):
 class StepResult:
     """One superstep's output: next state + convergence signal + metrics.
 
-    ``truncated=True`` tells the loop the step already severed lineage
-    (e.g. via observe+localCheckpoint in one job) — IMPORTANT for iterative
-    algorithms whose step plan references the previous state more than once:
-    without per-step truncation the logical plan doubles every superstep and
-    Catalyst analysis time grows exponentially.
+    ``state`` is already materialized: the step ends in
+    :func:`observed_checkpoint` or an eager ``localCheckpoint``, which
+    severs its lineage (a converged step's state, which no later step
+    reads, may stay lazy). The loop never truncates for a step — a step
+    plan that references the previous state more than once would otherwise
+    double the logical plan every superstep, and Catalyst analysis time
+    grows exponentially.
 
     ``supersteps``: how many supersteps the call ran (a k-core chain, a
     tail finished in one task); the loop advances its index by it.
@@ -90,11 +94,12 @@ class StepResult:
     converged: bool
     delta: float = float("nan")
     messages: int = -1
-    truncated: bool = False
     extra: dict = field(default_factory=dict)
     supersteps: int = 1
 
 
+#: ``step(state, i)``: one superstep (or a chain of them, ``supersteps``)
+#: ending in :func:`observed_checkpoint` or an eager ``localCheckpoint``.
 StepFn = Callable[[DataFrame, int], StepResult]
 
 
@@ -124,6 +129,11 @@ class SuperstepLoop:
     partition-local kernels and plain DataFrame ops for exchanges; ``i`` is
     the call's first superstep. It stops on ``converged`` or after
     ``max_iter >= 1`` supersteps, where ``must_converge`` raises.
+
+    Each step returns its state materialized (see :class:`StepResult`): the
+    loop adds no lineage truncation of its own. With ``checkpoint_dir``,
+    every ``checkpoint_every``-th superstep (and the last) is committed,
+    and the commit's parquet re-read truncates lineage as well.
     """
 
     def __init__(
@@ -133,7 +143,6 @@ class SuperstepLoop:
         run_id: str | None = None,
         max_iter: int = 100,
         checkpoint_every: int = 1,
-        truncate_every: int = 1,
         partition_metrics: bool = False,
         partition_expr=None,
         name: str = "superstep loop",
@@ -146,7 +155,6 @@ class SuperstepLoop:
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.max_iter = max_iter
         self.checkpoint_every = checkpoint_every
-        self.truncate_every = truncate_every
         self.partition_metrics = partition_metrics
         # per-partition lineage/metrics (north_rule) for states WITHOUT a
         # materialized part column: a Column expression deriving the
@@ -250,10 +258,6 @@ class SuperstepLoop:
                 (i % self.checkpoint_every == 0) or res.converged or last == self.max_iter - 1
             ):
                 state = self._commit(state, last, metrics)
-            elif not res.truncated and i % self.truncate_every == self.truncate_every - 1:
-                # truncate lineage (SURVEY §7.3); steps that already did this
-                # via observe+localCheckpoint set res.truncated
-                state = state.localCheckpoint(eager=True)
             i = last + 1
             if res.converged:
                 converged = True

@@ -35,6 +35,8 @@ def test_two_islands_communities(spark):
 
 def test_clique_single_community(spark):
     _check(spark, graphs.clique(10))
+    # at its fixpoint after 2 rounds: fixed mode stops early, same labels
+    _check(spark, graphs.clique(10), fixed_iterations=6)
 
 
 def test_chain_fixed_iterations(spark):

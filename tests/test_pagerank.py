@@ -8,8 +8,11 @@ from tests.oracles import pagerank_oracle
 
 
 def _check(spark, edges, **kw):
-    df = graphs.to_df(spark, edges)
-    got = {r.vid: r.rank for r in pagerank(spark, df, **kw).collect()}
+    _assert_oracle(pagerank(spark, graphs.to_df(spark, edges), **kw), edges, **kw)
+
+
+def _assert_oracle(scores, edges, **kw):
+    got = {r.vid: r.rank for r in scores.collect()}
     want = pagerank_oracle(edges, **kw)
     assert set(got) == set(want)
     for v in want:
@@ -38,6 +41,33 @@ def test_barabasi_albert(spark):
 
 def test_fixed_iterations(spark):
     _check(spark, graphs.barabasi_albert(80, m=2), fixed_iterations=5)
+
+
+def test_fixed_iterations_one_job_per_superstep(spark):
+    """Each fixed-mode superstep is one Spark job that materializes its
+    state: four more supersteps run exactly four more jobs, and the ranks
+    still match the oracle. Broadcast joins are off, as for any rank state
+    past the broadcast threshold: a test-sized state is broadcast into the
+    adjacency join, which costs each superstep a broadcast job besides its
+    own."""
+    from tests.test_subgraph_pagerank import _job_ids
+
+    edges = graphs.barabasi_albert(80, m=2)
+    df = graphs.to_df(spark, edges)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        jobs = {}
+        for k in (4, 8):
+            out, ids = _job_ids(
+                spark, f"pr_fixed_{k}", lambda: pagerank(spark, df, fixed_iterations=k)
+            )
+            jobs[k] = len(ids)
+    finally:
+        spark.conf.set(key, prev)
+    assert jobs[8] - jobs[4] == 4, jobs
+    _assert_oracle(out, edges, fixed_iterations=8)
 
 
 def test_converges_and_reports_info(spark):
